@@ -927,50 +927,49 @@ def local_tombstone_arrays(
 ):
     """Driver-side (sorted doc_ids, aligned max before_gen) from the local
     tombstone version dir — parquet footers bound the size first, so an
-    over-cap set costs one listing and no reads. Returns None when the dir
-    is non-local or larger than cap (callers use the distributed row-level
-    merge instead); empty arrays when there are no tombstones at all."""
+    over-cap set costs one listing and no reads. Returns None in exactly
+    two cases, where callers use the distributed row-level merge instead:
+    the dir is non-local, or the set is larger than cap. Empty arrays when
+    there are no tombstones at all. An unreadable tombstone version raises
+    — it is a broken index, not a reason to change merge paths."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
     if tombstone_dir is None:
         return empty
     path = os.path.join(index_dir, tombstone_dir)
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if not os.path.isdir(path):
-            return None
-        files = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-        total = sum(
-            pq.ParquetFile(f).metadata.num_rows for f in files
-        )
-        if total > cap:
-            return None
-        if total == 0:
-            return empty
-        t = pa.concat_tables(
-            [pq.read_table(f, columns=["doc_id", "before_gen"]) for f in files]
-        )
-        ids = t.column("doc_id").to_numpy(zero_copy_only=False).astype(
-            np.int64
-        )
-        bg = t.column("before_gen").to_numpy(zero_copy_only=False).astype(
-            np.int64
-        )
-        o = np.argsort(ids, kind="stable")
-        ids, bg = ids[o], bg[o]
-        last = np.empty(ids.size, dtype=bool)
-        last[:-1] = ids[1:] != ids[:-1]
-        last[-1] = True
-        ends = np.nonzero(last)[0]
-        starts = np.concatenate(([0], ends[:-1] + 1))
-        return ids[ends], np.maximum.reduceat(bg, starts)
-    except Exception:
+    if not os.path.isdir(path):
         return None
+    files = [
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    ]
+    total = sum(
+        pq.ParquetFile(f).metadata.num_rows for f in files
+    )
+    if total > cap:
+        return None
+    if total == 0:
+        return empty
+    t = pa.concat_tables(
+        [pq.read_table(f, columns=["doc_id", "before_gen"]) for f in files]
+    )
+    ids = t.column("doc_id").to_numpy(zero_copy_only=False).astype(
+        np.int64
+    )
+    bg = t.column("before_gen").to_numpy(zero_copy_only=False).astype(
+        np.int64
+    )
+    o = np.argsort(ids, kind="stable")
+    ids, bg = ids[o], bg[o]
+    last = np.empty(ids.size, dtype=bool)
+    last[:-1] = ids[1:] != ids[:-1]
+    last[-1] = True
+    ends = np.nonzero(last)[0]
+    starts = np.concatenate(([0], ends[:-1] + 1))
+    return ids[ends], np.maximum.reduceat(bg, starts)
 
 
 def dedup_pages(pages: DataFrame) -> DataFrame:
@@ -1145,39 +1144,43 @@ def _build_index_impl(
     # alignment (and therefore WAND correctness) is preserved; files remain
     # term-sorted via sortWithinPartitions, so parquet row-group min/max
     # stats still prune query-term scans.
-    if not (resume and _stage_done(gdir, "postings")):
-        if postings_df is not None:
-            # block-level merge: rows arrive encoded, partitioned and
-            # ordered by the merge kernel — nothing left but the write
-            postings_df.write.mode("overwrite").parquet(postings_path)
-        else:
-            n_parts = cfg.n_partitions or spark.sparkContext.defaultParallelism
-            window = min(cfg.chunk_docs * cfg.salt_chunks, 1 << 62)
-            termdoc = (
-                termdoc_df
-                if termdoc_df is not None
-                else build_termdoc(docs, cfg.analyzer)
-            )
-            (
-                termdoc.repartition(
-                    n_parts,
-                    F.xxhash64("term", (F.col("doc_id") / window).cast("long")),
+    try:
+        if not (resume and _stage_done(gdir, "postings")):
+            if postings_df is not None:
+                # block-level merge: rows arrive encoded, partitioned and
+                # ordered by the merge kernel — nothing left but the write
+                postings_df.write.mode("overwrite").parquet(postings_path)
+            else:
+                n_parts = cfg.n_partitions or spark.sparkContext.defaultParallelism
+                window = min(cfg.chunk_docs * cfg.salt_chunks, 1 << 62)
+                termdoc = (
+                    termdoc_df
+                    if termdoc_df is not None
+                    else build_termdoc(docs, cfg.analyzer)
                 )
-                .sortWithinPartitions("term", "doc_id")
-                .mapInArrow(_make_block_encoder(cfg), schema=BLOCKS_SCHEMA)
-                .write.mode("overwrite")
-                .parquet(postings_path)
-            )
-        _refresh(postings_path)
-        _mark_done(gdir, "postings")
-    _lap("postings")
-
-    # join the overlapped docs write; release the shared extract cache
+                (
+                    termdoc.repartition(
+                        n_parts,
+                        F.xxhash64("term", (F.col("doc_id") / window).cast("long")),
+                    )
+                    .sortWithinPartitions("term", "doc_id")
+                    .mapInArrow(_make_block_encoder(cfg), schema=BLOCKS_SCHEMA)
+                    .write.mode("overwrite")
+                    .parquet(postings_path)
+                )
+            _refresh(postings_path)
+            _mark_done(gdir, "postings")
+        _lap("postings")
+    finally:
+        # join the overlapped docs write and release the shared extract
+        # cache on every exit, so a failed stage 2 leaks no pool thread and
+        # no persisted frame; shutdown(wait=True) waits for the docs write,
+        # and a stage-2 error propagates ahead of the docs write's own
+        _stage1_pool.shutdown(wait=True)
+        if docs_future is not None and termdoc_df is None and postings_df is None:
+            feed.unpersist()
     if docs_future is not None:
         docs_future.result()
-    _stage1_pool.shutdown(wait=True)
-    if docs_future is not None and termdoc_df is None and postings_df is None:
-        feed.unpersist()
 
     # parquet FOOTER count only (no Spark job; falls back to a metadata
     # count job on non-local filesystems) — avgdl is derived below from
@@ -1588,41 +1591,35 @@ class IndexReader:
             return df
         return df.groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
 
-    def term_stats_local(self, terms) -> dict[str, int] | None:
+    def term_stats_local(self, terms) -> dict[str, int]:
         """df per query term, summed across generations, read DRIVER-SIDE
         via parquet row-group pruning — no Spark job. The per-query stats
         slice is at most len(terms) rows, and the stats files are written
         range-partitioned + term-sorted exactly so min/max statistics
-        prune this lookup (the serve tier reads them the same way).
-        Returns None when any generation's stats dir is not a local
-        directory — callers fall back to the distributed broadcast-join
-        plan, which works on any filesystem."""
-        terms = [t for t in terms]
-        if not terms:
-            return {}
-        try:
-            import pyarrow.parquet as pq
+        prune this lookup (the serve tier reads them the same way). The
+        index dir is local (open() reads its manifests with Python file
+        IO) and every generation writes term_stats, so a read error here
+        is a broken index and raises."""
+        import pyarrow.parquet as pq
 
-            out: dict[str, int] = {}
-            for g in self.gen_manifests:
-                path = os.path.join(
-                    self.index_dir, f"gen{g['generation']}", "term_stats"
-                )
-                if not os.path.isdir(path):
-                    return None
-                tbl = pq.read_table(
-                    path,
-                    columns=["term", "df"],
-                    filters=[("term", "in", terms)],
-                )
-                for t, df_ in zip(
-                    tbl.column("term").to_pylist(),
-                    tbl.column("df").to_pylist(),
-                ):
-                    out[t] = out.get(t, 0) + int(df_)
+        terms = list(terms)
+        out: dict[str, int] = {}
+        if not terms:
             return out
-        except Exception:
-            return None
+        for g in self.gen_manifests:
+            tbl = pq.read_table(
+                os.path.join(
+                    self.index_dir, f"gen{g['generation']}", "term_stats"
+                ),
+                columns=["term", "df"],
+                filters=[("term", "in", terms)],
+            )
+            for t, df_ in zip(
+                tbl.column("term").to_pylist(),
+                tbl.column("df").to_pylist(),
+            ):
+                out[t] = out.get(t, 0) + int(df_)
+        return out
 
     def tombstones(self) -> DataFrame | None:
         """(doc_id, before_gen): the doc is dead in every generation

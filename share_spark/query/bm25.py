@@ -487,8 +487,8 @@ def live_postings(
         # no broadcast hint: tombstone volume is unbounded between
         # compactions — AQE picks broadcast when the set is actually small,
         # and falls back to a shuffle join instead of OOMing the executors
-        # (the WAND path pushes the same set through its chunk-cogrouped aux
-        # channel, wand.py; this exact path is the verification/debug tier)
+        # (the WAND path unions the same set into its chunk-keyed block
+        # shuffle, wand.py; this exact path is the verification/debug tier)
         rows = rows.join(tomb, "doc_id", "left").filter(
             F.col("before_gen").isNull() | (F.col("gen") >= F.col("before_gen"))
         ).drop("before_gen")

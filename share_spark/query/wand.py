@@ -14,8 +14,9 @@ block-max WAND) maps onto Spark's execution model:
   posting bytes decoded.
 - **Block-max pruning**: each chunk's score upper bound is
   sum_t idf(t) * max over t's blocks of impact(max_tf, min_dl, avgdl_query),
-  from block metadata only; idf comes from a broadcast join against the
-  per-query term_stats slice (the north rule's "broadcast term statistics").
+  from block metadata only; idf embeds in the plan as literals from a
+  driver-side read of the query terms' term_stats rows (row-group pruned,
+  no Spark job).
   The bound is computed with the QUERY-TIME global avgdl from stored
   (max_tf, min_dl) — impact is increasing in tf and decreasing in dl, so it
   upper-bounds every posting in the block regardless of how later
@@ -29,12 +30,13 @@ block-max WAND) maps onto Spark's execution model:
   key-intersection (doc_rank * P + position), never a stored-text rescan
   (the reference pins phrase semantics at
   _common_trovesearch_tests.py:455-474).
-- **Tombstones and structured filters ride an in-plan aux channel**: both
-  are DataFrames keyed by chunk = doc_id // chunk_docs, cogrouped with the
-  posting blocks, and applied inside the kernel BEFORE local top-n
-  truncation. No driver collect (10^8 tombstones between compactions would
-  be a driver OOM), and no overfetch heuristics for filtered queries — the
-  kernel sees the exact allowed-doc set for its chunk.
+- **Tombstones and structured filters ride the block shuffle**: both are
+  rows keyed by chunk = doc_id // chunk_docs (marked by a non-null `kind`),
+  unioned into the posting-block slice before its one repartition by
+  chunk, and applied inside the kernel BEFORE local top-n truncation. No
+  driver collect (10^8 tombstones between compactions would be a driver
+  OOM), and no overfetch heuristics for filtered queries — the kernel sees
+  the exact allowed-doc set for its chunk.
 - Job economy: one metadata job (chunk bounds), one scoring job per phase.
   The driver only ever sees <= B+1 chunk bounds and <= offset+k scored rows
   per phase; per-phase top-n lists merge driver-side (any doc in the global
@@ -74,8 +76,6 @@ CHUNK_SCORES_SCHEMA = T.StructType(
     ]
 )
 
-AUX_SCHEMA = "chunk long, doc_id long, before_gen long, kind string"
-
 RESULT_SCHEMA = "doc_id long, score double, rank int"
 
 
@@ -99,16 +99,6 @@ def _member(sorted_arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
     i = np.searchsorted(sorted_arr, vals)
     ic = np.minimum(i, sorted_arr.size - 1)
     return (i < sorted_arr.size) & (sorted_arr[ic] == vals)
-
-
-def impact_bound_col(k1: float, b: float, avgdl: float):
-    """Per-block impact upper bound from avgdl-independent metadata,
-    evaluated with the query-time global avgdl (see module docstring)."""
-    mtf = F.col("max_tf").cast("double")
-    mdl = F.col("min_dl").cast("double")
-    return (mtf * (k1 + 1.0)) / (
-        mtf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * mdl / F.lit(avgdl))
-    )
 
 
 def _term_keys(cand, tl, P):
@@ -384,7 +374,7 @@ def _decode_chunk_lists(
 
 
 def _aux_arrays(aux: pd.DataFrame | None):
-    """Split the cogrouped aux frame into (tomb_ids, tomb_gens, allow_ids)."""
+    """Split one chunk's aux rows into (tomb_ids, tomb_gens, allow_ids)."""
     tomb_ids = tomb_gens = allow_ids = None
     if aux is not None and len(aux):
         t = aux[aux["kind"] == "tomb"]
@@ -407,18 +397,19 @@ def _make_chunk_scorer(
     filter_active: bool,
     codec_name: str = "varint",
 ):
-    """applyInPandas / cogroup kernel: score one chunk's blocks, emit local
-    top-n. `branches` is the query's `|` disjunction of conjunctive
-    branches (usually one) — a chunk prunes only when NO branch has all
-    its terms present, and the tau bound is the sum of the viable
+    """Per-chunk scoring kernel (run by _run_chunks): score one chunk's
+    blocks, emit local top-n. `branches` is the query's `|` disjunction of
+    conjunctive branches (usually one) — a chunk prunes only when NO branch
+    has all its terms present, and the tau bound is the sum of the viable
     branches' bounds.
 
-    Block rows carry `idf` (broadcast-joined per query), `gen` (segment id),
-    and `bound_imp` (query-time impact bound). The optional aux frame carries
-    tombstones (kind='tomb': kill doc in generations < before_gen) and the
-    allowed-doc set when a structured filter is pushed down (kind='allow').
-    Negative terms / neg-phrase-only terms have null idf and contribute only
-    ids (+ positions for phrase checks).
+    Block rows carry `idf` (a plan literal per query term), `gen` (segment
+    id), and `bound_imp` (query-time impact bound). The chunk's aux rows,
+    split off the same shuffle, carry tombstones (kind='tomb': kill doc in
+    generations < before_gen) and the allowed-doc set when a structured
+    filter is pushed down (kind='allow'). Negative terms / neg-phrase-only
+    terms have null idf and contribute only ids (+ positions for phrase
+    checks).
     """
     branch_terms = [tuple(sorted(set(br.terms))) for br in branches]
     pos_set = frozenset(t for bt in branch_terms for t in bt)
@@ -499,79 +490,45 @@ def _make_chunk_scorer(
 from ..session import interactive_sql_conf as _interactive_conf  # noqa: E402
 
 
-def _bucketed_kernel(chunk_kernel, empty: pd.DataFrame):
-    """Wrap a per-chunk kernel so it processes a BUCKET of chunks per call.
-
-    groupBy("chunk").applyInPandas pays a fixed per-group cost (one pandas
-    frame + one Python call per group) — negligible at tens of chunks but
-    the dominant query cost once the corpus has hundreds (measured: 245
-    chunks at 2M docs cost ~1.3 s/job in pure per-group overhead, 3-5x the
-    actual decode+score work), and fatal at the 10^8-chunk target scale.
-    Keying the shuffle by pmod(hash(chunk), B) instead bounds the group
-    count by B regardless of corpus size; the wrapper iterates its bucket's
-    chunks via pandas' C-level groupby and concatenates their outputs.
-    Chunk-at-a-time semantics (conjunctive pruning, per-chunk bound test,
-    local top-n) are preserved exactly — the same per-chunk kernel runs,
-    just batched."""
-
-    def run(pdf: pd.DataFrame, aux: pd.DataFrame | None = None) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return empty
-        aux_groups: dict = {}
-        if aux is not None and len(aux):
-            aux_groups = dict(tuple(aux.groupby("chunk", sort=False)))
-        outs = [
-            chunk_kernel(g, aux_groups.get(ck))
-            for ck, g in pdf.groupby("chunk", sort=False)
-        ]
-        outs = [o for o in outs if len(o)]
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    return run
-
-
-def _with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    # one parsed expression instead of a pmod/hash/lit Column chain: the
-    # bucket column is added per interactive query, and every Column call
-    # is a driver py4j round-trip (see wand_topk's plan-chatter note)
-    return df.selectExpr("*", f"pmod(hash(chunk), {n_buckets}) AS _bucket")
-
-
-def _chunk_partitioned(df: DataFrame, runner, schema) -> DataFrame:
-    """Aux-free kernel execution: hash-repartition by chunk (all of a
-    chunk's blocks co-locate; reduce width comes from the runtime shuffle
-    conf, 4 under the interactive guard) and run the bucket runner once
-    per task via mapInArrow. This replaces groupBy("_bucket")
-    .applyInPandas for the no-tombstone/no-filter path: FlatMapGroupsInPandas
-    requires a Sort by the grouping key inside each task and pays per-group
-    conversion, while the runner already iterates chunks via a C-level
-    pandas groupby — so the sort and the grouping machinery bought nothing.
-    The task accumulates its batches before one groupby; the input is the
+def _run_chunks(rows: DataFrame, kernel, schema) -> DataFrame:
+    """The one kernel runner: hash-repartition by chunk (all of a chunk's
+    blocks and aux rows co-locate; reduce width comes from the runtime
+    shuffle conf, 4 under the interactive guard) and run `kernel` once per
+    chunk inside one mapInArrow task. Aux rows (non-null `kind`, see
+    _with_aux) split off at the Arrow level before to_pandas, so block
+    int64 columns never round through float on the aux rows' nulls. Chunks
+    are iterated via pandas' C-level groupby: no Sort by the grouping key
+    and no per-group Arrow conversion, which a grouped pandas UDF pays.
+    The task accumulates its batches before the groupby; the input is the
     query's term-pruned block slice, so per-task volume is bounded by the
-    query, not the corpus. (The tombstone/filter path keeps the cogrouped
-    applyInPandas — cogroup alignment needs the grouped plan.)"""
+    query, not the corpus."""
     import pyarrow as pa
+    import pyarrow.compute as pc
+
+    aux_cols = ["chunk", "doc_id", "before_gen", "kind"]
 
     def fn(batches):
         tabs = [b for b in batches if b.num_rows]
         if not tabs:
             return
-        pdf = pa.Table.from_batches(tabs).to_pandas()
-        out = runner(pdf, None)
-        if len(out):
-            yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+        tbl = pa.Table.from_batches(tabs)
+        aux_of: dict = {}
+        if "kind" in tbl.schema.names:
+            kind = tbl["kind"]
+            aux = tbl.filter(pc.is_valid(kind)).select(aux_cols).to_pandas()
+            aux_of = dict(tuple(aux.groupby("chunk", sort=False)))
+            tbl = tbl.filter(pc.is_null(kind)).drop_columns(aux_cols[1:])
+        outs = [
+            kernel(g, aux_of.get(ck))
+            for ck, g in tbl.to_pandas().groupby("chunk", sort=False)
+        ]
+        outs = [o for o in outs if len(o)]
+        if outs:
+            yield pa.RecordBatch.from_pandas(
+                pd.concat(outs, ignore_index=True), preserve_index=False
+            )
 
-    return df.repartition(F.col("chunk")).mapInArrow(fn, schema=schema)
-
-
-_EMPTY_SCORES = pd.DataFrame(
-    {
-        "doc_id": pd.Series([], dtype="int64"),
-        "score": pd.Series([], dtype="float64"),
-    }
-)
-
-_EMPTY_MATCH = pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
+    return rows.repartition(F.col("chunk")).mapInArrow(fn, schema=schema)
 
 
 def _chunk_of_doc(chunk_docs: int):
@@ -584,37 +541,35 @@ def _chunk_of_doc(chunk_docs: int):
     ).alias("chunk")
 
 
-def _aux_frames(
-    index: IndexReader, filter_docs: DataFrame | None
-) -> DataFrame | None:
-    """Tombstones + allowed-doc filter as one chunk-keyed aux DataFrame
-    (cogrouped with the posting blocks — never collected to the driver)."""
+def _with_aux(
+    blocks: DataFrame, index: IndexReader, filter_docs: DataFrame | None
+) -> DataFrame:
+    """The block slice plus chunk-keyed aux rows — tombstones and the
+    allowed-doc filter, marked by a non-null `kind` — unioned so they ride
+    the blocks' one chunk shuffle (never collected to the driver)."""
     chunk_docs = index.chunk_docs
-    parts = []
+    out = blocks
     tomb = index.tombstones()
     if tomb is not None:
-        parts.append(
+        out = out.unionByName(
             tomb.select(
                 _chunk_of_doc(chunk_docs),
                 "doc_id",
                 F.col("before_gen").cast("long").alias("before_gen"),
                 F.lit("tomb").alias("kind"),
-            )
+            ),
+            allowMissingColumns=True,
         )
     if filter_docs is not None:
-        parts.append(
+        out = out.unionByName(
             filter_docs.select(
                 _chunk_of_doc(chunk_docs),
                 "doc_id",
                 F.lit(-1).cast("long").alias("before_gen"),
                 F.lit("allow").alias("kind"),
-            )
+            ),
+            allowMissingColumns=True,
         )
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     return out
 
 
@@ -680,17 +635,12 @@ def wand_topk(
             "dls_bin", "max_tf", "min_dl", "gen"]
     if has_phrases:
         cols.append("pos_bin")  # positions read only when a phrase needs them
-    blocks = index.postings(interactive=True).filter(
-        F.col("term").isin(all_terms)
-    )
 
-    # per-query stats slice, idf in-plan. Fast path: resolve df per term
-    # DRIVER-SIDE from the term-sorted stats parquet (row-group pruned, no
-    # Spark job) and embed idf as literals — the log1p still evaluates in
-    # the JVM on the same inputs (constant-folded once at plan time), so
-    # values are bit-identical to the broadcast-join plan, which remains
-    # the fallback for non-local filesystems. Saves one job + a broadcast
-    # exchange per query.
+    # per-query stats slice, idf in-plan: df per term resolves DRIVER-SIDE
+    # from the term-sorted stats parquet (row-group pruned, no Spark job)
+    # and idf embeds as literals — the log1p still evaluates in the JVM
+    # (constant-folded once at plan time) on the same inputs as the exact
+    # scorer's term_idf_df.
     #
     # Plan-chatter note: the whole per-query projection (idf CASE,
     # bound_imp, the null pos_bin) is ONE selectExpr of SQL strings — a
@@ -698,106 +648,54 @@ def wand_topk(
     # F.when/F.lit/withColumn is its own driver<->JVM py4j call (profiled
     # at ~675 round-trips and ~0.2-0.3 s per interactive query). Doubles
     # embed as CAST('<repr>' AS DOUBLE): repr round-trips exactly and the
-    # string cast parses via Double.parseDouble, so every literal is the
-    # same double the F.lit path shipped. Falls back to the Column chain
-    # for terms that would need escaping inside a SQL string literal.
-    stats_local = index.term_stats_local(pos_terms)
+    # string cast parses via Double.parseDouble. Terms embed as
+    # CAST(X'<utf-8 hex>' AS STRING), which needs no escaping, so a term
+    # holding quotes or backslashes (a field path) takes the same path.
+    df_of = index.term_stats_local(pos_terms)
 
     def _d(v: float) -> str:
         return f"CAST('{v!r}' AS DOUBLE)"
+
+    def _s(t: str) -> str:
+        return f"CAST(X'{t.encode('utf-8').hex()}' AS STRING)"
 
     bound_sql = (
         f"(CAST(max_tf AS DOUBLE) * {_d(k1 + 1.0)}) / "
         f"(CAST(max_tf AS DOUBLE) + {_d(k1)} * ({_d(1.0 - b)} + {_d(b)} * "
         f"CAST(min_dl AS DOUBLE) / {_d(avgdl)}))"
     )
-    sql_safe = all(
-        "'" not in t and "\\" not in t and "\n" not in t for t in pos_terms
+    whens = [
+        f"WHEN term = {_s(t)} THEN log1p(({_d(float(n))} - "
+        f"{_d(float(df_of[t]))} + {_d(0.5)}) / "
+        f"({_d(float(df_of[t]))} + {_d(0.5)}))"
+        for t in pos_terms
+        if t in df_of
+    ]
+    idf_sql = (
+        ("CASE " + " ".join(whens) + " ELSE CAST(NULL AS DOUBLE) END")
+        if whens
+        else "CAST(NULL AS DOUBLE)"
     )
-    if stats_local is not None and sql_safe:
-        whens = [
-            f"WHEN term = '{t}' THEN log1p(({_d(float(n))} - "
-            f"{_d(float(stats_local[t]))} + {_d(0.5)}) / "
-            f"({_d(float(stats_local[t]))} + {_d(0.5)}))"
-            for t in pos_terms
-            if t in stats_local
-        ]
-        idf_sql = (
-            ("CASE " + " ".join(whens) + " ELSE CAST(NULL AS DOUBLE) END")
-            if whens
-            else "CAST(NULL AS DOUBLE)"
-        )
-        blocks = blocks.selectExpr(
-            *cols,
-            *([] if has_phrases else ["CAST(NULL AS BINARY) AS pos_bin"]),
-            f"{idf_sql} AS idf",
-            f"{bound_sql} AS bound_imp",
-        )
-    else:
-        blocks = blocks.select(*cols)
-        if stats_local is not None:
-            idf_col = F.lit(None).cast("double")
-            for t in pos_terms:
-                if t in stats_local:
-                    dfv = F.lit(stats_local[t]).cast("double")
-                    idf_col = F.when(
-                        F.col("term") == t,
-                        F.log1p(
-                            (F.lit(float(n)) - dfv + F.lit(0.5))
-                            / (dfv + F.lit(0.5))
-                        ),
-                    ).otherwise(idf_col)
-            blocks = blocks.withColumn("idf", idf_col)
-        else:
-            stats = (
-                index.term_stats()
-                .filter(F.col("term").isin(list(pos_terms)))
-                .select(
-                    "term",
-                    F.log1p(
-                        (F.lit(float(n)) - F.col("df") + F.lit(0.5))
-                        / (F.col("df") + F.lit(0.5))
-                    ).alias("idf"),
-                )
-            )
-            blocks = blocks.join(F.broadcast(stats), "term", "left")
-        blocks = blocks.withColumn("bound_imp", impact_bound_col(k1, b, avgdl))
-        if not has_phrases:
-            blocks = blocks.withColumn("pos_bin", F.lit(None).cast("binary"))
-
-    aux = _aux_frames(index, filter_docs)
+    blocks = index.postings(interactive=True).filter(
+        F.col("term").isin(all_terms)
+    ).selectExpr(
+        *cols,
+        *([] if has_phrases else ["CAST(NULL AS BINARY) AS pos_bin"]),
+        f"{idf_sql} AS idf",
+        f"{bound_sql} AS bound_imp",
+    )
+    rows = _with_aux(blocks, index, filter_docs)
     filter_active = filter_docs is not None
 
-    # bucketed kernel: group count bounded by B, not by corpus chunk count
-    n_buckets = max(32, spark.sparkContext.defaultParallelism * 2)
-
     def _score(chunk_ids_df: DataFrame | None, tau: float) -> list:
-        sel = blocks
+        sel = rows
         if chunk_ids_df is not None:
-            sel = blocks.join(F.broadcast(chunk_ids_df), "chunk", "left_semi")
-        scorer = _bucketed_kernel(
-            _make_chunk_scorer(
-                branches, k1, b, avgdl, n_keep, tau, filter_active,
-                index.postings_codec,
-            ),
-            _EMPTY_SCORES,
+            sel = rows.join(F.broadcast(chunk_ids_df), "chunk", "left_semi")
+        scorer = _make_chunk_scorer(
+            branches, k1, b, avgdl, n_keep, tau, filter_active,
+            index.postings_codec,
         )
-        if aux is None:
-            scored = _chunk_partitioned(sel, scorer, CHUNK_SCORES_SCHEMA)
-        else:
-            sel = _with_bucket(sel, n_buckets)
-            aux_sel = aux
-            if chunk_ids_df is not None:
-                aux_sel = aux.join(F.broadcast(chunk_ids_df), "chunk", "left_semi")
-            aux_sel = _with_bucket(aux_sel, n_buckets)
-            scored = (
-                sel.groupBy("_bucket")
-                .cogroup(aux_sel.groupBy("_bucket"))
-                .applyInPandas(
-                    lambda left, right: scorer(left, right),
-                    schema=CHUNK_SCORES_SCHEMA,
-                )
-            )
+        scored = _run_chunks(sel, scorer, CHUNK_SCORES_SCHEMA)
         with _interactive_conf(spark):
             return (
                 scored.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -812,7 +710,7 @@ def wand_topk(
     # viable plan. This is a metadata-only cost decision, no data scanned.
     # Cutover tuned empirically AT SCALE: each extra Spark job costs a
     # fixed ~0.5-1 s (shuffle setup, AQE re-plan, Python runner spin-up),
-    # while decoding+scoring a pruned chunk costs ~1-3 ms of bucketed
+    # while decoding+scoring a pruned chunk costs ~1-3 ms of per-chunk
     # kernel work — so two-phase only pays once it can prune O(10^3-10^4)
     # chunks. Measured at 2M docs / 245 chunks, the two-phase plan was
     # 2-3x SLOWER than one job scoring every chunk (3.4 s vs 1.3 s p50);
@@ -926,11 +824,11 @@ def _make_chunk_matcher(
     filter_active: bool,
     codec_name: str = "varint",
 ):
-    """applyInPandas / cogroup kernel for the boolean match set: emit EVERY
-    doc in the chunk satisfying the query (any `|` branch) — no scoring,
-    no truncation. Decode + candidate logic shared with the scoring kernel
-    (_decode_chunk_lists / candidate_ids), so match semantics are identical
-    by construction."""
+    """Per-chunk kernel for the boolean match set (run by _run_chunks):
+    emit EVERY doc in the chunk satisfying the query (any `|` branch) — no
+    scoring, no truncation. Decode + candidate logic shared with the
+    scoring kernel (_decode_chunk_lists / candidate_ids), so match
+    semantics are identical by construction."""
     pos_set = frozenset(t for br in branches for t in br.terms)
     has_phrases = any(br.phrases or br.neg_phrases for br in branches)
     phrase_terms = frozenset(
@@ -1042,23 +940,9 @@ def match_docs(
     if has_phrases:
         cols += ["dls_bin", "pos_bin"]  # read only when a phrase needs them
     blocks = index.postings(interactive=True).filter(F.col("term").isin(all_terms)).select(*cols)
-
-    aux = _aux_frames(index, filter_docs)
-    n_buckets = max(
-        32, index.spark.sparkContext.defaultParallelism * 2
+    matcher = _make_chunk_matcher(
+        branches, filter_docs is not None, index.postings_codec
     )
-    matcher = _bucketed_kernel(
-        _make_chunk_matcher(
-            branches, filter_docs is not None, index.postings_codec
-        ),
-        _EMPTY_MATCH,
-    )
-    if aux is None:
-        return _chunk_partitioned(blocks, matcher, MATCH_SCHEMA)
-    return (
-        _with_bucket(blocks, n_buckets).groupBy("_bucket")
-        .cogroup(_with_bucket(aux, n_buckets).groupBy("_bucket"))
-        .applyInPandas(
-            lambda left, right: matcher(left, right), schema=MATCH_SCHEMA
-        )
+    return _run_chunks(
+        _with_aux(blocks, index, filter_docs), matcher, MATCH_SCHEMA
     )

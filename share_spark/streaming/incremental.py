@@ -401,10 +401,11 @@ class CompactionPolicy:
     Lucene's TieredMergePolicy trigger conditions.
 
     Every un-compacted generation costs queries one extra set of parquet
-    footer opens plus a tombstone cogroup; dead docs inflate df/N.  Both
-    trigger inputs are DRIVER-SIDE METADATA ONLY (manifest generation
-    list + parquet footer row counts) — the decision itself never runs a
-    Spark job, so checking after every micro-batch is free.
+    footer opens plus tombstone rows in every query's chunk shuffle; dead
+    docs inflate df/N.  Both trigger inputs are DRIVER-SIDE METADATA ONLY
+    (manifest generation list + parquet footer row counts) — the decision
+    itself never runs a Spark job, so checking after every micro-batch is
+    free.
 
     max_generations: compact when the live generation count exceeds this.
     max_tombstone_frac: ... or when tombstoned docs / total indexed docs

@@ -255,3 +255,42 @@ def test_pfor_codec_index_rank_identical(spark, pages_pdf, built_index, tmp_path
     sa = TopKServer.open(built_index.index_dir).topk(queries[1], k=12)
     sb = TopKServer.open(idx_dir).topk(queries[1], k=12)
     assert str(sa) == str(sb)
+
+
+def test_failed_postings_write_leaks_nothing(spark, tmp_path, monkeypatch):
+    """A postings-stage error must not leave the overlapped docs write
+    running, its pool thread alive, or the shared extract frame persisted:
+    the build joins the docs write, shuts its pool down and unpersists the
+    frame before the error reaches the caller."""
+    import os
+    import threading
+
+    import pytest
+
+    import share_spark.index.build as B
+
+    def _boom(cfg):
+        raise RuntimeError("injected postings failure")
+
+    def persisted() -> set:
+        # other tests share this session and may keep frames cached, so
+        # the check is that the failed build adds none
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    monkeypatch.setattr(B, "_make_block_encoder", _boom)
+    rdds = persisted()
+    pool_threads = {
+        t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")
+    }
+    d = str(tmp_path / "idx")
+    pages = spark.createDataFrame(make_web_pages(50, seed=7))
+    with pytest.raises(RuntimeError, match="injected postings failure"):
+        build_index(spark, pages, d, IndexConfig(block_size=16, chunk_docs=32))
+    assert os.path.exists(os.path.join(d, "gen0", "_DONE_docs"))
+    leaked = {
+        t
+        for t in threading.enumerate()
+        if t.name.startswith("ThreadPoolExecutor") and t not in pool_threads
+    }
+    assert not leaked
+    assert persisted() <= rdds

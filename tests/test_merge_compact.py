@@ -223,8 +223,15 @@ def test_block_merge_identical_to_row_merge(spark, tmp_path, churned_index, monk
 
     # block path (default)
     compact(spark, churned_index, mode="merge")
-    # force the row-level fallback on the copy
-    monkeypatch.setattr(B, "local_tombstone_arrays", lambda *a, **k: None)
+    # force the row-level fallback on the copy: over the cap (cap=0), the
+    # real tombstone lookup declines the block path
+    real = B.local_tombstone_arrays
+    tomb_dir = IndexReader.open(spark, d_row).tombstone_dir
+    assert tomb_dir is not None
+    assert real(d_row, tomb_dir, cap=0) is None
+    monkeypatch.setattr(
+        B, "local_tombstone_arrays", lambda *a, **k: real(*a, **{**k, "cap": 0})
+    )
     compact(spark, d_row, mode="merge")
 
     def _blocks(d):
