@@ -1500,6 +1500,16 @@ class IndexReader:
                 gens.append(json.load(f))
         return cls(spark, index_dir, manifest, gens, tombstone_dir=tomb_dir)
 
+    def _read_scope(self, interactive: bool):
+        """SQL conf scope to create a cached relation under: the
+        interactive guard for a top-k's variant, the session's own conf
+        otherwise."""
+        from contextlib import nullcontext
+
+        from ..session import interactive_sql_conf
+
+        return interactive_sql_conf(self.spark) if interactive else nullcontext()
+
     def _union(self, stage: str, interactive: bool = False) -> DataFrame:
         """Union across generations with a `gen` provenance column (the
         segment id — tombstones are generation-scoped, Lucene-style).
@@ -1513,16 +1523,7 @@ class IndexReader:
         variant. Cached separately per variant."""
         key = (stage, interactive)
         if key not in self._df_cache:
-            from contextlib import nullcontext
-
-            from ..session import interactive_sql_conf
-
-            ctx = (
-                interactive_sql_conf(self.spark)
-                if interactive
-                else nullcontext()
-            )
-            with ctx:
+            with self._read_scope(interactive):
                 parts = []
                 for g in self.gen_manifests:
                     gen = g["generation"]
@@ -1621,22 +1622,29 @@ class IndexReader:
                 out[t] = out.get(t, 0) + int(df_)
         return out
 
-    def tombstones(self) -> DataFrame | None:
+    def tombstones(self, interactive: bool = False) -> DataFrame | None:
         """(doc_id, before_gen): the doc is dead in every generation
         strictly below before_gen (a replacement tombstones only older
         segments; expel uses before_gen = EXPEL_ALL). Collapsed to the max
-        before_gen per doc. Reads the tombstone VERSION resolved at open()
-        — later merges write new versions and never mutate this one."""
+        before_gen per doc: legacy in-place dirs may hold duplicate rows.
+        Reads the tombstone VERSION resolved at open() — later merges
+        write new versions and never mutate this one — so the frame is
+        built once per reader and `interactive` variant (see _union): a
+        fresh spark.read.parquet runs a schema-inference job every call."""
         if self.tombstone_dir is None:
             return None
-        path = os.path.join(self.index_dir, self.tombstone_dir)
-        if os.path.exists(path):
-            return (
-                self.spark.read.parquet(path)
-                .groupBy("doc_id")
-                .agg(F.max("before_gen").alias("before_gen"))
-            )
-        return None
+        key = ("tombstones", interactive)
+        if key not in self._df_cache:
+            path = os.path.join(self.index_dir, self.tombstone_dir)
+            if not os.path.exists(path):
+                return None
+            with self._read_scope(interactive):
+                self._df_cache[key] = (
+                    self.spark.read.parquet(path)
+                    .groupBy("doc_id")
+                    .agg(F.max("before_gen").alias("before_gen"))
+                )
+        return self._df_cache[key]
 
     def live_docs(self) -> DataFrame:
         """docs() minus generation-superseded and expelled rows."""

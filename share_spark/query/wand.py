@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -80,16 +81,23 @@ RESULT_SCHEMA = "doc_id long, score double, rank int"
 
 
 def _local_result(spark, page) -> DataFrame:
-    """Local top-k page -> DataFrame as a true LocalRelation (Arrow/pandas
-    path). createDataFrame over a plain Python list parallelizes into an
-    RDD-backed frame whose every downstream action launches a real job
-    (~0.3 s of scheduler overhead per query for 13 rows); the pandas path
-    embeds the rows in the plan."""
-    pdf = pd.DataFrame(page, columns=["doc_id", "score", "rank"])
-    pdf = pdf.astype(
-        {"doc_id": "int64", "score": "float64", "rank": "int32"}
+    """Local top-k page -> DataFrame as a true LocalRelation. The page goes
+    in as a pyarrow Table, which createDataFrame embeds in the plan at any
+    row count, so collecting it starts no Spark job. A plain Python list
+    parallelizes into an RDD-backed frame whose every action launches a
+    real job (~0.3 s of scheduler overhead per query for 13 rows); a pandas
+    frame takes the Arrow path only when it has rows, so an empty page fell
+    back to that list."""
+    cols = list(zip(*page)) or [(), (), ()]
+    tbl = pa.table(
+        [
+            pa.array(cols[0], pa.int64()),
+            pa.array(cols[1], pa.float64()),
+            pa.array(cols[2], pa.int32()),
+        ],
+        names=["doc_id", "score", "rank"],
     )
-    return spark.createDataFrame(pdf, schema=RESULT_SCHEMA)
+    return spark.createDataFrame(tbl, schema=RESULT_SCHEMA)
 
 
 def _member(sorted_arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
@@ -502,7 +510,6 @@ def _run_chunks(rows: DataFrame, kernel, schema) -> DataFrame:
     The task accumulates its batches before the groupby; the input is the
     query's term-pruned block slice, so per-task volume is bounded by the
     query, not the corpus."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     aux_cols = ["chunk", "doc_id", "before_gen", "kind"]
@@ -549,7 +556,7 @@ def _with_aux(
     the blocks' one chunk shuffle (never collected to the driver)."""
     chunk_docs = index.chunk_docs
     out = blocks
-    tomb = index.tombstones()
+    tomb = index.tombstones(interactive=True)
     if tomb is not None:
         out = out.unionByName(
             tomb.select(
@@ -708,15 +715,19 @@ def wand_topk(
     # in ONE job; the scorer's conjunctive check prunes per chunk anyway.
     # At 10^8+ chunks (10^12 docs) the two-phase bounds pruning is the only
     # viable plan. This is a metadata-only cost decision, no data scanned.
-    # Cutover tuned empirically AT SCALE: each extra Spark job costs a
-    # fixed ~0.5-1 s (shuffle setup, AQE re-plan, Python runner spin-up),
-    # while decoding+scoring a pruned chunk costs ~1-3 ms of per-chunk
-    # kernel work — so two-phase only pays once it can prune O(10^3-10^4)
-    # chunks. Measured at 2M docs / 245 chunks, the two-phase plan was
-    # 2-3x SLOWER than one job scoring every chunk (3.4 s vs 1.3 s p50);
-    # at 128 chunks and below both plans tie. 4096 chunks (~33M docs at
-    # the default chunk_docs) keeps the one-job plan until the decode
-    # volume genuinely rivals a job's fixed overhead.
+    # Cutover tuned empirically AT SCALE: each extra Spark job cost a
+    # fixed ~0.5-1 s (shuffle setup, AQE re-plan, per-task Python worker
+    # setup), while decoding+scoring a pruned chunk costs ~1-3 ms of
+    # per-chunk kernel work — so two-phase only pays once it can prune
+    # O(10^3-10^4) chunks. Measured at 2M docs / 245 chunks, the two-phase
+    # plan was 2-3x SLOWER than one job scoring every chunk (3.4 s vs
+    # 1.3 s p50); at 128 chunks and below both plans tie. 4096 chunks
+    # (~33M docs at the default chunk_docs) keeps the one-job plan until
+    # the decode volume genuinely rivals a job's fixed overhead. Those
+    # figures predate share_spark.daemon, which removed most of the
+    # per-task Python part (0.1-0.3 s of zip-directory re-reads per
+    # task); the shuffle and scheduling part remains, and the cutover
+    # has not been re-measured since.
     # (single_phase_max_chunks=0 forces the two-phase plan — used by tests
     # to keep the at-scale path covered on small fixtures)
     if index.n_chunks <= single_phase_max_chunks:

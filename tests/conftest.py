@@ -34,3 +34,21 @@ def built_index(spark, pages_pdf, tmp_path_factory):
     cfg = IndexConfig(analyzer="standard", block_size=32, chunk_docs=64)
     build_index(spark, pages, idx_dir, cfg)
     return IndexReader.open(spark, idx_dir)
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """run(fn) -> (fn(), number of Spark jobs fn started), from
+    statusTracker once the listener bus has drained. Counts job ids with
+    no job group, so it is exact only while one call runs at a time."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def run(fn):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        before = set(st.getJobIdsForGroup(None))
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(set(st.getJobIdsForGroup(None)) - before)
+
+    return run

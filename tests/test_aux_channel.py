@@ -11,6 +11,8 @@ Pinned here:
   3. the executed match_docs plan has no cogroup and no Sort: one
      hashpartitioning(chunk) exchange feeds MapInArrow
   4. idf resolves for terms holding quotes and backslashes (field paths)
+  5. a warm reader's top-k runs one Spark job: the tombstone frame is
+     read once per reader, not once per query
 """
 
 from __future__ import annotations
@@ -143,3 +145,16 @@ def test_field_path_with_quote_and_backslash(spark, pages_pdf, tmp_path):
         odd = _rows(fidx["it's\\odd"].scoped_topk(q, ["it's\\odd"], k=13))
         assert plain, q
         assert odd == plain, q
+
+
+def test_warm_tombstoned_topk_is_one_job(tombstoned, jobs_started):
+    index, _allow_df, _allow = tombstoned
+    wand_topk(index, "danger", k=20).collect()  # warm the reader
+    rows, jobs = jobs_started(
+        lambda: _rows(wand_topk(index, "danger", k=20))
+    )
+    assert jobs == 1
+    want = _rows(exact_topk(index, "danger", k=20))
+    assert [(r, d) for r, d, _ in rows] == [(r, d) for r, d, _ in want]
+    for (_, _, gs), (_, _, es) in zip(rows, want):
+        assert abs(gs - es) < 1e-9

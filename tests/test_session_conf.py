@@ -60,3 +60,9 @@ def test_build_runs_under_batch_guard(spark, tmp_path):
         # back on interactive conf after the build exits
         assert _conf(spark) == ("false", str(INTERACTIVE_SHUFFLE_PARTITIONS))
     assert _conf(spark) == base
+
+
+def test_workers_fork_from_engine_daemon(spark):
+    """Python workers fork from share_spark.daemon (stat-checked zip
+    invalidation, see tests/test_daemon.py)."""
+    assert spark.conf.get("spark.python.daemon.module") == "share_spark.daemon"

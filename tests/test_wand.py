@@ -4,7 +4,7 @@ import pytest
 
 from share_spark.corpus import make_queries
 from share_spark.query.bm25 import exact_topk
-from share_spark.query.wand import wand_topk
+from share_spark.query.wand import RESULT_SCHEMA, wand_topk
 
 
 def _rows(df):
@@ -99,3 +99,18 @@ def test_wand_offset(built_index):
     full = _rows(wand_topk(built_index, "the data", k=30))
     page = _rows(wand_topk(built_index, "the data", k=10, offset=10))
     assert [(d) for _, d, _ in page] == [d for _, d, _ in full[10:20]]
+
+
+@pytest.mark.parametrize(
+    "qtext,empty", [('"nothing valued here"', True), ("danger", False)]
+)
+def test_page_collect_starts_no_job(built_index, spark, jobs_started, qtext, empty):
+    """The page is a LocalRelation for empty and non-empty pages alike: the
+    query's one job is its scoring job, and collecting the page starts
+    none (a pandas page takes the Arrow path only when it has rows)."""
+    page, jobs = jobs_started(lambda: wand_topk(built_index, qtext))
+    assert jobs == 1
+    rows, jobs = jobs_started(page.collect)
+    assert jobs == 0
+    assert (rows == []) == empty
+    assert page.schema == spark.createDataFrame([], RESULT_SCHEMA).schema
