@@ -70,7 +70,7 @@ def main() -> None:
     from share_spark.index.build import (
         BLOCKS_SCHEMA,
         _make_block_encoder,
-        decode_termdoc,
+        decode_blocks,
         local_tombstone_arrays,
         merge_generations_blocks,
     )
@@ -82,7 +82,7 @@ def main() -> None:
     apply_incremental(spark, idx_dir, spark.createDataFrame(changed), cfg)
     reader = IndexReader.open(spark, idx_dir)
     window = cfg.chunk_docs * cfg.salt_chunks
-    td = decode_termdoc(reader.postings(), reader.postings_codec)
+    td = decode_blocks(reader.postings(), positions="bin")
     tomb = reader.tombstones()
     if tomb is not None:
         td = (

@@ -47,6 +47,7 @@ import os
 import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 import numpy as np
 import pandas as pd
@@ -55,7 +56,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..extract import EXTRACTOR_VERSION, extract_text
-from .codec import get_codec, varint_decode
+from .codec import (
+    LAYOUT,
+    as_array,
+    binary_from_offsets,
+    binary_parts,
+    dead,
+    get_codec,
+    posting_rows,
+)
 
 K1_DEFAULT = 1.2  # Lucene BM25 defaults; the reference never overrides
 B_DEFAULT = 0.75  # `similarity` (SURVEY.md §2.5, BASELINE.md §A)
@@ -126,10 +135,8 @@ class IndexConfig:
     b: float = B_DEFAULT
     n_partitions: int | None = None
     salt_chunks: int = 4  # shuffle-salt window = salt_chunks * chunk_docs
-    # posting-block binary layout: "varint" (pure LEB128) or "pfor" (hybrid
-    # per-block PFor/varint — see codec.py; ~1.2x smaller raw postings).
-    # Checksum-relevant: generations of one index must share a codec.
-    postings_codec: str = "varint"
+    # the one posting-block layout (codec.py), by the name manifests record
+    postings_codec: ClassVar[str] = "varint"
     # also write a term-clustered copy of the posting blocks for the serving
     # tier (query/serve.py): the WAND layout hashes terms across partitions
     # (right for distributed scoring), which makes a single term's blocks
@@ -149,9 +156,9 @@ class IndexConfig:
                 "k1": self.k1,
                 "b": self.b,
                 "extractor_version": EXTRACTOR_VERSION,
-                # layout string is codec-specific; the varint value is the
-                # historical constant so pre-codec indexes keep their checksum
-                "layout": get_codec(self.postings_codec).layout,
+                # the historical constant: existing indexes keep their
+                # strategy_check
+                "layout": LAYOUT,
             },
             sort_keys=True,
         )
@@ -162,25 +169,26 @@ def _stage_dir(index_dir: str, stage: str) -> str:
     return os.path.join(index_dir, stage)
 
 
-def _parquet_rows(path: str) -> int | None:
-    """Exact row count of a local parquet directory from file FOOTERS only
-    (no Spark job — same trick the compaction policy uses for tombstones).
-    Returns None when the path is not a local directory of parquet files
-    (object stores etc.), so callers fall back to a metadata count job."""
-    try:
-        import pyarrow.parquet as pq
+def _parquet_files(path: str) -> list[str]:
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+    )
 
-        if not os.path.isdir(path):
-            return None
-        total = 0
-        for name in os.listdir(path):
-            if name.endswith(".parquet"):
-                total += pq.ParquetFile(
-                    os.path.join(path, name)
-                ).metadata.num_rows
-        return total
-    except Exception:
-        return None
+
+def _parquet_rows(path: str) -> int:
+    """Exact row count of a parquet directory from its file FOOTERS only
+    (no Spark job). The index dir is always local — build_index writes its
+    manifests with open() — so a missing or unreadable file is a broken
+    index and raises."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+
+
+def check_layout(gen_manifest: dict) -> None:
+    """Raise ValueError unless a generation manifest names the one posting
+    layout (manifests written before the field existed are varint)."""
+    get_codec(gen_manifest.get("postings_codec", "varint"))
 
 
 def _done_marker(index_dir: str, stage: str) -> str:
@@ -250,46 +258,6 @@ def build_docs(
     if not has_docid:
         docs = docs.withColumn("doc_id", F.xxhash64("url"))
     return docs
-
-
-def _binary_from_offsets(n: int, bounds: np.ndarray, data) -> "object":
-    """Arrow binary array over an existing byte buffer: `bounds` are the
-    int64 byte offsets of each of the n+1 value boundaries. Zero per-value
-    Python objects (guide: Arrow binary = one data buffer + offsets)."""
-    import pyarrow as pa
-
-    off32 = np.ascontiguousarray(bounds, dtype=np.int32)
-    buf = data if isinstance(data, pa.Buffer) else pa.py_buffer(
-        np.ascontiguousarray(data, dtype=np.uint8)
-    )
-    return pa.Array.from_buffers(
-        pa.binary(), n, [None, pa.py_buffer(off32), buf]
-    )
-
-
-def _as_array(col):
-    """pa.Table column (ChunkedArray) -> single pa.Array."""
-    import pyarrow as pa
-
-    if isinstance(col, pa.ChunkedArray):
-        if col.num_chunks == 1:
-            return col.chunk(0)
-        if col.num_chunks == 0:
-            return pa.array([], type=col.type)
-        return pa.concat_arrays(col.chunks)
-    return col
-
-
-def _binary_parts(arr) -> tuple[np.ndarray, np.ndarray]:
-    """(uint8 data view, int64 value offsets) of an Arrow BinaryArray,
-    slice-offset corrected. data is the WHOLE buffer; offsets are absolute
-    byte positions into it (len(arr)+1 entries)."""
-    o = arr.offset
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-        o : o + len(arr) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    return data, offs
 
 
 def build_termdoc(docs: DataFrame, analyzer: str) -> DataFrame:
@@ -434,7 +402,7 @@ def build_termdoc(docs: DataFrame, analyzer: str) -> DataFrame:
                     pa.array(doc_ids[gp], type=pa.int64()),
                     pa.array(tf, type=pa.int32()),
                     pa.array(dlen[gp], type=pa.int32()),
-                    _binary_from_offsets(len(gstarts), pos_bounds, pos_buf),
+                    binary_from_offsets(len(gstarts), pos_bounds, pos_buf),
                 ],
                 names=["term", "doc_id", "tf", "dl", "pos_bin"],
             )
@@ -447,120 +415,37 @@ def build_termdoc(docs: DataFrame, analyzer: str) -> DataFrame:
     )
 
 
-def _decode_block_rows(tbl, codec):
-    """One table/batch of posting-block rows -> decoded posting rows as a
-    pa.RecordBatch (term, doc_id, tf, dl, pos_bin, gen); None when empty.
+def decode_blocks(blocks: DataFrame, positions: str | None = None) -> DataFrame:
+    """Posting blocks -> one row per posting: (term, doc_id, tf, dl, gen),
+    with the posting's positions before gen when asked for — "bin" adds
+    pos_bin in build_termdoc's own layout, "list" adds `positions` as
+    array<long> (codec.posting_rows). Map-side only, no shuffle.
 
-    Varint path is Arrow-native: ids/tfs/dls decode from the binary
-    columns' own data buffers, and each posting's positional run is a
-    RE-SLICE of the stored per-block stream at varint value boundaries
-    (the block stream is the byte-concatenation of per-posting runs in
-    build_termdoc's own layout) — no decode, no re-encode, zero copy.
-    Other codecs go through the generic pandas body."""
-    import pyarrow as pa
+    The one Spark operator over the block decoder: the exact scorer's
+    postings and positions (query/bm25.py), and the row-level segment
+    merge, which feeds these rows (positions="bin", gen dropped after the
+    tombstone filter) into the build's own salted exchange and encoder —
+    Lucene's segment merge instead of a re-index, so compaction never
+    re-tokenizes the corpus."""
+    fields = list(TERMDOC_SCHEMA)[:4]
+    cols = ["term", "n", "docs_bin", "tfs_bin", "dls_bin"]
+    if positions == "bin":
+        fields.append(T.StructField("pos_bin", T.BinaryType()))
+        cols.append("pos_bin")
+    elif positions == "list":
+        fields.append(T.StructField("positions", T.ArrayType(T.LongType())))
+        cols.append("pos_bin")
+    fields.append(T.StructField("gen", T.IntegerType()))
+    gen = F.col("gen") if "gen" in blocks.columns else F.lit(0)
 
-    from .codec import (
-        delta_encode_blocks,
-        grouped_delta_decode,
-        varint_decode,
-        varint_value_ends,
-    )
-
-    if isinstance(tbl, pa.RecordBatch):
-        tbl = pa.Table.from_batches([tbl])
-    tbl = tbl.combine_chunks()
-    n_rows = tbl.num_rows
-    if n_rows == 0:
-        return None
-    ns = _as_array(tbl.column("n")).to_numpy(zero_copy_only=False).astype(
-        np.int64
-    )
-    if codec.name != "varint":
-        pdf = tbl.to_pandas()
-        ids = codec.decode_delta(pdf["docs_bin"], ns).astype(np.int64)
-        tfs = codec.decode_plain(pdf["tfs_bin"], ns).astype(np.int64)
-        dls = codec.decode_plain(pdf["dls_bin"], ns).astype(np.int64)
-        pos_abs = np.asarray(
-            codec.decode_runs(pdf["pos_bin"], ns, tfs), dtype=np.int64
-        )
-        rends = np.cumsum(tfs)
-        rstarts = rends - tfs
-        out = pd.DataFrame(
-            {
-                "term": np.repeat(pdf["term"].to_numpy(), ns),
-                "doc_id": ids,
-                "tf": tfs.astype(np.int32),
-                "dl": dls.astype(np.int32),
-                "pos_bin": delta_encode_blocks(pos_abs, rstarts, rends),
-                "gen": np.repeat(pdf["gen"].to_numpy(dtype=np.int32), ns),
-            }
-        )
-        if not len(out):
-            return None
-        return pa.RecordBatch.from_pandas(out, preserve_index=False)
-    # --- varint fast path, Arrow-native ---
-    dd, do = _binary_parts(_as_array(tbl.column("docs_bin")))
-    ids = grouped_delta_decode(
-        np.ascontiguousarray(dd[do[0] : do[-1]]), ns
-    ).astype(np.int64)
-    td, to = _binary_parts(_as_array(tbl.column("tfs_bin")))
-    tfs = varint_decode(
-        np.ascontiguousarray(td[to[0] : to[-1]])
-    ).astype(np.int64)
-    ld, lo = _binary_parts(_as_array(tbl.column("dls_bin")))
-    dls = varint_decode(
-        np.ascontiguousarray(ld[lo[0] : lo[-1]])
-    ).astype(np.int64)
-    pos_arr = _as_array(tbl.column("pos_bin"))
-    pd_data, pd_off = _binary_parts(pos_arr)
-    seg = np.ascontiguousarray(pd_data[pd_off[0] : pd_off[-1]])
-    ve = varint_value_ends(seg)
-    n_post = ids.shape[0]
-    vstarts = np.zeros(n_post + 1, dtype=np.int64)
-    np.cumsum(tfs, out=vstarts[1:])
-    byte_bounds = np.zeros(ve.shape[0] + 1, dtype=np.int64)
-    byte_bounds[1:] = ve
-    post_bounds = byte_bounds[vstarts] + pd_off[0]
-    rep = pa.array(np.repeat(np.arange(n_rows, dtype=np.int64), ns))
-    return pa.RecordBatch.from_arrays(
-        [
-            _as_array(tbl.column("term")).take(rep),
-            pa.array(ids, type=pa.int64()),
-            pa.array(tfs.astype(np.int32), type=pa.int32()),
-            pa.array(dls.astype(np.int32), type=pa.int32()),
-            _binary_from_offsets(n_post, post_bounds, pos_arr.buffers()[2]),
-            _as_array(tbl.column("gen")).take(rep),
-        ],
-        names=["term", "doc_id", "tf", "dl", "pos_bin", "gen"],
-    )
-
-
-def decode_termdoc(blocks: DataFrame, postings_codec: str) -> DataFrame:
-    """Inverse of the posting-block encoder: decode blocks back to
-    (term, doc_id, tf, dl, pos_bin, gen) rows, each posting's positional
-    run re-encoded in build_termdoc's own layout (first absolute, then
-    gaps, varint).  This is what lets compaction MERGE segments at the
-    posting level — decode, drop dead docs, re-encode — instead of
-    re-tokenizing the corpus (Lucene's segment merge vs re-index; at web
-    scale the avoided analyze pass is the entire corpus' CPU cost, and the
-    merge becomes IO-bound).  Map-side only: no shuffle here, the caller
-    feeds the rows into the build's own salted exchange."""
-    codec = get_codec(postings_codec)
-    schema = T.StructType(
-        list(TERMDOC_SCHEMA) + [T.StructField("gen", T.IntegerType())]
-    )
-
-    def _decode_arrow(batches) -> Iterator:
+    def _decode(batches) -> Iterator:
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            out = _decode_block_rows(batch, codec)
-            if out is not None and out.num_rows:
-                yield out
+            if batch.num_rows:
+                yield posting_rows(batch, positions)
 
-    return blocks.select(
-        "term", "n", "docs_bin", "tfs_bin", "dls_bin", "pos_bin", "gen"
-    ).mapInArrow(_decode_arrow, schema=schema)
+    return blocks.select(*cols, gen.cast("int").alias("gen")).mapInArrow(
+        _decode, schema=T.StructType(fields)
+    )
 
 
 def _make_block_encoder(cfg: IndexConfig):
@@ -577,7 +462,7 @@ def _make_block_encoder(cfg: IndexConfig):
          avgdl-independent block-max metadata (impact bounds are computed at
          QUERY time with the then-current global avgdl, so they stay valid
          as later generations shift avgdl)
-      4. pos_bin (varint codec): blocks tile the posting stream, so the
+      4. pos_bin: blocks tile the posting stream, so the
          per-block positional payload is a RE-SLICE of the incoming binary
          column's own data buffer — new offsets, same bytes, zero copy
     No per-block (or per-row) Python objects cross the JVM boundary in
@@ -586,7 +471,6 @@ def _make_block_encoder(cfg: IndexConfig):
     (chunk = doc_id // chunk_docs) — see module docstring.
     """
     bs, chunk_docs = cfg.block_size, cfg.chunk_docs
-    codec = get_codec(cfg.postings_codec)
     MIN_ROWS = 1 << 17  # accumulate small Arrow batches before encoding
 
     def encode(batches) -> Iterator:
@@ -607,8 +491,8 @@ def _make_block_encoder(cfg: IndexConfig):
             n = tbl.num_rows
             if n == 0:
                 return None
-            term_arr = _as_array(tbl.column("term"))
-            ids = _as_array(tbl.column("doc_id")).to_numpy(
+            term_arr = as_array(tbl.column("term"))
+            ids = as_array(tbl.column("doc_id")).to_numpy(
                 zero_copy_only=False
             ).astype(np.int64)
             chunks = ids // chunk_docs
@@ -643,60 +527,28 @@ def _make_block_encoder(cfg: IndexConfig):
             bstarts = gstarts[gi] + within * bs
             bends = np.minimum(bstarts + bs, gends[gi])
 
-            tfs = _as_array(tbl.column("tf")).to_numpy(
+            tfs = as_array(tbl.column("tf")).to_numpy(
                 zero_copy_only=False
             ).astype(np.int64)
-            dls = _as_array(tbl.column("dl")).to_numpy(
+            dls = as_array(tbl.column("dl")).to_numpy(
                 zero_copy_only=False
             ).astype(np.int64)
             max_tf = np.maximum.reduceat(tfs, bstarts).astype(np.int32)
             min_dl = np.minimum.reduceat(dls, bstarts).astype(np.int32)
             sum_tf = np.add.reduceat(tfs, bstarts)
 
-            pos_arr = _as_array(tbl.column("pos_bin"))
-            pdata, poffs = _binary_parts(pos_arr)
-            if codec.name == "varint":
-                docs_buf, docs_off = delta_encode_offsets(ids, bstarts, bends)
-                tfs_buf, tfs_off = varint_encode_offsets(tfs, bstarts, bends)
-                dls_buf, dls_off = varint_encode_offsets(dls, bstarts, bends)
-                docs_bin = _binary_from_offsets(total, docs_off, docs_buf)
-                tfs_bin = _binary_from_offsets(total, tfs_off, tfs_buf)
-                dls_bin = _binary_from_offsets(total, dls_off, dls_buf)
-                # byte slicing IS re-encoding here: the per-block varint
-                # layout equals the concatenation of its runs' varint
-                # bytes, and blocks tile the stream — so the pos payload
-                # is the input buffer re-offset per block, zero copy
-                pos_bounds = np.empty(total + 1, dtype=np.int64)
-                pos_bounds[:-1] = poffs[bstarts]
-                pos_bounds[-1] = poffs[n]
-                pos_bin = _binary_from_offsets(
-                    total, pos_bounds, pos_arr.buffers()[2]
-                )
-            else:
-                docs_bin = pa.array(
-                    codec.encode_delta_blocks(ids, bstarts, bends),
-                    type=pa.binary(),
-                )
-                tfs_bin = pa.array(
-                    codec.encode_plain_blocks(tfs, bstarts, bends),
-                    type=pa.binary(),
-                )
-                dls_bin = pa.array(
-                    codec.encode_plain_blocks(dls, bstarts, bends),
-                    type=pa.binary(),
-                )
-                # decode the raw run value stream (first_abs + gaps, NOT
-                # absolute positions) and re-encode per block in the value
-                # domain — posting -> value offsets via the tf prefix sum
-                pvals = varint_decode(
-                    np.ascontiguousarray(pdata[poffs[0] : poffs[n]])
-                )
-                ctf = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(tfs, out=ctf[1:])
-                pos_bin = pa.array(
-                    codec.encode_plain_blocks(pvals, ctf[bstarts], ctf[bends]),
-                    type=pa.binary(),
-                )
+            docs_buf, docs_off = delta_encode_offsets(ids, bstarts, bends)
+            tfs_buf, tfs_off = varint_encode_offsets(tfs, bstarts, bends)
+            dls_buf, dls_off = varint_encode_offsets(dls, bstarts, bends)
+            # byte slicing IS re-encoding here: the per-block varint layout
+            # equals the concatenation of its runs' varint bytes, and blocks
+            # tile the stream — so the pos payload is the input buffer
+            # re-offset per block, zero copy
+            pos_arr = as_array(tbl.column("pos_bin"))
+            _pdata, poffs = binary_parts(pos_arr)
+            pos_bounds = np.empty(total + 1, dtype=np.int64)
+            pos_bounds[:-1] = poffs[bstarts]
+            pos_bounds[-1] = poffs[n]
             bidx = pa.array(bstarts)
             return pa.RecordBatch.from_arrays(
                 [
@@ -705,10 +557,12 @@ def _make_block_encoder(cfg: IndexConfig):
                     pa.array(ids[bstarts], type=pa.int64()),
                     pa.array(ids[bends - 1], type=pa.int64()),
                     pa.array((bends - bstarts).astype(np.int32)),
-                    docs_bin,
-                    tfs_bin,
-                    dls_bin,
-                    pos_bin,
+                    binary_from_offsets(total, docs_off, docs_buf),
+                    binary_from_offsets(total, tfs_off, tfs_buf),
+                    binary_from_offsets(total, dls_off, dls_buf),
+                    binary_from_offsets(
+                        total, pos_bounds, pos_arr.buffers()[2]
+                    ),
                     pa.array(max_tf),
                     pa.array(min_dl),
                     pa.array(sum_tf, type=pa.int64()),
@@ -784,7 +638,6 @@ def _make_block_merger(cfg: IndexConfig, tomb_bc):
     identical rows, so the copy is exact (Lucene's untouched-segment
     copy). Worth adding when compaction churn is concentrated rather than
     uniform; the byte-identity test pins safety."""
-    codec = get_codec(cfg.postings_codec)
     encode = _make_block_encoder(cfg)
     MIN_BLOCK_ROWS = 1 << 12
 
@@ -803,8 +656,8 @@ def _make_block_merger(cfg: IndexConfig, tomb_bc):
             n = tbl.num_rows
             if n == 0:
                 return None
-            term_arr = _as_array(tbl.column("term"))
-            chunks = _as_array(tbl.column("chunk")).to_numpy(
+            term_arr = as_array(tbl.column("term"))
+            chunks = as_array(tbl.column("chunk")).to_numpy(
                 zero_copy_only=False
             )
             change = np.empty(n, dtype=bool)
@@ -824,10 +677,8 @@ def _make_block_merger(cfg: IndexConfig, tomb_bc):
                 tbl = tbl.slice(0, cut).combine_chunks()
                 n = cut
                 change = change[:cut]
-            rows = _decode_block_rows(tbl, codec)
-            if rows is None or rows.num_rows == 0:
-                return None
-            ns = _as_array(tbl.column("n")).to_numpy(
+            rows = posting_rows(tbl, "bin")
+            ns = as_array(tbl.column("n")).to_numpy(
                 zero_copy_only=False
             ).astype(np.int64)
             gidx = np.repeat(np.cumsum(change) - 1, ns)
@@ -835,18 +686,8 @@ def _make_block_merger(cfg: IndexConfig, tomb_bc):
             # stable (group, doc_id) sort: groups are already in stream
             # order, generations interleave only within a group
             order = np.lexsort((ids, gidx))
-            if tomb_ids.size:
-                gens = rows.column(5).to_numpy(
-                    zero_copy_only=False
-                ).astype(np.int64)
-                loc = np.searchsorted(tomb_ids, ids)
-                locc = np.minimum(loc, tomb_ids.size - 1)
-                dead = (
-                    (loc < tomb_ids.size)
-                    & (tomb_ids[locc] == ids)
-                    & (gens < tomb_gens[locc])
-                )
-                order = order[~dead[order]]
+            gens = rows.column(5).to_numpy(zero_copy_only=False)
+            order = order[~dead(ids, gens, tomb_ids, tomb_gens)[order]]
             if order.size == 0:
                 return None
             perm = pa.array(order)
@@ -894,9 +735,10 @@ def merge_generations_blocks(
     """All generations' posting blocks -> single-generation blocks, as one
     block-shuffle + merge-kernel plan (see _make_block_merger). The caller
     (streaming.incremental.compact) guarantees cfg matches the registered
-    block/chunk/salt/codec geometry and that the tombstone set fits the
+    chunk/salt geometry (the shuffle key depends on nothing else; blocks
+    re-encode at cfg.block_size) and that the tombstone set fits the
     driver-side arrays; otherwise it falls back to the row-level
-    decode_termdoc path."""
+    decode_blocks path."""
     spark = reader.spark
     window = min(cfg.chunk_docs * cfg.salt_chunks, 1 << 62)
     n_parts = cfg.n_partitions or spark.sparkContext.defaultParallelism
@@ -925,13 +767,13 @@ def merge_generations_blocks(
 def local_tombstone_arrays(
     index_dir: str, tombstone_dir: str | None, cap: int = 2_000_000
 ):
-    """Driver-side (sorted doc_ids, aligned max before_gen) from the local
+    """Driver-side (sorted doc_ids, aligned max before_gen) from the
     tombstone version dir — parquet footers bound the size first, so an
-    over-cap set costs one listing and no reads. Returns None in exactly
-    two cases, where callers use the distributed row-level merge instead:
-    the dir is non-local, or the set is larger than cap. Empty arrays when
-    there are no tombstones at all. An unreadable tombstone version raises
-    — it is a broken index, not a reason to change merge paths."""
+    over-cap set costs one listing and no reads. Returns None only when the
+    set is larger than cap, where callers use the distributed row-level
+    merge instead. Empty arrays when there are no tombstones at all. A
+    missing or unreadable tombstone version raises — it is a broken index,
+    not a reason to change merge paths."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -939,22 +781,16 @@ def local_tombstone_arrays(
     if tombstone_dir is None:
         return empty
     path = os.path.join(index_dir, tombstone_dir)
-    if not os.path.isdir(path):
-        return None
-    files = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    ]
-    total = sum(
-        pq.ParquetFile(f).metadata.num_rows for f in files
-    )
+    total = _parquet_rows(path)
     if total > cap:
         return None
     if total == 0:
         return empty
     t = pa.concat_tables(
-        [pq.read_table(f, columns=["doc_id", "before_gen"]) for f in files]
+        [
+            pq.read_table(f, columns=["doc_id", "before_gen"])
+            for f in _parquet_files(path)
+        ]
     )
     ids = t.column("doc_id").to_numpy(zero_copy_only=False).astype(
         np.int64
@@ -1182,12 +1018,10 @@ def _build_index_impl(
     if docs_future is not None:
         docs_future.result()
 
-    # parquet FOOTER count only (no Spark job; falls back to a metadata
-    # count job on non-local filesystems) — avgdl is derived below from
-    # posting block metadata (sum_tf), so no job ever tokenizes for stats
+    # parquet FOOTER count only (no Spark job) — avgdl is derived below
+    # from posting block metadata (sum_tf), so no job ever tokenizes for
+    # stats
     n_docs = _parquet_rows(docs_path)
-    if n_docs is None:
-        n_docs = spark.read.parquet(docs_path).count()
 
     # stages 2b + 3 + the manifest metrics job all read ONLY the finished
     # postings files and are mutually independent — submit them from a
@@ -1290,8 +1124,6 @@ def _build_index_impl(
     total_tokens = sum(int(r["sum_tf"]) for r in part_rows)
     avgdl = (total_tokens / n_docs) if n_docs else 0.0
     n_terms = _parquet_rows(stats_path)
-    if n_terms is None:
-        n_terms = spark.read.parquet(stats_path).count()
     gen_manifest = {
         "generation": generation,
         # identity nonce for THIS build of this generation: readers that
@@ -1345,6 +1177,7 @@ def config_of(index_dir: str) -> IndexConfig:
     gdir = os.path.join(index_dir, f"gen{min(gens)}")
     with open(os.path.join(gdir, "manifest.json")) as f:
         gm = json.load(f)
+    check_layout(gm)
     return IndexConfig(
         analyzer=gm["analyzer"],
         block_size=gm["block_size"],
@@ -1355,7 +1188,6 @@ def config_of(index_dir: str) -> IndexConfig:
         # the IndexConfig defaults
         n_partitions=gm.get("n_partitions"),
         serve_layout=gm.get("serve_layout", True),
-        postings_codec=gm.get("postings_codec", "varint"),
     )
 
 
@@ -1498,6 +1330,7 @@ class IndexReader:
         for g in gen_list:
             with open(os.path.join(index_dir, f"gen{g}", "manifest.json")) as f:
                 gens.append(json.load(f))
+            check_layout(gens[-1])
         return cls(spark, index_dir, manifest, gens, tombstone_dir=tomb_dir)
 
     def _read_scope(self, interactive: bool):
@@ -1548,13 +1381,6 @@ class IndexReader:
     @property
     def analyzer(self) -> str:
         return self.gen_manifests[0]["analyzer"]
-
-    @property
-    def postings_codec(self) -> str:
-        """Block binary layout (uniform across generations — strategy_check
-        folds the codec's layout string, so mixed-codec indexes can't
-        register). Pre-codec manifests are pure varint."""
-        return self.gen_manifests[0].get("postings_codec", "varint")
 
     @property
     def chunk_docs(self) -> int:

@@ -1,12 +1,22 @@
-"""Posting-list binary codec: docID delta + varint, numpy-vectorized.
+"""Posting-block codec: docID delta + LEB128 varint, and its one decoder.
 
 The reference delegates posting-list storage to Lucene (FOR/PFOR inside
-Elasticsearch; see SURVEY.md §4 "Compression"). Here the layout is explicit:
-a posting block stores
+Elasticsearch; see SURVEY.md §4 "Compression"). Here the layout is explicit
+("delta-varint-blocks-v2-pos"); a posting block stores
 
-- doc ids   : strictly increasing -> delta-encoded (first value absolute),
-              then LEB128 varint
-- tfs, dls  : raw LEB128 varint (term frequency, document length)
+- docs_bin  : strictly increasing doc ids -> delta-encoded (first value
+              absolute), then LEB128 varint
+- tfs_bin, dls_bin : raw LEB128 varint (term frequency, document length)
+- pos_bin   : posting i's tf_i in-document token positions, delta-encoded
+              (first absolute) and varint; runs concatenate in posting order
+
+This module is the only one that knows that layout. The encoders write it;
+one Arrow-native decoder reads it, straight from a block table's binary
+data buffers and offsets (no Python bytes objects, no pandas), with two
+views: `posting_rows` (one row per posting — the exact scorer, phrase
+verification and compaction) and `term_lists` (per term, generation-merged
+and id-sorted arrays — the WAND chunk kernel and the serve tier). `dead`
+is the one generation-scoped tombstone test.
 
 All encode/decode paths are numpy-vectorized (no per-value Python loops over
 postings; loops are over *byte positions*, bounded by max varint width = 10),
@@ -126,8 +136,9 @@ def varint_value_ends(data: np.ndarray) -> np.ndarray:
     return np.nonzero((data & _CONT) == 0)[0] + 1
 
 
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode LEB128 bytes into a uint64 array (vectorized)."""
+def varint_decode(buf) -> np.ndarray:
+    """Decode LEB128 bytes (bytes or a contiguous uint8 array) into a
+    uint64 array (vectorized)."""
     data = np.frombuffer(buf, dtype=np.uint8)
     if data.shape[0] == 0:
         return np.empty(0, dtype=np.uint64)
@@ -214,436 +225,230 @@ def filter_groups(
     return flat[np.repeat(keep, lengths)]
 
 
+LAYOUT = "delta-varint-blocks-v2-pos"
+
+
 # --------------------------------------------------------------------------
-# PFor (patched frame-of-reference) block codec — the Lucene-family
-# alternative to LEB128. Per block: one bit width `w` covering most values,
-# values packed little-endian at that width, outliers "patched" via an
-# exception list of (index, high-bits) records. varint spends >= 1 byte per
-# value; tfs (~1-3 bits) and doc-gap / position-gap streams (~4-12 bits)
-# are exactly the distributions bit packing wins on.
-#
-# Block wire format (self-contained, decodes without global state):
-#   [w: 1 byte][n_ex: 2 bytes LE]([first: 8 bytes LE] delta blocks only)
-#   [packed low bits: ceil(n*w/8) bytes][exceptions: n_ex * 6 bytes
-#    (value_index: 2 LE, high_bits: 4 LE)]
-# The encoder picks w per block by exact cost argmin over all widths,
-# constrained so exception high bits fit 32 bits (w >= maxbits-32) and
-# w <= 57 (decode gathers an 8-byte window per value: w + 7 shift <= 64).
-#
-# Everything below is numpy-vectorized; Python loops run over BIT INDICES
-# (<= 57) or BYTE LANES (<= 8), never over values or blocks — the same
-# discipline as the varint paths above.
+# Arrow binary columns <-> (data buffer, offsets)
 # --------------------------------------------------------------------------
 
-_PFOR_MAXW = 57
-_PFOR_HDR = 3
-_PFOR_EX_BYTES = 6
+
+def as_array(col):
+    """pa.Table column (ChunkedArray) -> single pa.Array."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        if col.num_chunks == 1:
+            return col.chunk(0)
+        if col.num_chunks == 0:
+            return pa.array([], type=col.type)
+        return pa.concat_arrays(col.chunks)
+    return col
 
 
-def _bit_lengths(v: np.ndarray) -> np.ndarray:
-    """Per-value bit length of a uint64 array (0 for value 0)."""
-    bl = np.zeros(v.shape[0], dtype=np.int64)
-    tmp = v.copy()
-    while tmp.any():
-        nz = tmp > 0
-        bl[nz] += 1
-        tmp >>= np.uint64(1)
-    return bl
+def binary_parts(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(uint8 data view, int64 value offsets) of an Arrow BinaryArray,
+    slice-offset corrected. data is the WHOLE buffer; offsets are absolute
+    byte positions into it (len(arr)+1 entries)."""
+    o = arr.offset
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+        o : o + len(arr) + 1
+    ].astype(np.int64)
+    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+    return data, offs
 
 
-def _pfor_encode_core(
-    values: np.ndarray,
-    block_starts: np.ndarray,
-    block_ends: np.ndarray,
-    firsts: np.ndarray | None,
-) -> list[bytes]:
-    """Shared encoder: pack values[starts[i]:ends[i]] per block; `firsts`
-    (delta mode) adds an 8-byte absolute-first header per block."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    starts = np.asarray(block_starts, dtype=np.int64)
-    ends = np.asarray(block_ends, dtype=np.int64)
-    nb = starts.shape[0]
-    if nb == 0:
-        return []
-    lens = ends - starts
-    total = int(lens.sum())
-    vstarts = np.zeros(nb, dtype=np.int64)
-    np.cumsum(lens[:-1], out=vstarts[1:])
-    # flat per-block value stream (gidx == arange when blocks tile the input)
-    gidx = np.repeat(starts - vstarts, lens) + np.arange(total, dtype=np.int64)
-    vals = v[gidx]
-    bid = np.repeat(np.arange(nb, dtype=np.int64), lens)
-    k = np.arange(total, dtype=np.int64) - np.repeat(vstarts, lens)
+def binary_from_offsets(n: int, bounds: np.ndarray, data):
+    """Arrow binary array over an existing byte buffer: `bounds` are the
+    int64 byte offsets of each of the n+1 value boundaries. Zero per-value
+    Python objects (Arrow binary = one data buffer + offsets)."""
+    import pyarrow as pa
 
-    bl = _bit_lengths(vals)
-    # per-block bit-length histogram -> exception counts for every width
-    hist = np.bincount(bid * 65 + bl, minlength=nb * 65).reshape(nb, 65)
-    # exc_at_w[:, w] = count(values with bits > w), w in 0..64
-    suffix = hist[:, ::-1].cumsum(axis=1)[:, ::-1]
-    exc_at_w = np.zeros((nb, 65), dtype=np.int64)
-    exc_at_w[:, :64] = suffix[:, 1:]
-    maxbits = 64 - np.argmax(hist[:, ::-1] > 0, axis=1)  # blocks are non-empty
+    off32 = np.ascontiguousarray(bounds, dtype=np.int32)
+    buf = data if isinstance(data, pa.Buffer) else pa.py_buffer(
+        np.ascontiguousarray(data, dtype=np.uint8)
+    )
+    return pa.Array.from_buffers(
+        pa.binary(), n, [None, pa.py_buffer(off32), buf]
+    )
 
-    W = np.arange(_PFOR_MAXW + 1, dtype=np.int64)
-    cost = (lens[:, None] * W[None, :] + 7) // 8 + _PFOR_EX_BYTES * exc_at_w[
-        :, : _PFOR_MAXW + 1
+
+def _column_bytes(tbl, name: str) -> tuple[np.ndarray, np.ndarray]:
+    """(bytes of every value of a binary column, value offsets rebased to
+    them): row range [r0, r1) is bytes[offs[r0]:offs[r1]], a view."""
+    data, offs = binary_parts(as_array(tbl.column(name)))
+    return data[offs[0] : offs[-1]], offs - offs[0]
+
+
+# --------------------------------------------------------------------------
+# The decoder
+# --------------------------------------------------------------------------
+
+
+def posting_rows(tbl, positions: str | None = None):
+    """Block rows (term, n, docs_bin, tfs_bin, dls_bin, gen[, pos_bin]) ->
+    one pa.RecordBatch row per posting: term, doc_id, tf, dl, then the
+    positions when asked for, then gen.
+
+    positions="bin": pos_bin, the posting's run in build_termdoc's own
+    layout — a RE-SLICE of the stored block stream at varint value
+    boundaries (the block stream is the byte-concatenation of its runs), so
+    no decode, no re-encode, zero copy. positions="list": `positions`, the
+    absolute token offsets as a list<int64> over one decoded array."""
+    import pyarrow as pa
+
+    if isinstance(tbl, pa.RecordBatch):
+        tbl = pa.Table.from_batches([tbl])
+    tbl = tbl.combine_chunks()
+    n_rows = tbl.num_rows
+    ns = as_array(tbl.column("n")).to_numpy(zero_copy_only=False).astype(
+        np.int64
+    )
+    ids = grouped_delta_decode(_column_bytes(tbl, "docs_bin")[0], ns)
+    tfs = varint_decode(_column_bytes(tbl, "tfs_bin")[0]).astype(np.int64)
+    dls = varint_decode(_column_bytes(tbl, "dls_bin")[0])
+    rep = pa.array(np.repeat(np.arange(n_rows, dtype=np.int64), ns))
+    arrays = [
+        as_array(tbl.column("term")).take(rep),
+        pa.array(ids, type=pa.int64()),
+        pa.array(tfs.astype(np.int32), type=pa.int32()),
+        pa.array(dls.astype(np.int32), type=pa.int32()),
     ]
-    invalid = W[None, :] < np.maximum(maxbits - 32, 0)[:, None]
-    # exception value-index is 2 bytes: blocks longer than 65535 values must
-    # encode exception-free (w >= maxbits)
-    too_long = lens > 0xFFFF
-    if too_long.any():
-        if (maxbits[too_long] > _PFOR_MAXW).any():
-            raise ValueError(
-                "pfor block > 65535 values needs width > 57 bits"
+    names = ["term", "doc_id", "tf", "dl"]
+    vstarts = np.zeros(ids.shape[0] + 1, dtype=np.int64)
+    np.cumsum(tfs, out=vstarts[1:])
+    if positions == "bin":
+        pos_arr = as_array(tbl.column("pos_bin"))
+        data, offs = binary_parts(pos_arr)
+        ends = varint_value_ends(np.ascontiguousarray(data[offs[0] : offs[-1]]))
+        byte_bounds = np.zeros(ends.shape[0] + 1, dtype=np.int64)
+        byte_bounds[1:] = ends
+        arrays.append(
+            binary_from_offsets(
+                ids.shape[0], byte_bounds[vstarts] + offs[0], pos_arr.buffers()[2]
             )
-        invalid |= too_long[:, None] & (W[None, :] < maxbits[:, None])
-    invalid |= exc_at_w[:, : _PFOR_MAXW + 1] > 0xFFFF
-    cost[invalid] = np.iinfo(np.int64).max
-    w = np.argmin(cost, axis=1).astype(np.int64)
-
-    wv = w[bid]
-    pb = (lens * w + 7) // 8
-    nex = exc_at_w[np.arange(nb), w]
-    hdr = _PFOR_HDR + (8 if firsts is not None else 0)
-    blen = hdr + pb + _PFOR_EX_BYTES * nex
-    boffs = np.zeros(nb + 1, dtype=np.int64)
-    np.cumsum(blen, out=boffs[1:])
-    out = np.zeros(int(boffs[-1]), dtype=np.uint8)
-
-    # headers
-    out[boffs[:-1]] = w.astype(np.uint8)
-    out[boffs[:-1] + 1] = (nex & 0xFF).astype(np.uint8)
-    out[boffs[:-1] + 2] = (nex >> 8).astype(np.uint8)
-    if firsts is not None:
-        f = np.ascontiguousarray(firsts, dtype=np.uint64)
-        for t in range(8):
-            out[boffs[:-1] + 3 + t] = (
-                (f >> np.uint64(8 * t)) & np.uint64(0xFF)
-            ).astype(np.uint8)
-
-    p0 = boffs[:-1] + hdr
-    low = vals & ((np.uint64(1) << wv.astype(np.uint64)) - np.uint64(1))
-
-    # packed payload, one vectorized pass per distinct width
-    for ww in np.unique(w):
-        if ww == 0:
-            continue
-        bsel = w == ww
-        sel = wv == ww
-        pb_sel = pb[bsel]
-        class_bits = np.zeros(bsel.sum(), dtype=np.int64)
-        np.cumsum(pb_sel[:-1] * 8, out=class_bits[1:])
-        clspos = np.cumsum(bsel) - 1  # block -> position within class
-        base = class_bits[clspos[bid[sel]]] + k[sel] * ww
-        bitbuf = np.zeros(int(pb_sel.sum()) * 8, dtype=np.uint8)
-        lsel = low[sel]
-        for j in range(int(ww)):
-            bitbuf[base + j] = (
-                (lsel >> np.uint64(j)) & np.uint64(1)
-            ).astype(np.uint8)
-        classbytes = np.packbits(bitbuf, bitorder="little")
-        # scatter class payload into per-block slots
-        cb_starts = np.zeros(bsel.sum(), dtype=np.int64)
-        np.cumsum(pb_sel[:-1], out=cb_starts[1:])
-        oidx = np.repeat(p0[bsel] - cb_starts, pb_sel) + np.arange(
-            int(pb_sel.sum()), dtype=np.int64
         )
-        out[oidx] = classbytes
-
-    # exceptions
-    exmask = bl > wv
-    tex = int(exmask.sum())
-    if tex:
-        exb = bid[exmask]
-        exidx = k[exmask]
-        exhigh = (vals[exmask] >> wv[exmask].astype(np.uint64)).astype(np.uint64)
-        exoff = p0 + pb
-        nex_starts = np.zeros(nb, dtype=np.int64)
-        np.cumsum(nex[:-1], out=nex_starts[1:])
-        within = np.arange(tex, dtype=np.int64) - nex_starts[exb]
-        o = exoff[exb] + _PFOR_EX_BYTES * within
-        out[o] = (exidx & 0xFF).astype(np.uint8)
-        out[o + 1] = (exidx >> 8).astype(np.uint8)
-        for t in range(4):
-            out[o + 2 + t] = (
-                (exhigh >> np.uint64(8 * t)) & np.uint64(0xFF)
-            ).astype(np.uint8)
-
-    buf = out.tobytes()
-    return [buf[boffs[i] : boffs[i + 1]] for i in range(nb)]
-
-
-def pfor_encode_blocks(
-    values: np.ndarray, block_starts: np.ndarray, block_ends: np.ndarray
-) -> list[bytes]:
-    """PFor-encode a plain value stream per block (tfs / dls / pos runs)."""
-    return _pfor_encode_core(values, block_starts, block_ends, None)
-
-
-def pfor_delta_encode_blocks(
-    doc_ids: np.ndarray, block_starts: np.ndarray, block_ends: np.ndarray
-) -> list[bytes]:
-    """PFor-encode strictly-increasing ids: absolute first in the header,
-    gap stream (gap[0] = 0) bit-packed."""
-    ids = np.ascontiguousarray(doc_ids, dtype=np.uint64)
-    gaps = np.empty_like(ids)
-    if len(ids):
-        gaps[0] = ids[0]
-        np.subtract(ids[1:], ids[:-1], out=gaps[1:])
-    starts = np.asarray(block_starts, dtype=np.int64)
-    gaps[starts] = 0
-    return _pfor_encode_core(gaps, starts, block_ends, ids[starts])
-
-
-def _pfor_decode_core(
-    buf: bytes, byte_lens: np.ndarray, counts: np.ndarray, delta: bool
-) -> np.ndarray:
-    """Decode concatenated pfor blocks. `byte_lens[i]` / `counts[i]` =
-    encoded bytes / value count of block i. Returns the flat uint64 values
-    (absolute ids when delta=True)."""
-    nb = len(byte_lens)
-    counts = np.asarray(counts, dtype=np.int64)
-    if nb == 0:
-        return np.empty(0, dtype=np.uint64)
-    arr = np.frombuffer(buf + b"\x00" * 8, dtype=np.uint8)
-    byte_lens = np.asarray(byte_lens, dtype=np.int64)
-    boffs = np.zeros(nb, dtype=np.int64)
-    np.cumsum(byte_lens[:-1], out=boffs[1:])
-    w = arr[boffs].astype(np.int64)
-    nex = arr[boffs + 1].astype(np.int64) | (arr[boffs + 2].astype(np.int64) << 8)
-    hdr = _PFOR_HDR + (8 if delta else 0)
-    pb = (counts * w + 7) // 8
-    expect = hdr + pb + _PFOR_EX_BYTES * nex
-    if not np.array_equal(expect, byte_lens):
-        raise ValueError("corrupt pfor block stream (length mismatch)")
-    p0 = boffs + hdr
-
-    total = int(counts.sum())
-    out = np.zeros(total, dtype=np.uint64)
-    vstarts = np.zeros(nb, dtype=np.int64)
-    np.cumsum(counts[:-1], out=vstarts[1:])
-    k = np.arange(total, dtype=np.int64) - np.repeat(vstarts, counts)
-    wv = np.repeat(w, counts)
-    p0v = np.repeat(p0, counts)
-
-    for ww in np.unique(w):
-        if ww == 0:
-            continue
-        sel = wv == ww
-        bitpos = p0v[sel] * 8 + k[sel] * ww
-        byte = bitpos >> 3
-        sh = (bitpos & 7).astype(np.uint64)
-        word = np.zeros(byte.shape[0], dtype=np.uint64)
-        for t in range(8):
-            word |= arr[byte + t].astype(np.uint64) << np.uint64(8 * t)
-        out[sel] = (word >> sh) & (
-            (np.uint64(1) << np.uint64(ww)) - np.uint64(1)
+        names.append("pos_bin")
+    elif positions == "list":
+        flat = grouped_delta_decode(_column_bytes(tbl, "pos_bin")[0], tfs)
+        arrays.append(
+            pa.ListArray.from_arrays(
+                pa.array(vstarts.astype(np.int32)), pa.array(flat)
+            )
         )
-
-    tex = int(nex.sum())
-    if tex:
-        exoff = p0 + pb
-        exb = np.repeat(np.arange(nb, dtype=np.int64), nex)
-        nex_starts = np.zeros(nb, dtype=np.int64)
-        np.cumsum(nex[:-1], out=nex_starts[1:])
-        within = np.arange(tex, dtype=np.int64) - nex_starts[exb]
-        o = exoff[exb] + _PFOR_EX_BYTES * within
-        idx = arr[o].astype(np.int64) | (arr[o + 1].astype(np.int64) << 8)
-        high = np.zeros(tex, dtype=np.uint64)
-        for t in range(4):
-            high |= arr[o + 2 + t].astype(np.uint64) << np.uint64(8 * t)
-        out[vstarts[exb] + idx] |= high << w[exb].astype(np.uint64)
-
-    if delta:
-        firsts = np.zeros(nb, dtype=np.uint64)
-        for t in range(8):
-            firsts |= arr[boffs + 3 + t].astype(np.uint64) << np.uint64(8 * t)
-        c = np.cumsum(out)
-        base = c[vstarts] - out[vstarts]
-        return c - np.repeat(base, counts) + np.repeat(firsts, counts)
-    return out
+        names.append("positions")
+    arrays.append(as_array(tbl.column("gen")).take(rep))
+    names.append("gen")
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
-# --------------------------------------------------------------------------
-# Hybrid block codec ("pfor" in IndexConfig.postings_codec): per block, the
-# encoder emits whichever of {PFor, LEB128 varint} is smaller. Tiny tail
-# blocks (a term touching a chunk with a handful of docs — the majority of
-# BLOCKS, a minority of BYTES) stay varint (PFor's 3-11 byte header loses
-# there); dense head-term blocks and all-ones tf runs go PFor (a 128-posting
-# all-tf=1 block packs to 3 + 128/8 = 19 bytes at width 1, vs 128 varint
-# bytes). Measured at 20k-doc default geometry: 1.24x smaller raw postings
-# than pure varint (tfs 2.9x).
-#
-# Wire format: first byte 0xFF => varint block, payload is the exact layout
-# delta_encode_blocks/varint_encode_blocks write; first byte <= 57 => PFor
-# block as documented above. Decode splits blocks by tag and runs each
-# subset's vectorized decoder, scattering into one output array.
-# --------------------------------------------------------------------------
+def term_lists(tbl, score_terms, phrase_terms) -> dict:
+    """Block rows (term, gen, first_doc, n, docs_bin, tfs_bin[, dls_bin]
+    [, pos_bin]) -> term -> (ids, tfs, dls or None, pos_flat or None, gens):
+    every generation's postings of the term merged into one id-sorted list
+    (stable, so a doc in two generations keeps generation order), int64.
 
-_VARINT_TAG = 0xFF
+    dls decode only for terms in `score_terms`, positions only for terms in
+    `phrase_terms`. Each term decodes each column in ONE call over its
+    rows' byte range: varints are self-delimiting and doc-id gap runs reset
+    per block (grouped decode keyed by the block posting counts)."""
+    import pyarrow.compute as pc
 
-
-def _hybrid_pick(varint_blocks: list[bytes], pfor_blocks: list[bytes]) -> list[bytes]:
-    tag = b"\xff"
-    return [
-        p if len(p) < len(v) + 1 else tag + v
-        for v, p in zip(varint_blocks, pfor_blocks)
-    ]
-
-
-def hybrid_encode_plain_blocks(
-    values: np.ndarray, block_starts: np.ndarray, block_ends: np.ndarray
-) -> list[bytes]:
-    return _hybrid_pick(
-        varint_encode_blocks(values, block_starts, block_ends),
-        pfor_encode_blocks(values, block_starts, block_ends),
-    )
-
-
-def hybrid_encode_delta_blocks(
-    doc_ids: np.ndarray, block_starts: np.ndarray, block_ends: np.ndarray
-) -> list[bytes]:
-    return _hybrid_pick(
-        delta_encode_blocks(doc_ids, block_starts, block_ends),
-        pfor_delta_encode_blocks(doc_ids, block_starts, block_ends),
-    )
-
-
-def _subset_bytes(
-    arr: np.ndarray, boffs: np.ndarray, lens: np.ndarray, sel: np.ndarray,
-    skip: int,
-) -> bytes:
-    """Gather the concatenated payloads of selected blocks (dropping `skip`
-    leading tag bytes per block) — one fancy-index, no per-block Python."""
-    l = lens[sel] - skip
-    total = int(l.sum())
-    if total == 0:
-        return b""
-    ss = np.zeros(sel.sum(), dtype=np.int64)
-    np.cumsum(l[:-1], out=ss[1:])
-    idx = np.repeat(boffs[sel] + skip - ss, l) + np.arange(total, dtype=np.int64)
-    return arr[idx].tobytes()
-
-
-def _hybrid_decode(
-    bufs, counts: np.ndarray, delta: bool
-) -> np.ndarray:
-    """Decode hybrid blocks: `bufs` is any iterable of per-block bytes
-    (pandas Series of the parquet column), `counts` the per-block posting
-    counts. Returns flat values (absolute ids when delta=True), int64."""
-    blist = list(bufs)
-    counts = np.asarray(counts, dtype=np.int64)
-    if not blist:
-        return np.empty(0, dtype=np.int64)
-    lens = np.fromiter((len(b) for b in blist), dtype=np.int64, count=len(blist))
-    arr = np.frombuffer(b"".join(blist), dtype=np.uint8)
-    nb = len(blist)
-    boffs = np.zeros(nb, dtype=np.int64)
-    np.cumsum(lens[:-1], out=boffs[1:])
-    vsel = arr[boffs] == _VARINT_TAG
-    total = int(counts.sum())
-    if vsel.all():
-        sub = _subset_bytes(arr, boffs, lens, vsel, 1)
-        if delta:
-            return grouped_delta_decode(sub, counts).astype(np.int64)
-        return varint_decode(sub).astype(np.int64)
-    psel = ~vsel
-    out = np.empty(total, dtype=np.int64)
-    vmask = np.repeat(vsel, counts)
-    if vsel.any():
-        sub = _subset_bytes(arr, boffs, lens, vsel, 1)
-        dec = (
-            grouped_delta_decode(sub, counts[vsel])
-            if delta
-            else varint_decode(sub)
-        )
-        out[vmask] = dec.astype(np.int64)
-    sub = _subset_bytes(arr, boffs, lens, psel, 0)
-    dec = _pfor_decode_core(sub, lens[psel], counts[psel], delta)
-    out[~vmask] = dec.astype(np.int64)
-    return out
-
-
-def runs_to_positions(vals: np.ndarray, run_lengths: np.ndarray) -> np.ndarray:
-    """Turn a stored positional value stream (absolute first per run, gaps
-    after) into absolute positions — the tail of grouped_delta_decode."""
-    vals = np.asarray(vals, dtype=np.int64)
-    lengths = np.asarray(run_lengths, dtype=np.int64)
-    n = int(lengths.sum())
-    if n != vals.shape[0]:
-        raise ValueError(f"positions stream has {vals.shape[0]} values, runs sum to {n}")
+    cols = ["term", "gen", "first_doc", "n", "docs_bin", "tfs_bin"]
+    if score_terms:
+        cols.append("dls_bin")
+    if phrase_terms:
+        cols.append("pos_bin")
+    tbl = tbl.select(cols).sort_by(
+        [("term", "ascending"), ("gen", "ascending"), ("first_doc", "ascending")]
+    ).combine_chunks()
+    n = tbl.num_rows
     if n == 0:
-        return vals
-    starts = np.zeros(lengths.shape[0], dtype=np.int64)
-    np.cumsum(lengths[:-1], out=starts[1:])
-    c = np.cumsum(vals)
-    base = c[starts] - vals[starts]
-    return c - np.repeat(base, lengths)
+        return {}
+    terms = as_array(tbl.column("term"))
+    change = np.ones(n, dtype=bool)
+    if n > 1:
+        change[1:] = pc.not_equal(terms.slice(1), terms.slice(0, n - 1)).to_numpy(
+            zero_copy_only=False
+        )
+    starts = np.flatnonzero(change)
+    ends = np.append(starts[1:], n)
+    ns = as_array(tbl.column("n")).to_numpy(zero_copy_only=False).astype(np.int64)
+    gens = as_array(tbl.column("gen")).to_numpy(zero_copy_only=False).astype(
+        np.int64
+    )
+    docs, docs_o = _column_bytes(tbl, "docs_bin")
+    tfsb, tfs_o = _column_bytes(tbl, "tfs_bin")
+    dlsb, dls_o = _column_bytes(tbl, "dls_bin") if score_terms else (None, None)
+    posb, pos_o = _column_bytes(tbl, "pos_bin") if phrase_terms else (None, None)
+    lists: dict[str, tuple] = {}
+    for t, r0, r1 in zip(terms.take(starts).to_pylist(), starts, ends):
+        cnt = ns[r0:r1]
+        ids = grouped_delta_decode(docs[docs_o[r0] : docs_o[r1]], cnt)
+        tfs = varint_decode(tfsb[tfs_o[r0] : tfs_o[r1]]).astype(np.int64)
+        dls = pos = None
+        if t in score_terms:
+            dls = varint_decode(dlsb[dls_o[r0] : dls_o[r1]]).astype(np.int64)
+        if t in phrase_terms:
+            pos = grouped_delta_decode(posb[pos_o[r0] : pos_o[r1]], tfs)
+        g = np.repeat(gens[r0:r1], cnt)
+        if gens[r0] != gens[r1 - 1]:
+            # one generation's blocks are disjoint and first_doc-sorted, so
+            # only a multi-generation list needs the merge
+            order = np.argsort(ids, kind="stable")
+            if pos is not None:
+                pos = gather_groups(pos, tfs, order)
+            ids, tfs, g = ids[order], tfs[order], g[order]
+            if dls is not None:
+                dls = dls[order]
+        lists[t] = (ids, tfs, dls, pos, g)
+    return lists
+
+
+def dead(ids, gens, tomb_ids, tomb_gens) -> np.ndarray:
+    """Tombstone mask over postings: True where the posting's doc has a
+    tombstone whose before_gen is above the posting's generation (a doc is
+    dead in every generation strictly below its before_gen). `tomb_ids`
+    sorted unique, `tomb_gens` aligned (max before_gen per doc)."""
+    if tomb_ids is None or tomb_ids.size == 0:
+        return np.zeros(ids.shape[0], dtype=bool)
+    loc = np.minimum(np.searchsorted(tomb_ids, ids), tomb_ids.size - 1)
+    return (tomb_ids[loc] == ids) & (gens < tomb_gens[loc])
+
+
+def live_list(entry: tuple, tomb_ids, tomb_gens) -> tuple:
+    """A term_lists entry -> (ids, tfs, dls, pos_flat) without its dead
+    postings (positional runs dropped with their postings)."""
+    ids, tfs, dls, pos, gens = entry
+    d = dead(ids, gens, tomb_ids, tomb_gens)
+    if not d.any():
+        return ids, tfs, dls, pos
+    keep = ~d
+    return (
+        ids[keep],
+        tfs[keep],
+        None if dls is None else dls[keep],
+        None if pos is None else filter_groups(pos, tfs, keep),
+    )
 
 
 class _VarintCodec:
-    """Pure LEB128 layout (delta-varint-blocks-v2-pos) — the default."""
+    """The one posting layout, by name — what IndexConfig.postings_codec and
+    a generation manifest's "postings_codec" refer to."""
 
     name = "varint"
-    layout = "delta-varint-blocks-v2-pos"
-    encode_plain_blocks = staticmethod(varint_encode_blocks)
-    encode_delta_blocks = staticmethod(delta_encode_blocks)
-
-    @staticmethod
-    def decode_plain(bufs, counts) -> np.ndarray:
-        return varint_decode(b"".join(bufs)).astype(np.int64)
+    layout = LAYOUT
 
     @staticmethod
     def decode_delta(bufs, counts) -> np.ndarray:
+        """Doc ids of a sequence of docs_bin values (bytes), with their
+        blocks' posting counts."""
         return grouped_delta_decode(b"".join(bufs), counts).astype(np.int64)
-
-    @staticmethod
-    def decode_runs(bufs, counts, run_lengths) -> np.ndarray:
-        return grouped_delta_decode(b"".join(bufs), run_lengths).astype(np.int64)
-
-
-class _PForCodec:
-    """Hybrid PFor/varint layout (delta-pfor-hybrid-blocks-v3-pos)."""
-
-    name = "pfor"
-    layout = "delta-pfor-hybrid-blocks-v3-pos"
-    encode_plain_blocks = staticmethod(hybrid_encode_plain_blocks)
-    encode_delta_blocks = staticmethod(hybrid_encode_delta_blocks)
-
-    @staticmethod
-    def decode_plain(bufs, counts) -> np.ndarray:
-        return _hybrid_decode(bufs, counts, False)
-
-    @staticmethod
-    def decode_delta(bufs, counts) -> np.ndarray:
-        return _hybrid_decode(bufs, counts, True)
-
-    @staticmethod
-    def decode_runs(bufs, counts, run_lengths) -> np.ndarray:
-        # per-block value count of the positional stream = sum of its tfs
-        counts = np.asarray(counts, dtype=np.int64)
-        rl = np.asarray(run_lengths, dtype=np.int64)
-        starts = np.zeros(counts.shape[0], dtype=np.int64)
-        np.cumsum(counts[:-1], out=starts[1:])
-        vcounts = (
-            np.add.reduceat(rl, starts)
-            if rl.shape[0]
-            else np.zeros(counts.shape[0], dtype=np.int64)
-        )
-        if counts.shape[0]:
-            vcounts[counts == 0] = 0  # reduceat repeats on empty slices
-        vals = _hybrid_decode(bufs, vcounts, False)
-        return runs_to_positions(vals, rl)
-
-
-POSTING_CODECS = {"varint": _VarintCodec, "pfor": _PForCodec}
 
 
 def get_codec(name: str):
-    try:
-        return POSTING_CODECS[name]
-    except KeyError:
+    if name != _VarintCodec.name:
         raise ValueError(
-            f"unknown postings codec {name!r} (have {sorted(POSTING_CODECS)})"
-        ) from None
+            f"unknown postings codec {name!r} (have ['varint'])"
+        )
+    return _VarintCodec

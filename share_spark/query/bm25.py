@@ -37,28 +37,13 @@ from __future__ import annotations
 
 import math
 import re
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..analysis import tokenize
-from ..index.build import FIELD_SEP, IndexReader
-from ..index.codec import get_codec
-
-POSTINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("tf", T.IntegerType()),
-        T.StructField("dl", T.IntegerType()),
-        T.StructField("gen", T.IntegerType()),
-    ]
-)
+from ..index.build import FIELD_SEP, IndexReader, decode_blocks
 
 
 @dataclass(frozen=True)
@@ -429,48 +414,6 @@ def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def decode_blocks(blocks: DataFrame, codec_name: str = "varint") -> DataFrame:
-    """Posting blocks -> (term, doc_id, tf, dl) rows, vectorized decode:
-    ONE codec call per column per Arrow batch (per-block values expand to
-    per-posting rows by repeating the block key `n` times)."""
-
-    has_gen = "gen" in blocks.columns
-    codec = get_codec(codec_name)
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {"term": [], "doc_id": [], "tf": [], "dl": [], "gen": []}
-                ).astype(
-                    {"doc_id": "int64", "tf": "int32", "dl": "int32", "gen": "int32"}
-                )
-                continue
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            gen_col = (
-                pdf["gen"].to_numpy(dtype=np.int32)
-                if has_gen
-                else np.zeros(len(pdf), dtype=np.int32)
-            )
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(pdf["term"].to_numpy(), ns),
-                    "doc_id": codec.decode_delta(pdf["docs_bin"], ns).astype(
-                        np.int64
-                    ),
-                    "tf": codec.decode_plain(pdf["tfs_bin"], ns).astype(
-                        np.int32
-                    ),
-                    "dl": codec.decode_plain(pdf["dls_bin"], ns).astype(
-                        np.int32
-                    ),
-                    "gen": np.repeat(gen_col, ns),
-                }
-            )
-
-    return blocks.mapInPandas(_decode, schema=POSTINGS_SCHEMA)
-
-
 def live_postings(
     index: IndexReader,
     terms: list[str] | None = None,
@@ -481,7 +424,7 @@ def live_postings(
     applied: a row survives unless some tombstone has before_gen > row.gen."""
     cond = term_cond if term_cond is not None else F.col("term").isin(terms)
     blocks = index.postings().filter(cond)
-    rows = decode_blocks(blocks, index.postings_codec)
+    rows = decode_blocks(blocks)
     tomb = index.tombstones()
     if tomb is not None:
         # no broadcast hint: tombstone volume is unbounded between
@@ -512,45 +455,14 @@ def term_idf_df(index: IndexReader, terms: tuple[str, ...]) -> DataFrame:
     )
 
 
-POSITIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("gen", T.IntegerType()),
-        T.StructField("positions", T.ArrayType(T.LongType())),
-    ]
-)
-
-
 def positions_rows(index: IndexReader, terms: list[str]) -> DataFrame:
     """Positional postings for `terms` as (term, doc_id, gen, positions) rows
     with generation-scoped tombstones applied — the exact path's view of the
-    positional index (pos_bin runs decoded vectorized, per block)."""
-    blocks = index.postings().filter(F.col("term").isin(terms)).select(
-        "term", "n", "docs_bin", "tfs_bin", "pos_bin", "gen"
+    positional index (decode_blocks with positions as array<long>)."""
+    blocks = index.postings().filter(F.col("term").isin(terms))
+    rows = decode_blocks(blocks, positions="list").select(
+        "term", "doc_id", "gen", "positions"
     )
-    codec = get_codec(index.postings_codec)
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            ids = codec.decode_delta(pdf["docs_bin"], ns).astype(np.int64)
-            tfs = codec.decode_plain(pdf["tfs_bin"], ns).astype(np.int64)
-            flat = codec.decode_runs(pdf["pos_bin"], ns, tfs)
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(pdf["term"].to_numpy(), ns),
-                    "doc_id": ids,
-                    "gen": np.repeat(pdf["gen"].to_numpy(dtype=np.int32), ns),
-                    "positions": np.split(
-                        np.asarray(flat), np.cumsum(tfs)[:-1]
-                    ),
-                }
-            )
-
-    rows = blocks.mapInPandas(_decode, schema=POSITIONS_SCHEMA)
     tomb = index.tombstones()
     if tomb is not None:
         # un-hinted for the same reason as live_postings: let AQE size it

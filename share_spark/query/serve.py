@@ -37,7 +37,7 @@ from collections import OrderedDict
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 
 def _entry_nbytes(entry: tuple) -> int:
@@ -112,7 +112,8 @@ def _lev_mask(cands: list, stem: str, d: int) -> np.ndarray:
     final = _lev_dp(mat, stem)
     return final[np.arange(n), lens] <= d
 
-from ..index.build import IndexReader
+from ..index.build import IndexReader, check_layout
+from ..index.codec import live_list, term_lists
 from .bm25 import (
     PREFIX_SCORE,
     ParsedQuery,
@@ -226,9 +227,8 @@ class TopKServer:
         self.k1 = gens[0]["k1"]
         self.b = gens[0]["b"]
         self.analyzer = gens[0]["analyzer"]
-        from ..index.codec import get_codec
-
-        self._codec = get_codec(gens[0].get("postings_codec", "varint"))
+        for g in gens:
+            check_layout(g)
         self._n_docs = sum(g["n_docs"] for g in gens)
         self._avgdl = (
             sum(g["avgdl"] * g["n_docs"] for g in gens) / self._n_docs
@@ -548,13 +548,12 @@ class TopKServer:
 
     def _read_row_groups(
         self, gen: int, stage: str, terms: list[str], columns: list[str]
-    ) -> "pd.DataFrame | None":
+    ) -> pa.Table | None:
         """Read only the row groups that CONTAIN one of `terms` (term-
         dictionary membership), slicing exact matches; heavy column reads
         fan out over a thread pool (pyarrow releases the GIL)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         hits: dict[tuple, set] = {}
@@ -580,7 +579,7 @@ class TopKServer:
                 options=pc.SetLookupOptions(value_set=pa.array(sorted(ts))),
             )
             sub = tbl.filter(mask)
-            return sub.to_pandas() if sub.num_rows else None
+            return sub if sub.num_rows else None
 
         if not hits:
             return None
@@ -592,17 +591,20 @@ class TopKServer:
         frames = [f for f in frames if f is not None]
         if not frames:
             return None
-        return pd.concat(frames, ignore_index=True)
+        return pa.concat_tables(frames)
 
     def _read_terms(self, terms: list[str]) -> None:
         """Fill the decoded-postings cache: per term, the gen-merged sorted
-        (ids, tfs, dls, pos_flat, gens) numpy arrays. Decode happens ONCE per
-        term per server lifetime — a warm query runs only the scoring kernel.
-        """
-        from ..index.codec import gather_groups
+        (ids, tfs, dls, pos_flat, gens) numpy arrays of the codec's one
+        decoder (term_lists). Decode happens ONCE per term per server
+        lifetime — a warm query runs only the scoring kernel.
 
-        codec = self._codec
-
+        Compact resident dtypes: ids must stay int64 (xxhash64 full range),
+        but tf/dl/pos/gen all fit int32 — exactly halves cache residency per
+        posting (~49 -> ~21 B), which is the difference between the hot
+        term set fitting the LRU or thrashing it. BM25 arithmetic is
+        unchanged: int32 operands promote to float64 in the scoring kernel,
+        so scores stay bit-identical to the distributed path."""
         missing = []
         for t in dict.fromkeys(terms):  # dedupe, order-preserving
             if t in self._term_cache:
@@ -611,24 +613,30 @@ class TopKServer:
                 missing.append(t)
         if not missing:
             return
-        frames: dict[str, list[pd.DataFrame]] = {t: [] for t in missing}
+        tables = []
         for g in self._gens:
             gen = g["generation"]
-            pdf = self._read_row_groups(
+            tbl = self._read_row_groups(
                 gen, self._postings_stage(gen), missing, _BLOCK_COLS
             )
-            if pdf is None:
+            if tbl is None:
                 continue
             if self.shard is not None:
                 # chunk striping (numpy %, sign of divisor: negative-doc-id
                 # chunks land in a valid shard too)
                 si, ns = self.shard
-                pdf = pdf[pdf["chunk"].to_numpy() % ns == si]
-                if pdf.empty:
+                tbl = tbl.filter(
+                    pa.array(tbl.column("chunk").to_numpy() % ns == si)
+                )
+                if not tbl.num_rows:
                     continue
-            pdf["gen"] = gen
-            for t, grp in pdf.groupby("term", sort=False):
-                frames[t].append(grp)
+            tables.append(
+                tbl.append_column(
+                    "gen", pa.array(np.full(tbl.num_rows, gen, dtype=np.int32))
+                )
+            )
+        want = frozenset(missing)
+        lists = term_lists(pa.concat_tables(tables), want, want) if tables else {}
         empty = (
             np.empty(0, dtype=np.int64),
             np.empty(0, dtype=np.int32),
@@ -637,51 +645,18 @@ class TopKServer:
             np.empty(0, dtype=np.int32),
         )
         for t in missing:
-            if not frames[t]:
+            if t not in lists:
                 self._cache_put(t, empty)
                 continue
-            pdf = pd.concat(frames[t], ignore_index=True).sort_values(
-                ["gen", "first_doc"], kind="mergesort"
-            )
-            ids_l, tfs_l, dls_l, pos_l, gens_l = [], [], [], [], []
-            for gen, g2 in pdf.groupby("gen", sort=True):
-                # batch decode: varints are self-delimiting, so each column
-                # decodes from ONE concatenated buffer (per-block dispatch
-                # would cost ~40us x thousands of blocks for a head term);
-                # doc-id gaps reset at block starts, handled by the grouped
-                # decode with the per-block posting counts
-                # compact resident dtypes: ids must stay int64 (xxhash64
-                # full range), but tf/dl/pos/gen all fit int32 — exactly
-                # halves cache residency per posting (~49 -> ~21 B), which
-                # is the difference between the hot term set fitting the
-                # LRU or thrashing it.  BM25 arithmetic is unchanged:
-                # int32 operands promote to float64 in the scoring kernel,
-                # so scores stay bit-identical to the distributed path.
-                ns = g2["n"].to_numpy(dtype=np.int64)
-                ids = codec.decode_delta(g2["docs_bin"], ns)
-                tfs = codec.decode_plain(g2["tfs_bin"], ns).astype(np.int64)
-                dls = codec.decode_plain(g2["dls_bin"], ns).astype(np.int32)
-                pos_flat = codec.decode_runs(g2["pos_bin"], ns, tfs).astype(
-                    np.int32
-                )
-                ids_l.append(ids)
-                tfs_l.append(tfs)
-                dls_l.append(dls)
-                pos_l.append(pos_flat)
-                gens_l.append(np.full(len(ids), gen, dtype=np.int32))
-            ids = np.concatenate(ids_l)
-            tfs = np.concatenate(tfs_l)
-            order = np.argsort(ids, kind="stable")
+            ids, tfs, dls, pos, gens = lists[t]
             self._cache_put(
                 t,
                 (
-                    ids[order],
-                    tfs[order].astype(np.int32),
-                    np.concatenate(dls_l)[order],
-                    gather_groups(np.concatenate(pos_l), tfs, order).astype(
-                        np.int32
-                    ),
-                    np.concatenate(gens_l)[order],
+                    ids,
+                    tfs.astype(np.int32),
+                    dls.astype(np.int32),
+                    pos.astype(np.int32),
+                    gens.astype(np.int32),
                 ),
             )
         self._evict(protect=set(terms))
@@ -747,12 +722,14 @@ class TopKServer:
             got: dict[str, int] = {t: 0 for t in missing}
             for g in self._gens:
                 gen = g["generation"]
-                pdf = self._read_row_groups(
+                tbl = self._read_row_groups(
                     gen, "term_stats", missing, ["term", "df"]
                 )
-                if pdf is None:
+                if tbl is None:
                     continue
-                for t, d in zip(pdf["term"], pdf["df"]):
+                for t, d in zip(
+                    tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
+                ):
                     got[t] += int(d)
             self._stats_cache.update(got)
         return {t: self._stats_cache[t] for t in terms}
@@ -823,27 +800,14 @@ class TopKServer:
             t: float(np.log1p((n - d + 0.5) / (d + 0.5))) for t, d in dfs.items()
         }
 
+        t_ids, t_gens = self._tomb or (None, None)
         lists: dict[str, tuple] = {}
         for t in all_terms:
-            ids, tfs, dls, pos_flat, gens = cached[t]
-            if ids.size == 0:
+            if cached[t][0].size == 0:
                 if not multi and t in pq.terms:
                     return []  # conjunctive
                 continue  # multi: a missing term only kills its branch
-            if self._tomb is not None:
-                from ..index.codec import filter_groups
-
-                t_ids, t_gens = self._tomb
-                loc = np.searchsorted(t_ids, ids)
-                hit = (loc < t_ids.size) & (
-                    t_ids[np.minimum(loc, t_ids.size - 1)] == ids
-                )
-                dead = hit & (t_gens[np.minimum(loc, t_ids.size - 1)] > gens)
-                if dead.any():
-                    keep = ~dead
-                    pos_flat = filter_groups(pos_flat, tfs, keep)
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            lists[t] = (ids, tfs, dls, pos_flat)
+            lists[t] = live_list(cached[t], t_ids, t_gens)
 
         # prefix clauses -> one sorted allow/deny id set each (union of the
         # clause's live expansion lists), composed exactly like the

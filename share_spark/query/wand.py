@@ -52,14 +52,14 @@ tests/test_wand.py; tie-break is ascending doc_id throughout.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..index.build import IndexReader
-from ..index.codec import filter_groups, gather_groups, get_codec
+from ..index.codec import gather_groups, live_list, term_lists
 from .bm25 import (
     PREFIX_SCORE,
     ParsedQuery,
@@ -317,81 +317,34 @@ def score_branch_lists(
     return uniq[order], tot[order]
 
 
-def _decode_chunk_lists(
-    pdf: pd.DataFrame,
-    tomb_ids: np.ndarray | None,
-    tomb_gens: np.ndarray | None,
-    score_terms: frozenset,
-    phrase_terms: frozenset,
-    codec=None,
+def _chunk_lists(
+    blocks: pa.Table, aux, score_terms: frozenset, phrase_terms: frozenset
 ) -> dict:
-    """Decode one chunk's block rows into per-term posting arrays:
-    term -> (ids sorted, tfs, dls or None, pos_flat or None).
-
-    dls decode only for `score_terms`, positions only for `phrase_terms`;
-    generation-scoped tombstones applied per (term, gen) before the merge.
-    Shared by the scoring kernel and the boolean match-set kernel. `codec`
-    is a codec class from index.codec.POSTING_CODECS (None = varint)."""
-    if codec is None:
-        codec = get_codec("varint")
-    pdf = pdf.sort_values(["term", "gen", "first_doc"], kind="mergesort")
-    lists: dict[str, tuple] = {}
-    for term, grp in pdf.groupby("term", sort=False):
-        want_score = term in score_terms
-        want_pos = term in phrase_terms
-        p_ids, p_tfs, p_dls, p_pos = [], [], [], []
-        for gen, g2 in grp.groupby("gen", sort=True):
-            # batch decode: ONE codec call per column per (term, gen) —
-            # blocks are self-delimiting within the concatenated buffer,
-            # and doc-id gap runs reset per block (grouped decode keyed by
-            # the block posting counts)
-            ns = g2["n"].to_numpy(dtype=np.int64)
-            ids = codec.decode_delta(g2["docs_bin"], ns)
-            tfs = codec.decode_plain(g2["tfs_bin"], ns).astype(np.int64)
-            dls = pos_flat = None
-            if want_score:
-                dls = codec.decode_plain(g2["dls_bin"], ns).astype(np.float64)
-            if want_pos:
-                pos_flat = codec.decode_runs(g2["pos_bin"], ns, tfs)
-            if tomb_ids is not None:
-                excl = tomb_ids[tomb_gens > int(gen)]
-                if excl.size:
-                    keep = ~np.isin(ids, excl)
-                    if want_pos:
-                        pos_flat = filter_groups(pos_flat, tfs, keep)
-                    ids, tfs = ids[keep], tfs[keep]
-                    if want_score:
-                        dls = dls[keep]
-            p_ids.append(ids)
-            p_tfs.append(tfs)
-            if want_score:
-                p_dls.append(dls)
-            if want_pos:
-                p_pos.append(pos_flat)
-        ids = np.concatenate(p_ids) if p_ids else np.empty(0, dtype=np.int64)
-        tfs = np.concatenate(p_tfs) if p_tfs else np.empty(0, dtype=np.int64)
-        # after per-gen tombstoning each doc survives in exactly one
-        # generation; re-sort the merged list by doc_id
-        order = np.argsort(ids, kind="stable")
-        pos_flat = None
-        if want_pos:
-            pos_flat = gather_groups(np.concatenate(p_pos), tfs, order)
-        dls = np.concatenate(p_dls)[order] if want_score else None
-        lists[term] = (ids[order], tfs[order], dls, pos_flat)
-    return lists
+    """One chunk's block rows -> term -> (ids sorted, tfs, dls or None,
+    pos_flat or None) of its live postings: the codec's one decoder
+    (term_lists) less the chunk's generation-scoped tombstones."""
+    tomb_ids, tomb_gens, _allow = aux
+    return {
+        t: live_list(e, tomb_ids, tomb_gens)
+        for t, e in term_lists(blocks, score_terms, phrase_terms).items()
+    }
 
 
-def _aux_arrays(aux: pd.DataFrame | None):
-    """Split one chunk's aux rows into (tomb_ids, tomb_gens, allow_ids)."""
+def _aux_arrays(aux: pa.Table | None):
+    """Split one chunk's aux rows into (tomb_ids sorted, aligned tomb_gens,
+    allow_ids sorted); None for an absent kind."""
     tomb_ids = tomb_gens = allow_ids = None
-    if aux is not None and len(aux):
-        t = aux[aux["kind"] == "tomb"]
-        if len(t):
-            tomb_ids = t["doc_id"].to_numpy(dtype=np.int64)
-            tomb_gens = t["before_gen"].to_numpy(dtype=np.int64)
-        a = aux[aux["kind"] == "allow"]
-        if len(a):
-            allow_ids = np.sort(a["doc_id"].to_numpy(dtype=np.int64))
+    if aux is not None:
+        kind = aux.column("kind")
+        ids = aux.column("doc_id").to_numpy()
+        tomb = pc.equal(kind, "tomb").to_numpy(zero_copy_only=False)
+        if tomb.any():
+            order = np.argsort(ids[tomb])
+            tomb_ids = ids[tomb][order]
+            tomb_gens = aux.column("before_gen").to_numpy()[tomb][order]
+        allow = pc.equal(kind, "allow").to_numpy(zero_copy_only=False)
+        if allow.any():
+            allow_ids = np.sort(ids[allow])
     return tomb_ids, tomb_gens, allow_ids
 
 
@@ -403,10 +356,10 @@ def _make_chunk_scorer(
     n_keep: int,
     tau: float,
     filter_active: bool,
-    codec_name: str = "varint",
 ):
     """Per-chunk scoring kernel (run by _run_chunks): score one chunk's
-    blocks, emit local top-n. `branches` is the query's `|` disjunction of
+    blocks, emit local top-n as {"doc_id", "score"} arrays (None when the
+    chunk contributes nothing). `branches` is the query's `|` disjunction of
     conjunctive branches (usually one) — a chunk prunes only when NO branch
     has all its terms present, and the tau bound is the sum of the viable
     branches' bounds.
@@ -415,9 +368,9 @@ def _make_chunk_scorer(
     id), and `bound_imp` (query-time impact bound). The chunk's aux rows,
     split off the same shuffle, carry tombstones (kind='tomb': kill doc in
     generations < before_gen) and the allowed-doc set when a structured
-    filter is pushed down (kind='allow'). Negative terms / neg-phrase-only
-    terms have null idf and contribute only ids (+ positions for phrase
-    checks).
+    filter is pushed down (kind='allow'); they arrive as _aux_arrays.
+    Negative terms / neg-phrase-only terms have null idf and contribute
+    only ids (+ positions for phrase checks).
     """
     branch_terms = [tuple(sorted(set(br.terms))) for br in branches]
     pos_set = frozenset(t for bt in branch_terms for t in bt)
@@ -427,31 +380,28 @@ def _make_chunk_scorer(
         for ph in (br.phrases + br.neg_phrases)
         for t in ph
     )
-    codec = get_codec(codec_name)
 
-    empty = pd.DataFrame(
-        {
-            "doc_id": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-        }
-    )
-
-    def score_chunk(pdf: pd.DataFrame, aux: pd.DataFrame | None = None) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return empty
-        tomb_ids, tomb_gens, allow_ids = _aux_arrays(aux)
+    def score_chunk(blocks: pa.Table, aux: tuple):
+        allow_ids = aux[2]
         if filter_active and allow_ids is None:
-            return empty  # filter active, nothing allowed in this chunk
+            return None  # filter active, nothing allowed in this chunk
 
         idf_of: dict[str, float] = {}
         per_term_max: dict[str, float] = {}
+        per_term = blocks.group_by("term").aggregate(
+            [("bound_imp", "max"), ("idf", "max")]
+        )
         seen_terms = set()
-        for t, bi, idf in zip(pdf["term"], pdf["bound_imp"], pdf["idf"]):
+        for t, bi, idf in zip(
+            per_term.column("term").to_pylist(),
+            per_term.column("bound_imp_max").to_pylist(),
+            per_term.column("idf_max").to_pylist(),
+        ):
             seen_terms.add(t)
             if t not in pos_set:
                 continue
             idf_of[t] = float(idf)
-            if bi > per_term_max.get(t, 0.0):
+            if bi > 0.0:
                 per_term_max[t] = bi
 
         # branch viability: all the branch's terms (and its positive
@@ -469,17 +419,15 @@ def _make_chunk_scorer(
             viable.append(br)
             bound += sum(idf_of[t] * per_term_max[t] for t in bt)
         if not viable:
-            return empty
+            return None
         if bound < tau:  # ties kept: equal-score docs can win on doc_id
-            return empty
+            return None
 
-        lists = _decode_chunk_lists(
-            pdf, tomb_ids, tomb_gens, pos_set, phrase_terms, codec
-        )
+        lists = _chunk_lists(blocks, aux, pos_set, phrase_terms)
         doc_ids, scores = score_branch_lists(
             tuple(viable), lists, idf_of, k1, b, avgdl, n_keep, allow_ids
         )
-        return pd.DataFrame({"doc_id": doc_ids, "score": scores})
+        return {"doc_id": doc_ids, "score": scores}
 
     return score_chunk
 
@@ -498,21 +446,30 @@ def _make_chunk_scorer(
 from ..session import interactive_sql_conf as _interactive_conf  # noqa: E402
 
 
+def _chunk_slices(tbl: pa.Table) -> dict:
+    """chunk -> zero-copy slice of `tbl`'s rows, after one Arrow sort of the
+    table by chunk."""
+    tbl = tbl.sort_by("chunk").combine_chunks()
+    ck = tbl.column("chunk").to_numpy()
+    starts = np.flatnonzero(np.r_[True, ck[1:] != ck[:-1]])
+    ends = np.append(starts[1:], ck.size)
+    return {int(ck[s]): tbl.slice(s, e - s) for s, e in zip(starts, ends)}
+
+
 def _run_chunks(rows: DataFrame, kernel, schema) -> DataFrame:
     """The one kernel runner: hash-repartition by chunk (all of a chunk's
     blocks and aux rows co-locate; reduce width comes from the runtime
     shuffle conf, 4 under the interactive guard) and run `kernel` once per
-    chunk inside one mapInArrow task. Aux rows (non-null `kind`, see
-    _with_aux) split off at the Arrow level before to_pandas, so block
-    int64 columns never round through float on the aux rows' nulls. Chunks
-    are iterated via pandas' C-level groupby: no Sort by the grouping key
-    and no per-group Arrow conversion, which a grouped pandas UDF pays.
-    The task accumulates its batches before the groupby; the input is the
-    query's term-pruned block slice, so per-task volume is bounded by the
-    query, not the corpus."""
-    import pyarrow.compute as pc
-
+    chunk inside one mapInArrow task. The task keeps its rows as one Arrow
+    table: aux rows (non-null `kind`, see _with_aux) split off with an
+    Arrow filter, blocks and aux sort by chunk with an Arrow sort, and each
+    kernel call gets its chunk's zero-copy block slice plus _aux_arrays of
+    its aux rows — no pandas, no Sort in the plan. Kernels return a dict of
+    output columns (None for an empty chunk). The task accumulates its
+    batches first; the input is the query's term-pruned block slice, so
+    per-task volume is bounded by the query, not the corpus."""
     aux_cols = ["chunk", "doc_id", "before_gen", "kind"]
+    names = schema.fieldNames()
 
     def fn(batches):
         tabs = [b for b in batches if b.num_rows]
@@ -521,18 +478,22 @@ def _run_chunks(rows: DataFrame, kernel, schema) -> DataFrame:
         tbl = pa.Table.from_batches(tabs)
         aux_of: dict = {}
         if "kind" in tbl.schema.names:
-            kind = tbl["kind"]
-            aux = tbl.filter(pc.is_valid(kind)).select(aux_cols).to_pandas()
-            aux_of = dict(tuple(aux.groupby("chunk", sort=False)))
-            tbl = tbl.filter(pc.is_null(kind)).drop_columns(aux_cols[1:])
+            is_aux = pc.is_valid(tbl.column("kind"))
+            aux = tbl.filter(is_aux).select(aux_cols)
+            if aux.num_rows:
+                aux_of = _chunk_slices(aux)
+            tbl = tbl.filter(pc.invert(is_aux)).drop_columns(aux_cols[1:])
+        if not tbl.num_rows:
+            return
         outs = [
-            kernel(g, aux_of.get(ck))
-            for ck, g in tbl.to_pandas().groupby("chunk", sort=False)
+            kernel(blocks, _aux_arrays(aux_of.get(ck)))
+            for ck, blocks in _chunk_slices(tbl).items()
         ]
-        outs = [o for o in outs if len(o)]
+        outs = [o for o in outs if o is not None and len(o[names[0]])]
         if outs:
-            yield pa.RecordBatch.from_pandas(
-                pd.concat(outs, ignore_index=True), preserve_index=False
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate([o[c] for o in outs])) for c in names],
+                names=names,
             )
 
     return rows.repartition(F.col("chunk")).mapInArrow(fn, schema=schema)
@@ -699,8 +660,7 @@ def wand_topk(
         if chunk_ids_df is not None:
             sel = rows.join(F.broadcast(chunk_ids_df), "chunk", "left_semi")
         scorer = _make_chunk_scorer(
-            branches, k1, b, avgdl, n_keep, tau, filter_active,
-            index.postings_codec,
+            branches, k1, b, avgdl, n_keep, tau, filter_active
         )
         scored = _run_chunks(sel, scorer, CHUNK_SCORES_SCHEMA)
         with _interactive_conf(spark):
@@ -833,13 +793,12 @@ MATCH_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
 def _make_chunk_matcher(
     branches: tuple[ParsedQuery, ...],
     filter_active: bool,
-    codec_name: str = "varint",
 ):
     """Per-chunk kernel for the boolean match set (run by _run_chunks):
     emit EVERY doc in the chunk satisfying the query (any `|` branch) — no
     scoring, no truncation. Decode + candidate logic shared with the
-    scoring kernel (_decode_chunk_lists / candidate_ids), so match
-    semantics are identical by construction."""
+    scoring kernel (_chunk_lists / candidate_ids), so match semantics are
+    identical by construction."""
     pos_set = frozenset(t for br in branches for t in br.terms)
     has_phrases = any(br.phrases or br.neg_phrases for br in branches)
     phrase_terms = frozenset(
@@ -851,16 +810,12 @@ def _make_chunk_matcher(
     # dls decode only to bound the phrase-key stride P; term-only queries
     # never touch dls_bin
     score_terms = pos_set if has_phrases else frozenset()
-    codec = get_codec(codec_name)
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
 
-    def match_chunk(pdf: pd.DataFrame, aux: pd.DataFrame | None = None) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return empty
-        tomb_ids, tomb_gens, allow_ids = _aux_arrays(aux)
+    def match_chunk(blocks: pa.Table, aux: tuple):
+        allow_ids = aux[2]
         if filter_active and allow_ids is None:
-            return empty  # filter active, nothing allowed in this chunk
-        seen = set(pdf["term"])
+            return None  # filter active, nothing allowed in this chunk
+        seen = set(pc.unique(blocks.column("term")).to_pylist())
         viable = [
             br
             for br in branches
@@ -868,10 +823,8 @@ def _make_chunk_matcher(
             and all(t in seen for ph in br.phrases for t in ph)
         ]
         if not viable:
-            return empty
-        lists = _decode_chunk_lists(
-            pdf, tomb_ids, tomb_gens, score_terms, phrase_terms, codec
-        )
+            return None
+        lists = _chunk_lists(blocks, aux, score_terms, phrase_terms)
         if len(viable) == 1:
             ids = candidate_ids(viable[0], lists, allow_ids)
         else:
@@ -880,7 +833,7 @@ def _make_chunk_matcher(
                     [candidate_ids(br, lists, allow_ids) for br in viable]
                 )
             )
-        return pd.DataFrame({"doc_id": ids})
+        return {"doc_id": ids}
 
     return match_chunk
 
@@ -951,9 +904,7 @@ def match_docs(
     if has_phrases:
         cols += ["dls_bin", "pos_bin"]  # read only when a phrase needs them
     blocks = index.postings(interactive=True).filter(F.col("term").isin(all_terms)).select(*cols)
-    matcher = _make_chunk_matcher(
-        branches, filter_docs is not None, index.postings_codec
-    )
+    matcher = _make_chunk_matcher(branches, filter_docs is not None)
     return _run_chunks(
         _with_aux(blocks, index, filter_docs), matcher, MATCH_SCHEMA
     )

@@ -37,6 +37,7 @@ from ..index.build import (
     _KEEP,
     IndexConfig,
     IndexReader,
+    _parquet_rows,
     build_index,
     config_of,
     register_generation,
@@ -221,7 +222,7 @@ def compact(
     an Iceberg-style "replace" snapshot either way:
 
     - ``mode="merge"`` (default): a POSTING-LEVEL segment merge — decode
-      every generation's blocks back to posting rows (build.decode_termdoc,
+      every generation's blocks back to posting rows (build.decode_blocks,
       the encoder's exact inverse), drop tombstoned rows, and feed the
       build's own salted shuffle + block encoders.  The corpus is never
       re-analyzed: at web scale the skipped extract+tokenize pass is the
@@ -245,7 +246,7 @@ def compact(
     `cfg` defaults to the index's own registered config — compaction is a
     rewrite, so a different strategy here IS allowed when passed explicitly
     (this is how a strategy migration reindexes in place)."""
-    from ..index.build import DOCS_SCHEMA, commit_manifest, decode_termdoc
+    from ..index.build import DOCS_SCHEMA, commit_manifest, decode_blocks
 
     registered = config_of(index_dir)
     cfg = cfg or registered
@@ -279,9 +280,9 @@ def compact(
         # Preferred plan: BLOCK-LEVEL merge — shuffle the encoded blocks
         # (~1x index bytes) and decode/drop-dead/re-encode inside the merge
         # kernel, instead of shuffling every decoded posting (~10x; guide
-        # §2.3/§8). Requires the registered block/chunk/salt/codec geometry
-        # (block boundaries are baked into the key) and a tombstone set
-        # that fits driver-side arrays; otherwise the row-level
+        # §2.3/§8). Requires the registered chunk/salt geometry (the
+        # shuffle key is built from it; blocks re-encode at cfg.block_size
+        # either way) and a tombstone set that fits driver-side arrays; otherwise the row-level
         # decode->salted-shuffle->encode path below stands. Both feed the
         # same encoder with the same rows in the same order, so the merged
         # index is identical either way (pinned by the merge≡rebuild tests
@@ -289,10 +290,8 @@ def compact(
         from ..index.build import local_tombstone_arrays, merge_generations_blocks
 
         geometry_ok = (
-            cfg.block_size == registered.block_size
-            and cfg.chunk_docs == registered.chunk_docs
+            cfg.chunk_docs == registered.chunk_docs
             and cfg.salt_chunks == registered.salt_chunks
-            and cfg.postings_codec == registered.postings_codec
         )
         tomb_local = (
             local_tombstone_arrays(index_dir, reader.tombstone_dir)
@@ -304,9 +303,7 @@ def compact(
                 reader, cfg, tomb_local[0], tomb_local[1]
             )
         else:
-            termdoc_df = decode_termdoc(
-                reader.postings(), reader.postings_codec
-            )
+            termdoc_df = decode_blocks(reader.postings(), positions="bin")
             tomb = reader.tombstones()
             if tomb is not None:
                 # un-hinted like every tombstone join: AQE broadcasts small
@@ -417,24 +414,14 @@ class CompactionPolicy:
 
 
 def _tombstone_rows(index_dir: str) -> int:
-    """Row count of the current tombstone version from parquet footers only."""
+    """Row count of the current tombstone version from parquet footers only
+    (a version the manifest names but that is missing raises)."""
     from ..index.snapshots import resolve_tombstone_dir
 
     name = resolve_tombstone_dir(index_dir)
     if name is None:
         return 0
-    tomb_path = os.path.join(index_dir, name)
-    if not os.path.exists(tomb_path):
-        return 0
-    import pyarrow.parquet as pq
-
-    total = 0
-    for name in os.listdir(tomb_path):
-        if name.endswith(".parquet"):
-            total += pq.ParquetFile(
-                os.path.join(tomb_path, name)
-            ).metadata.num_rows
-    return total
+    return _parquet_rows(os.path.join(index_dir, name))
 
 
 def should_compact(

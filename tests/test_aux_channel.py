@@ -13,6 +13,7 @@ Pinned here:
   4. idf resolves for terms holding quotes and backslashes (field paths)
   5. a warm reader's top-k runs one Spark job: the tombstone frame is
      read once per reader, not once per query
+  6. the serve tier's pages equal exact_topk's on the same index
 """
 
 from __future__ import annotations
@@ -158,3 +159,21 @@ def test_warm_tombstoned_topk_is_one_job(tombstoned, jobs_started):
     assert [(r, d) for r, d, _ in rows] == [(r, d) for r, d, _ in want]
     for (_, _, gs), (_, _, es) in zip(rows, want):
         assert abs(gs - es) < 1e-9
+
+
+def test_serve_equals_exact_across_generations(tombstoned):
+    """The serve tier decodes a term's generations through the same
+    decoder and drops tombstoned postings with the same mask as the chunk
+    kernel: on the two-generation tombstoned index its pages equal
+    exact_topk's for every query here, not only a single term."""
+    from share_spark.query.serve import TopKServer
+
+    index, _allow_df, _allow = tombstoned
+    srv = TopKServer.open(index.index_dir)
+    for q in QUERIES:
+        want = _rows(exact_topk(index, q, k=20))
+        got = [(rk, d, s) for d, s, rk in srv.topk(q, k=20)]
+        assert want, q
+        assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in want], q
+        for (_, _, gs), (_, _, es) in zip(got, want):
+            assert abs(gs - es) < 1e-9, q

@@ -93,176 +93,192 @@ def test_gather_and_filter_groups():
     assert filter_groups(flat, lengths, np.zeros(4, dtype=bool)).size == 0
 
 
-# ----------------------------------------------------------------------
-# PFor / hybrid block codec
-# ----------------------------------------------------------------------
-
-
-def _block_edges(n, bs):
-    starts = np.arange(0, n, bs, dtype=np.int64)
-    return starts, np.minimum(starts + bs, n)
-
-
-def _pfor_roundtrip_plain(vals, bs=128):
-    from share_spark.index.codec import _pfor_decode_core, pfor_encode_blocks
-
-    starts, ends = _block_edges(len(vals), bs)
-    blocks = pfor_encode_blocks(vals, starts, ends)
-    lens = np.fromiter((len(b) for b in blocks), dtype=np.int64)
-    got = _pfor_decode_core(b"".join(blocks), lens, ends - starts, False)
-    np.testing.assert_array_equal(got.astype(np.uint64), vals.astype(np.uint64))
-    return blocks
-
-
-def test_pfor_plain_roundtrip_distributions():
-    rng = np.random.default_rng(11)
-    cases = [
-        rng.integers(0, 8, 5000),            # narrow (tf-like)
-        rng.zipf(1.3, 5000),                 # heavy tail -> exceptions
-        rng.integers(0, 2**62, 3000),        # wide values (w floor = max-32)
-        np.ones(4000, dtype=np.int64),       # all-equal -> 1-bit packing
-        np.zeros(4000, dtype=np.int64),      # width-0 blocks
-    ]
-    for v in cases:
-        _pfor_roundtrip_plain(np.asarray(v, dtype=np.uint64))
-
-
-def test_pfor_block_longer_than_exception_index_range():
-    # 200k-value block: exception value-index (2 bytes) can't address it,
-    # so the encoder must pick an exception-free width and still round-trip
-    rng = np.random.default_rng(3)
-    v = rng.integers(0, 1000, 200_000).astype(np.uint64)
-    v[123_456] = 2**40  # forces maxbits high in an otherwise narrow block
-    _pfor_roundtrip_plain(v, bs=200_000)
-
-
-def test_pfor_delta_roundtrip_and_size_win():
-    from share_spark.index.codec import (
-        _pfor_decode_core,
-        delta_encode_blocks,
-        pfor_delta_encode_blocks,
-    )
-
-    rng = np.random.default_rng(5)
-    # dense doc ids (gap ~3): the distribution bit packing wins on
-    ids = np.cumsum(rng.integers(1, 6, 20_000)).astype(np.uint64)
-    starts, ends = _block_edges(len(ids), 128)
-    pb = pfor_delta_encode_blocks(ids, starts, ends)
-    lens = np.fromiter((len(b) for b in pb), dtype=np.int64)
-    got = _pfor_decode_core(b"".join(pb), lens, ends - starts, True)
-    np.testing.assert_array_equal(got.astype(np.uint64), ids)
-    vb = delta_encode_blocks(ids, starts, ends)
-    assert sum(map(len, pb)) < sum(map(len, vb))
-
-
-@settings(deadline=None, max_examples=30)
-@given(
-    st.lists(
-        st.integers(min_value=0, max_value=2**63 - 1), min_size=1, max_size=500
-    ),
-    st.integers(min_value=1, max_value=64),
-)
-def test_hybrid_plain_roundtrip_property(xs, bs):
-    from share_spark.index.codec import _hybrid_decode, hybrid_encode_plain_blocks
-
-    v = np.array(xs, dtype=np.uint64)
-    starts, ends = _block_edges(len(v), bs)
-    blocks = hybrid_encode_plain_blocks(v, starts, ends)
-    got = _hybrid_decode(blocks, ends - starts, False)
-    np.testing.assert_array_equal(got.astype(np.uint64), v)
-
-
-@settings(deadline=None, max_examples=30)
-@given(
-    st.lists(
-        st.integers(min_value=1, max_value=2**40), min_size=1, max_size=400
-    ),
-    st.integers(min_value=1, max_value=64),
-)
-def test_hybrid_delta_roundtrip_property(gaps, bs):
-    from share_spark.index.codec import _hybrid_decode, hybrid_encode_delta_blocks
-
-    ids = np.cumsum(np.array(gaps, dtype=np.uint64))
-    starts, ends = _block_edges(len(ids), bs)
-    blocks = hybrid_encode_delta_blocks(ids, starts, ends)
-    got = _hybrid_decode(blocks, ends - starts, True)
-    np.testing.assert_array_equal(got.astype(np.uint64), ids)
-
-
-def test_hybrid_mixes_block_kinds():
-    """A stream with tiny sparse blocks AND dense all-ones blocks should pick
-    varint for some blocks and PFor for others — and still decode as one."""
-    from share_spark.index.codec import (
-        _VARINT_TAG,
-        _hybrid_decode,
-        hybrid_encode_plain_blocks,
-    )
-
-    dense = np.ones(512, dtype=np.uint64)
-    # 3-value tail block of 1-byte varints: 3+1 tag bytes beats PFor's
-    # 3-byte header + packed payload
-    sparse = np.array([3, 7, 100], dtype=np.uint64)
-    v = np.concatenate([dense, sparse])
-    starts = np.array([0, 128, 256, 384, 512])
-    ends = np.array([128, 256, 384, 512, 515])
-    blocks = hybrid_encode_plain_blocks(v, starts, ends)
-    kinds = {b[0] == _VARINT_TAG for b in blocks}
-    assert kinds == {True, False}  # both kinds present
-    got = _hybrid_decode(blocks, ends - starts, False)
-    np.testing.assert_array_equal(got.astype(np.uint64), v)
-
-
-def test_codec_runs_decode_equivalence():
-    """decode_runs parity between the varint and pfor codec classes on the
-    positional-run layout (absolute first per run, gaps after)."""
-    from share_spark.index.codec import _PForCodec, _VarintCodec
-
-    rng = np.random.default_rng(13)
-    n_postings = 2000
-    tfs = rng.integers(1, 7, n_postings).astype(np.int64)
-    runs = []
-    for tf in tfs:
-        runs.append(np.concatenate((
-            rng.integers(0, 100, 1), rng.integers(1, 30, tf - 1)
-        )))
-    stream = np.concatenate(runs).astype(np.int64)
-    ctf = np.concatenate(([0], np.cumsum(tfs)))
-    bs = 128
-    bstarts, bends = _block_edges(n_postings, bs)
-    ns = bends - bstarts
-    from share_spark.index.codec import (
-        hybrid_encode_plain_blocks,
-        varint_encode_blocks,
-    )
-
-    vb = varint_encode_blocks(stream, ctf[bstarts], ctf[bends])
-    hb = hybrid_encode_plain_blocks(stream, ctf[bstarts], ctf[bends])
-    a = _VarintCodec.decode_runs(vb, ns, tfs)
-    b = _PForCodec.decode_runs(hb, ns, tfs)
-    np.testing.assert_array_equal(a, b)
-    # absolute positions: cumsum within each run
-    exp = np.concatenate([np.cumsum(r) for r in runs])
-    np.testing.assert_array_equal(np.asarray(b), exp)
-
-
-def test_pfor_corrupt_stream_raises():
-    import pytest
-
-    from share_spark.index.codec import _pfor_decode_core, pfor_encode_blocks
-
-    v = np.arange(100, dtype=np.uint64)
-    blocks = pfor_encode_blocks(v, np.array([0]), np.array([100]))
-    buf = b"".join(blocks)
-    with pytest.raises(ValueError, match="corrupt"):
-        _pfor_decode_core(buf[:-2], np.array([len(buf) - 2]), np.array([100]), False)
-
-
 def test_get_codec_registry():
     import pytest
 
     from share_spark.index.codec import get_codec
 
     assert get_codec("varint").layout == "delta-varint-blocks-v2-pos"
-    assert get_codec("pfor").layout == "delta-pfor-hybrid-blocks-v3-pos"
+    with pytest.raises(ValueError, match="unknown postings codec"):
+        get_codec("pfor")
     with pytest.raises(ValueError, match="unknown postings codec"):
         get_codec("snappy")
+
+
+def _encoded_blocks(seed: int = 3):
+    """A block table from the build's own encoder: 3 terms over 60 docs,
+    block_size 4, chunk_docs 16, plus a gen column (two generations)."""
+    import pyarrow as pa
+
+    from share_spark.index.build import IndexConfig, _make_block_encoder
+    from share_spark.index.codec import delta_encode_blocks
+
+    rng = np.random.default_rng(seed)
+    terms, ids, tfs, dls, runs = [], [], [], [], []
+    for t in ("alpha", "beta", "gamma"):
+        docs = np.sort(rng.choice(60, size=int(rng.integers(10, 40)), replace=False))
+        for d in docs:
+            tf = int(rng.integers(1, 5))
+            terms.append(t)
+            ids.append(int(d))
+            tfs.append(tf)
+            dls.append(int(rng.integers(tf, 50)))
+            runs.append(np.sort(rng.choice(50, size=tf, replace=False)))
+    ends = np.cumsum(tfs)
+    pos_bin = delta_encode_blocks(
+        np.concatenate(runs), np.concatenate(([0], ends[:-1])), ends
+    )
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(terms),
+            pa.array(ids, type=pa.int64()),
+            pa.array(tfs, type=pa.int32()),
+            pa.array(dls, type=pa.int32()),
+            pa.array(pos_bin, type=pa.binary()),
+        ],
+        names=["term", "doc_id", "tf", "dl", "pos_bin"],
+    )
+    encode = _make_block_encoder(IndexConfig(block_size=4, chunk_docs=16))
+    tbl = pa.Table.from_batches(list(encode(iter([batch]))))
+    gen = (np.arange(tbl.num_rows) % 2).astype(np.int32)
+    return tbl.append_column("gen", pa.array(gen)), batch
+
+
+def test_posting_rows_round_trip_the_encoder():
+    from share_spark.index.codec import posting_rows
+
+    tbl, src = _encoded_blocks()
+    rows = posting_rows(tbl, "bin")
+    for c in ("term", "doc_id", "tf", "dl", "pos_bin"):
+        assert rows.column(c).to_pylist() == src.column(c).to_pylist(), c
+    assert rows.schema.names == ["term", "doc_id", "tf", "dl", "pos_bin", "gen"]
+
+
+def test_decoder_reads_sliced_tables():
+    """A block table sliced at a non-zero Arrow offset decodes exactly like
+    the same rows copied to a fresh, offset-0 table — both views."""
+    import pyarrow as pa
+
+    from share_spark.index.codec import posting_rows, term_lists
+
+    tbl, _src = _encoded_blocks()
+    sliced = tbl.slice(5, 11)
+    assert sliced.column("docs_bin").chunk(0).offset == 5
+    fresh = pa.Table.from_pylist(sliced.to_pylist(), schema=tbl.schema)
+    assert fresh.column("docs_bin").chunk(0).offset == 0
+    for positions in (None, "bin", "list"):
+        assert (
+            posting_rows(sliced, positions).to_pylist()
+            == posting_rows(fresh, positions).to_pylist()
+        ), positions
+    terms = {"alpha", "beta", "gamma"}
+    a, b = term_lists(sliced, terms, terms), term_lists(fresh, terms, terms)
+    assert a.keys() == b.keys() and a
+    for t in a:
+        for x, y in zip(a[t], b[t]):
+            np.testing.assert_array_equal(x, y)
+
+
+def test_term_lists_merge_generations_and_dead_mask():
+    """term_lists merges a term's generations into one id-sorted list and
+    decodes dls/positions only for the terms asked for; dead() kills a
+    posting only in generations below its tombstone's before_gen."""
+    from share_spark.index.codec import dead, live_list, posting_rows, term_lists
+
+    tbl, _src = _encoded_blocks()
+    rows = posting_rows(tbl, "list").to_pydict()
+    lists = term_lists(tbl, {"alpha"}, {"beta"})
+    for t, (ids, tfs, dls, pos, gens) in lists.items():
+        want = sorted(
+            (d, g, tf, dl, p)
+            for tt, d, g, tf, dl, p in zip(
+                rows["term"], rows["doc_id"], rows["gen"], rows["tf"],
+                rows["dl"], rows["positions"],
+            )
+            if tt == t
+        )
+        assert list(ids) == [w[0] for w in want]
+        assert np.all(np.diff(ids) >= 0)
+        assert list(gens) == [w[1] for w in want]
+        assert list(tfs) == [w[2] for w in want]
+        assert (dls is None) == (t != "alpha")
+        if dls is not None:
+            assert list(dls) == [w[3] for w in want]
+        assert (pos is None) == (t != "beta")
+        if pos is not None:
+            assert list(pos) == [x for w in want for x in w[4]]
+    ids, tfs, dls, pos, gens = lists["beta"]
+    tomb_ids = np.array([ids[0], ids[-1]], dtype=np.int64)
+    tomb_gens = np.array([gens[0] + 1, gens[-1]], dtype=np.int64)
+    d = dead(ids, gens, tomb_ids, tomb_gens)
+    assert d[0] and not d[-1] and d.sum() == 1
+    live = live_list(lists["beta"], tomb_ids, tomb_gens)
+    assert list(live[0]) == list(ids[1:])
+    assert live[3].size == pos.size - tfs[0]
+    assert not dead(ids, gens, np.empty(0, np.int64), np.empty(0, np.int64)).any()
+
+
+def test_perfbench_codec_probe_matches_decoder(built_index):
+    """The benchmark's codec probe decodes doc ids with
+    get_codec(IndexConfig().postings_codec).decode_delta(list of bytes,
+    counts); its ids must equal the one decoder's."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from share_spark.index.build import IndexConfig
+    from share_spark.index.codec import get_codec, posting_rows
+
+    path = os.path.join(built_index.index_dir, "gen0", "postings")
+    tbl = pq.read_table(path, columns=["n", "docs_bin"])
+    codec = get_codec(IndexConfig().postings_codec)
+    ids = codec.decode_delta(
+        tbl.column("docs_bin").to_pylist(), tbl.column("n").to_numpy()
+    )
+    full = pq.read_table(path)
+    full = full.append_column("gen", pa.array(np.zeros(full.num_rows, np.int32)))
+    want = posting_rows(full).column("doc_id").to_numpy()
+    assert len(ids) == int(tbl.column("n").to_numpy().sum()) > 0
+    np.testing.assert_array_equal(ids, want)
+
+
+def test_checksum_unchanged():
+    """The strategy checksum keeps its value, so existing indexes keep
+    their strategy_check."""
+    from share_spark.index.build import IndexConfig
+
+    assert IndexConfig().checksum() == "ed77328e4d28cd7d"
+
+
+def test_config_has_no_codec_argument():
+    import pytest
+
+    from share_spark.index.build import IndexConfig
+
+    assert IndexConfig().postings_codec == "varint"
+    with pytest.raises(TypeError):
+        IndexConfig(postings_codec="pfor")
+
+
+def test_manifest_with_another_codec_raises_on_open(spark, built_index, tmp_path):
+    import json
+    import os
+    import shutil
+
+    import pytest
+
+    from share_spark.index.build import IndexReader, config_of
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(built_index.index_dir, d)
+    gman = os.path.join(d, "gen0", "manifest.json")
+    with open(gman) as f:
+        gm = json.load(f)
+    gm["postings_codec"] = "pfor"
+    with open(gman, "w") as f:
+        json.dump(gm, f)
+    with pytest.raises(ValueError, match="unknown postings codec 'pfor'"):
+        IndexReader.open(spark, d)
+    with pytest.raises(ValueError, match="unknown postings codec 'pfor'"):
+        config_of(d)

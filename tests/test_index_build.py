@@ -202,59 +202,26 @@ def test_url_keyed_ids_full_range_int64(spark, tmp_path):
     assert victim not in {doc for doc, _, _ in eng.topk("special", k=40, serve=True)}
 
 
-def test_pfor_codec_index_rank_identical(spark, pages_pdf, built_index, tmp_path):
-    """An index built with postings_codec='pfor' (hybrid PFor/varint block
-    layout) must produce bit-identical query results to the varint index on
-    every path: WAND top-k, phrase, boolean match set, exact verifier."""
-    from share_spark.index.build import (
-        IndexConfig,
-        IndexReader,
-        build_index,
-        config_of,
-    )
-    from share_spark.query.bm25 import exact_topk
-    from share_spark.query.wand import match_docs, wand_topk
+def test_parquet_rows_raises_on_a_broken_file(tmp_path):
+    """Footer counts have no silent fallback: a .parquet file of junk bytes
+    raises instead of reading as "unknown" (and so as a count job or as
+    "no tombstones")."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
 
-    idx_dir = str(tmp_path / "pfor_idx")
-    cfg = IndexConfig(
-        analyzer="standard", block_size=32, chunk_docs=64, postings_codec="pfor"
-    )
-    build_index(spark, spark.createDataFrame(pages_pdf), idx_dir, cfg)
-    pidx = IndexReader.open(spark, idx_dir)
-    assert pidx.postings_codec == "pfor"
-    assert config_of(idx_dir).postings_codec == "pfor"  # ingest inherits it
-    # codec changes the layout string, so the strategy checksum must differ
-    assert (
-        pidx.gen_manifests[0]["strategy_check"]
-        != built_index.gen_manifests[0]["strategy_check"]
-    )
+    from share_spark.index.build import _parquet_rows
 
-    toks = pages_pdf["text"].iloc[0].split()
-    phrase = " ".join(toks[3:5])
-    queries = [
-        "w00000 w00003",
-        f'"{phrase}" w00001',
-        "w00002 -w00010",
-    ]
-    for q in queries:
-        a = [(r.doc_id, r.score) for r in wand_topk(built_index, q, k=12).collect()]
-        b = [(r.doc_id, r.score) for r in wand_topk(pidx, q, k=12).collect()]
-        assert a == b, q
-        # exact path compared codec-vs-codec (exact vs WAND fold order can
-        # differ in the last ulp; cross-path identity has its own test)
-        ea = [(r.doc_id, r.score) for r in exact_topk(built_index, q, k=12).collect()]
-        eb = [(r.doc_id, r.score) for r in exact_topk(pidx, q, k=12).collect()]
-        assert ea == eb, q
-    ma = sorted(r.doc_id for r in match_docs(built_index, "w00000 w00001").collect())
-    mb = sorted(r.doc_id for r in match_docs(pidx, "w00000 w00001").collect())
-    assert ma == mb and len(ma) > 0
-
-    # serve tier decodes through the same codec registry
-    from share_spark.query.serve import TopKServer
-
-    sa = TopKServer.open(built_index.index_dir).topk(queries[1], k=12)
-    sb = TopKServer.open(idx_dir).topk(queries[1], k=12)
-    assert str(sa) == str(sb)
+    d = tmp_path / "tbl"
+    d.mkdir()
+    pq.write_table(pa.table({"x": [1, 2, 3]}), str(d / "part-0.parquet"))
+    (d / "_SUCCESS").write_bytes(b"")
+    assert _parquet_rows(str(d)) == 3
+    (d / "part-1.parquet").write_bytes(b"not a parquet file at all")
+    with pytest.raises(Exception):
+        _parquet_rows(str(d))
+    with pytest.raises(FileNotFoundError):
+        _parquet_rows(str(tmp_path / "missing"))
 
 
 def test_failed_postings_write_leaks_nothing(spark, tmp_path, monkeypatch):

@@ -178,39 +178,13 @@ def test_rebuild_compact_preserves_field_scoping(spark, tmp_path):
         assert after == before, mode
 
 
-def test_merge_pfor_codec_roundtrip(spark, tmp_path):
-    """decode_termdoc is codec-generic: a pfor index merges into a pfor
-    index with identical query results."""
-    import dataclasses
-
-    pf = dataclasses.replace(CFG, postings_codec="pfor")
-    pages = make_web_pages(90, seed=11)
-    d = str(tmp_path / "idx")
-    build_index(spark, spark.createDataFrame(pages), d, pf)
-    changed = pages.iloc[:5].copy()
-    changed["text"] = "replacement rows for codec merge"
-    changed["html"] = None
-    apply_incremental(spark, d, spark.createDataFrame(changed), pf)
-    # identity baseline is a REBUILD of the same live state (scores shift
-    # at compaction either way: dead-doc df/N linger until then — Lucene
-    # semantics — so the post-ingest numbers are NOT the baseline)
-    d2 = str(tmp_path / "idx_rebuild")
-    shutil.copytree(d, d2)
-    compact(spark, d, pf, mode="merge")
-    compact(spark, d2, pf, mode="rebuild")
-    idx = IndexReader.open(spark, d)
-    assert idx.postings_codec == "pfor"
-    for q in ('"nothing valued is here"', "the danger"):
-        assert _results(idx, q) == _results(
-            IndexReader.open(spark, d2), q
-        ), q
-
-
 def test_block_merge_identical_to_row_merge(spark, tmp_path, churned_index, monkeypatch):
     """The block-level merge (shuffle encoded blocks, decode+drop+re-encode
     in the kernel) produces BYTE-identical posting blocks to the row-level
     merge (decode first, shuffle posting rows) — same rows, same order,
-    same encoder, per partition file."""
+    same encoder, per partition file. Also with a block_size change: the
+    block path re-encodes at the new size."""
+    import dataclasses
     import glob
     import os
 
@@ -220,9 +194,22 @@ def test_block_merge_identical_to_row_merge(spark, tmp_path, churned_index, monk
 
     d_row = str(tmp_path / "rowidx")
     shutil.copytree(churned_index, d_row)
+    cfg16 = dataclasses.replace(CFG, block_size=16)
+    d_blk16, d_row16 = str(tmp_path / "blk16"), str(tmp_path / "row16")
+    shutil.copytree(churned_index, d_blk16)
+    shutil.copytree(churned_index, d_row16)
 
+    block_runs = []
+    real_merge = B.merge_generations_blocks
+    monkeypatch.setattr(
+        B,
+        "merge_generations_blocks",
+        lambda *a, **k: block_runs.append(a[1].block_size) or real_merge(*a, **k),
+    )
     # block path (default)
     compact(spark, churned_index, mode="merge")
+    compact(spark, d_blk16, cfg16, mode="merge")
+    assert block_runs == [CFG.block_size, 16]
     # force the row-level fallback on the copy: over the cap (cap=0), the
     # real tombstone lookup declines the block path
     real = B.local_tombstone_arrays
@@ -233,6 +220,8 @@ def test_block_merge_identical_to_row_merge(spark, tmp_path, churned_index, monk
         B, "local_tombstone_arrays", lambda *a, **k: real(*a, **{**k, "cap": 0})
     )
     compact(spark, d_row, mode="merge")
+    compact(spark, d_row16, cfg16, mode="merge")
+    assert block_runs == [CFG.block_size, 16]
 
     def _blocks(d):
         rows = []
@@ -263,3 +252,10 @@ def test_block_merge_identical_to_row_merge(spark, tmp_path, churned_index, monk
     ia, ib = IndexReader.open(spark, churned_index), IndexReader.open(spark, d_row)
     for q in QUERIES:
         assert _results(ia, q) == _results(ib, q), q
+
+    a16, b16 = _blocks(d_blk16), _blocks(d_row16)
+    assert len(a16) == len(b16) and a16 == b16
+    assert max(r[3] for r in a16) == 16 and len(a16) > len(a)
+    ia16 = IndexReader.open(spark, d_blk16)
+    for q in QUERIES:
+        assert _results(ia16, q) == _results(ia, q), q
