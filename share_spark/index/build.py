@@ -61,6 +61,7 @@ from .codec import (
     as_array,
     binary_from_offsets,
     binary_parts,
+    collapse_tombstones,
     dead,
     get_codec,
     posting_rows,
@@ -183,6 +184,17 @@ def _parquet_rows(path: str) -> int:
     import pyarrow.parquet as pq
 
     return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+
+
+def _row_groups(path: str) -> Iterator:
+    """Row-group metadata of every parquet file in a directory, from the
+    file footers only."""
+    import pyarrow.parquet as pq
+
+    for f in _parquet_files(path):
+        md = pq.read_metadata(f)
+        for i in range(md.num_row_groups):
+            yield md.row_group(i)
 
 
 def check_layout(gen_manifest: dict) -> None:
@@ -792,20 +804,10 @@ def local_tombstone_arrays(
             for f in _parquet_files(path)
         ]
     )
-    ids = t.column("doc_id").to_numpy(zero_copy_only=False).astype(
-        np.int64
+    return collapse_tombstones(
+        t.column("doc_id").to_numpy(zero_copy_only=False),
+        t.column("before_gen").to_numpy(zero_copy_only=False),
     )
-    bg = t.column("before_gen").to_numpy(zero_copy_only=False).astype(
-        np.int64
-    )
-    o = np.argsort(ids, kind="stable")
-    ids, bg = ids[o], bg[o]
-    last = np.empty(ids.size, dtype=bool)
-    last[:-1] = ids[1:] != ids[:-1]
-    last[-1] = True
-    ends = np.nonzero(last)[0]
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    return ids[ends], np.maximum.reduceat(bg, starts)
 
 
 def dedup_pages(pages: DataFrame) -> DataFrame:
@@ -1451,8 +1453,11 @@ class IndexReader:
     def tombstones(self, interactive: bool = False) -> DataFrame | None:
         """(doc_id, before_gen): the doc is dead in every generation
         strictly below before_gen (a replacement tombstones only older
-        segments; expel uses before_gen = EXPEL_ALL). Collapsed to the max
-        before_gen per doc: legacy in-place dirs may hold duplicate rows.
+        segments; expel uses before_gen = EXPEL_ALL). Legacy in-place dirs
+        may hold several rows for one doc. The batch variant collapses
+        them to the max before_gen per doc; the interactive variant is the
+        version's raw rows, which the top-k kernel collapses per chunk
+        (codec.collapse_tombstones), so a top-k plans no aggregate.
         Reads the tombstone VERSION resolved at open() — later merges
         write new versions and never mutate this one — so the frame is
         built once per reader and `interactive` variant (see _union): a
@@ -1465,12 +1470,66 @@ class IndexReader:
             if not os.path.exists(path):
                 return None
             with self._read_scope(interactive):
-                self._df_cache[key] = (
-                    self.spark.read.parquet(path)
-                    .groupBy("doc_id")
-                    .agg(F.max("before_gen").alias("before_gen"))
+                tomb = self.spark.read.parquet(path)
+            if not interactive:
+                tomb = tomb.groupBy("doc_id").agg(
+                    F.max("before_gen").alias("before_gen")
                 )
+            self._df_cache[key] = tomb
         return self._df_cache[key]
+
+    def _footers(self) -> tuple[list, int]:
+        """([(term min, term max, {column: compressed bytes})] per postings
+        row group over every generation, compressed bytes of the tombstone
+        version), from parquet footers read once per reader. A row group
+        without term statistics gets (None, None): it admits every term."""
+        key = ("footers",)
+        if key not in self._df_cache:
+            groups = []
+            for g in self.gen_manifests:
+                for rg in _row_groups(
+                    os.path.join(
+                        self.index_dir, f"gen{g['generation']}", "postings"
+                    )
+                ):
+                    cols = [rg.column(j) for j in range(rg.num_columns)]
+                    st = next(
+                        (c.statistics for c in cols if c.path_in_schema == "term"),
+                        None,
+                    )
+                    lo, hi = (
+                        (st.min, st.max)
+                        if st is not None and st.has_min_max
+                        else (None, None)
+                    )
+                    groups.append(
+                        (lo, hi, {c.path_in_schema: c.total_compressed_size for c in cols})
+                    )
+            tomb = 0
+            if self.tombstone_dir is not None:
+                path = os.path.join(self.index_dir, self.tombstone_dir)
+                if os.path.exists(path):
+                    tomb = sum(
+                        rg.column(j).total_compressed_size
+                        for rg in _row_groups(path)
+                        for j in range(rg.num_columns)
+                    )
+            self._df_cache[key] = (groups, tomb)
+        return self._df_cache[key]
+
+    def slice_bytes(self, terms, columns) -> int:
+        """Bytes a top-k reads: the compressed size of `columns` in the
+        postings row groups whose `term` min/max admits one of `terms` (the
+        row groups Spark's parquet filter keeps), summed over every
+        generation, plus the tombstone version's bytes. Footer metadata
+        only (see _footers), no Spark job."""
+        groups, tomb = self._footers()
+        terms = sorted(set(terms))
+        total = tomb
+        for lo, hi, sizes in groups:
+            if lo is None or any(lo <= t <= hi for t in terms):
+                total += sum(sizes.get(c, 0) for c in columns)
+        return total
 
     def live_docs(self) -> DataFrame:
         """docs() minus generation-superseded and expelled rows."""

@@ -16,7 +16,8 @@ data buffers and offsets (no Python bytes objects, no pandas), with two
 views: `posting_rows` (one row per posting — the exact scorer, phrase
 verification and compaction) and `term_lists` (per term, generation-merged
 and id-sorted arrays — the WAND chunk kernel and the serve tier). `dead`
-is the one generation-scoped tombstone test.
+is the one generation-scoped tombstone test, over the per-doc form that
+`collapse_tombstones` makes of raw tombstone rows.
 
 All encode/decode paths are numpy-vectorized (no per-value Python loops over
 postings; loops are over *byte positions*, bounded by max varint width = 10),
@@ -405,11 +406,27 @@ def term_lists(tbl, score_terms, phrase_terms) -> dict:
     return lists
 
 
+def collapse_tombstones(ids, before_gens) -> tuple[np.ndarray, np.ndarray]:
+    """Raw tombstone rows -> (doc ids sorted unique, aligned max
+    before_gen): the form `dead` takes. A tombstone version may hold
+    several rows for one doc (legacy in-place dirs); the largest
+    before_gen wins."""
+    ids = np.asarray(ids, dtype=np.int64)
+    before_gens = np.asarray(before_gens, dtype=np.int64)
+    if ids.size == 0:
+        return ids, before_gens
+    o = np.argsort(ids, kind="stable")
+    ids, before_gens = ids[o], before_gens[o]
+    starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+    return ids[starts], np.maximum.reduceat(before_gens, starts)
+
+
 def dead(ids, gens, tomb_ids, tomb_gens) -> np.ndarray:
     """Tombstone mask over postings: True where the posting's doc has a
     tombstone whose before_gen is above the posting's generation (a doc is
     dead in every generation strictly below its before_gen). `tomb_ids`
-    sorted unique, `tomb_gens` aligned (max before_gen per doc)."""
+    sorted unique, `tomb_gens` aligned (max before_gen per doc, see
+    collapse_tombstones)."""
     if tomb_ids is None or tomb_ids.size == 0:
         return np.zeros(ids.shape[0], dtype=bool)
     loc = np.minimum(np.searchsorted(tomb_ids, ids), tomb_ids.size - 1)

@@ -30,17 +30,25 @@ block-max WAND) maps onto Spark's execution model:
   key-intersection (doc_rank * P + position), never a stored-text rescan
   (the reference pins phrase semantics at
   _common_trovesearch_tests.py:455-474).
-- **Tombstones and structured filters ride the block shuffle**: both are
+- **Tombstones and structured filters ride with the blocks**: both are
   rows keyed by chunk = doc_id // chunk_docs (marked by a non-null `kind`),
-  unioned into the posting-block slice before its one repartition by
-  chunk, and applied inside the kernel BEFORE local top-n truncation. No
+  unioned into the posting-block slice, so they reach the chunk's kernel
+  task by the same route as its blocks, and are applied inside the kernel
+  BEFORE local top-n truncation. Tombstones arrive as the version's raw
+  rows and collapse per chunk in the kernel (no aggregate in the plan). No
   driver collect (10^8 tombstones between compactions would be a driver
   OOM), and no overfetch heuristics for filtered queries — the kernel sees
   the exact allowed-doc set for its chunk.
-- Job economy: one metadata job (chunk bounds), one scoring job per phase.
-  The driver only ever sees <= B+1 chunk bounds and <= offset+k scored rows
-  per phase; per-phase top-n lists merge driver-side (any doc in the global
-  top-n is in its own phase's top-n).
+- Job economy: one scoring job per phase, plus one metadata job (chunk
+  bounds) on the two-phase plan. A scoring job is ONE task when the slice
+  the query reads (parquet footers: its terms' row groups plus the
+  tombstones) is no larger than spark.sql.files.openCostInBytes and no
+  filter frame rides along: the slice coalesces into one kernel task, no
+  exchange. Larger or filtered slices repartition by chunk so several
+  tasks share the decode (see _run_chunks). The driver only ever sees
+  <= B+1 chunk bounds and <= offset+k scored rows per phase; per-phase
+  top-n lists merge driver-side (any doc in the global top-n is in its own
+  phase's top-n).
 - Within a chunk, scoring is numpy-vectorized: sorted-array intersection for
   AND semantics, searchsorted gathers, BM25 per term in sorted-term order
   (deterministic float accumulation, matching tests/frozen_bm25.py).
@@ -59,7 +67,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..index.build import IndexReader
-from ..index.codec import gather_groups, live_list, term_lists
+from ..index.codec import (
+    collapse_tombstones,
+    gather_groups,
+    live_list,
+    term_lists,
+)
 from .bm25 import (
     PREFIX_SCORE,
     ParsedQuery,
@@ -331,17 +344,18 @@ def _chunk_lists(
 
 
 def _aux_arrays(aux: pa.Table | None):
-    """Split one chunk's aux rows into (tomb_ids sorted, aligned tomb_gens,
-    allow_ids sorted); None for an absent kind."""
+    """Split one chunk's aux rows into (tomb_ids sorted unique, aligned max
+    before_gen, allow_ids sorted); None for an absent kind. Tombstones
+    arrive as the version's raw rows and collapse here, per chunk."""
     tomb_ids = tomb_gens = allow_ids = None
     if aux is not None:
         kind = aux.column("kind")
         ids = aux.column("doc_id").to_numpy()
         tomb = pc.equal(kind, "tomb").to_numpy(zero_copy_only=False)
         if tomb.any():
-            order = np.argsort(ids[tomb])
-            tomb_ids = ids[tomb][order]
-            tomb_gens = aux.column("before_gen").to_numpy()[tomb][order]
+            tomb_ids, tomb_gens = collapse_tombstones(
+                ids[tomb], aux.column("before_gen").to_numpy()[tomb]
+            )
         allow = pc.equal(kind, "allow").to_numpy(zero_copy_only=False)
         if allow.any():
             allow_ids = np.sort(ids[allow])
@@ -456,18 +470,34 @@ def _chunk_slices(tbl: pa.Table) -> dict:
     return {int(ck[s]): tbl.slice(s, e - s) for s, e in zip(starts, ends)}
 
 
-def _run_chunks(rows: DataFrame, kernel, schema) -> DataFrame:
-    """The one kernel runner: hash-repartition by chunk (all of a chunk's
-    blocks and aux rows co-locate; reduce width comes from the runtime
-    shuffle conf, 4 under the interactive guard) and run `kernel` once per
-    chunk inside one mapInArrow task. The task keeps its rows as one Arrow
-    table: aux rows (non-null `kind`, see _with_aux) split off with an
-    Arrow filter, blocks and aux sort by chunk with an Arrow sort, and each
-    kernel call gets its chunk's zero-copy block slice plus _aux_arrays of
-    its aux rows — no pandas, no Sort in the plan. Kernels return a dict of
-    output columns (None for an empty chunk). The task accumulates its
-    batches first; the input is the query's term-pruned block slice, so
-    per-task volume is bounded by the query, not the corpus."""
+def _run_chunks(
+    rows: DataFrame, kernel, schema, read_bytes: int | None
+) -> DataFrame:
+    """The one kernel runner: bring all of a chunk's blocks and aux rows
+    into one mapInArrow task and run `kernel` once per chunk there. Two
+    plan shapes, picked by `read_bytes`, the bytes the query reads
+    (IndexReader.slice_bytes; None when unknown before the query runs,
+    i.e. when a filter frame rides along):
+
+    - narrow: read_bytes <= spark.sql.files.openCostInBytes (4 MB by
+      default, Spark's own estimate of the bytes one file open costs in
+      scan time). The whole slice coalesces into ONE task: one stage, no
+      exchange. Below that size the shuffle's task launches and its
+      map/reduce barrier cost more than splitting the kernel's work saves
+      (a 2k-doc top-k: 12 tasks, 0.19 s of job for a few ms of kernel).
+    - exchange: larger or unknown slices hash-repartition by chunk (reduce
+      width from the runtime shuffle conf, 4 under the interactive guard),
+      so several tasks decode and score in parallel (at 50k docs, 10.3 MB
+      of postings, one task raised the single-client p50 0.31 -> 0.43 s).
+
+    Either way the task keeps its rows as one Arrow table: aux rows
+    (non-null `kind`, see _with_aux) split off with an Arrow filter, blocks
+    and aux sort by chunk with an Arrow sort, and each kernel call gets its
+    chunk's zero-copy block slice plus _aux_arrays of its aux rows — no
+    pandas, no Sort in the plan. Kernels return a dict of output columns
+    (None for an empty chunk). The task accumulates its batches first; the
+    input is the query's term-pruned block slice, so per-task volume is
+    bounded by the query, not the corpus."""
     aux_cols = ["chunk", "doc_id", "before_gen", "kind"]
     names = schema.fieldNames()
 
@@ -496,7 +526,13 @@ def _run_chunks(rows: DataFrame, kernel, schema) -> DataFrame:
                 names=names,
             )
 
-    return rows.repartition(F.col("chunk")).mapInArrow(fn, schema=schema)
+    # the JVM conf accessor parses the conf's unit suffix ("4MB", "0")
+    sql_conf = rows.sparkSession._jsparkSession.sessionState().conf()
+    if read_bytes is not None and read_bytes <= sql_conf.filesOpenCostInBytes():
+        rows = rows.coalesce(1)
+    else:
+        rows = rows.repartition(F.col("chunk"))
+    return rows.mapInArrow(fn, schema=schema)
 
 
 def _chunk_of_doc(chunk_docs: int):
@@ -654,6 +690,7 @@ def wand_topk(
     )
     rows = _with_aux(blocks, index, filter_docs)
     filter_active = filter_docs is not None
+    read_bytes = None if filter_active else index.slice_bytes(all_terms, cols)
 
     def _score(chunk_ids_df: DataFrame | None, tau: float) -> list:
         sel = rows
@@ -662,7 +699,7 @@ def wand_topk(
         scorer = _make_chunk_scorer(
             branches, k1, b, avgdl, n_keep, tau, filter_active
         )
-        scored = _run_chunks(sel, scorer, CHUNK_SCORES_SCHEMA)
+        scored = _run_chunks(sel, scorer, CHUNK_SCORES_SCHEMA, read_bytes)
         with _interactive_conf(spark):
             return (
                 scored.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -905,6 +942,9 @@ def match_docs(
         cols += ["dls_bin", "pos_bin"]  # read only when a phrase needs them
     blocks = index.postings(interactive=True).filter(F.col("term").isin(all_terms)).select(*cols)
     matcher = _make_chunk_matcher(branches, filter_docs is not None)
+    read_bytes = (
+        None if filter_docs is not None else index.slice_bytes(all_terms, cols)
+    )
     return _run_chunks(
-        _with_aux(blocks, index, filter_docs), matcher, MATCH_SCHEMA
+        _with_aux(blocks, index, filter_docs), matcher, MATCH_SCHEMA, read_bytes
     )

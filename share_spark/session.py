@@ -12,10 +12,12 @@ import threading
 
 from pyspark.sql import SparkSession
 
-# reduce-side width for interactive top-k jobs: each bucket-group emits at
-# most n_keep rows, so a handful of reduce tasks carries the whole result —
-# while a 32-partition reduce costs 32 task launches PER QUERY that fight
-# each other under concurrency. Measured (local[32]): sp=4 vs session
+# reduce width of an interactive top-k's chunk exchange — the plan a slice
+# larger than one file open takes (query/wand.py _run_chunks; a smaller
+# slice runs as one coalesced task and has no reduce side). Each chunk
+# emits at most n_keep rows, so a handful of reduce tasks carries the whole
+# result, while a 32-partition reduce costs 32 task launches PER QUERY that
+# fight each other under concurrency. Measured (local[32]): sp=4 vs session
 # default 32 is seq p50 0.89->0.72 s AND 8-thread qps 2.5->4.3 at 200k
 # docs; at 2M docs qps 2.2->3.4 for ~0.1 s of sequential p50.
 INTERACTIVE_SHUFFLE_PARTITIONS = 4
@@ -27,14 +29,10 @@ INTERACTIVE_SHUFFLE_PARTITIONS = 4
 # scans split by BYTES instead (large maxPartitionBytes, guide §6) with a
 # small data-independent parallelism floor — derived from the slice size,
 # not the core count, so the same values hold on a 4-core laptop and a
-# 1000-core cluster (env-overridable for deployments that want different
-# floors). Measured at 200k docs / local[32]: p50 0.49-0.72 s -> 0.33-0.51 s.
-INTERACTIVE_SCAN_MIN_SPLITS = os.environ.get(
-    "SPARK_GRAFT_INTERACTIVE_SCAN_MIN_SPLITS", "8"
-)
-INTERACTIVE_SCAN_MAX_PARTITION_BYTES = os.environ.get(
-    "SPARK_GRAFT_INTERACTIVE_SCAN_MAX_PARTITION_BYTES", "512m"
-)
+# 1000-core cluster. Measured at 200k docs / local[32]: p50 0.49-0.72 s ->
+# 0.33-0.51 s.
+INTERACTIVE_SCAN_MIN_SPLITS = "8"
+INTERACTIVE_SCAN_MAX_PARTITION_BYTES = "512m"
 
 _CONF_LOCK = threading.Lock()
 # id(spark) -> {"q": depth, "b": depth, "aqe": saved, "sp": saved, ...}

@@ -38,7 +38,7 @@ def built_index(spark, pages_pdf, tmp_path_factory):
 
 @pytest.fixture
 def jobs_started(spark):
-    """run(fn) -> (fn(), number of Spark jobs fn started), from
+    """run(fn) -> (fn(), Spark jobs fn started, tasks those jobs ran), from
     statusTracker once the listener bus has drained. Counts job ids with
     no job group, so it is exact only while one call runs at a time."""
     sc = spark.sparkContext
@@ -49,6 +49,10 @@ def jobs_started(spark):
         before = set(st.getJobIdsForGroup(None))
         out = fn()
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(set(st.getJobIdsForGroup(None)) - before)
+        jobs = set(st.getJobIdsForGroup(None)) - before
+        stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+        infos = [st.getStageInfo(s) for s in stages]
+        tasks = sum(i.numCompletedTasks + i.numFailedTasks for i in infos)
+        return out, len(jobs), tasks
 
     return run

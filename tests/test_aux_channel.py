@@ -1,25 +1,38 @@
 """The query plane's one chunk-kernel path: tombstones and filter rows are
-unioned into the posting-block slice and ride its single chunk shuffle
-into one mapInArrow kernel.
+unioned into the posting-block slice and reach one mapInArrow kernel with
+it — through one coalesced task when the slice is smaller than one file
+open (the narrow shape), through one chunk shuffle otherwise (the exchange
+shape).
 
 Pinned here:
   1. on a two-generation index with replacement tombstones, wand_topk is
      rank- and score-identical to exact_topk, with and without a filter,
-     on the single-phase and the two-phase plan — with chunks that hold
-     both aux kinds (tombstones and allowed docs) at once
-  2. match_docs with a filter equals the exact boolean set there
-  3. the executed match_docs plan has no cogroup and no Sort: one
-     hashpartitioning(chunk) exchange feeds MapInArrow
+     on the single-phase and the two-phase plan, in both plan shapes —
+     with chunks that hold both aux kinds (tombstones and allowed docs) at
+     once
+  2. match_docs equals the exact boolean set there, with a filter in both
+     shapes and without one in both shapes
+  3. the executed match_docs plan has no cogroup and no Sort: with a
+     filter, one hashpartitioning(chunk) exchange feeds MapInArrow;
+     without one, MapInArrow reads a one-partition Coalesce
   4. idf resolves for terms holding quotes and backslashes (field paths)
-  5. a warm reader's top-k runs one Spark job: the tombstone frame is
-     read once per reader, not once per query
-  6. the serve tier's pages equal exact_topk's on the same index
+  5. a warm reader's top-k runs one Spark job of one task: the tombstone
+     frame is read once per reader, not once per query, and carries raw
+     rows that the kernel collapses, so no aggregate is planned
+  6. a legacy tombstone dir with two rows for one doc collapses to the
+     larger before_gen in the kernel as in the exact scorer
+  7. the serve tier's pages equal exact_topk's on the same index
 """
 
 from __future__ import annotations
 
+import json
+import os
 import re
+from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,8 +54,42 @@ QUERIES = [
 ]
 
 
+SHAPES = ("narrow", "exchange")
+OPEN_COST = "spark.sql.files.openCostInBytes"
+
+
 def _rows(df):
     return [(r["rank"], r["doc_id"], r["score"]) for r in df.collect()]
+
+
+@contextmanager
+def _shape(spark, shape):
+    """Run the block with the chunk runner in `shape`. These slices are far
+    below Spark's default openCostInBytes, so they take the narrow shape;
+    openCostInBytes=0 makes every slice larger than one file open and
+    forces the exchange shape. The session's value is restored after."""
+    before = spark.conf.get(OPEN_COST)
+    if shape == "exchange":
+        spark.conf.set(OPEN_COST, "0")
+    try:
+        yield
+    finally:
+        spark.conf.set(OPEN_COST, before)
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan, not the initial one
+    return plan.toString()
+
+
+def _assert_same(got, want, q):
+    assert want, q  # every query matches something in this corpus
+    assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in want], q
+    for (_, _, gs), (_, _, es) in zip(got, want):
+        assert abs(gs - es) < 1e-9, q
 
 
 @pytest.fixture(scope="module")
@@ -72,7 +119,9 @@ def tombstoned(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("filtered", [False, True], ids=["nofilter", "filter"])
 @pytest.mark.parametrize("plan", ["single_phase", "two_phase"])
-def test_wand_equals_exact_with_tombstones(tombstoned, filtered, plan):
+def test_wand_equals_exact_with_tombstones(spark, tombstoned, filtered, plan):
+    """Each plan runs in both runner shapes (a filtered query takes the
+    exchange shape whatever the conf; the loop pins that too)."""
     index, allow_df, _allow = tombstoned
     fdf = allow_df if filtered else None
     kw = (
@@ -82,27 +131,35 @@ def test_wand_equals_exact_with_tombstones(tombstoned, filtered, plan):
     )
     for q in QUERIES:
         want = _rows(exact_topk(index, q, k=20, filter_docs=fdf))
-        got = _rows(wand_topk(index, q, k=20, filter_docs=fdf, **kw))
-        assert want, q  # every query matches something in this corpus
-        assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in want], q
-        for (_, _, gs), (_, _, es) in zip(got, want):
-            assert abs(gs - es) < 1e-9, q
+        for shape in SHAPES:
+            with _shape(spark, shape):
+                got = _rows(wand_topk(index, q, k=20, filter_docs=fdf, **kw))
+            _assert_same(got, want, (q, shape))
 
 
-def test_match_docs_filtered_equals_exact_set(tombstoned):
+def test_match_docs_filtered_equals_exact_set(spark, tombstoned):
+    """The filtered set, and the unfiltered one (the input the narrow shape
+    is for), in both runner shapes."""
     index, allow_df, allow = tombstoned
     for q in QUERIES:
-        want = {
-            r["doc_id"]
-            for r in exact_topk(
-                index, q, k=1_000_000, filter_docs=allow_df
-            ).collect()
-        }
-        got = [r["doc_id"] for r in match_docs(index, q, filter_docs=allow_df).collect()]
-        assert want, q
-        assert sorted(got) == sorted(want), q
-        assert len(got) == len(set(got)), q
-        assert set(got) <= allow, q
+        for fdf in (allow_df, None):
+            want = {
+                r["doc_id"]
+                for r in exact_topk(
+                    index, q, k=1_000_000, filter_docs=fdf
+                ).collect()
+            }
+            assert want, q
+            for shape in SHAPES:
+                with _shape(spark, shape):
+                    got = [
+                        r["doc_id"]
+                        for r in match_docs(index, q, filter_docs=fdf).collect()
+                    ]
+                assert sorted(got) == sorted(want), (q, shape)
+                assert len(got) == len(set(got)), (q, shape)
+                if fdf is not None:
+                    assert set(got) <= allow, (q, shape)
 
 
 def test_match_docs_plan_is_one_chunk_shuffle(tombstoned):
@@ -110,12 +167,7 @@ def test_match_docs_plan_is_one_chunk_shuffle(tombstoned):
     a grouped/cogrouped pandas plan (and the Sort it needs) must not come
     back."""
     index, allow_df, _allow = tombstoned
-    df = match_docs(index, "the data", filter_docs=allow_df)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()  # the final plan, not the initial one
-    text = plan.toString()
+    text = _executed_plan(match_docs(index, "the data", filter_docs=allow_df))
     assert "CoGroup" not in text, text
     assert "FlatMapCoGroupsInPandas" not in text, text
     assert not re.search(r"\bSort", text), text
@@ -124,6 +176,28 @@ def test_match_docs_plan_is_one_chunk_shuffle(tombstoned):
     at = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
     feed = next(ln for ln in lines[at + 1:] if "Exchange" in ln)
     assert "hashpartitioning(chunk" in feed, text
+
+
+@pytest.mark.parametrize("shape", SHAPES)
+def test_unfiltered_plan_shape(spark, tombstoned, shape):
+    """Without a filter, a slice below openCostInBytes runs as one task:
+    MapInArrow reads a one-partition Coalesce, with no Exchange, no Sort
+    and no aggregate (the tombstones are raw rows). Forced past the
+    threshold, the same query takes the one chunk shuffle."""
+    index, _allow_df, _allow = tombstoned
+    with _shape(spark, shape):
+        text = _executed_plan(match_docs(index, "the data"))
+    assert not re.search(r"\bSort", text), text
+    assert "Aggregate" not in text, text
+    lines = text.splitlines()
+    at = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    if shape == "narrow":
+        assert "Exchange" not in text, text
+        assert re.search(r"\bCoalesce 1\b", lines[at + 1]), text
+    else:
+        assert text.count("hashpartitioning(chunk") == 1, text
+        feed = next(ln for ln in lines[at + 1:] if "Exchange" in ln)
+        assert "hashpartitioning(chunk" in feed, text
 
 
 def test_field_path_with_quote_and_backslash(spark, pages_pdf, tmp_path):
@@ -151,14 +225,61 @@ def test_field_path_with_quote_and_backslash(spark, pages_pdf, tmp_path):
 def test_warm_tombstoned_topk_is_one_job(tombstoned, jobs_started):
     index, _allow_df, _allow = tombstoned
     wand_topk(index, "danger", k=20).collect()  # warm the reader
-    rows, jobs = jobs_started(
+    rows, jobs, tasks = jobs_started(
         lambda: _rows(wand_topk(index, "danger", k=20))
     )
-    assert jobs == 1
-    want = _rows(exact_topk(index, "danger", k=20))
-    assert [(r, d) for r, d, _ in rows] == [(r, d) for r, d, _ in want]
-    for (_, _, gs), (_, _, es) in zip(rows, want):
-        assert abs(gs - es) < 1e-9
+    assert (jobs, tasks) == (1, 1)
+    _assert_same(rows, _rows(exact_topk(index, "danger", k=20)), "danger")
+
+
+def test_legacy_duplicate_tombstones_collapse_in_kernel(spark, tmp_path):
+    """A legacy in-place tombstone dir may hold several rows for one doc.
+    The top-k reads them raw and collapses them per chunk; the doc must be
+    dead up to the LARGER before_gen, as in the exact scorer's aggregate."""
+    pages = make_web_pages(240, seed=7)
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pages), d, CFG)
+    changed = pages[pages.doc_id % 4 == 1].copy()
+    changed["text"] = ["zzmarker " + t for t in changed["text"]]
+    changed["html"] = None
+    apply_incremental(spark, d, spark.createDataFrame(changed), CFG)
+    before = IndexReader.open(spark, d)
+    victim = _rows(wand_topk(before, "zzmarker", k=1))[0][1]
+
+    # the pre-snapshot layout: in-place `tombstones` dir, no pointer
+    man_path = os.path.join(d, "manifest.json")
+    with open(man_path) as f:
+        man = json.load(f)
+    legacy = os.path.join(d, "tombstones")
+    os.rename(os.path.join(d, man.pop("tombstones")), legacy)
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    os.remove(os.path.join(d, "snapshots.jsonl"))
+    # the victim already has a replacement row (before_gen=1, its gen-0
+    # copy); a second row with before_gen=2 kills its gen-1 copy too
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([victim], pa.int64()),
+                "before_gen": pa.array([2], pa.int32()),
+            }
+        ),
+        os.path.join(legacy, "part-legacy-dup.parquet"),
+    )
+    index = IndexReader.open(spark, d)
+    assert index.tombstone_dir == "tombstones"
+    gens = sorted(
+        r["before_gen"]
+        for r in index.tombstones(interactive=True)
+        .filter(F.col("doc_id") == victim)
+        .collect()
+    )
+    assert gens == [1, 2]
+    for q in ("zzmarker", "zzmarker the", "the"):
+        want = _rows(exact_topk(index, q, k=20))
+        got = _rows(wand_topk(index, q, k=20))
+        _assert_same(got, want, q)
+        assert victim not in {doc for _, doc, _ in got}, q
 
 
 def test_serve_equals_exact_across_generations(tombstoned):
@@ -173,7 +294,4 @@ def test_serve_equals_exact_across_generations(tombstoned):
     for q in QUERIES:
         want = _rows(exact_topk(index, q, k=20))
         got = [(rk, d, s) for d, s, rk in srv.topk(q, k=20)]
-        assert want, q
-        assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in want], q
-        for (_, _, gs), (_, _, es) in zip(got, want):
-            assert abs(gs - es) < 1e-9, q
+        _assert_same(got, want, q)

@@ -108,9 +108,21 @@ def test_page_collect_starts_no_job(built_index, spark, jobs_started, qtext, emp
     """The page is a LocalRelation for empty and non-empty pages alike: the
     query's one job is its scoring job, and collecting the page starts
     none (a pandas page takes the Arrow path only when it has rows)."""
-    page, jobs = jobs_started(lambda: wand_topk(built_index, qtext))
+    page, jobs, _tasks = jobs_started(lambda: wand_topk(built_index, qtext))
     assert jobs == 1
-    rows, jobs = jobs_started(page.collect)
+    rows, jobs, _tasks = jobs_started(page.collect)
     assert jobs == 0
     assert (rows == []) == empty
     assert page.schema == spark.createDataFrame([], RESULT_SCHEMA).schema
+
+
+def test_warm_topk_is_one_job_one_task(built_index, jobs_started):
+    """A slice smaller than one file open (spark.sql.files.openCostInBytes)
+    is scored by one task: the query's one job has no chunk shuffle."""
+    wand_topk(built_index, "the data", k=13).collect()  # warm the reader
+    rows, jobs, tasks = jobs_started(
+        lambda: _rows(wand_topk(built_index, "the data", k=13))
+    )
+    assert (jobs, tasks) == (1, 1)
+    exact = _rows(exact_topk(built_index, "the data", k=13))
+    assert [(r, d) for r, d, _ in rows] == [(r, d) for r, d, _ in exact]
