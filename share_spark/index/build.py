@@ -2,9 +2,11 @@
 
 Pipeline (all DataFrame + Arrow UDFs; see SURVEY.md §3.3 "Spark shape"):
 
-  pages --extract/tokenize (mapInPandas, map-side tf)--> termdoc(term, doc_id, tf, dl)
-        --groupBy(term) [partial agg]---------------> term_stats(term, df, cf)
-        --repartitionByRange(term, doc_id) + sort --> posting blocks (delta+varint)
+  pages --extract/tokenize (mapInArrow, map-side tf)--> termdoc(term, doc_id, tf, dl)
+        --repartition(n, xxhash64(term, doc_id // window)) + sort
+                                                 --> posting blocks (delta+varint)
+        --finish: term_stats(term, df, cf), the term-clustered serve copy
+                  and the per-partition manifest metrics, all from the blocks
         --manifest.json (config checksum, corpus stats, per-partition metrics)
 
 Scale decisions (BASELINE.json north_rule: partitioning/shuffle/skew explicit):
@@ -13,14 +15,22 @@ Scale decisions (BASELINE.json north_rule: partitioning/shuffle/skew explicit):
   inside the tokenize UDF (map-side combine), so the shuffle moves one row
   per (term, doc) posting, never one row per token occurrence.
 - **Head-term skew.** A head term in >30% of documents would overwhelm any
-  hash-partitioned `groupBy(term)` reducer. Posting assembly therefore uses
-  `repartitionByRange(term, doc_id)`: a hot term's postings are *split across
-  consecutive range partitions* (range salting), each encoding its own
-  sorted block run. Blocks carry absolute first-doc ids, so no cross-partition
-  merge is needed — the decomposition is exact, not approximate.
-  `term_stats` aggregation is safe from the same skew because Spark's partial
-  (map-side) aggregation collapses each term to one row per map task before
-  the shuffle.
+  hash-partitioned `groupBy(term)` reducer. Posting assembly therefore
+  hashes a SALTED key, `xxhash64(term, doc_id // window)` with window a
+  whole number of chunks: a hot term's postings are split across
+  partitions one doc-id window at a time, each partition encoding its own
+  sorted block run. Blocks carry absolute first-doc ids, so no
+  cross-partition merge is needed — the decomposition is exact, not
+  approximate.
+  `term_stats` aggregation is safe from the same skew because it reads
+  block metadata (one row per block, not per posting), and on the Spark
+  finish partial (map-side) aggregation collapses each term to one row
+  per map task before the shuffle.
+- **Small generations finish on the driver.** Postings no larger than
+  _DRIVER_FINISH_MAX_BYTES (a driver-memory budget) are read once with
+  pyarrow on the driver and finished there with no Spark job; larger
+  generations finish as concurrent Spark jobs. The manifest records which
+  path ran and why (`finish`).
 - **Chunk alignment for distributed WAND.** Blocks never span a doc-id chunk
   (chunk = doc_id // chunk_docs), so every term's postings for a given doc
   land in the same chunk — the query planner (query/wand.py) groups by chunk
@@ -44,6 +54,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
+import time
 import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass, field
@@ -125,6 +137,31 @@ BLOCKS_SCHEMA = T.StructType(
         T.StructField("part_id", T.IntegerType()),
     ]
 )
+
+TERM_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),  # sum of block sizes n
+        T.StructField("cf", T.LongType()),  # sum of block tf sums
+    ]
+)
+
+# the doc is dead in every generation strictly below before_gen
+TOMBSTONE_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("before_gen", T.IntegerType()),
+    ]
+)
+
+# engine dir -> the schema its files were written with. Every read names it:
+# spark.read.parquet without a schema runs a one-task inference job per
+# read (~0.1 s, measured), for a schema the engine already knows.
+STAGE_SCHEMAS = {
+    "docs": DOCS_SCHEMA,
+    "postings": BLOCKS_SCHEMA,
+    "term_stats": TERM_STATS_SCHEMA,
+}
 
 
 @dataclass
@@ -837,6 +874,176 @@ def dedup_pages(pages: DataFrame) -> DataFrame:
     )
 
 
+# Spark's parquet codec names -> pyarrow's, for the codecs whose bytes
+# both write the same way (Spark's "lz4" is Hadoop's framed LZ4, not
+# pyarrow's; "lzo" pyarrow cannot write)
+_ARROW_CODECS = {
+    "none": "none",
+    "uncompressed": "none",
+    "snappy": "snappy",
+    "gzip": "gzip",
+    "brotli": "brotli",
+    "lz4_raw": "lz4",
+    "zstd": "zstd",
+}
+# the posting payload binaries: near-unique values, so min/max statistics
+# on them only add footer bytes (the readers prune on term, never on these)
+_PAYLOAD_COLS = ("docs_bin", "tfs_bin", "dls_bin", "pos_bin")
+# The largest postings (bytes on disk) a generation finishes on the
+# driver. A driver-memory budget, not a crossover: timed at local[4] on
+# 0.5-38 MB of postings, the driver finish won at every size (0.06-1.0 s
+# against the Spark finish's 0.7-2.2 s), so where the two cross is not
+# known. The driver holds the blocks in Arrow memory, and its peak Arrow
+# allocation measured 4.3x the postings bytes at 19-38 MB (6.7x at 0.5
+# MB), so this cap keeps that peak near 140 MB.
+_DRIVER_FINISH_MAX_BYTES = 32 << 20
+
+
+def _arrow_codec(spark: SparkSession) -> tuple[str, int | None] | None:
+    """(pyarrow codec, level) for the session's parquet codec, or None
+    when pyarrow cannot write it the way Spark does. The zstd level is
+    parquet-mr's `parquet.compression.codec.zstd.level` (default 3), read
+    from the SQL conf first, as Spark's writer does, then the Hadoop
+    conf."""
+    name = spark.conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
+    codec = _ARROW_CODECS.get(name)
+    if codec != "zstd":
+        return None if codec is None else (codec, None)
+    key = "parquet.compression.codec.zstd.level"
+    level = spark.conf.get(key, None) or (
+        spark.sparkContext._jsc.hadoopConfiguration().get(key, "3")
+    )
+    return codec, int(level)
+
+
+def _write_parts(
+    tbl, path: str, n_files: int, rg_rows: int | None, codec: tuple
+) -> None:
+    """Replace the parquet dir `path` with `tbl` cut into `n_files`
+    contiguous slices, part-00000.parquet upward — the Spark finish's file
+    layout, so the serve tier opens one file per slice either way. Empty
+    slices write no file (as Spark skips empty partitions), but an empty
+    `tbl` still writes one. `rg_rows` caps a row group's rows (None: one
+    row group per file). Written no larger than Spark writes them: the
+    session's codec, no dictionary pages and no statistics on
+    _PAYLOAD_COLS. parquet-mr drops a dictionary that does not pay, and
+    pyarrow keeps every dictionary: in Spark's files of a 2k-page
+    generation `term` was PLAIN in all 8, docs_bin in all 4 serve files,
+    dls_bin and pos_bin in 3 of 4. On that generation, 4 slices: a 480.5
+    KB serve copy and 22.1 KB of term_stats against Spark's 475.6 KB and
+    21.4 KB; dictionary pages on `term` alone gave 494.2 KB and 35.9 KB,
+    on every non-payload column 491.7 KB and 36.1 KB. File names are fixed and
+    the slices a function of the rows, so the same rows give the same
+    bytes."""
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    step = max(1, -(-tbl.num_rows // n_files))
+    for i in range(max(1, -(-tbl.num_rows // step))):
+        part = tbl.slice(i * step, step)
+        pq.write_table(
+            part,
+            os.path.join(path, f"part-{i:05d}.parquet"),
+            row_group_size=rg_rows or max(1, part.num_rows),
+            compression=codec[0],
+            compression_level=codec[1],
+            use_dictionary=False,
+            write_statistics=[c for c in tbl.column_names if c not in _PAYLOAD_COLS],
+        )
+
+
+def _finish_on_driver(
+    postings_path: str,
+    postings_bytes: int,
+    todo: dict[str, tuple[str, int, int | None]],
+    codec: tuple,
+    stage_s: dict[str, float],
+) -> list[dict]:
+    """The generation finish for small postings: ONE pyarrow read of the
+    postings files, then, in-process and with no Spark job:
+      - term_stats (when `todo` names it): df = sum of n and cf = sum of
+        sum_tf per term, sorted by term — the Spark stage's aggregate;
+      - the serve copy (when `todo` names postings_term): every block,
+        sorted by (term, chunk, first_doc);
+      - the per-part_id manifest metrics, returned as the rows the Spark
+        metrics job collects.
+    `todo` maps each stage to write to (its dir, the number of files the
+    Spark finish writes for it, its parquet.block.size or None) — see
+    _write_parts; a block size becomes rows by the postings' bytes per
+    block row. Every output is a function of the block rows alone (the
+    sorts are total: one generation's blocks of a term have distinct
+    first_doc), so two builds of the same pages write byte-identical
+    files."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    files = _parquet_files(postings_path)
+    blocks = (
+        pa.concat_tables([pq.read_table(f) for f in files])
+        if files
+        else to_arrow_schema(BLOCKS_SCHEMA).empty_table()
+    ).replace_schema_metadata(None)
+
+    def _rows_per_group(spec: tuple) -> tuple:
+        path, n_files, group_bytes = spec
+        if group_bytes is None:
+            return path, n_files, None
+        return path, n_files, max(
+            1, blocks.num_rows * group_bytes // max(1, postings_bytes)
+        )
+
+    if "term_stats" in todo:
+        t0 = time.time()
+        agg = blocks.group_by("term").aggregate([("n", "sum"), ("sum_tf", "sum")])
+        stats = pa.table(
+            {"term": agg["term"], "df": agg["n_sum"], "cf": agg["sum_tf_sum"]}
+        ).sort_by("term")
+        _write_parts(stats, *_rows_per_group(todo["term_stats"]), codec)
+        stage_s["term_stats"] = round(time.time() - t0, 2)
+    if "postings_term" in todo:
+        t0 = time.time()
+        serve = blocks.sort_by(
+            [("term", "ascending"), ("chunk", "ascending"), ("first_doc", "ascending")]
+        )
+        _write_parts(serve, *_rows_per_group(todo["postings_term"]), codec)
+        stage_s["postings_term"] = round(time.time() - t0, 2)
+    encoded = pc.add(
+        pc.add(
+            pc.binary_length(blocks["docs_bin"]),
+            pc.binary_length(blocks["tfs_bin"]),
+        ),
+        pc.binary_length(blocks["dls_bin"]),
+    )
+    per_part = (
+        blocks.select(["part_id", "n", "last_doc", "sum_tf"])
+        .append_column("encoded", encoded)
+        .group_by("part_id")
+        .aggregate(
+            [
+                ([], "count_all"),
+                ("n", "sum"),
+                ("encoded", "sum"),
+                ("last_doc", "max"),
+                ("sum_tf", "sum"),
+            ]
+        )
+    )
+    return [
+        {
+            "part_id": r["part_id"],
+            "n_blocks": r["count_all"],
+            "n_postings": r["n_sum"],
+            "encoded_bytes": r["encoded_sum"],
+            "max_doc": r["last_doc_max"],
+            "sum_tf": r["sum_tf_sum"],
+        }
+        for r in per_part.to_pylist()
+    ]
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -899,19 +1106,17 @@ def _build_index_impl(
     and short-circuits stage 2 to a plain write. `pages` may be None when
     the stage inputs are given.
     """
-    import time as _time
-
     cfg = cfg or IndexConfig()
     if docs_df is None and not assume_unique_ids:
         pages = dedup_pages(pages)
     gdir = os.path.join(index_dir, f"gen{generation}")
     os.makedirs(gdir, exist_ok=True)
     stage_s: dict[str, float] = {}
-    _t = _time.time()
+    _t = time.time()
 
     def _lap(stage: str) -> None:
         nonlocal _t
-        now = _time.time()
+        now = time.time()
         stage_s[stage] = round(now - _t, 2)
         _t = now
 
@@ -943,7 +1148,7 @@ def _build_index_impl(
     feed = None
     _stage1_pool = _TPE(max_workers=1)
     if resume and _stage_done(gdir, "docs"):
-        feed = spark.read.parquet(docs_path)
+        feed = spark.read.schema(DOCS_SCHEMA).parquet(docs_path)
         _lap("docs")
     else:
         src = (
@@ -958,11 +1163,11 @@ def _build_index_impl(
         feed = src
 
         def _docs_write() -> None:
-            t0 = _time.time()
+            t0 = time.time()
             src.write.mode("overwrite").parquet(docs_path)
             _refresh(docs_path)
             _mark_done(gdir, "docs")
-            stage_s["docs"] = round(_time.time() - t0, 2)
+            stage_s["docs"] = round(time.time() - t0, 2)
 
         docs_future = _stage1_pool.submit(_docs_write)
     docs = feed
@@ -1025,12 +1230,42 @@ def _build_index_impl(
     # stats
     n_docs = _parquet_rows(docs_path)
 
-    # stages 2b + 3 + the manifest metrics job all read ONLY the finished
-    # postings files and are mutually independent — submit them from a
-    # small thread pool so their tails back-fill each other's idle
-    # executors (guide §2.6: overlap independent jobs; actions were only
-    # sequential because this code called them sequentially).
-    import time as _time2
+    # stages 2b + 3 + the manifest metrics read ONLY the finished postings
+    # files. How they run depends on those files' total size (os.stat —
+    # the index dir is local, see _parquet_rows):
+    # - driver: postings no larger than _DRIVER_FINISH_MAX_BYTES, when
+    #   pyarrow writes the session's codec, are read once with pyarrow and
+    #   all three derive in-process (_finish_on_driver). At the benchmark's
+    #   2k-page size the Spark finish is 12 jobs re-reading the same files:
+    #   1.0 s of a 2.6 s warm build at local[4], against ~60 ms for the
+    #   same work in pyarrow.
+    # - spark: larger generations run the three as mutually independent
+    #   Spark jobs from a small thread pool, so their tails back-fill each
+    #   other's idle executors (guide §2.6: overlap independent jobs).
+    postings_bytes = sum(
+        os.stat(f).st_size for f in _parquet_files(postings_path)
+    )
+    codec = _arrow_codec(spark)
+    finish = {
+        "path": (
+            "driver"
+            if codec is not None and postings_bytes <= _DRIVER_FINISH_MAX_BYTES
+            else "spark"
+        ),
+        "postings_bytes": postings_bytes,
+        "limit": _DRIVER_FINISH_MAX_BYTES,
+    }
+    serve_path = _stage_dir(gdir, "postings_term")
+    serve_parts = max(
+        4, (cfg.n_partitions or spark.sparkContext.defaultParallelism) // 2
+    )
+    # the serve copy's row groups: the serving tier's read unit
+    serve_group_bytes = 1 << 20
+    stats_parts = max(4, spark.sparkContext.defaultParallelism // 2)
+
+    def _read_postings() -> DataFrame:
+        return spark.read.schema(BLOCKS_SCHEMA).parquet(postings_path)
+
     from concurrent.futures import ThreadPoolExecutor
 
     def _serve_stage() -> None:
@@ -1042,21 +1277,19 @@ def _build_index_impl(
         # boundaries (no single-reducer skew at 10^12 docs) while keeping
         # each term's blocks contiguous on disk; 1 MiB row groups give the
         # serving tier a fine-grained read unit.
-        t0 = _time2.time()
-        serve_path = _stage_dir(gdir, "postings_term")
+        t0 = time.time()
         if not (resume and _stage_done(gdir, "postings_term")):
-            serve_parts = max(4, (cfg.n_partitions or spark.sparkContext.defaultParallelism) // 2)
             (
-                spark.read.parquet(postings_path)
+                _read_postings()
                 .repartitionByRange(serve_parts, "term", "chunk")
                 .sortWithinPartitions("term", "chunk", "first_doc")
                 .write.mode("overwrite")
-                .option("parquet.block.size", 1 << 20)
+                .option("parquet.block.size", serve_group_bytes)
                 .parquet(serve_path)
             )
             _refresh(serve_path)
             _mark_done(gdir, "postings_term")
-        stage_s["postings_term"] = round(_time2.time() - t0, 2)
+        stage_s["postings_term"] = round(time.time() - t0, 2)
 
     def _stats_stage() -> None:
         # stage 3: term stats DERIVED FROM BLOCK METADATA — df = sum of
@@ -1064,11 +1297,10 @@ def _build_index_impl(
         # bytes decoded, no second tokenize pass. Output sorted by term for
         # parquet min/max pruning at query time (the per-query "broadcast
         # term statistics" lookup of the north rule).
-        t0 = _time2.time()
+        t0 = time.time()
         if not (resume and _stage_done(gdir, "term_stats")):
-            stats_parts = max(4, spark.sparkContext.defaultParallelism // 2)
             (
-                spark.read.parquet(postings_path)
+                _read_postings()
                 .groupBy("term")
                 .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
                 .repartitionByRange(stats_parts, "term")
@@ -1078,15 +1310,12 @@ def _build_index_impl(
             )
             _refresh(stats_path)
             _mark_done(gdir, "term_stats")
-        stage_s["term_stats"] = round(_time2.time() - t0, 2)
+        stage_s["term_stats"] = round(time.time() - t0, 2)
 
     def _metrics_job() -> list:
-        # manifest metrics: ONE job over posting metadata; n_chunks is the
-        # exact count for dense doc ids — (max_doc // chunk_docs) + 1 — and
-        # a safe upper bound for sparse ids, which pushes the query planner
-        # to the two-phase plan
+        # manifest metrics: ONE job over posting metadata
         return (
-            spark.read.parquet(postings_path)
+            _read_postings()
             .groupBy("part_id")
             .agg(
                 F.count("*").alias("n_blocks"),
@@ -1102,13 +1331,34 @@ def _build_index_impl(
             .collect()
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        serve_f = pool.submit(_serve_stage) if cfg.serve_layout else None
-        stats_f = pool.submit(_stats_stage)
-        part_rows = pool.submit(_metrics_job).result()
-        stats_f.result()
-        if serve_f is not None:
-            serve_f.result()
+    if finish["path"] == "driver":
+        todo = {
+            stage: (path, parts, group_bytes)
+            for stage, path, parts, group_bytes in (
+                ("term_stats", stats_path, stats_parts, None),
+                (
+                    "postings_term",
+                    serve_path if cfg.serve_layout else None,
+                    serve_parts,
+                    serve_group_bytes,
+                ),
+            )
+            if path is not None and not (resume and _stage_done(gdir, stage))
+        }
+        part_rows = _finish_on_driver(
+            postings_path, postings_bytes, todo, codec, stage_s
+        )
+        for stage, (path, _parts, _bytes) in todo.items():
+            _refresh(path)
+            _mark_done(gdir, stage)
+    else:
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            serve_f = pool.submit(_serve_stage) if cfg.serve_layout else None
+            stats_f = pool.submit(_stats_stage)
+            part_rows = pool.submit(_metrics_job).result()
+            stats_f.result()
+            if serve_f is not None:
+                serve_f.result()
     _lap("parallel_finish")
 
     part_metrics = {
@@ -1119,6 +1369,9 @@ def _build_index_impl(
         }
         for r in part_rows
     }
+    # n_chunks is the exact count for dense doc ids — (max_doc //
+    # chunk_docs) + 1 — and a safe upper bound for sparse ids, which pushes
+    # the query planner to the two-phase plan
     max_doc = max((int(r["max_doc"]) for r in part_rows), default=0)
     n_chunks = max_doc // cfg.chunk_docs + 1
     # avgdl == avg over doc rows of token count: every token contributes
@@ -1152,6 +1405,8 @@ def _build_index_impl(
         "serve_layout": cfg.serve_layout,
         "n_partitions": cfg.n_partitions,
         "stage_seconds": stage_s,
+        # which finish ran and why (postings bytes vs the one-open limit)
+        "finish": finish,
         "partitions": part_metrics,
     }
     with open(os.path.join(gdir, "manifest.json"), "w") as f:
@@ -1355,16 +1610,20 @@ class IndexReader:
         slice read must be born with the byte-sized split shape
         (session.INTERACTIVE_SCAN_*) while batch consumers (compaction,
         serve-layout copy) keep cluster-width scans from the default
-        variant. Cached separately per variant."""
+        variant. Cached separately per variant. Each read names the
+        stage's schema (STAGE_SCHEMAS), so building the frame starts no
+        Spark job."""
         key = (stage, interactive)
         if key not in self._df_cache:
             with self._read_scope(interactive):
                 parts = []
                 for g in self.gen_manifests:
                     gen = g["generation"]
-                    df = self.spark.read.parquet(
-                        os.path.join(self.index_dir, f"gen{gen}", stage)
-                    ).withColumn("gen", F.lit(gen))
+                    df = (
+                        self.spark.read.schema(STAGE_SCHEMAS[stage])
+                        .parquet(os.path.join(self.index_dir, f"gen{gen}", stage))
+                        .withColumn("gen", F.lit(gen))
+                    )
                     parts.append(df)
             out = parts[0]
             for df in parts[1:]:
@@ -1460,8 +1719,8 @@ class IndexReader:
         (codec.collapse_tombstones), so a top-k plans no aggregate.
         Reads the tombstone VERSION resolved at open() — later merges
         write new versions and never mutate this one — so the frame is
-        built once per reader and `interactive` variant (see _union): a
-        fresh spark.read.parquet runs a schema-inference job every call."""
+        built once per reader and `interactive` variant (see _union), and
+        read with TOMBSTONE_SCHEMA named, so building it starts no job."""
         if self.tombstone_dir is None:
             return None
         key = ("tombstones", interactive)
@@ -1470,7 +1729,7 @@ class IndexReader:
             if not os.path.exists(path):
                 return None
             with self._read_scope(interactive):
-                tomb = self.spark.read.parquet(path)
+                tomb = self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(path)
             if not interactive:
                 tomb = tomb.groupBy("doc_id").agg(
                     F.max("before_gen").alias("before_gen")

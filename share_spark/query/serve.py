@@ -403,8 +403,9 @@ class TopKServer:
 
     def _rg_terms(self, pf, rg: int) -> np.ndarray:
         """Sorted unique terms of one row group — the exact term dictionary.
-        Read lazily ONCE (the term column alone: dictionary-encoded, tiny
-        next to the posting binaries); afterwards membership is a binary
+        Read lazily ONCE (the term column alone, tiny next to the posting
+        binaries; both finishes write it PLAIN, since parquet-mr drops a
+        dictionary of near-unique terms); afterwards membership is a binary
         search, so a cold term read touches only row groups that truly
         contain it. This matters because the build shuffles by
         hash(term, window): per-FILE min/max spans most of the vocabulary,

@@ -485,10 +485,15 @@ def _run_chunks(
       exchange. Below that size the shuffle's task launches and its
       map/reduce barrier cost more than splitting the kernel's work saves
       (a 2k-doc top-k: 12 tasks, 0.19 s of job for a few ms of kernel).
-    - exchange: larger or unknown slices hash-repartition by chunk (reduce
-      width from the runtime shuffle conf, 4 under the interactive guard),
-      so several tasks decode and score in parallel (at 50k docs, 10.3 MB
-      of postings, one task raised the single-client p50 0.31 -> 0.43 s).
+    - exchange: larger or unknown slices hash-repartition by chunk, so
+      several tasks decode and score in parallel (at 50k docs, 10.3 MB of
+      postings, one task raised the single-client p50 0.31 -> 0.43 s).
+      The reduce width and AQE come from the SQL conf the action runs
+      under, not from here: wand_topk collects inside the interactive
+      guard (AQE off, INTERACTIVE_SHUFFLE_PARTITIONS reduces), while
+      match_docs returns the lazy frame, so its exchange runs when the
+      caller acts on it, under the session's conf (AQE on, the session's
+      shuffle width).
 
     Either way the task keeps its rows as one Arrow table: aux rows
     (non-null `kind`, see _with_aux) split off with an Arrow filter, blocks
@@ -895,6 +900,13 @@ def match_docs(
     positive terms must appear in the chunk) before any posting bytes
     decode, term stats are never needed (no idf), and the match set stays
     distributed end to end.
+
+    The frame is lazy, and no interactive guard is held here: the plan
+    shape (one coalesced task or the chunk exchange, see _run_chunks) is
+    fixed now, but the exchange executes when the caller collects or
+    composes the frame, under the caller's session conf — AQE on and the
+    session's shuffle width, not the 4-partition interactive width a
+    wand_topk's exchange gets.
     """
     if pq is not None:
         branches = (pq,)

@@ -32,21 +32,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import textops, urltools
 
-SEEN_SCHEMA_COLS = ["key", "kind"]
+# kind: "fp" (content md5), "url" (canonical url) or "mh" (MinHash band key)
+SEEN_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.StringType()),
+        T.StructField("kind", T.StringType()),
+    ]
+)
 
 
 def _seen(spark: SparkSession, seen_dir: str) -> DataFrame | None:
     """Read the seen store, or None before the first batch. Probed via the
     Spark reader, NOT os.path — the store lives on whatever filesystem the
     session writes to (hdfs://, s3a://, ...), where a local-path check
-    would always be False and silently disable cross-batch dedup."""
+    would always be False and silently disable cross-batch dedup. The
+    schema is named, so a read starts no inference job; a missing path
+    still raises AnalysisException."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(seen_dir)
+        return spark.read.schema(SEEN_SCHEMA).parquet(seen_dir)
     except AnalysisException:
         return None
 

@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 
 from ..index.build import (
     _KEEP,
+    DOCS_SCHEMA,
+    TOMBSTONE_SCHEMA,
     IndexConfig,
     IndexReader,
     _parquet_rows,
@@ -125,9 +127,8 @@ def apply_incremental(
 
     def _tombstone_merge() -> str:
         old_ids = (
-            spark.read.parquet(
-                *[os.path.join(index_dir, f"gen{g}", "docs") for g in older]
-            )
+            spark.read.schema(DOCS_SCHEMA)
+            .parquet(*[os.path.join(index_dir, f"gen{g}", "docs") for g in older])
             .select("doc_id")
             .join(new_ids, "doc_id", "left_semi")
             .distinct()
@@ -180,9 +181,11 @@ def _merge_tombstones(
     cur = resolve_tombstone_dir(index_dir)
     merged = new_rows
     if cur is not None:
-        merged = spark.read.parquet(
-            os.path.join(index_dir, cur)
-        ).unionByName(new_rows)
+        merged = (
+            spark.read.schema(TOMBSTONE_SCHEMA)
+            .parquet(os.path.join(index_dir, cur))
+            .unionByName(new_rows)
+        )
     merged = merged.groupBy("doc_id").agg(F.max("before_gen").alias("before_gen"))
     vname = f"tombstones_v{next_snapshot_id(index_dir)}"
     # overwrite handles a crash leftover of the same (uncommitted) name
@@ -197,7 +200,7 @@ def expel(spark: SparkSession, index_dir: str, doc_ids: list[int]) -> None:
     from ..index.build import EXPEL_ALL, commit_manifest
 
     new = spark.createDataFrame(
-        [(int(d), EXPEL_ALL) for d in doc_ids], "doc_id long, before_gen int"
+        [(int(d), EXPEL_ALL) for d in doc_ids], TOMBSTONE_SCHEMA
     )
     vname = _merge_tombstones(spark, index_dir, new)
     commit_manifest(
@@ -246,7 +249,7 @@ def compact(
     `cfg` defaults to the index's own registered config — compaction is a
     rewrite, so a different strategy here IS allowed when passed explicitly
     (this is how a strategy migration reindexes in place)."""
-    from ..index.build import DOCS_SCHEMA, commit_manifest, decode_blocks
+    from ..index.build import commit_manifest, decode_blocks
 
     registered = config_of(index_dir)
     cfg = cfg or registered

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -56,3 +57,25 @@ def jobs_started(spark):
         return out, len(jobs), tasks
 
     return run
+
+
+@pytest.fixture(scope="session")
+def past_one_open(spark):
+    """`with past_one_open():` runs the block with every input counted as
+    larger than one file open (spark.sql.files.openCostInBytes=0, Spark's
+    own conf, not an engine option), so a top-k or match_docs slice takes
+    the chunk exchange. `past_one_open(False)` leaves the conf alone. The
+    session's value is restored on exit."""
+    key = "spark.sql.files.openCostInBytes"
+
+    @contextmanager
+    def forced(on: bool = True):
+        before = spark.conf.get(key)
+        if on:
+            spark.conf.set(key, "0")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, before)
+
+    return forced

@@ -29,7 +29,6 @@ from __future__ import annotations
 import json
 import os
 import re
-from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -54,27 +53,13 @@ QUERIES = [
 ]
 
 
+# These slices are far below Spark's default openCostInBytes, so they take
+# the narrow shape; past_one_open (conftest) forces the exchange shape.
 SHAPES = ("narrow", "exchange")
-OPEN_COST = "spark.sql.files.openCostInBytes"
 
 
 def _rows(df):
     return [(r["rank"], r["doc_id"], r["score"]) for r in df.collect()]
-
-
-@contextmanager
-def _shape(spark, shape):
-    """Run the block with the chunk runner in `shape`. These slices are far
-    below Spark's default openCostInBytes, so they take the narrow shape;
-    openCostInBytes=0 makes every slice larger than one file open and
-    forces the exchange shape. The session's value is restored after."""
-    before = spark.conf.get(OPEN_COST)
-    if shape == "exchange":
-        spark.conf.set(OPEN_COST, "0")
-    try:
-        yield
-    finally:
-        spark.conf.set(OPEN_COST, before)
 
 
 def _executed_plan(df) -> str:
@@ -119,7 +104,9 @@ def tombstoned(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("filtered", [False, True], ids=["nofilter", "filter"])
 @pytest.mark.parametrize("plan", ["single_phase", "two_phase"])
-def test_wand_equals_exact_with_tombstones(spark, tombstoned, filtered, plan):
+def test_wand_equals_exact_with_tombstones(
+    tombstoned, past_one_open, filtered, plan
+):
     """Each plan runs in both runner shapes (a filtered query takes the
     exchange shape whatever the conf; the loop pins that too)."""
     index, allow_df, _allow = tombstoned
@@ -132,12 +119,12 @@ def test_wand_equals_exact_with_tombstones(spark, tombstoned, filtered, plan):
     for q in QUERIES:
         want = _rows(exact_topk(index, q, k=20, filter_docs=fdf))
         for shape in SHAPES:
-            with _shape(spark, shape):
+            with past_one_open(shape == "exchange"):
                 got = _rows(wand_topk(index, q, k=20, filter_docs=fdf, **kw))
             _assert_same(got, want, (q, shape))
 
 
-def test_match_docs_filtered_equals_exact_set(spark, tombstoned):
+def test_match_docs_filtered_equals_exact_set(tombstoned, past_one_open):
     """The filtered set, and the unfiltered one (the input the narrow shape
     is for), in both runner shapes."""
     index, allow_df, allow = tombstoned
@@ -151,7 +138,7 @@ def test_match_docs_filtered_equals_exact_set(spark, tombstoned):
             }
             assert want, q
             for shape in SHAPES:
-                with _shape(spark, shape):
+                with past_one_open(shape == "exchange"):
                     got = [
                         r["doc_id"]
                         for r in match_docs(index, q, filter_docs=fdf).collect()
@@ -179,13 +166,13 @@ def test_match_docs_plan_is_one_chunk_shuffle(tombstoned):
 
 
 @pytest.mark.parametrize("shape", SHAPES)
-def test_unfiltered_plan_shape(spark, tombstoned, shape):
+def test_unfiltered_plan_shape(tombstoned, past_one_open, shape):
     """Without a filter, a slice below openCostInBytes runs as one task:
     MapInArrow reads a one-partition Coalesce, with no Exchange, no Sort
     and no aggregate (the tombstones are raw rows). Forced past the
     threshold, the same query takes the one chunk shuffle."""
     index, _allow_df, _allow = tombstoned
-    with _shape(spark, shape):
+    with past_one_open(shape == "exchange"):
         text = _executed_plan(match_docs(index, "the data"))
     assert not re.search(r"\bSort", text), text
     assert "Aggregate" not in text, text
