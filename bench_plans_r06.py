@@ -1,6 +1,7 @@
 """Regenerate plans/r06 explain('formatted') artifacts for the queries this
 round touched (judge-checkable plan evidence; separate from the frozen
-bench.py)."""
+bench.py). compact_merge_{before,after}.txt stay in plans/r06 as the
+round-6 record; the row-level merge chain they compare is gone."""
 
 from __future__ import annotations
 
@@ -10,8 +11,6 @@ import tempfile
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
-from pyspark.sql import functions as F  # noqa: E402
 
 from share_spark.session import get_spark  # noqa: E402
 
@@ -65,49 +64,6 @@ def main() -> None:
         cdf.DataFrame.collect = real_collect
     # first captured frame is _score's orderBy/limit over the bucket kernel
     _w("wand_topk_score_after.txt", captured[0])
-
-    # --- compact merge: row-level chain (before) vs block-level (after) ---
-    from share_spark.index.build import (
-        BLOCKS_SCHEMA,
-        _make_block_encoder,
-        decode_blocks,
-        local_tombstone_arrays,
-        merge_generations_blocks,
-    )
-    from share_spark.streaming.incremental import apply_incremental
-
-    changed = pages_pdf[pages_pdf.doc_id % 20 == 0].copy()
-    changed["text"] = "refreshed content for the merge plan capture"
-    changed["html"] = None
-    apply_incremental(spark, idx_dir, spark.createDataFrame(changed), cfg)
-    reader = IndexReader.open(spark, idx_dir)
-    window = cfg.chunk_docs * cfg.salt_chunks
-    td = decode_blocks(reader.postings(), positions="bin")
-    tomb = reader.tombstones()
-    if tomb is not None:
-        td = (
-            td.join(tomb, "doc_id", "left")
-            .filter(
-                F.col("before_gen").isNull()
-                | (F.col("gen") >= F.col("before_gen"))
-            )
-            .drop("before_gen")
-        )
-    td = td.drop("gen")
-    row_level = (
-        td.repartition(
-            cfg.n_partitions or spark.sparkContext.defaultParallelism,
-            F.xxhash64("term", (F.col("doc_id") / window).cast("long")),
-        )
-        .sortWithinPartitions("term", "doc_id")
-        .mapInArrow(_make_block_encoder(cfg), schema=BLOCKS_SCHEMA)
-    )
-    _w("compact_merge_before.txt", row_level)
-    ids, gens = local_tombstone_arrays(idx_dir, reader.tombstone_dir)
-    _w(
-        "compact_merge_after.txt",
-        merge_generations_blocks(reader, cfg, ids, gens),
-    )
 
     spark.stop()
 

@@ -49,7 +49,6 @@ def _cmd_build(args: argparse.Namespace) -> dict:
         block_size=args.block_size,
         chunk_docs=args.chunk_docs,
         n_partitions=args.partitions,
-        serve_layout=not args.no_serve_layout,
     )
     t0 = time.time()
     manifest = build_index(
@@ -209,7 +208,6 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--generation", type=int, default=0)
     b.add_argument("--resume", action="store_true",
                    help="skip stages with a done-marker (crash recovery)")
-    b.add_argument("--no-serve-layout", action="store_true")
     b.set_defaults(fn=_cmd_build)
 
     co = sub.add_parser(

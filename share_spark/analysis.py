@@ -216,16 +216,16 @@ def tokenize_series(texts: pd.Series, analyzer: str = "standard") -> pd.Series:
     return texts.map(lambda t: tokenize(t, analyzer))
 
 
-def tokenize_batch_flat(
-    texts: "pd.Series", analyzer: str = "standard"
-) -> "tuple[np.ndarray, np.ndarray]":
-    """Batch tokenize -> (parent_row_indices, tokens), both 1-D arrays.
+def tokenize_batch_flat(texts, analyzer: str = "standard"):
+    """Batch tokenize an Arrow string array -> (parents, tokens): the int64
+    row index of every token, and the tokens as an Arrow string array, in
+    row order and, within a row, in token order (nulls tokenize as "").
 
-    Fast path: Arrow C++ kernels (utf8_lower + split_pattern_regex) when every
-    string is pure ASCII — byte-identical to `tokenize` there, since RE2's
-    ASCII \\w equals Python's unicode \\w on ASCII input. Non-ASCII batches
-    fall back to the frozen Python tokenizer so the contract never drifts.
-    """
+    Arrow C++ kernels (utf8_lower + split_pattern_regex) when the analyzer
+    is standard and every string is pure ASCII — byte-identical to
+    `tokenize` there, since RE2's ASCII \\w equals Python's unicode \\w on
+    ASCII input. Any other batch runs the frozen `tokenize` row by row, so
+    the analyzer contract never drifts."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -235,26 +235,22 @@ def tokenize_batch_flat(
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
 
-    vals = texts.fillna("")
-    if analyzer == "standard" and all(s.isascii() for s in vals):
-        arr = pa.array(vals, type=pa.string())
-        lowered = pc.utf8_lower(arr)
-        split = pc.split_pattern_regex(lowered, r"[^0-9a-z_]+")
+    texts = pc.fill_null(texts, "")
+    if analyzer == "standard" and pc.all(pc.string_is_ascii(texts)).as_py():
+        split = pc.split_pattern_regex(pc.utf8_lower(texts), r"[^0-9a-z_]+")
         flat = pc.list_flatten(split)
-        parents = pc.list_parent_indices(split).to_numpy(zero_copy_only=False)
-        toks = flat.to_numpy(zero_copy_only=False)
-        keep = toks != ""
-        return parents[keep], toks[keep]
+        parents = pc.list_parent_indices(split).to_numpy(
+            zero_copy_only=False
+        ).astype(np.int64)
+        keep = pc.not_equal(flat, "")
+        return parents[keep.to_numpy(zero_copy_only=False)], flat.filter(keep)
     parents_l: list[int] = []
     toks_l: list[str] = []
-    for i, s in enumerate(vals):
+    for i, s in enumerate(texts.to_pylist()):
         ts = tokenize(s, analyzer)
         parents_l.extend([i] * len(ts))
         toks_l.extend(ts)
-    return (
-        np.asarray(parents_l, dtype=np.int64),
-        np.asarray(toks_l, dtype=object),
-    )
+    return np.asarray(parents_l, dtype=np.int64), pa.array(toks_l, pa.string())
 
 
 def term_frequencies(tokens: Iterable[str]) -> Counter:

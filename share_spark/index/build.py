@@ -175,13 +175,6 @@ class IndexConfig:
     salt_chunks: int = 4  # shuffle-salt window = salt_chunks * chunk_docs
     # the one posting-block layout (codec.py), by the name manifests record
     postings_codec: ClassVar[str] = "varint"
-    # also write a term-clustered copy of the posting blocks for the serving
-    # tier (query/serve.py): the WAND layout hashes terms across partitions
-    # (right for distributed scoring), which makes a single term's blocks
-    # touch every file; the serve layout range-partitions by (term, chunk)
-    # with small row groups so one term's postings are a handful of
-    # contiguous row groups — the Lucene-segment term locality property.
-    serve_layout: bool = True
 
     def checksum(self) -> str:
         """Analog of CURRENT_STRATEGY_CHECKSUM (index_strategy/_base.py:47):
@@ -232,6 +225,27 @@ def _row_groups(path: str) -> Iterator:
         md = pq.read_metadata(f)
         for i in range(md.num_row_groups):
             yield md.row_group(i)
+
+
+def term_directory(path: str) -> list[tuple]:
+    """[(min term, max term, pq.ParquetFile, row group)] of one stage dir's
+    non-empty row groups, from the parquet footers (files are term-sorted
+    per partition at build time precisely so these ranges are selective).
+    The term dictionary of the serve tier and of
+    IndexReader.term_stats_local: each file stays open in its ParquetFile,
+    so reading a row group later re-reads no footer."""
+    import pyarrow.parquet as pq
+
+    entries = []
+    for f in _parquet_files(path):
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        term_col = md.schema.names.index("term")
+        for rg in range(md.num_row_groups):
+            if md.row_group(rg).num_rows:
+                st = md.row_group(rg).column(term_col).statistics
+                entries.append((st.min, st.max, pf, rg))
+    return entries
 
 
 def check_layout(gen_manifest: dict) -> None:
@@ -315,117 +329,52 @@ def build_termdoc(docs: DataFrame, analyzer: str) -> DataFrame:
     downstream shuffles move one row per posting, never per token occurrence).
 
     Positions are the analyzer token offsets (0-based) of each term in its
-    document, delta+varint encoded per posting. Fully vectorized — and, on
-    the standard-analyzer ASCII fast path, fully Arrow-native (mapInArrow):
-    tokens are dictionary-encoded so grouping sorts int32 codes instead of
-    Python strings, and the output batch is assembled from Arrow buffers
-    (pos_bin via one offsets array over one encode buffer) with zero
-    per-row Python objects crossing the JVM boundary. Row ORDER within a
-    batch differs from the legacy pandas path (code order vs lexicographic),
-    which is immaterial: rows feed a hash repartition + sortWithinPartitions
-    that fixes the final order; group contents and bytes are identical.
-    """
-    from .codec import delta_encode_blocks, delta_encode_offsets
+    document, delta+varint encoded per posting. One Arrow-native body
+    (mapInArrow) for every batch: analysis.tokenize_batch_flat yields the
+    tokens as an Arrow array (Arrow kernels on standard ASCII batches, the
+    frozen tokenizer otherwise), a field-scoped row's `path_key` prefixes
+    its tokens in Arrow, and tokens are dictionary-encoded so grouping
+    sorts int64 codes instead of Python strings. The output batch is
+    assembled from Arrow buffers (pos_bin via one offsets array over one
+    encode buffer) with zero per-row Python objects crossing the JVM
+    boundary. Row ORDER within a batch is code order, which is immaterial:
+    rows feed a hash repartition + sortWithinPartitions that fixes the
+    final order."""
 
-    def _pandas_body(pdf: pd.DataFrame):
-        """Frozen fallback (non-ASCII batches / field-scoped path_key)."""
-        from ..analysis import tokenize_batch_flat
-
-        parents, toks = tokenize_batch_flat(pdf["text_norm"], analyzer)
-        n = len(toks)
-        if n == 0:
-            return None
-        # per-row token count IS the BM25 dl — same deterministic
-        # token stream build_docs used to pre-compute, minus the
-        # second corpus-wide tokenize pass
-        dlen = np.bincount(parents, minlength=len(pdf)).astype("int32")
-        if "path_key" in pdf.columns:
-            pk = pdf["path_key"].fillna("").to_numpy()
-            if (pk != "").any():
-                # per-path term namespace: '<path>\x1f<token>'
-                pref = pk[parents]
-                toks = np.where(
-                    pref == "", toks, pref + FIELD_SEP + toks
-                ).astype(object)
-        # token position within each doc: parents is non-decreasing
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        change[1:] = parents[1:] != parents[:-1]
-        run_starts = np.nonzero(change)[0]
-        run_ids = np.cumsum(change) - 1
-        pos = np.arange(n, dtype=np.int64) - run_starts[run_ids]
-        # group by (doc, term); stable => positions stay ascending in-group
-        order = np.lexsort((toks, parents))
-        p_s, t_s, pos_s = parents[order], toks[order], pos[order]
-        gchange = np.empty(n, dtype=bool)
-        gchange[0] = True
-        gchange[1:] = (p_s[1:] != p_s[:-1]) | (t_s[1:] != t_s[:-1])
-        gstarts = np.nonzero(gchange)[0]
-        gends = np.append(gstarts[1:], n)
-        tf = (gends - gstarts).astype(np.int32)
-        pos_bins = delta_encode_blocks(pos_s, gstarts, gends)
-        gp = p_s[gstarts]
-        return pd.DataFrame(
-            {
-                "term": t_s[gstarts],
-                "doc_id": pdf["doc_id"].to_numpy()[gp],
-                "tf": tf,
-                "dl": dlen[gp],
-                "pos_bin": pos_bins,
-            }
-        )
-
-    def _count_batches_arrow(batches) -> Iterator:
+    def _termdoc_batches(batches) -> Iterator:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        if pa.cpu_count() != 1:  # one Spark worker per core already
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-
-        names = None
-
-        def fallback(batch):
-            out = _pandas_body(batch.to_pandas())
-            if out is None or not len(out):
-                return None
-            return pa.RecordBatch.from_pandas(out, preserve_index=False)
+        from ..analysis import tokenize_batch_flat
+        from .codec import delta_encode_offsets
 
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            if names is None:
-                names = batch.schema.names
-            text = pc.fill_null(batch.column(names.index("text_norm")), "")
-            fast = analyzer == "standard" and pc.all(
-                pc.string_is_ascii(text)
-            ).as_py()
-            if fast and "path_key" in names:
-                pk = pc.fill_null(batch.column(names.index("path_key")), "")
-                if not pc.all(pc.equal(pk, "")).as_py():
-                    fast = False  # field-prefixed terms: frozen pandas path
-            if not fast:
-                out = fallback(batch)
-                if out is not None:
-                    yield out
-                continue
-            # --- Arrow fast path: byte-identical groups to the fallback ---
-            split = pc.split_pattern_regex(pc.utf8_lower(text), r"[^0-9a-z_]+")
-            flat = pc.list_flatten(split)
-            parents = pc.list_parent_indices(split).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            keep = pc.not_equal(flat, "")
-            flat = flat.filter(keep)
-            parents = parents[keep.to_numpy(zero_copy_only=False)]
-            n = len(flat)
+            names = batch.schema.names
+            parents, toks = tokenize_batch_flat(
+                batch.column(names.index("text_norm")), analyzer
+            )
+            n = len(toks)
             if n == 0:
                 continue
-            dct = flat.dictionary_encode()
-            codes = dct.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+            # per-row token count IS the BM25 dl
             dlen = np.bincount(parents, minlength=batch.num_rows).astype(
                 np.int32
             )
+            if "path_key" in names:
+                pk = pc.fill_null(batch.column(names.index("path_key")), "")
+                if not pc.all(pc.equal(pk, "")).as_py():
+                    # per-path term namespace: '<path>\x1f<token>'
+                    pref = pk.take(pa.array(parents))
+                    toks = pc.if_else(
+                        pc.equal(pref, ""),
+                        toks,
+                        pc.binary_join_element_wise(pref, toks, FIELD_SEP),
+                    )
+            dct = toks.dictionary_encode()
+            codes = dct.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+            # token position within each doc: parents is non-decreasing
             change = np.empty(n, dtype=bool)
             change[0] = True
             change[1:] = parents[1:] != parents[:-1]
@@ -459,29 +408,21 @@ def build_termdoc(docs: DataFrame, analyzer: str) -> DataFrame:
     sel = ["doc_id", "text_norm"]
     if "path_key" in docs.columns:
         sel.append("path_key")
-    return docs.select(*sel).mapInArrow(
-        _count_batches_arrow, schema=TERMDOC_SCHEMA
-    )
+    return docs.select(*sel).mapInArrow(_termdoc_batches, schema=TERMDOC_SCHEMA)
 
 
 def decode_blocks(blocks: DataFrame, positions: str | None = None) -> DataFrame:
     """Posting blocks -> one row per posting: (term, doc_id, tf, dl, gen),
-    with the posting's positions before gen when asked for — "bin" adds
-    pos_bin in build_termdoc's own layout, "list" adds `positions` as
-    array<long> (codec.posting_rows). Map-side only, no shuffle.
+    with `positions` as array<long> before gen when positions="list"
+    (codec.posting_rows). Map-side only, no shuffle.
 
     The one Spark operator over the block decoder: the exact scorer's
-    postings and positions (query/bm25.py), and the row-level segment
-    merge, which feeds these rows (positions="bin", gen dropped after the
-    tombstone filter) into the build's own salted exchange and encoder —
-    Lucene's segment merge instead of a re-index, so compaction never
-    re-tokenizes the corpus."""
+    postings and positions (query/bm25.py). Compaction never decodes
+    postings into a shuffle — the block merge (merge_generations_blocks)
+    decodes inside its kernel, after the block exchange."""
     fields = list(TERMDOC_SCHEMA)[:4]
     cols = ["term", "n", "docs_bin", "tfs_bin", "dls_bin"]
-    if positions == "bin":
-        fields.append(T.StructField("pos_bin", T.BinaryType()))
-        cols.append("pos_bin")
-    elif positions == "list":
+    if positions == "list":
         fields.append(T.StructField("positions", T.ArrayType(T.LongType())))
         cols.append("pos_bin")
     fields.append(T.StructField("gen", T.IntegerType()))
@@ -497,14 +438,73 @@ def decode_blocks(blocks: DataFrame, positions: str | None = None) -> DataFrame:
     )
 
 
+def _complete_groups(batches, chunk_of, min_rows: int) -> Iterator:
+    """Arrow batches sorted by (term, chunk) -> (table, group starts) pairs
+    where every table holds whole (term, chunk) groups and the starts are
+    its groups' first row indices. Batches buffer until `min_rows` rows,
+    join the carry and are cut before their last group, which the next
+    batch may continue; that group carries over, and the end of the stream
+    flushes it. `chunk_of(table)` returns the rows' chunks as a numpy array.
+    The one group streamer of the block encoder and the block merger."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def starts(tbl) -> np.ndarray:
+        n = tbl.num_rows
+        change = np.empty(n, dtype=bool)
+        change[0] = True
+        if n > 1:
+            terms = as_array(tbl.column("term"))
+            chunks = chunk_of(tbl)
+            change[1:] = pc.not_equal(
+                terms.slice(1), terms.slice(0, n - 1)
+            ).to_numpy(zero_copy_only=False) | (chunks[1:] != chunks[:-1])
+        return np.nonzero(change)[0]
+
+    def joined(carry, buf):
+        parts = ([carry] if carry is not None else []) + (
+            [pa.Table.from_batches(buf)] if buf else []
+        )
+        return pa.concat_tables(parts).combine_chunks()
+
+    carry = None
+    buf: list = []
+    buffered = 0
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        buf.append(rb)
+        buffered += rb.num_rows
+        if buffered < min_rows:
+            continue
+        tbl = joined(carry, buf)
+        buf, buffered = [], 0
+        gstarts = starts(tbl)
+        if len(gstarts) <= 1:
+            carry = tbl
+            continue
+        cut = int(gstarts[-1])  # last (unfinished) group carries
+        carry = tbl.slice(cut)
+        yield tbl.slice(0, cut), gstarts[:-1]
+    if carry is not None or buf:
+        tbl = joined(carry, buf)
+        yield tbl, starts(tbl)
+
+
+def _int64(tbl, name: str) -> np.ndarray:
+    return as_array(tbl.column(name)).to_numpy(zero_copy_only=False).astype(
+        np.int64
+    )
+
+
 def _make_block_encoder(cfg: IndexConfig):
     """Posting-block encoder for one range partition — fully vectorized and
     Arrow-native (mapInArrow).
 
     Input arrives sorted by (term, doc_id); the iterator spans the whole
-    partition, so the trailing (possibly unfinished) group is carried across
-    Arrow batches. Per accumulated super-batch:
-      1. group change points on (term, chunk) -> block starts (size-capped)
+    partition, and _complete_groups hands over whole (term, chunk) groups.
+    Per group table:
+      1. group starts -> block starts (size-capped)
       2. ONE varint pass per column, wrapped per block by byte OFFSETS over
          the single encode buffer (no per-block bytes objects)
       3. per-block max_tf / min_dl via np.maximum/minimum.reduceat — the
@@ -524,46 +524,17 @@ def _make_block_encoder(cfg: IndexConfig):
 
     def encode(batches) -> Iterator:
         import pyarrow as pa
-        import pyarrow.compute as pc
         from pyspark import TaskContext
 
         from .codec import delta_encode_offsets, varint_encode_offsets
 
         part_id = TaskContext.get().partitionId() if TaskContext.get() else -1
-        carry = None  # pa.Table
-
-        def process(tbl, final: bool):
-            nonlocal carry
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-                carry = None
+        for tbl, gstarts in _complete_groups(
+            batches, lambda t: _int64(t, "doc_id") // chunk_docs, MIN_ROWS
+        ):
             n = tbl.num_rows
-            if n == 0:
-                return None
-            term_arr = as_array(tbl.column("term"))
-            ids = as_array(tbl.column("doc_id")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
+            ids = _int64(tbl, "doc_id")
             chunks = ids // chunk_docs
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            if n > 1:
-                tdiff = pc.not_equal(
-                    term_arr.slice(1), term_arr.slice(0, n - 1)
-                ).to_numpy(zero_copy_only=False)
-                change[1:] = tdiff | (chunks[1:] != chunks[:-1])
-            gstarts = np.nonzero(change)[0]
-            if not final:
-                if len(gstarts) <= 1:
-                    carry = tbl
-                    return None
-                cut = int(gstarts[-1])  # last (unfinished) group carries
-                carry = tbl.slice(cut)
-                tbl = tbl.slice(0, cut)
-                term_arr = term_arr.slice(0, cut)
-                n = cut
-                ids, chunks = ids[:cut], chunks[:cut]
-                gstarts = gstarts[:-1]
             gends = np.append(gstarts[1:], n)
             glens = gends - gstarts
             # expand groups to size-capped blocks
@@ -576,12 +547,8 @@ def _make_block_encoder(cfg: IndexConfig):
             bstarts = gstarts[gi] + within * bs
             bends = np.minimum(bstarts + bs, gends[gi])
 
-            tfs = as_array(tbl.column("tf")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            dls = as_array(tbl.column("dl")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
+            tfs = _int64(tbl, "tf")
+            dls = _int64(tbl, "dl")
             max_tf = np.maximum.reduceat(tfs, bstarts).astype(np.int32)
             min_dl = np.minimum.reduceat(dls, bstarts).astype(np.int32)
             sum_tf = np.add.reduceat(tfs, bstarts)
@@ -598,10 +565,9 @@ def _make_block_encoder(cfg: IndexConfig):
             pos_bounds = np.empty(total + 1, dtype=np.int64)
             pos_bounds[:-1] = poffs[bstarts]
             pos_bounds[-1] = poffs[n]
-            bidx = pa.array(bstarts)
-            return pa.RecordBatch.from_arrays(
+            yield pa.RecordBatch.from_arrays(
                 [
-                    term_arr.take(bidx),
+                    as_array(tbl.column("term")).take(pa.array(bstarts)),
                     pa.array(chunks[bstarts], type=pa.int64()),
                     pa.array(ids[bstarts], type=pa.int64()),
                     pa.array(ids[bends - 1], type=pa.int64()),
@@ -624,36 +590,6 @@ def _make_block_encoder(cfg: IndexConfig):
                 ],
             )
 
-        cols = ["term", "doc_id", "tf", "dl", "pos_bin"]
-        buf: list = []
-        buffered = 0
-        for rb in batches:
-            buf.append(rb)
-            buffered += rb.num_rows
-            if buffered >= MIN_ROWS:
-                out = process(
-                    pa.Table.from_batches(buf).select(cols).combine_chunks(),
-                    final=False,
-                )
-                buf, buffered = [], 0
-                if out is not None and out.num_rows:
-                    yield out
-        if buf:
-            tail = pa.Table.from_batches(buf).select(cols).combine_chunks()
-        else:
-            tail = pa.table(
-                {
-                    "term": pa.array([], type=pa.string()),
-                    "doc_id": pa.array([], type=pa.int64()),
-                    "tf": pa.array([], type=pa.int32()),
-                    "dl": pa.array([], type=pa.int32()),
-                    "pos_bin": pa.array([], type=pa.binary()),
-                }
-            )
-        out = process(tail, final=True)
-        if out is not None and out.num_rows:
-            yield out
-
     return encode
 
 
@@ -665,20 +601,17 @@ def _make_block_merger(cfg: IndexConfig, tomb_bc):
     Input: ENCODED block rows of every generation, hash-partitioned by the
     build's own salted key — a block never spans a chunk, and the salt
     window is a whole number of chunks, so keying on first_doc lands each
-    block in exactly the partition its decoded rows would have landed in —
+    block in exactly the partition its postings land in on a rebuild —
     and sorted by (term, first_doc, gen), which makes (term, chunk) groups
-    contiguous with chunks in doc order.  The kernel decodes one span of
-    complete groups at a time, sorts postings by doc within each group
-    (generations interleave only inside a chunk), drops tombstoned rows
-    (tomb_bc: broadcast (sorted doc_ids, aligned max before_gen)), and
-    pipes the merged stream through the STANDARD block encoder — output
-    blocks are produced by the same encoder from the same rows in the same
-    order as the row-level merge, so results are identical, while the
-    exchange moved ~1x index bytes instead of ~10x decoded postings.
-
-    Measured at 200k docs / 2 gens / local[32]: the decode->shuffle->sort->
-    encode chain's exchange step (3.5 s beyond decode) drops to a 0.3 s
-    block shuffle.
+    contiguous with chunks in doc order.  The kernel decodes one table of
+    complete groups at a time (_complete_groups), sorts postings by doc
+    within each group (generations interleave only inside a chunk), drops
+    tombstoned rows (tomb_bc: broadcast (sorted doc_ids, aligned max
+    before_gen)), and pipes the merged stream through the STANDARD block
+    encoder — the same encoder gets the same rows in the same order as on
+    a rebuild of the live docs, so the blocks are byte-identical to it
+    (test_block_merge_identical_to_rebuild), while the exchange moves ~1x
+    index bytes instead of ~10x decoded postings and nothing re-tokenizes.
 
     Future work: a (term, chunk) group holding a single generation and no
     tombstoned doc (checkable from first_doc/last_doc + the broadcast ids
@@ -692,45 +625,15 @@ def _make_block_merger(cfg: IndexConfig, tomb_bc):
 
     def merged(batches) -> Iterator:
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         tomb_ids, tomb_gens = tomb_bc.value
-        carry = None
-
-        def process(tbl, final: bool):
-            nonlocal carry
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-                carry = None
-            n = tbl.num_rows
-            if n == 0:
-                return None
-            term_arr = as_array(tbl.column("term"))
-            chunks = as_array(tbl.column("chunk")).to_numpy(
-                zero_copy_only=False
-            )
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            if n > 1:
-                tdiff = pc.not_equal(
-                    term_arr.slice(1), term_arr.slice(0, n - 1)
-                ).to_numpy(zero_copy_only=False)
-                change[1:] = tdiff | (chunks[1:] != chunks[:-1])
-            if not final:
-                gstarts = np.nonzero(change)[0]
-                if len(gstarts) <= 1:
-                    carry = tbl
-                    return None
-                cut = int(gstarts[-1])  # last (unfinished) group carries
-                carry = tbl.slice(cut)
-                tbl = tbl.slice(0, cut).combine_chunks()
-                n = cut
-                change = change[:cut]
+        for tbl, gstarts in _complete_groups(
+            batches, lambda t: _int64(t, "chunk"), MIN_BLOCK_ROWS
+        ):
             rows = posting_rows(tbl, "bin")
-            ns = as_array(tbl.column("n")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            gidx = np.repeat(np.cumsum(change) - 1, ns)
+            group = np.zeros(tbl.num_rows, dtype=np.int64)
+            group[gstarts] = 1
+            gidx = np.repeat(np.cumsum(group) - 1, _int64(tbl, "n"))
             ids = rows.column(1).to_numpy(zero_copy_only=False)
             # stable (group, doc_id) sort: groups are already in stream
             # order, generations interleave only within a group
@@ -738,36 +641,12 @@ def _make_block_merger(cfg: IndexConfig, tomb_bc):
             gens = rows.column(5).to_numpy(zero_copy_only=False)
             order = order[~dead(ids, gens, tomb_ids, tomb_gens)[order]]
             if order.size == 0:
-                return None
+                continue
             perm = pa.array(order)
-            return pa.RecordBatch.from_arrays(
+            yield pa.RecordBatch.from_arrays(
                 [rows.column(i).take(perm) for i in range(5)],
                 names=["term", "doc_id", "tf", "dl", "pos_bin"],
             )
-
-        buf: list = []
-        buffered = 0
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            buf.append(rb)
-            buffered += rb.num_rows
-            if buffered >= MIN_BLOCK_ROWS:
-                out = process(
-                    pa.Table.from_batches(buf).combine_chunks(), final=False
-                )
-                buf, buffered = [], 0
-                if out is not None and out.num_rows:
-                    yield out
-        if buf or carry is not None:
-            tail = (
-                pa.Table.from_batches(buf).combine_chunks()
-                if buf
-                else carry.slice(0, 0)
-            )
-            out = process(tail, final=True)
-            if out is not None and out.num_rows:
-                yield out
 
     def kernel(batches) -> Iterator:
         yield from encode(merged(batches))
@@ -784,10 +663,9 @@ def merge_generations_blocks(
     """All generations' posting blocks -> single-generation blocks, as one
     block-shuffle + merge-kernel plan (see _make_block_merger). The caller
     (streaming.incremental.compact) guarantees cfg matches the registered
-    chunk/salt geometry (the shuffle key depends on nothing else; blocks
-    re-encode at cfg.block_size) and that the tombstone set fits the
-    driver-side arrays; otherwise it falls back to the row-level
-    decode_blocks path."""
+    analyzer and chunk/salt geometry (the shuffle key depends on nothing
+    else; blocks re-encode at cfg.block_size) and that the tombstone set
+    fits the driver-side arrays; otherwise it compacts by rebuild."""
     spark = reader.spark
     window = min(cfg.chunk_docs * cfg.salt_chunks, 1 << 62)
     n_parts = cfg.n_partitions or spark.sparkContext.defaultParallelism
@@ -819,8 +697,9 @@ def local_tombstone_arrays(
     """Driver-side (sorted doc_ids, aligned max before_gen) from the
     tombstone version dir — parquet footers bound the size first, so an
     over-cap set costs one listing and no reads. Returns None only when the
-    set is larger than cap, where callers use the distributed row-level
-    merge instead. Empty arrays when there are no tombstones at all. A
+    set is larger than cap, where compaction declines the block merge and
+    rebuilds (merge_declined="tombstones"). Empty arrays when there are no
+    tombstones at all. A
     missing or unreadable tombstone version raises — it is a broken index,
     not a reason to change merge paths."""
     import pyarrow as pa
@@ -1054,7 +933,6 @@ def build_index(
     register: bool = True,
     assume_unique_ids: bool = False,
     docs_df: DataFrame | None = None,
-    termdoc_df: DataFrame | None = None,
     postings_df: DataFrame | None = None,
 ) -> dict:
     """Full batch index build (see _build_index_impl for the DAG).
@@ -1068,7 +946,7 @@ def build_index(
     with batch_sql_conf(spark):
         return _build_index_impl(
             spark, pages, index_dir, cfg, resume, generation, register,
-            assume_unique_ids, docs_df, termdoc_df, postings_df,
+            assume_unique_ids, docs_df, postings_df,
         )
 
 
@@ -1082,7 +960,6 @@ def _build_index_impl(
     register: bool = True,
     assume_unique_ids: bool = False,
     docs_df: DataFrame | None = None,
-    termdoc_df: DataFrame | None = None,
     postings_df: DataFrame | None = None,
 ) -> dict:
     """Full batch index build; returns the manifest dict.
@@ -1096,15 +973,11 @@ def _build_index_impl(
     re-ingested doc live twice (call register_generation afterwards).
     `assume_unique_ids=True` skips the intra-batch doc_id dedup shuffle when
     the producer guarantees unique ids.
-    `docs_df` / `termdoc_df` inject pre-computed stage inputs (DOCS_SCHEMA /
-    TERMDOC_SCHEMA shapes) in place of extract / tokenize — the posting-level
-    segment-merge path (streaming.incremental.compact mode="merge") feeds
-    decoded live postings through the very same salted shuffle + encoders,
-    so a merged index is byte-equivalent to a rebuilt one minus the analyze
-    pass. `postings_df` injects FULLY ENCODED block rows (BLOCKS_SCHEMA,
-    already partitioned — the block-level merge of merge_generations_blocks)
-    and short-circuits stage 2 to a plain write. `pages` may be None when
-    the stage inputs are given.
+    `docs_df` (DOCS_SCHEMA) and `postings_df` (BLOCKS_SCHEMA, FULLY ENCODED
+    and already partitioned) inject the stage outputs of the block merge
+    (streaming.incremental.compact mode="merge", merge_generations_blocks)
+    in place of extract and tokenize + encode: stage 2 becomes a plain
+    write, and `pages` may be None.
     """
     cfg = cfg or IndexConfig()
     if docs_df is None and not assume_unique_ids:
@@ -1138,8 +1011,8 @@ def _build_index_impl(
     # extracted frame, that frame is persisted (MEMORY_AND_DISK) so extract
     # runs ONCE and both consumers share it — the "analyzed exactly once"
     # invariant holds; the persist is scoped to the build and unpersisted
-    # the moment both writes land. On the merge path (termdoc_df given) the
-    # two lineages are already independent, so no persist is needed.
+    # the moment both writes land. On the merge path (postings_df given)
+    # the two lineages are already independent, so no persist is needed.
     # Measured at 200k docs / local[32]: warm build 7.2 -> 6.3 s, cold
     # 17.6 -> ~14 s (the two first-job warmups amortize concurrently).
     from concurrent.futures import ThreadPoolExecutor as _TPE
@@ -1156,7 +1029,7 @@ def _build_index_impl(
             if docs_df is not None
             else build_docs(spark, pages, cfg.analyzer)
         )
-        if termdoc_df is None and postings_df is None:
+        if postings_df is None:
             from pyspark import StorageLevel
 
             src = src.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1196,13 +1069,9 @@ def _build_index_impl(
             else:
                 n_parts = cfg.n_partitions or spark.sparkContext.defaultParallelism
                 window = min(cfg.chunk_docs * cfg.salt_chunks, 1 << 62)
-                termdoc = (
-                    termdoc_df
-                    if termdoc_df is not None
-                    else build_termdoc(docs, cfg.analyzer)
-                )
                 (
-                    termdoc.repartition(
+                    build_termdoc(docs, cfg.analyzer)
+                    .repartition(
                         n_parts,
                         F.xxhash64("term", (F.col("doc_id") / window).cast("long")),
                     )
@@ -1220,7 +1089,7 @@ def _build_index_impl(
         # no persisted frame; shutdown(wait=True) waits for the docs write,
         # and a stage-2 error propagates ahead of the docs write's own
         _stage1_pool.shutdown(wait=True)
-        if docs_future is not None and termdoc_df is None and postings_df is None:
+        if docs_future is not None and postings_df is None:
             feed.unpersist()
     if docs_future is not None:
         docs_future.result()
@@ -1269,10 +1138,11 @@ def _build_index_impl(
     from concurrent.futures import ThreadPoolExecutor
 
     def _serve_stage() -> None:
-        # stage 2b (optional): term-clustered serve copy of the posting
-        # blocks. Input is the ENCODED blocks (already delta+varint
-        # compressed), so this shuffle moves a small multiple of the final
-        # index bytes — far cheaper than re-encoding. repartitionByRange on
+        # stage 2b: term-clustered serve copy of the posting blocks, for
+        # the serving tier (query/serve.py) — the WAND layout hashes a
+        # term's blocks across every file. Input is the ENCODED blocks
+        # (already delta+varint compressed), so this shuffle moves a small
+        # multiple of the final index bytes. repartitionByRange on
         # (term, chunk) splits a head term across partitions at chunk
         # boundaries (no single-reducer skew at 10^12 docs) while keeping
         # each term's blocks contiguous on disk; 1 MiB row groups give the
@@ -1336,14 +1206,9 @@ def _build_index_impl(
             stage: (path, parts, group_bytes)
             for stage, path, parts, group_bytes in (
                 ("term_stats", stats_path, stats_parts, None),
-                (
-                    "postings_term",
-                    serve_path if cfg.serve_layout else None,
-                    serve_parts,
-                    serve_group_bytes,
-                ),
+                ("postings_term", serve_path, serve_parts, serve_group_bytes),
             )
-            if path is not None and not (resume and _stage_done(gdir, stage))
+            if not (resume and _stage_done(gdir, stage))
         }
         part_rows = _finish_on_driver(
             postings_path, postings_bytes, todo, codec, stage_s
@@ -1353,12 +1218,11 @@ def _build_index_impl(
             _mark_done(gdir, stage)
     else:
         with ThreadPoolExecutor(max_workers=3) as pool:
-            serve_f = pool.submit(_serve_stage) if cfg.serve_layout else None
+            serve_f = pool.submit(_serve_stage)
             stats_f = pool.submit(_stats_stage)
             part_rows = pool.submit(_metrics_job).result()
             stats_f.result()
-            if serve_f is not None:
-                serve_f.result()
+            serve_f.result()
     _lap("parallel_finish")
 
     part_metrics = {
@@ -1398,11 +1262,8 @@ def _build_index_impl(
         "avgdl": avgdl,
         "n_terms": int(n_terms),
         "n_chunks": int(n_chunks),
-        # non-checksum build knobs, persisted so config_of round-trips the
-        # FULL config: ingest/compact of a --no-serve-layout index must not
-        # silently build serve-layout generations, and compaction keeps the
-        # original partitioning choice
-        "serve_layout": cfg.serve_layout,
+        # the non-checksum build knob, persisted so config_of round-trips
+        # the FULL config: compaction keeps the original partitioning choice
         "n_partitions": cfg.n_partitions,
         "stage_seconds": stage_s,
         # which finish ran and why (postings bytes vs the one-open limit)
@@ -1424,8 +1285,8 @@ def config_of(index_dir: str) -> IndexConfig:
     tombstones and WAND pruning are chunk-keyed, so a generation with a
     different chunk_docs silently fails to kill replaced docs. (Checksum
     fields are identical across generations by construction; the oldest is
-    read because the non-checksum layout knobs — n_partitions, serve_layout
-    — are authoritative from the base build: incremental generations
+    read because the non-checksum layout knob, n_partitions, is
+    authoritative from the base build: incremental generations
     right-size n_partitions to their own batch, which must not leak into
     the config a compaction rebuilds the whole corpus with.)"""
     manifest_path = os.path.join(index_dir, "manifest.json")
@@ -1441,10 +1302,9 @@ def config_of(index_dir: str) -> IndexConfig:
         chunk_docs=gm["chunk_docs"],
         k1=gm["k1"],
         b=gm["b"],
-        # .get: manifests written before these were persisted fall back to
-        # the IndexConfig defaults
+        # .get: manifests written before it was persisted fall back to the
+        # IndexConfig default
         n_partitions=gm.get("n_partitions"),
-        serve_layout=gm.get("serve_layout", True),
     )
 
 
@@ -1681,32 +1541,42 @@ class IndexReader:
 
     def term_stats_local(self, terms) -> dict[str, int]:
         """df per query term, summed across generations, read DRIVER-SIDE
-        via parquet row-group pruning — no Spark job. The per-query stats
-        slice is at most len(terms) rows, and the stats files are written
-        range-partitioned + term-sorted exactly so min/max statistics
-        prune this lookup (the serve tier reads them the same way). The
-        index dir is local (open() reads its manifests with Python file
-        IO) and every generation writes term_stats, so a read error here
-        is a broken index and raises."""
-        import pyarrow.parquet as pq
+        with no Spark job: each generation's term_stats directory
+        (term_directory) is read once per reader, and a lookup reads only
+        the row groups whose [min, max] admits a query term. The stats
+        files are written range-partitioned + term-sorted exactly so these
+        ranges prune. The index dir is local (open() reads its manifests
+        with Python file IO) and every generation writes term_stats, so a
+        read error here is a broken index and raises."""
+        import bisect
 
-        terms = list(terms)
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        terms = sorted(set(terms))
         out: dict[str, int] = {}
         if not terms:
             return out
+        wanted = pa.array(terms, pa.string())
         for g in self.gen_manifests:
-            tbl = pq.read_table(
-                os.path.join(
-                    self.index_dir, f"gen{g['generation']}", "term_stats"
-                ),
-                columns=["term", "df"],
-                filters=[("term", "in", terms)],
-            )
-            for t, df_ in zip(
-                tbl.column("term").to_pylist(),
-                tbl.column("df").to_pylist(),
-            ):
-                out[t] = out.get(t, 0) + int(df_)
+            key = ("term_dir", g["generation"])
+            if key not in self._df_cache:
+                self._df_cache[key] = term_directory(
+                    os.path.join(
+                        self.index_dir, f"gen{g['generation']}", "term_stats"
+                    )
+                )
+            for lo, hi, pf, rg in self._df_cache[key]:
+                i = bisect.bisect_left(terms, lo)
+                if i == len(terms) or terms[i] > hi:
+                    continue
+                tbl = pf.read_row_group(rg, columns=["term", "df"])
+                tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=wanted))
+                for t, df_ in zip(
+                    tbl.column("term").to_pylist(),
+                    tbl.column("df").to_pylist(),
+                ):
+                    out[t] = out.get(t, 0) + int(df_)
         return out
 
     def tombstones(self, interactive: bool = False) -> DataFrame | None:

@@ -258,7 +258,7 @@ class TopKServer:
         jobs = []
         for g in self._gens:
             gen = g["generation"]
-            for stage in (self._postings_stage(gen), "term_stats"):
+            for stage in ("postings_term", "term_stats"):
                 jobs.extend(self._term_directory(gen, stage))
         with ThreadPoolExecutor(max_workers=16) as pool:
             list(pool.map(lambda e: self._rg_terms(e[2], e[3]), jobs))
@@ -349,55 +349,17 @@ class TopKServer:
 
     # -- per-term IO (row-group-pruned parquet reads) --------------------
 
-    def _dataset(self, gen: int, stage: str):
-        import pyarrow.dataset as pads
-
-        key = (gen, stage)
-        if key not in self._dsets:
-            self._dsets[key] = pads.dataset(
-                os.path.join(self.index_dir, f"gen{gen}", stage),
-                format="parquet",
-            )
-        return self._dsets[key]
-
     def _term_directory(self, gen: int, stage: str) -> list[tuple]:
-        """[(min_term, max_term, parquet_file, row_group)] — the row-group
-        term ranges of one generation's stage, read ONCE from the parquet
-        footers (files are term-sorted per partition at build time precisely
-        so these stats are selective). The serving analog of Lucene's term
-        dictionary: a cold term read touches only the row groups whose
-        [min,max] admit it, not every file's metadata per query."""
-        import pyarrow.parquet as pq
+        """build.term_directory of one generation's stage, read ONCE — the
+        serving analog of Lucene's term dictionary: a cold term read
+        touches only the row groups whose [min,max] admit it, not every
+        file's metadata per query."""
+        from ..index.build import term_directory
 
         key = (gen, stage, "dir")
         if key not in self._dsets:
-            d = os.path.join(self.index_dir, f"gen{gen}", stage)
-            entries = []
-            for fn in sorted(os.listdir(d)):
-                if not fn.endswith(".parquet"):
-                    continue
-                pf = pq.ParquetFile(os.path.join(d, fn))
-                md = pf.metadata
-                term_col = next(
-                    i
-                    for i in range(len(md.schema))
-                    if md.schema.column(i).name == "term"
-                )
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(term_col).statistics
-                    entries.append((st.min, st.max, pf, rg))
-            self._dsets[key] = entries
-        return self._dsets[key]
-
-    def _postings_stage(self, gen: int) -> str:
-        """Prefer the term-clustered serve copy (build stage 2b) — a term's
-        blocks are contiguous row groups there; fall back to the WAND layout
-        for indexes built with serve_layout=False."""
-        key = (gen, "stage")
-        if key not in self._dsets:
-            d = os.path.join(self.index_dir, f"gen{gen}", "postings_term")
-            self._dsets[key] = (
-                "postings_term" if os.path.exists(d) else "postings"
+            self._dsets[key] = term_directory(
+                os.path.join(self.index_dir, f"gen{gen}", stage)
             )
         return self._dsets[key]
 
@@ -430,9 +392,8 @@ class TopKServer:
         hi = prefix + "\U0010ffff"
         out: set[str] = set()
         for g in self._gens:
-            gen = g["generation"]
-            stage = self._postings_stage(gen)
-            for mn, mx, pf, rg in self._term_directory(gen, stage):
+            entries = self._term_directory(g["generation"], "postings_term")
+            for mn, mx, pf, rg in entries:
                 if mx < prefix or mn >= hi:
                     continue
                 terms = self._rg_terms(pf, rg)
@@ -465,9 +426,8 @@ class TopKServer:
             return self._dsets[key]
         terms: set[str] = set()
         for g in self._gens:
-            gen = g["generation"]
-            stage = self._postings_stage(gen)
-            for _mn, _mx, pf, rg in self._term_directory(gen, stage):
+            entries = self._term_directory(g["generation"], "postings_term")
+            for _mn, _mx, pf, rg in entries:
                 terms.update(self._rg_terms(pf, rg).tolist())
         by_len: dict[int, list] = {}
         for t in terms:
@@ -618,7 +578,7 @@ class TopKServer:
         for g in self._gens:
             gen = g["generation"]
             tbl = self._read_row_groups(
-                gen, self._postings_stage(gen), missing, _BLOCK_COLS
+                gen, "postings_term", missing, _BLOCK_COLS
             )
             if tbl is None:
                 continue

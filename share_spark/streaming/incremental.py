@@ -224,15 +224,19 @@ def compact(
     backfill-to-new-index + alias swap (elastic8.py:222-239), committed as
     an Iceberg-style "replace" snapshot either way:
 
-    - ``mode="merge"`` (default): a POSTING-LEVEL segment merge — decode
-      every generation's blocks back to posting rows (build.decode_blocks,
-      the encoder's exact inverse), drop tombstoned rows, and feed the
-      build's own salted shuffle + block encoders.  The corpus is never
-      re-analyzed: at web scale the skipped extract+tokenize pass is the
-      whole corpus' CPU cost, and the merge is IO-bound like Lucene's.
-      Results are identical to a rebuild (same rows into the same encoder).
-      Falls back to "rebuild" automatically when `cfg` changes the
-      analyzer (terms are baked into the postings).
+    - ``mode="merge"`` (default): a POSTING-LEVEL segment merge of the
+      encoded blocks (build.merge_generations_blocks): every generation's
+      blocks shuffle by the build's own salted key, and the merge kernel
+      decodes, drops tombstoned postings and re-encodes them.  The corpus
+      is never re-analyzed: at web scale the skipped extract+tokenize pass
+      is the whole corpus' CPU cost, and the merge is IO-bound like
+      Lucene's.  The blocks are byte-identical to a rebuild's (same rows
+      into the same encoder).  The merge is declined, and the compaction
+      rebuilds, when `cfg` changes the analyzer (terms are baked into the
+      postings) or the chunk/salt geometry (the block shuffle key), or
+      when the tombstone set is over local_tombstone_arrays' cap; the
+      snapshot summary records why as ``merge_declined``
+      ("analyzer" | "geometry" | "tombstones").
     - ``mode="rebuild"``: re-extract + re-tokenize the live docs' stored
       text — the strategy-migration path (new analyzer / k1 / b).
     - ``keep_history=False`` (default): the new single-generation index is
@@ -249,15 +253,32 @@ def compact(
     `cfg` defaults to the index's own registered config — compaction is a
     rewrite, so a different strategy here IS allowed when passed explicitly
     (this is how a strategy migration reindexes in place)."""
-    from ..index.build import commit_manifest, decode_blocks
+    from ..index.build import (
+        commit_manifest,
+        local_tombstone_arrays,
+        merge_generations_blocks,
+    )
 
     registered = config_of(index_dir)
     cfg = cfg or registered
     if mode not in ("merge", "rebuild"):
         raise ValueError(f"unknown compact mode {mode!r}")
-    if mode == "merge" and cfg.analyzer != registered.analyzer:
-        mode = "rebuild"  # terms are baked; a new analyzer must re-tokenize
     reader = IndexReader.open(spark, index_dir)
+    merge_declined = None
+    if mode == "merge":
+        if cfg.analyzer != registered.analyzer:
+            merge_declined = "analyzer"  # a new analyzer must re-tokenize
+        elif (cfg.chunk_docs, cfg.salt_chunks) != (
+            registered.chunk_docs,
+            registered.salt_chunks,
+        ):
+            merge_declined = "geometry"  # the block shuffle key changes
+        else:
+            tomb_local = local_tombstone_arrays(index_dir, reader.tombstone_dir)
+            if tomb_local is None:
+                merge_declined = "tombstones"  # over the driver-side cap
+        if merge_declined is not None:
+            mode = "rebuild"
     old_gens = list(reader.manifest["generations"])
     docs = reader.live_docs()
     # tombstones normally leave exactly one live row per doc; belt and
@@ -275,51 +296,16 @@ def compact(
     )
     if has_dups:
         docs = docs.dropDuplicates(["doc_id"])
-    doc_cols = [f.name for f in DOCS_SCHEMA]
 
-    pages = docs_df = termdoc_df = postings_df = None
+    pages = docs_df = postings_df = None
     if mode == "merge":
-        docs_df = docs.select(*doc_cols)
-        # Preferred plan: BLOCK-LEVEL merge — shuffle the encoded blocks
-        # (~1x index bytes) and decode/drop-dead/re-encode inside the merge
-        # kernel, instead of shuffling every decoded posting (~10x; guide
-        # §2.3/§8). Requires the registered chunk/salt geometry (the
-        # shuffle key is built from it; blocks re-encode at cfg.block_size
-        # either way) and a tombstone set that fits driver-side arrays; otherwise the row-level
-        # decode->salted-shuffle->encode path below stands. Both feed the
-        # same encoder with the same rows in the same order, so the merged
-        # index is identical either way (pinned by the merge≡rebuild tests
-        # and test_merge_compact's block-vs-row identity case).
-        from ..index.build import local_tombstone_arrays, merge_generations_blocks
-
-        geometry_ok = (
-            cfg.chunk_docs == registered.chunk_docs
-            and cfg.salt_chunks == registered.salt_chunks
+        # shuffle the encoded blocks (~1x index bytes) and decode/drop-dead/
+        # re-encode inside the merge kernel (guide §2.3/§8); blocks
+        # re-encode at cfg.block_size
+        docs_df = docs.select(*[f.name for f in DOCS_SCHEMA])
+        postings_df = merge_generations_blocks(
+            reader, cfg, tomb_local[0], tomb_local[1]
         )
-        tomb_local = (
-            local_tombstone_arrays(index_dir, reader.tombstone_dir)
-            if geometry_ok
-            else None
-        )
-        if tomb_local is not None:
-            postings_df = merge_generations_blocks(
-                reader, cfg, tomb_local[0], tomb_local[1]
-            )
-        else:
-            termdoc_df = decode_blocks(reader.postings(), positions="bin")
-            tomb = reader.tombstones()
-            if tomb is not None:
-                # un-hinted like every tombstone join: AQE broadcasts small
-                # sets, shuffles unbounded ones
-                termdoc_df = (
-                    termdoc_df.join(tomb, "doc_id", "left")
-                    .filter(
-                        F.col("before_gen").isNull()
-                        | (F.col("gen") >= F.col("before_gen"))
-                    )
-                    .drop("before_gen")
-                )
-            termdoc_df = termdoc_df.drop("gen")
     else:
         # path_key rides along so a field-scoped index keeps its per-path
         # term namespaces through the re-tokenize
@@ -327,13 +313,15 @@ def compact(
             "doc_id", "url", "lang", "path_key",
             F.col("text_norm").alias("text"),
         )
+    summary = {"mode": mode}
+    if merge_declined is not None:
+        summary["merge_declined"] = merge_declined
 
     if keep_history:
         new_gen = max(old_gens) + 1
         manifest = build_index(
             spark, pages, index_dir, cfg, generation=new_gen, register=False,
-            assume_unique_ids=True, docs_df=docs_df, termdoc_df=termdoc_df,
-            postings_df=postings_df,
+            assume_unique_ids=True, docs_df=docs_df, postings_df=postings_df,
         )
         commit_manifest(
             index_dir,
@@ -345,7 +333,7 @@ def compact(
                 "compacted_generations": old_gens,
                 "generation": new_gen,
                 "n_docs": manifest["n_docs"],
-                "mode": mode,
+                **summary,
             },
         )
         return manifest
@@ -354,8 +342,7 @@ def compact(
     shutil.rmtree(new_dir, ignore_errors=True)
     manifest = build_index(
         spark, pages, new_dir, cfg, generation=0, register=False,
-        assume_unique_ids=True, docs_df=docs_df, termdoc_df=termdoc_df,
-        postings_df=postings_df,
+        assume_unique_ids=True, docs_df=docs_df, postings_df=postings_df,
     )
     # carry the lineage log across the swap: history records remain
     # auditable even though their data files die with the old directory
@@ -377,7 +364,7 @@ def compact(
             "compacted_generations": old_gens,
             "generation": 0,
             "n_docs": manifest["n_docs"],
-            "mode": mode,
+            **summary,
             "history_expired": True,
         },
     )
@@ -488,7 +475,7 @@ def watch_incremental(
     idempotent.  Returns the StreamingQuery; caller owns
     awaitTermination/stop."""
     # default to the INDEX'S registered config, not IndexConfig(): the
-    # non-checksummed layout knobs (n_partitions, serve_layout) must
+    # non-checksummed layout knob (n_partitions) must
     # survive both the per-batch builds and any policy-triggered
     # compaction — an explicit IndexConfig() default would silently
     # rewrite the index with default layout when compaction fires

@@ -261,3 +261,88 @@ def test_failed_postings_write_leaks_nothing(spark, tmp_path, monkeypatch):
     }
     assert not leaked
     assert persisted() <= rdds
+
+
+def test_term_stats_local_reads_its_directory_once(spark, built_index, monkeypatch):
+    """term_stats_local reads each generation's term_stats footers once per
+    reader: a second lookup opens no parquet file, and both return what a
+    filtered parquet read of the stats returns."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    terms = ["danger", "the", "nothing", "no_such_term_zz"]
+    idx = IndexReader.open(spark, built_index.index_dir)
+    want: dict[str, int] = {}
+    for g in idx.gen_manifests:
+        tbl = pq.read_table(
+            os.path.join(idx.index_dir, f"gen{g['generation']}", "term_stats"),
+            columns=["term", "df"],
+            filters=[("term", "in", terms)],
+        )
+        for t, df_ in zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist()):
+            want[t] = want.get(t, 0) + df_
+    assert set(want) == {"danger", "the", "nothing"}
+
+    opened = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(
+        pq, "ParquetFile", lambda *a, **k: opened.append(a) or real(*a, **k)
+    )
+    assert idx.term_stats_local(terms) == want
+    assert opened  # the first lookup reads the footers
+    opened.clear()
+    assert idx.term_stats_local(reversed(terms)) == want
+    assert opened == []
+
+
+def test_termdoc_identity_across_tokenizer_inputs(spark, tmp_path):
+    """One Arrow batch mixing ASCII rows, non-ASCII rows (accents, a U+2028
+    line separator) and empty text takes the frozen tokenizer; under the
+    standard and the english analyzer, the decoded postings and positions
+    equal the frozen index and the frozen `tokenize` offsets."""
+    import pandas as pd
+
+    from share_spark.analysis import tokenize
+    from share_spark.extract import extract_text
+    from tests.frozen_bm25 import FrozenIndex
+
+    texts = [
+        "The running dogs are jumping over the fences",
+        "café naïve Café coöperate the cafe",
+        "first line\u2028second line, the line",
+        "",
+        "plain ascii words and the running dog",
+        "Ünïcödé ÉTÉ été summer_2024 x_y",
+    ]
+    pdf = pd.DataFrame(
+        {"doc_id": range(len(texts)), "text": texts, "html": None}
+    )
+    for analyzer in ("standard", "english"):
+        d = str(tmp_path / analyzer)
+        cfg = IndexConfig(analyzer=analyzer, block_size=4, chunk_docs=4)
+        # one partition, ids unique: every row reaches the tokenizer in
+        # the same Arrow batch
+        build_index(
+            spark, spark.createDataFrame(pdf).coalesce(1), d, cfg,
+            assume_unique_ids=True,
+        )
+        idx = IndexReader.open(spark, d)
+        frozen = FrozenIndex.from_pages(pdf, analyzer)
+        rows = decode_blocks(idx.postings(), positions="list").collect()
+        got = {(r["term"], r["doc_id"]): (r["tf"], r["dl"]) for r in rows}
+        want = {
+            (t, doc): (c, len(frozen.tokens[doc]))
+            for doc, cnt in frozen.tf.items()
+            for t, c in cnt.items()
+        }
+        assert got == want, analyzer
+        offsets: dict[tuple[str, int], list[int]] = {}
+        for r in pdf.itertuples():
+            toks = tokenize(extract_text(r.html, r.text), analyzer)
+            for i, t in enumerate(toks):
+                offsets.setdefault((t, int(r.doc_id)), []).append(i)
+        assert {
+            (r["term"], r["doc_id"]): list(r["positions"]) for r in rows
+        } == offsets, analyzer
+        assert idx.n_docs == len(texts)

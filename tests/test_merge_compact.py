@@ -1,5 +1,8 @@
-"""Posting-level segment merge (compact mode="merge"): decode -> drop dead
--> re-encode through the build's own shuffle, never re-tokenizing.
+"""Posting-level segment merge (compact mode="merge"): shuffle the encoded
+blocks by the build's own salted key, then decode -> drop dead -> re-encode
+inside the merge kernel, never re-tokenizing. A merge the blocks cannot
+serve (new analyzer, new chunk/salt geometry, tombstones over the cap)
+compacts by rebuild and says why.
 
 The merge must be RESULT-IDENTICAL to a rebuild (same rows into the same
 encoder): rank, score, stats, and corpus aggregates all pinned below.
@@ -90,6 +93,7 @@ def test_merge_identical_to_rebuild(spark, tmp_path, churned_index):
     assert w == e
     assert current_snapshot(d_merge)["summary"]["mode"] == "merge"
     assert current_snapshot(d_rebuild)["summary"]["mode"] == "rebuild"
+    assert "merge_declined" not in current_snapshot(d_merge)["summary"]
 
 
 def test_merge_replaced_and_expelled_stay_dead(spark, churned_index):
@@ -134,6 +138,7 @@ def test_merge_analyzer_change_falls_back_to_rebuild(spark, tmp_path):
     eng = dataclasses.replace(CFG, analyzer="english")
     compact(spark, d, eng, mode="merge")
     assert current_snapshot(d)["summary"]["mode"] == "rebuild"
+    assert current_snapshot(d)["summary"]["merge_declined"] == "analyzer"
     # the migrated index answers with the new analyzer's stemming
     idx = IndexReader.open(spark, d)
     assert idx.gen_manifests[0]["analyzer"] == "english"
@@ -178,26 +183,33 @@ def test_rebuild_compact_preserves_field_scoping(spark, tmp_path):
         assert after == before, mode
 
 
-def test_block_merge_identical_to_row_merge(spark, tmp_path, churned_index, monkeypatch):
-    """The block-level merge (shuffle encoded blocks, decode+drop+re-encode
-    in the kernel) produces BYTE-identical posting blocks to the row-level
-    merge (decode first, shuffle posting rows) — same rows, same order,
-    same encoder, per partition file. Also with a block_size change: the
-    block path re-encodes at the new size."""
-    import dataclasses
+def _part_files(d):
+    """Every gen0/postings part file's block rows, in file and row order."""
     import glob
     import os
 
     import pyarrow.parquet as pq
 
+    files = sorted(glob.glob(os.path.join(d, "gen0", "postings", "*.parquet")))
+    return [pq.read_table(f).to_pylist() for f in files]
+
+
+def test_block_merge_identical_to_rebuild(spark, tmp_path, churned_index, monkeypatch):
+    """The block merge (shuffle encoded blocks, decode+drop+re-encode in the
+    kernel) writes BYTE-identical posting blocks to mode="rebuild" (the
+    live docs re-tokenized) — same rows, same order, same encoder, part
+    file by part file. Also with a block_size change: the block path
+    re-encodes at the new size."""
+    import dataclasses
+
     import share_spark.index.build as B
 
-    d_row = str(tmp_path / "rowidx")
-    shutil.copytree(churned_index, d_row)
     cfg16 = dataclasses.replace(CFG, block_size=16)
-    d_blk16, d_row16 = str(tmp_path / "blk16"), str(tmp_path / "row16")
-    shutil.copytree(churned_index, d_blk16)
-    shutil.copytree(churned_index, d_row16)
+    copies = {
+        name: str(tmp_path / name) for name in ("rebuild", "blk16", "rebuild16")
+    }
+    for d in copies.values():
+        shutil.copytree(churned_index, d)
 
     block_runs = []
     real_merge = B.merge_generations_blocks
@@ -206,56 +218,54 @@ def test_block_merge_identical_to_row_merge(spark, tmp_path, churned_index, monk
         "merge_generations_blocks",
         lambda *a, **k: block_runs.append(a[1].block_size) or real_merge(*a, **k),
     )
-    # block path (default)
     compact(spark, churned_index, mode="merge")
-    compact(spark, d_blk16, cfg16, mode="merge")
+    compact(spark, copies["blk16"], cfg16, mode="merge")
+    compact(spark, copies["rebuild"], mode="rebuild")
+    compact(spark, copies["rebuild16"], cfg16, mode="rebuild")
     assert block_runs == [CFG.block_size, 16]
-    # force the row-level fallback on the copy: over the cap (cap=0), the
-    # real tombstone lookup declines the block path
+    for d in (churned_index, copies["blk16"]):
+        summary = current_snapshot(d)["summary"]
+        assert summary["mode"] == "merge" and "merge_declined" not in summary
+
+    a, b = _part_files(churned_index), _part_files(copies["rebuild"])
+    assert len(a) > 1 and a == b
+    a16, b16 = _part_files(copies["blk16"]), _part_files(copies["rebuild16"])
+    assert a16 == b16
+    assert max(r["n"] for f in a16 for r in f) == 16
+    assert sum(map(len, a16)) > sum(map(len, a))
+    ia, ia16 = IndexReader.open(spark, churned_index), IndexReader.open(
+        spark, copies["blk16"]
+    )
+    for q in QUERIES:
+        assert _results(ia16, q) == _results(ia, q), q
+
+
+def test_declined_merge_rebuilds_and_says_why(spark, tmp_path, churned_index, monkeypatch):
+    """A chunk_docs change moves the block shuffle key, and a tombstone set
+    over local_tombstone_arrays' cap does not fit the driver: either way
+    compact(mode="merge") rebuilds and records why in the snapshot."""
+    import dataclasses
+
+    import share_spark.index.build as B
+
+    d_geo = str(tmp_path / "geo")
+    shutil.copytree(churned_index, d_geo)
+    wide = dataclasses.replace(CFG, chunk_docs=128)
+    m_geo = compact(spark, d_geo, wide, mode="merge")
+    summary = current_snapshot(d_geo)["summary"]
+    assert summary["mode"] == "rebuild"
+    assert summary["merge_declined"] == "geometry"
+    assert m_geo["chunk_docs"] == 128
+
     real = B.local_tombstone_arrays
-    tomb_dir = IndexReader.open(spark, d_row).tombstone_dir
-    assert tomb_dir is not None
-    assert real(d_row, tomb_dir, cap=0) is None
     monkeypatch.setattr(
         B, "local_tombstone_arrays", lambda *a, **k: real(*a, **{**k, "cap": 0})
     )
-    compact(spark, d_row, mode="merge")
-    compact(spark, d_row16, cfg16, mode="merge")
-    assert block_runs == [CFG.block_size, 16]
-
-    def _blocks(d):
-        rows = []
-        for f in sorted(glob.glob(os.path.join(d, "gen0", "postings", "*.parquet"))):
-            t = pq.read_table(f)
-            rows.extend(
-                sorted(
-                    zip(
-                        t.column("term").to_pylist(),
-                        t.column("chunk").to_pylist(),
-                        t.column("first_doc").to_pylist(),
-                        t.column("n").to_pylist(),
-                        t.column("docs_bin").to_pylist(),
-                        t.column("tfs_bin").to_pylist(),
-                        t.column("dls_bin").to_pylist(),
-                        t.column("pos_bin").to_pylist(),
-                        t.column("max_tf").to_pylist(),
-                        t.column("min_dl").to_pylist(),
-                        t.column("part_id").to_pylist(),
-                    )
-                )
-            )
-        return rows
-
-    a, b = _blocks(churned_index), _blocks(d_row)
-    assert len(a) == len(b) and a == b
-    # and the merged index still answers identically
-    ia, ib = IndexReader.open(spark, churned_index), IndexReader.open(spark, d_row)
+    m_tomb = compact(spark, churned_index, mode="merge")
+    summary = current_snapshot(churned_index)["summary"]
+    assert summary["mode"] == "rebuild"
+    assert summary["merge_declined"] == "tombstones"
+    assert m_tomb["n_docs"] == m_geo["n_docs"]
+    ig, it = IndexReader.open(spark, d_geo), IndexReader.open(spark, churned_index)
     for q in QUERIES:
-        assert _results(ia, q) == _results(ib, q), q
-
-    a16, b16 = _blocks(d_blk16), _blocks(d_row16)
-    assert len(a16) == len(b16) and a16 == b16
-    assert max(r[3] for r in a16) == 16 and len(a16) > len(a)
-    ia16 = IndexReader.open(spark, d_blk16)
-    for q in QUERIES:
-        assert _results(ia16, q) == _results(ia, q), q
+        assert _results(ig, q) == _results(it, q), q
