@@ -996,6 +996,7 @@ def _build_index_impl(
     docs_path = _stage_dir(gdir, "docs")
     stats_path = _stage_dir(gdir, "term_stats")
     postings_path = _stage_dir(gdir, "postings")
+    n_parts = cfg.n_partitions or spark.sparkContext.defaultParallelism
 
     def _refresh(path: str) -> None:
         # Spark's session-wide FileStatusCache never expires by default; an
@@ -1067,7 +1068,6 @@ def _build_index_impl(
                 # ordered by the merge kernel — nothing left but the write
                 postings_df.write.mode("overwrite").parquet(postings_path)
             else:
-                n_parts = cfg.n_partitions or spark.sparkContext.defaultParallelism
                 window = min(cfg.chunk_docs * cfg.salt_chunks, 1 << 62)
                 (
                     build_termdoc(docs, cfg.analyzer)
@@ -1125,12 +1125,15 @@ def _build_index_impl(
         "limit": _DRIVER_FINISH_MAX_BYTES,
     }
     serve_path = _stage_dir(gdir, "postings_term")
-    serve_parts = max(
-        4, (cfg.n_partitions or spark.sparkContext.defaultParallelism) // 2
+    # files per finish stage: a one-partition generation (a small ingest
+    # batch, streaming.incremental.batch_width) writes one each, as its
+    # other stages do; wider ones keep at least four
+    serve_parts = 1 if n_parts == 1 else max(4, n_parts // 2)
+    stats_parts = (
+        1 if n_parts == 1 else max(4, spark.sparkContext.defaultParallelism // 2)
     )
     # the serve copy's row groups: the serving tier's read unit
     serve_group_bytes = 1 << 20
-    stats_parts = max(4, spark.sparkContext.defaultParallelism // 2)
 
     def _read_postings() -> DataFrame:
         return spark.read.schema(BLOCKS_SCHEMA).parquet(postings_path)

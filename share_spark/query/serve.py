@@ -113,14 +113,14 @@ def _lev_mask(cands: list, stem: str, d: int) -> np.ndarray:
     return final[np.arange(n), lens] <= d
 
 from ..index.build import IndexReader, check_layout
-from ..index.codec import live_list, term_lists
+from ..index.codec import collapse_tombstones, live_list, term_lists
 from .bm25 import (
     PREFIX_SCORE,
     ParsedQuery,
     parse_disjunction,
     validate_branches,
 )
-from .wand import score_branch_lists
+from .wand import score_branch_lists, term_idfs
 
 _BLOCK_COLS = [
     "term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin", "dls_bin",
@@ -337,13 +337,15 @@ class TopKServer:
         )
         if self._tomb is not None and (name, mtime) == self._tomb_key:
             return
-        t = pads.dataset(path, format="parquet").to_table()
+        t = pads.dataset(path, format="parquet").to_table(
+            columns=["doc_id", "before_gen"]
+        )
         # collapse to max before_gen per doc, SORTED by doc_id (the query
-        # path binary-searches it) — same as IndexReader.tombstones
-        pdf = t.to_pandas().groupby("doc_id", sort=True)["before_gen"].max()
-        self._tomb = (
-            pdf.index.to_numpy(dtype=np.int64),
-            pdf.to_numpy(dtype=np.int64),
+        # path binary-searches it) — the body local_tombstone_arrays and
+        # the top-k kernel use
+        self._tomb = collapse_tombstones(
+            t.column("doc_id").to_numpy(zero_copy_only=False),
+            t.column("before_gen").to_numpy(zero_copy_only=False),
         )
         self._tomb_key = (name, mtime)
 
@@ -756,10 +758,7 @@ class TopKServer:
             any(dfs[t] == 0 for t in br.terms) for br in branches
         ):
             return []  # every branch has a dead term
-        n = float(self._n_docs)
-        idf = {
-            t: float(np.log1p((n - d + 0.5) / (d + 0.5))) for t, d in dfs.items()
-        }
+        idf = term_idfs(self._n_docs, dfs)
 
         t_ids, t_gens = self._tomb or (None, None)
         lists: dict[str, tuple] = {}

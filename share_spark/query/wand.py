@@ -14,9 +14,9 @@ block-max WAND) maps onto Spark's execution model:
   posting bytes decoded.
 - **Block-max pruning**: each chunk's score upper bound is
   sum_t idf(t) * max over t's blocks of impact(max_tf, min_dl, avgdl_query),
-  from block metadata only; idf embeds in the plan as literals from a
-  driver-side read of the query terms' term_stats rows (row-group pruned,
-  no Spark job).
+  from block metadata only; idf is computed on the driver from a read of
+  the query terms' term_stats rows (row-group pruned, no Spark job) and
+  reaches the kernel in its closure.
   The bound is computed with the QUERY-TIME global avgdl from stored
   (max_tf, min_dl) — impact is increasing in tf and decreasing in dl, so it
   upper-bounds every posting in the block regardless of how later
@@ -111,6 +111,15 @@ def _local_result(spark, page) -> DataFrame:
         names=["doc_id", "score", "rank"],
     )
     return spark.createDataFrame(tbl, schema=RESULT_SCHEMA)
+
+
+def term_idfs(n_docs: int, dfs: dict[str, int]) -> dict[str, float]:
+    """BM25 idf, log1p((N - df + 0.5) / (df + 0.5)), for each term of `dfs`
+    (term -> df): the one driver-side formula of the WAND kernel and the
+    serve tier (the exact scorer evaluates the same expression in Spark,
+    bm25.term_idf_df)."""
+    n = float(n_docs)
+    return {t: float(np.log1p((n - d + 0.5) / (d + 0.5))) for t, d in dfs.items()}
 
 
 def _member(sorted_arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
@@ -364,6 +373,7 @@ def _aux_arrays(aux: pa.Table | None):
 
 def _make_chunk_scorer(
     branches: tuple[ParsedQuery, ...],
+    idf_of: dict[str, float],
     k1: float,
     b: float,
     avgdl: float,
@@ -378,12 +388,13 @@ def _make_chunk_scorer(
     has all its terms present, and the tau bound is the sum of the viable
     branches' bounds.
 
-    Block rows carry `idf` (a plan literal per query term), `gen` (segment
-    id), and `bound_imp` (query-time impact bound). The chunk's aux rows,
+    `idf_of` maps each positive term with a df to its idf, computed once
+    on the driver (term_idfs). Block rows carry `gen` (segment id) and
+    `bound_imp` (query-time impact bound). The chunk's aux rows,
     split off the same shuffle, carry tombstones (kind='tomb': kill doc in
     generations < before_gen) and the allowed-doc set when a structured
     filter is pushed down (kind='allow'); they arrive as _aux_arrays.
-    Negative terms / neg-phrase-only terms have null idf and contribute
+    Negative terms / neg-phrase-only terms have no idf and contribute
     only ids (+ positions for phrase checks).
     """
     branch_terms = [tuple(sorted(set(br.terms))) for br in branches]
@@ -400,22 +411,15 @@ def _make_chunk_scorer(
         if filter_active and allow_ids is None:
             return None  # filter active, nothing allowed in this chunk
 
-        idf_of: dict[str, float] = {}
         per_term_max: dict[str, float] = {}
-        per_term = blocks.group_by("term").aggregate(
-            [("bound_imp", "max"), ("idf", "max")]
-        )
+        per_term = blocks.group_by("term").aggregate([("bound_imp", "max")])
         seen_terms = set()
-        for t, bi, idf in zip(
+        for t, bi in zip(
             per_term.column("term").to_pylist(),
             per_term.column("bound_imp_max").to_pylist(),
-            per_term.column("idf_max").to_pylist(),
         ):
             seen_terms.add(t)
-            if t not in pos_set:
-                continue
-            idf_of[t] = float(idf)
-            if bi > 0.0:
+            if t in pos_set and bi > 0.0:
                 per_term_max[t] = bi
 
         # branch viability: all the branch's terms (and its positive
@@ -645,52 +649,36 @@ def wand_topk(
     if has_phrases:
         cols.append("pos_bin")  # positions read only when a phrase needs them
 
-    # per-query stats slice, idf in-plan: df per term resolves DRIVER-SIDE
-    # from the term-sorted stats parquet (row-group pruned, no Spark job)
-    # and idf embeds as literals — the log1p still evaluates in the JVM
-    # (constant-folded once at plan time) on the same inputs as the exact
-    # scorer's term_idf_df.
+    # per-query idf, driver-side: df per term resolves from the
+    # term-sorted stats parquet (row-group pruned, no Spark job) and idf
+    # reaches the kernel in its closure. The projection below then holds
+    # only per-index literals, so a new query's plan generates the same
+    # Java source as the last one and Spark's codegen cache compiles
+    # nothing (idf as per-query double literals cost 2 Janino compiles of
+    # 10-16 ms each per distinct query).
     #
-    # Plan-chatter note: the whole per-query projection (idf CASE,
-    # bound_imp, the null pos_bin) is ONE selectExpr of SQL strings — a
-    # single parse round-trip — instead of a Column chain whose every
-    # F.when/F.lit/withColumn is its own driver<->JVM py4j call (profiled
-    # at ~675 round-trips and ~0.2-0.3 s per interactive query). Doubles
-    # embed as CAST('<repr>' AS DOUBLE): repr round-trips exactly and the
-    # string cast parses via Double.parseDouble. Terms embed as
-    # CAST(X'<utf-8 hex>' AS STRING), which needs no escaping, so a term
-    # holding quotes or backslashes (a field path) takes the same path.
-    df_of = index.term_stats_local(pos_terms)
+    # Plan-chatter note: the projection (bound_imp, the null pos_bin) is
+    # ONE selectExpr of SQL strings — a single parse round-trip — instead
+    # of a Column chain whose every F.lit/withColumn is its own
+    # driver<->JVM py4j call (profiled at ~675 round-trips and ~0.2-0.3 s
+    # per interactive query). Doubles embed as CAST('<repr>' AS DOUBLE):
+    # repr round-trips exactly and the string cast parses via
+    # Double.parseDouble.
+    idf_of = term_idfs(n, index.term_stats_local(pos_terms))
 
     def _d(v: float) -> str:
         return f"CAST('{v!r}' AS DOUBLE)"
-
-    def _s(t: str) -> str:
-        return f"CAST(X'{t.encode('utf-8').hex()}' AS STRING)"
 
     bound_sql = (
         f"(CAST(max_tf AS DOUBLE) * {_d(k1 + 1.0)}) / "
         f"(CAST(max_tf AS DOUBLE) + {_d(k1)} * ({_d(1.0 - b)} + {_d(b)} * "
         f"CAST(min_dl AS DOUBLE) / {_d(avgdl)}))"
     )
-    whens = [
-        f"WHEN term = {_s(t)} THEN log1p(({_d(float(n))} - "
-        f"{_d(float(df_of[t]))} + {_d(0.5)}) / "
-        f"({_d(float(df_of[t]))} + {_d(0.5)}))"
-        for t in pos_terms
-        if t in df_of
-    ]
-    idf_sql = (
-        ("CASE " + " ".join(whens) + " ELSE CAST(NULL AS DOUBLE) END")
-        if whens
-        else "CAST(NULL AS DOUBLE)"
-    )
     blocks = index.postings(interactive=True).filter(
         F.col("term").isin(all_terms)
     ).selectExpr(
         *cols,
         *([] if has_phrases else ["CAST(NULL AS BINARY) AS pos_bin"]),
-        f"{idf_sql} AS idf",
         f"{bound_sql} AS bound_imp",
     )
     rows = _with_aux(blocks, index, filter_docs)
@@ -702,7 +690,7 @@ def wand_topk(
         if chunk_ids_df is not None:
             sel = rows.join(F.broadcast(chunk_ids_df), "chunk", "left_semi")
         scorer = _make_chunk_scorer(
-            branches, k1, b, avgdl, n_keep, tau, filter_active
+            branches, idf_of, k1, b, avgdl, n_keep, tau, filter_active
         )
         scored = _run_chunks(sel, scorer, CHUNK_SCORES_SCHEMA, read_bytes)
         with _interactive_conf(spark):
@@ -747,10 +735,13 @@ def wand_topk(
     # chunk's bound is the sum of its qualifying branches' bounds (the
     # BooleanQuery SHOULD-sum upper bound). Single branch degenerates to
     # the plain conjunctive prune.
+    idf_frame = spark.createDataFrame(
+        list(idf_of.items()), "term string, idf double"
+    )
     per_ct = (
-        blocks.filter(F.col("idf").isNotNull())
-        .groupBy("chunk", "term")
-        .agg(F.max("bound_imp").alias("mi"), F.first("idf").alias("idf"))
+        blocks.groupBy("chunk", "term")
+        .agg(F.max("bound_imp").alias("mi"))
+        .join(F.broadcast(idf_frame), "term")
     )
     if len(branches) == 1:
         chunk_bounds = (

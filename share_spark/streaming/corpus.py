@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import textops, urltools
+from .incremental import batch_width
 
 # kind: "fp" (content md5), "url" (canonical url) or "mh" (MinHash band key)
 SEEN_SCHEMA = T.StructType(
@@ -206,9 +207,15 @@ def admit_batch(
                 F.lit("mh").alias("kind"),
             )
         )
+    out = admitted.drop("_fp", "_urlkey")
+    # a small batch appends ONE file to each sink, not one per partition
+    # of the checkpoint (and two per partition for the keys' union): every
+    # later batch's anti-join opens every file the seen store holds
+    if batch_width(admitted)[1]["path"] == "one_task":
+        new_keys = new_keys.coalesce(1)
+        out = out.coalesce(1)
     # keys first (see module doc), then the documents
     new_keys.write.mode("append").parquet(seen_dir)
-    out = admitted.drop("_fp", "_urlkey")
     out.write.mode("append").parquet(corpus_dir)
     return out
 

@@ -25,6 +25,7 @@ Here the same semantics are Lucene-segment-shaped (and transactional):
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import shutil
@@ -44,6 +45,40 @@ from ..index.build import (
     config_of,
     register_generation,
 )
+
+
+# The largest batch, in extractor input bytes (see batch_width), that is
+# ingested as ONE task: one input partition, n_partitions=1, one file per
+# generation stage. Below it a stage's per-task fixed cost (launch, Python
+# worker, file commit) is more than splitting its work saves. A warm
+# build_index of text-only pages at width 1 / 2 / 4, local[4] on a 4-core
+# host, median of 3 runs:
+#   0.27 MB: 0.37 / 0.84 / 0.81 s     2.11 MB: 1.01 / 0.94 / 0.83 s
+#   0.53 MB: 0.42 / 0.66 / 0.63 s     4.20 MB: 1.77 / 1.43 / 1.19 s
+#   1.06 MB: 0.62 / 0.66 / 0.67 s
+# Width 1 wins up to about 1 MB and loses from 2 MB; with a tenth of the
+# pages carrying HTML the order is the same (1.05 MB: 0.59 / 0.66 / 0.64,
+# 2.10 MB: 0.93 / 0.89 / 0.83). corpus.admit_batch writes a batch under
+# the same limit as one file per sink.
+_ONE_TASK_MAX_BYTES = 1 << 20
+
+
+def batch_width(pages: DataFrame) -> tuple[int, dict]:
+    """(rows, width) of a batch of pages, from ONE aggregate job. Its bytes
+    are what the extractor reads: `html` where a page has it, else `text`.
+    `width` is {"path": "one_task" | "spread", "batch_bytes", "limit"}:
+    one_task when the bytes are at most _ONE_TASK_MAX_BYTES."""
+    src = [F.col(c) for c in ("html", "text") if c in pages.columns]
+    payload = F.octet_length(F.coalesce(*src)) if src else F.lit(0)
+    r = pages.agg(
+        F.count(F.lit(1)).alias("rows"), F.sum(payload).alias("bytes")
+    ).first()
+    n_bytes = int(r["bytes"] or 0)
+    return int(r["rows"]), {
+        "path": "one_task" if n_bytes <= _ONE_TASK_MAX_BYTES else "spread",
+        "batch_bytes": n_bytes,
+        "limit": _ONE_TASK_MAX_BYTES,
+    }
 
 
 def _manifest(index_dir: str) -> dict:
@@ -89,6 +124,32 @@ def apply_incremental(
     if generation is None:
         generation = max(older_gens) + 1
 
+    # right-size the generation's width to the BATCH, not the base index:
+    # incremental batches are small relative to the corpus (2000-doc
+    # chunks in the reference, settings.py:303), and inheriting the base's
+    # width runs that many near-empty tasks per stage and writes that many
+    # near-empty files per generation — file-count bloat at every
+    # micro-batch and extra footer opens on every query until compaction.
+    # n_partitions is layout-free (unlike chunk_docs, which MUST match for
+    # tombstone correctness), so this never changes semantics. One
+    # aggregate job sizes the batch by the bytes the extractor reads:
+    # - one_task: at most _ONE_TASK_MAX_BYTES (the measured crossover, see
+    #   there). The batch coalesces to one partition and builds with
+    #   n_partitions=1, so dedup's map side, extract, tokenize, encode,
+    #   the tombstone semi-join's batch side and every write run as one
+    #   task, and each generation stage is one file.
+    # - spread: the batch keeps its own width, and the postings get ~25k
+    #   docs per partition (the full build's density at its own defaults),
+    #   capped at the base's n_partitions but never fewer than 4.
+    batch_docs, width = batch_width(changed_pages)
+    if width["path"] == "one_task":
+        changed_pages = changed_pages.coalesce(1)
+        n_parts = 1
+    else:
+        base_parts = cfg.n_partitions or spark.sparkContext.defaultParallelism
+        n_parts = max(4, min(base_parts, batch_docs // 25_000 + 1))
+    cfg = dataclasses.replace(cfg, n_partitions=n_parts)
+
     # doc ids being replaced (same derivation as build_docs: doc_id column
     # if present, else xxhash64(url))
     if "doc_id" in changed_pages.columns:
@@ -97,24 +158,6 @@ def apply_incremental(
         new_ids = changed_pages.select(
             F.xxhash64("url").alias("doc_id")
         ).distinct()
-
-    # right-size the generation's partition count to the BATCH, not the
-    # base index: incremental batches are small relative to the corpus
-    # (2000-doc chunks in the reference, settings.py:303), and inheriting
-    # the base's n_partitions writes that many near-empty posting files per
-    # generation — file-count bloat at every micro-batch and extra footer
-    # opens on every query until compaction. n_partitions is layout-free
-    # (unlike chunk_docs, which MUST match for tombstone correctness), so
-    # this never changes semantics. ~25k docs per posting partition mirrors
-    # the full build's density at its own defaults.
-    batch_docs = changed_pages.count()
-    import dataclasses
-
-    base_parts = cfg.n_partitions or spark.sparkContext.defaultParallelism
-    cfg = dataclasses.replace(
-        cfg,
-        n_partitions=max(4, min(base_parts, batch_docs // 25_000 + 1)),
-    )
 
     # tombstones for replaced docs depend only on the OLD generations' docs
     # and the batch's ids — independent of the new generation's build until
@@ -150,6 +193,13 @@ def apply_incremental(
             spark, changed_pages, index_dir, cfg, generation=generation,
             register=False,
         )
+    # the width decision, next to build_index's `finish`; the generation
+    # is still unregistered, so this rewrite is invisible to readers
+    gen_manifest["width"] = width
+    with open(
+        os.path.join(index_dir, f"gen{generation}", "manifest.json"), "w"
+    ) as f:
+        json.dump(gen_manifest, f, indent=1, sort_keys=True)
     # ONE commit swings both the generation list and the tombstone-version
     # pointer (the batch is a single logical transaction); before it, the
     # new version dir is unreferenced and invisible to every reader

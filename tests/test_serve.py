@@ -190,3 +190,36 @@ def test_refresh_detects_same_numbered_rebuild(spark, pages_pdf, tmp_path):
     srv.refresh()
     assert [r[0] for r in srv.topk("zyzzyva", k=5)] == [target]
     assert target not in {r[0] for r in srv.topk("danger", k=50)}
+
+
+def test_serve_tombstones_collapse_like_the_codec(spark, pages_pdf, tmp_path):
+    """A tombstone version holding several rows for one doc collapses in
+    the serve tier exactly as local_tombstone_arrays collapses it (sorted
+    doc ids, max before_gen), so both planes drop the same docs."""
+    import numpy as np
+
+    from share_spark.index.build import (
+        TOMBSTONE_SCHEMA,
+        IndexConfig,
+        build_index,
+        commit_manifest,
+        local_tombstone_arrays,
+    )
+    from share_spark.index.snapshots import resolve_tombstone_dir
+
+    idx_dir = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pages_pdf), idx_dir,
+                IndexConfig(block_size=32, chunk_docs=64))
+    rows = [(40, 1), (7, 3), (40, 5), (7, 2), (12, 1), (40, 4), (3, 9)]
+    spark.createDataFrame(rows, TOMBSTONE_SCHEMA).repartition(3).write.parquet(
+        str(tmp_path / "idx" / "tombstones_v9")
+    )
+    commit_manifest(idx_dir, tombstones="tombstones_v9", operation="delete",
+                    summary={})
+    srv = TopKServer.open(idx_dir)
+    srv._load_tombstones()
+    want = local_tombstone_arrays(idx_dir, resolve_tombstone_dir(idx_dir))
+    assert [a.tolist() for a in srv._tomb] == [a.tolist() for a in want]
+    assert srv._tomb[0].tolist() == [3, 7, 12, 40]
+    assert srv._tomb[1].tolist() == [9, 3, 1, 5]
+    assert all(a.dtype == np.int64 for a in srv._tomb)

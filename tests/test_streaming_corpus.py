@@ -107,3 +107,50 @@ def test_admit_batch_near_dedup(spark, tmp_path):
     assert {r["doc_id"] for r in out2.collect()} == {11}
     got = {r["doc_id"] for r in spark.read.parquet(corpus_dir).collect()}
     assert got == {0, 2, 11}
+
+
+def _parquet_files(path):
+    import glob
+    import os
+
+    return set(glob.glob(os.path.join(path, "*.parquet")))
+
+
+@pytest.mark.parametrize("near_dedup", [False, True])
+def test_small_batch_appends_one_file_per_sink(spark, tmp_path, monkeypatch, near_dedup):
+    """A batch under incremental._ONE_TASK_MAX_BYTES appends exactly one
+    seen-keys file and one corpus file, with and without a store to
+    anti-join; over the constant each sink gets a file per partition."""
+    from share_spark.streaming import incremental
+
+    corpus_dir = str(tmp_path / "corpus")
+    seen_dir = str(tmp_path / "seen")
+
+    def batch(lo):
+        return _df(spark, [
+            (i, f"page {i} words about topic {i % 7} and more text {i * 31}",
+             f"https://w.example/p{i}")
+            for i in range(lo, lo + 40)
+        ]).repartition(4)
+
+    admitted = set()
+    for lo in (0, 100):
+        seen0, corpus0 = _parquet_files(seen_dir), _parquet_files(corpus_dir)
+        out = sc.admit_batch(spark, batch(lo), corpus_dir, seen_dir,
+                             near_dedup=near_dedup)
+        ids = {r["doc_id"] for r in out.collect()}
+        # near-dup banding may drop some of these look-alike pages
+        assert ids == set(range(lo, lo + 40)) or (near_dedup and ids)
+        admitted |= ids
+        assert len(_parquet_files(seen_dir) - seen0) == 1
+        assert len(_parquet_files(corpus_dir) - corpus0) == 1
+
+    monkeypatch.setattr(incremental, "_ONE_TASK_MAX_BYTES", -1)
+    seen0, corpus0 = _parquet_files(seen_dir), _parquet_files(corpus_dir)
+    out = sc.admit_batch(spark, batch(200), corpus_dir, seen_dir,
+                         near_dedup=near_dedup)
+    admitted |= {r["doc_id"] for r in out.collect()}
+    assert len(_parquet_files(seen_dir) - seen0) > 1
+    assert len(_parquet_files(corpus_dir) - corpus0) > 1
+    got = {r["doc_id"] for r in spark.read.parquet(corpus_dir).collect()}
+    assert got == admitted

@@ -126,3 +126,25 @@ def test_warm_topk_is_one_job_one_task(built_index, jobs_started):
     assert (jobs, tasks) == (1, 1)
     exact = _rows(exact_topk(built_index, "the data", k=13))
     assert [(r, d) for r, d, _ in rows] == [(r, d) for r, d, _ in exact]
+
+
+def test_new_query_compiles_no_class(built_index, spark):
+    """idf reaches the kernel in its closure, not as per-query literals in
+    the projection, so a second two-term query generates the same Java
+    source as the first and Spark's codegen cache compiles nothing."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metric.METRIC_COMPILATION_TIME()
+
+    def run(q):
+        before = compiles.getCount()
+        rows = _rows(wand_topk(built_index, q, k=13))
+        return rows, compiles.getCount() - before
+
+    run("the data")  # the plan shape's first query may compile
+    for q in ("the danger", "data science"):
+        rows, n = run(q)
+        assert n == 0, q
+        assert rows, q
+        exact = _rows(exact_topk(built_index, q, k=13))
+        assert [(r, d) for r, d, _ in rows] == [(r, d) for r, d, _ in exact]
+        assert all(abs(a[2] - b[2]) <= 1e-9 for a, b in zip(rows, exact))
