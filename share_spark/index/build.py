@@ -55,9 +55,11 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import ClassVar
 
@@ -216,36 +218,199 @@ def _parquet_rows(path: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
 
 
-def _row_groups(path: str) -> Iterator:
-    """Row-group metadata of every parquet file in a directory, from the
-    file footers only."""
-    import pyarrow.parquet as pq
+class SliceReader:
+    """The driver's one reader of an index's term-sorted files and of its
+    tombstone versions, shared by IndexReader (term stats, the driver top-k
+    and its slice size) and the serve tier (query/serve.py); it needs no
+    Spark session. Per generation and stage (postings_term, the
+    term-sorted serve copy, or term_stats) the parquet footers are read
+    once into a directory of row groups, and a row group's sorted term
+    column, its exact term dictionary, once when a lookup first reaches
+    it. A read then touches only the row groups that hold a wanted term:
+    the build shuffles by hash(term, window), so footer min/max alone spans
+    most of the vocabulary. The current tombstone version is read once per
+    (name, newest file mtime). The index dir is local by contract (its
+    manifests are read with open()): a missing file, or a stage whose row
+    count disagrees with its generation manifest, is a broken index and
+    raises."""
 
-    for f in _parquet_files(path):
-        md = pq.read_metadata(f)
-        for i in range(md.num_row_groups):
-            yield md.row_group(i)
+    def __init__(self, index_dir: str, gen_manifests: list[dict]):
+        self.index_dir = index_dir
+        self._gens = {g["generation"]: g for g in gen_manifests}
+        self._cache: dict = {}
+        self._lock = threading.Lock()
 
+    def directory(self, gen: int, stage: str) -> list[tuple]:
+        """[(min term, max term, pq.ParquetFile, row group, {column:
+        compressed bytes})] of one generation stage's non-empty row groups,
+        from the footers. A row group without term statistics gets (None,
+        None): it admits every term. Each file stays open in its
+        ParquetFile, so a later row-group read re-reads no footer."""
+        import pyarrow.parquet as pq
 
-def term_directory(path: str) -> list[tuple]:
-    """[(min term, max term, pq.ParquetFile, row group)] of one stage dir's
-    non-empty row groups, from the parquet footers (files are term-sorted
-    per partition at build time precisely so these ranges are selective).
-    The term dictionary of the serve tier and of
-    IndexReader.term_stats_local: each file stays open in its ParquetFile,
-    so reading a row group later re-reads no footer."""
-    import pyarrow.parquet as pq
+        with self._lock:
+            if (gen, stage) in self._cache:
+                return self._cache[gen, stage]
+            entries, rows = [], 0
+            path = os.path.join(self.index_dir, f"gen{gen}", stage)
+            for f in _parquet_files(path):
+                pf = pq.ParquetFile(f)
+                md = pf.metadata
+                rows += md.num_rows
+                term_col = md.schema.names.index("term")
+                for i in range(md.num_row_groups):
+                    rg = md.row_group(i)
+                    if not rg.num_rows:
+                        continue
+                    cols = [rg.column(j) for j in range(rg.num_columns)]
+                    sizes = {c.path_in_schema: c.total_compressed_size for c in cols}
+                    st = cols[term_col].statistics
+                    lo, hi = (
+                        (st.min, st.max)
+                        if st is not None and st.has_min_max
+                        else (None, None)
+                    )
+                    entries.append((lo, hi, pf, i, sizes))
+            g = self._gens[gen]
+            want = (
+                g["n_terms"]
+                if stage == "term_stats"
+                else sum(p["n_blocks"] for p in g["partitions"].values())
+            )
+            if rows != want:
+                raise ValueError(
+                    f"{path} holds {rows} rows where its manifest records "
+                    f"{want}: the index is broken"
+                )
+            self._cache[gen, stage] = entries
+            return entries
 
-    entries = []
-    for f in _parquet_files(path):
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        term_col = md.schema.names.index("term")
-        for rg in range(md.num_row_groups):
-            if md.row_group(rg).num_rows:
-                st = md.row_group(rg).column(term_col).statistics
-                entries.append((st.min, st.max, pf, rg))
-    return entries
+    def row_group_terms(self, pf, rg: int) -> np.ndarray:
+        """Sorted unique terms of one row group: its term column alone,
+        tiny next to the posting binaries, read once."""
+        key = ("terms", id(pf), rg)
+        got = self._cache.get(key)
+        if got is None:
+            col = pf.read_row_group(rg, columns=["term"]).column("term")
+            got = self._cache.setdefault(
+                key, np.unique(np.asarray(col.to_pandas(), dtype=object))
+            )
+        return got
+
+    def _hits(self, gen: int, stage: str, terms) -> list[tuple]:
+        """[(pf, row group, column sizes, [the wanted terms it holds])]."""
+        terms = sorted(set(terms))
+        out = []
+        for lo, hi, pf, rg, sizes in self.directory(gen, stage):
+            cand = [t for t in terms if lo is None or lo <= t <= hi]
+            if not cand:
+                continue
+            known = self.row_group_terms(pf, rg)
+            at = np.searchsorted(known, cand)
+            held = [t for t, i in zip(cand, at) if i < known.size and known[i] == t]
+            if held:
+                out.append((pf, rg, sizes, held))
+        return out
+
+    def read(self, gen: int, stage: str, terms, columns) -> "pa.Table | None":
+        """`columns` of the rows of `terms` in one generation's stage, from
+        the row groups that hold one of them; reads of several row groups
+        fan out over a thread pool (pyarrow releases the GIL)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def _read(hit):
+            pf, rg, _sizes, held = hit
+            tbl = pf.read_row_group(rg, columns=columns)
+            return tbl.filter(pc.is_in(tbl.column("term"), value_set=pa.array(held)))
+
+        hits = self._hits(gen, stage, terms)
+        if not hits:
+            return None
+        if len(hits) == 1:
+            return _read(hits[0])
+        with ThreadPoolExecutor(max_workers=min(16, len(hits))) as pool:
+            return pa.concat_tables(pool.map(_read, hits))
+
+    def slice(self, terms, columns) -> "pa.Table | None":
+        """`columns` of the blocks of `terms` in every generation's serve
+        copy, `gen` (int32) filled with their generation; None when no row
+        group holds one of them."""
+        import pyarrow as pa
+
+        tables = []
+        for gen in self._gens:
+            tbl = self.read(
+                gen, "postings_term", terms, [c for c in columns if c != "gen"]
+            )
+            if tbl is not None:
+                tables.append(
+                    tbl.append_column(
+                        "gen", pa.array(np.full(tbl.num_rows, gen, dtype=np.int32))
+                    )
+                )
+        return pa.concat_tables(tables) if tables else None
+
+    def slice_bytes(self, terms, columns, tombstones: str | None) -> int:
+        """Bytes the driver reads for a query: the compressed size of
+        `columns` in the serve-copy row groups that hold one of `terms`,
+        over every generation, plus the files of tombstone version
+        `tombstones`."""
+        total = self._tomb_files(tombstones)[2]
+        for gen in self._gens:
+            for _pf, _rg, sizes, _held in self._hits(gen, "postings_term", terms):
+                total += sum(sizes.get(c, 0) for c in columns)
+        return total
+
+    def term_dfs(self, terms) -> dict[str, int]:
+        """df per term of `terms` that the index holds, summed over the
+        generations' term_stats."""
+        out: dict[str, int] = {}
+        for gen in self._gens:
+            tbl = self.read(gen, "term_stats", terms, ["term", "df"])
+            if tbl is not None:
+                for t, d in zip(
+                    tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
+                ):
+                    out[t] = out.get(t, 0) + int(d)
+        return out
+
+    def tombstones(self, name: str | None):
+        """(doc ids sorted unique, aligned max before_gen) of tombstone
+        version `name` (a dir of the index), collapsed as the codec does;
+        None when there is no such dir. One slot, kept while the version's
+        name and newest file mtime hold (versions are immutable, the legacy
+        in-place dir is rewritten)."""
+        import pyarrow.parquet as pq
+
+        files, key, _nbytes = self._tomb_files(name)
+        if key is None:
+            return None
+        with self._lock:
+            slot = self._cache.get("tomb")
+            if slot is None or slot[0] != key:
+                parts = [
+                    pq.read_table(f, columns=["doc_id", "before_gen"]) for f in files
+                ]
+                ids, before = (
+                    np.concatenate(
+                        [np.empty(0, np.int64)] + [p.column(c).to_numpy() for p in parts]
+                    )
+                    for c in ("doc_id", "before_gen")
+                )
+                slot = self._cache["tomb"] = (key, collapse_tombstones(ids, before))
+            return slot[1]
+
+    def _tomb_files(self, name: str | None) -> tuple:
+        """(parquet files, (name, newest mtime), total bytes) of tombstone
+        version `name`; ([], None, 0) when there is no such dir."""
+        path = None if name is None else os.path.join(self.index_dir, name)
+        if path is None or not os.path.isdir(path):
+            return [], None, 0
+        files = _parquet_files(path)
+        st = [os.stat(f) for f in files]
+        key = (name, max((x.st_mtime for x in st), default=0.0))
+        return files, key, sum(x.st_size for x in st)
 
 
 def check_layout(gen_manifest: dict) -> None:
@@ -694,36 +859,18 @@ def merge_generations_blocks(
 def local_tombstone_arrays(
     index_dir: str, tombstone_dir: str | None, cap: int = 2_000_000
 ):
-    """Driver-side (sorted doc_ids, aligned max before_gen) from the
-    tombstone version dir — parquet footers bound the size first, so an
-    over-cap set costs one listing and no reads. Returns None only when the
-    set is larger than cap, where compaction declines the block merge and
-    rebuilds (merge_declined="tombstones"). Empty arrays when there are no
-    tombstones at all. A
-    missing or unreadable tombstone version raises — it is a broken index,
-    not a reason to change merge paths."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
+    """Driver-side (sorted doc_ids, aligned max before_gen) of a tombstone
+    version, read by SliceReader — parquet footers bound the size first, so
+    an over-cap set costs one listing and no reads. Returns None only when
+    the set is larger than cap, where compaction declines the block merge
+    and rebuilds (merge_declined="tombstones"). Empty arrays when there are
+    no tombstones at all. A missing or unreadable tombstone version raises
+    — it is a broken index, not a reason to change merge paths."""
     if tombstone_dir is None:
-        return empty
-    path = os.path.join(index_dir, tombstone_dir)
-    total = _parquet_rows(path)
-    if total > cap:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    if _parquet_rows(os.path.join(index_dir, tombstone_dir)) > cap:
         return None
-    if total == 0:
-        return empty
-    t = pa.concat_tables(
-        [
-            pq.read_table(f, columns=["doc_id", "before_gen"])
-            for f in _parquet_files(path)
-        ]
-    )
-    return collapse_tombstones(
-        t.column("doc_id").to_numpy(zero_copy_only=False),
-        t.column("before_gen").to_numpy(zero_copy_only=False),
-    )
+    return SliceReader(index_dir, []).tombstones(tombstone_dir)
 
 
 def dedup_pages(pages: DataFrame) -> DataFrame:
@@ -1016,11 +1163,9 @@ def _build_index_impl(
     # the two lineages are already independent, so no persist is needed.
     # Measured at 200k docs / local[32]: warm build 7.2 -> 6.3 s, cold
     # 17.6 -> ~14 s (the two first-job warmups amortize concurrently).
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
     docs_future = None
     feed = None
-    _stage1_pool = _TPE(max_workers=1)
+    _stage1_pool = ThreadPoolExecutor(max_workers=1)
     if resume and _stage_done(gdir, "docs"):
         feed = spark.read.schema(DOCS_SCHEMA).parquet(docs_path)
         _lap("docs")
@@ -1137,8 +1282,6 @@ def _build_index_impl(
 
     def _read_postings() -> DataFrame:
         return spark.read.schema(BLOCKS_SCHEMA).parquet(postings_path)
-
-    from concurrent.futures import ThreadPoolExecutor
 
     def _serve_stage() -> None:
         # stage 2b: term-clustered serve copy of the posting blocks, for
@@ -1416,6 +1559,12 @@ class IndexReader:
     # legacy in-place dir, or None) — fixed at open() so the view is a
     # consistent snapshot even while writers commit new versions
     tombstone_dir: str | None = None
+    # the driver's reader of this view's files (term stats, the driver
+    # top-k); the serve tier reads through the same class
+    slices: SliceReader = field(init=False, repr=False)
+
+    def __post_init__(self):
+        self.slices = SliceReader(self.index_dir, self.gen_manifests)
 
     @classmethod
     def open(
@@ -1544,43 +1693,10 @@ class IndexReader:
 
     def term_stats_local(self, terms) -> dict[str, int]:
         """df per query term, summed across generations, read DRIVER-SIDE
-        with no Spark job: each generation's term_stats directory
-        (term_directory) is read once per reader, and a lookup reads only
-        the row groups whose [min, max] admits a query term. The stats
-        files are written range-partitioned + term-sorted exactly so these
-        ranges prune. The index dir is local (open() reads its manifests
-        with Python file IO) and every generation writes term_stats, so a
-        read error here is a broken index and raises."""
-        import bisect
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        terms = sorted(set(terms))
-        out: dict[str, int] = {}
-        if not terms:
-            return out
-        wanted = pa.array(terms, pa.string())
-        for g in self.gen_manifests:
-            key = ("term_dir", g["generation"])
-            if key not in self._df_cache:
-                self._df_cache[key] = term_directory(
-                    os.path.join(
-                        self.index_dir, f"gen{g['generation']}", "term_stats"
-                    )
-                )
-            for lo, hi, pf, rg in self._df_cache[key]:
-                i = bisect.bisect_left(terms, lo)
-                if i == len(terms) or terms[i] > hi:
-                    continue
-                tbl = pf.read_row_group(rg, columns=["term", "df"])
-                tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=wanted))
-                for t, df_ in zip(
-                    tbl.column("term").to_pylist(),
-                    tbl.column("df").to_pylist(),
-                ):
-                    out[t] = out.get(t, 0) + int(df_)
-        return out
+        with no Spark job (SliceReader.term_dfs): a lookup reads only the
+        term_stats row groups that hold a query term. Terms the index does
+        not hold are absent."""
+        return self.slices.term_dfs(terms)
 
     def tombstones(self, interactive: bool = False) -> DataFrame | None:
         """(doc_id, before_gen): the doc is dead in every generation
@@ -1609,59 +1725,6 @@ class IndexReader:
                 )
             self._df_cache[key] = tomb
         return self._df_cache[key]
-
-    def _footers(self) -> tuple[list, int]:
-        """([(term min, term max, {column: compressed bytes})] per postings
-        row group over every generation, compressed bytes of the tombstone
-        version), from parquet footers read once per reader. A row group
-        without term statistics gets (None, None): it admits every term."""
-        key = ("footers",)
-        if key not in self._df_cache:
-            groups = []
-            for g in self.gen_manifests:
-                for rg in _row_groups(
-                    os.path.join(
-                        self.index_dir, f"gen{g['generation']}", "postings"
-                    )
-                ):
-                    cols = [rg.column(j) for j in range(rg.num_columns)]
-                    st = next(
-                        (c.statistics for c in cols if c.path_in_schema == "term"),
-                        None,
-                    )
-                    lo, hi = (
-                        (st.min, st.max)
-                        if st is not None and st.has_min_max
-                        else (None, None)
-                    )
-                    groups.append(
-                        (lo, hi, {c.path_in_schema: c.total_compressed_size for c in cols})
-                    )
-            tomb = 0
-            if self.tombstone_dir is not None:
-                path = os.path.join(self.index_dir, self.tombstone_dir)
-                if os.path.exists(path):
-                    tomb = sum(
-                        rg.column(j).total_compressed_size
-                        for rg in _row_groups(path)
-                        for j in range(rg.num_columns)
-                    )
-            self._df_cache[key] = (groups, tomb)
-        return self._df_cache[key]
-
-    def slice_bytes(self, terms, columns) -> int:
-        """Bytes a top-k reads: the compressed size of `columns` in the
-        postings row groups whose `term` min/max admits one of `terms` (the
-        row groups Spark's parquet filter keeps), summed over every
-        generation, plus the tombstone version's bytes. Footer metadata
-        only (see _footers), no Spark job."""
-        groups, tomb = self._footers()
-        terms = sorted(set(terms))
-        total = tomb
-        for lo, hi, sizes in groups:
-            if lo is None or any(lo <= t <= hi for t in terms):
-                total += sum(sizes.get(c, 0) for c in columns)
-        return total
 
     def live_docs(self) -> DataFrame:
         """docs() minus generation-superseded and expelled rows."""

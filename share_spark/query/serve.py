@@ -6,10 +6,10 @@ O(KB..MB) of IO — while a Spark job costs ~0.3-0.5 s of scheduling no matter
 how little it reads. The reference has the same split: Django builds / ES
 serves (SURVEY.md §1). This module is the "ES shard fetch" half:
 
-- per query it reads ONLY the query terms' blocks from the postings parquet,
-  using parquet row-group min/max statistics for term pruning (the build
-  keeps files term-sorted per partition precisely so this works, see
-  index/build.py stage 2 notes) — never a full scan, never a Spark job;
+- per query it reads ONLY the row groups of the term-sorted serve copy
+  whose term dictionary holds a query term, through the reader the
+  driver top-k uses too (index/build.py SliceReader) — never a full scan,
+  never a Spark job;
 - decoded per-term postings and per-term stats live in a bounded LRU cache
   (hot query terms are served from memory, like ES's segment page cache);
 - scoring reuses the EXACT numpy kernel of the distributed WAND path
@@ -112,8 +112,8 @@ def _lev_mask(cands: list, stem: str, d: int) -> np.ndarray:
     final = _lev_dp(mat, stem)
     return final[np.arange(n), lens] <= d
 
-from ..index.build import IndexReader, check_layout
-from ..index.codec import collapse_tombstones, live_list, term_lists
+from ..index.build import IndexReader, SliceReader, check_layout
+from ..index.codec import live_list, term_lists
 from .bm25 import (
     PREFIX_SCORE,
     ParsedQuery,
@@ -163,16 +163,14 @@ class TopKServer:
     _term_cache_nbytes: int = 0
     _stats_cache: dict = field(default_factory=dict)  # term -> df (int, tiny)
     _tomb: tuple | None = None
-    _tomb_key: tuple | None = None  # (version dir name, file mtime)
     _n_docs: int = 0
     _avgdl: float = 0.0
-    # pyarrow datasets cached per (gen, stage): dataset() re-lists the
-    # directory and re-parses every parquet footer per call — per-query
-    # that's O(files) metadata IO; cached, a term read touches only the
-    # row groups its stats admit. Unbounded BY DESIGN but bounded BY
-    # STRUCTURE: keys are (gen, stage) + one "rgterms" entry per row group,
-    # so residency is O(row groups) of the open generations (the term
-    # dictionary itself), cleared whenever the generation list changes.
+    # the open generations' footers, row-group term dictionaries and
+    # tombstone version (the reader IndexReader uses too): residency is
+    # O(row groups), the term dictionary itself; replaced whenever the
+    # generation list changes
+    _slices: SliceReader | None = None
+    # the vocabulary buckets of _vocab_buckets, dropped with _slices
     _dsets: dict = field(default_factory=dict)
     # (stem, dist) -> expanded term list; the vocabulary DP is the
     # expensive part of a fuzzy query, and typo distributions are heavy-
@@ -223,6 +221,7 @@ class TopKServer:
             self._stats_cache.clear()
             self._dsets.clear()
             self._fuzzy_cache.clear()
+            self._slices = SliceReader(self.index_dir, gens)
         self._gens = gens
         self.k1 = gens[0]["k1"]
         self.b = gens[0]["b"]
@@ -259,9 +258,9 @@ class TopKServer:
         for g in self._gens:
             gen = g["generation"]
             for stage in ("postings_term", "term_stats"):
-                jobs.extend(self._term_directory(gen, stage))
+                jobs.extend(self._slices.directory(gen, stage))
         with ThreadPoolExecutor(max_workers=16) as pool:
-            list(pool.map(lambda e: self._rg_terms(e[2], e[3]), jobs))
+            list(pool.map(lambda e: self._slices.row_group_terms(e[2], e[3]), jobs))
         if preload_top_terms > 0:
             for batch in self._top_df_terms(preload_top_terms):
                 with self._lock:
@@ -291,7 +290,7 @@ class TopKServer:
         cap = n * n_gens
         for g in self._gens:
             gen = g["generation"]
-            for _mn, _mx, pf, rg in self._term_directory(gen, "term_stats"):
+            for _lo, _hi, pf, rg, _sizes in self._slices.directory(gen, "term_stats"):
                 tbl = pf.read_row_group(rg, columns=["term", "df"])
                 for t, d in zip(
                     tbl.column("term").to_pylist(),
@@ -313,74 +312,14 @@ class TopKServer:
             yield ordered[i : i + batch]
 
     def _load_tombstones(self) -> None:
-        import pyarrow.dataset as pads
-
+        """The CURRENT tombstone version, resolved through the manifest
+        pointer (merges write new immutable dirs and swing it), collapsed
+        by the shared reader, which re-reads only a changed version."""
         from ..index.snapshots import resolve_tombstone_dir
 
-        # resolve the CURRENT version through the manifest pointer (merges
-        # write new immutable dirs and swing the pointer, so a name change
-        # IS the staleness signal; the mtime check remains for the legacy
-        # rewritten-in-place layout)
-        name = resolve_tombstone_dir(self.index_dir)
-        if name is None:
-            self._tomb = None
-            self._tomb_key = None
-            return
-        path = os.path.join(self.index_dir, name)
-        if not os.path.exists(path):
-            self._tomb = None
-            self._tomb_key = None
-            return
-        mtime = max(
-            (os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)),
-            default=0.0,
-        )
-        if self._tomb is not None and (name, mtime) == self._tomb_key:
-            return
-        t = pads.dataset(path, format="parquet").to_table(
-            columns=["doc_id", "before_gen"]
-        )
-        # collapse to max before_gen per doc, SORTED by doc_id (the query
-        # path binary-searches it) — the body local_tombstone_arrays and
-        # the top-k kernel use
-        self._tomb = collapse_tombstones(
-            t.column("doc_id").to_numpy(zero_copy_only=False),
-            t.column("before_gen").to_numpy(zero_copy_only=False),
-        )
-        self._tomb_key = (name, mtime)
+        self._tomb = self._slices.tombstones(resolve_tombstone_dir(self.index_dir))
 
-    # -- per-term IO (row-group-pruned parquet reads) --------------------
-
-    def _term_directory(self, gen: int, stage: str) -> list[tuple]:
-        """build.term_directory of one generation's stage, read ONCE — the
-        serving analog of Lucene's term dictionary: a cold term read
-        touches only the row groups whose [min,max] admit it, not every
-        file's metadata per query."""
-        from ..index.build import term_directory
-
-        key = (gen, stage, "dir")
-        if key not in self._dsets:
-            self._dsets[key] = term_directory(
-                os.path.join(self.index_dir, f"gen{gen}", stage)
-            )
-        return self._dsets[key]
-
-    def _rg_terms(self, pf, rg: int) -> np.ndarray:
-        """Sorted unique terms of one row group — the exact term dictionary.
-        Read lazily ONCE (the term column alone, tiny next to the posting
-        binaries; both finishes write it PLAIN, since parquet-mr drops a
-        dictionary of near-unique terms); afterwards membership is a binary
-        search, so a cold term read touches only row groups that truly
-        contain it. This matters because the build shuffles by
-        hash(term, window): per-FILE min/max spans most of the vocabulary,
-        so footer stats alone cannot prune."""
-        key = ("rgterms", id(pf), rg)
-        if key not in self._dsets:
-            col = pf.read_row_group(rg, columns=["term"]).column("term")
-            self._dsets[key] = np.unique(
-                np.asarray(col.to_pandas(), dtype=object)
-            )
-        return self._dsets[key]
+    # -- term dictionary ------------------------------------------------
 
     def _expand_prefix(self, prefix: str) -> list[str]:
         """All index terms starting with `prefix`, via the row-group term
@@ -394,11 +333,11 @@ class TopKServer:
         hi = prefix + "\U0010ffff"
         out: set[str] = set()
         for g in self._gens:
-            entries = self._term_directory(g["generation"], "postings_term")
-            for mn, mx, pf, rg in entries:
-                if mx < prefix or mn >= hi:
+            entries = self._slices.directory(g["generation"], "postings_term")
+            for lo, top, pf, rg, _sizes in entries:
+                if lo is not None and (top < prefix or lo >= hi):
                     continue
-                terms = self._rg_terms(pf, rg)
+                terms = self._slices.row_group_terms(pf, rg)
                 lo_i = np.searchsorted(terms, prefix, side="left")
                 hi_i = np.searchsorted(terms, hi, side="left")
                 out.update(terms[lo_i:hi_i].tolist())
@@ -428,9 +367,9 @@ class TopKServer:
             return self._dsets[key]
         terms: set[str] = set()
         for g in self._gens:
-            entries = self._term_directory(g["generation"], "postings_term")
-            for _mn, _mx, pf, rg in entries:
-                terms.update(self._rg_terms(pf, rg).tolist())
+            entries = self._slices.directory(g["generation"], "postings_term")
+            for _lo, _hi, pf, rg, _sizes in entries:
+                terms.update(self._slices.row_group_terms(pf, rg).tolist())
         by_len: dict[int, list] = {}
         for t in terms:
             by_len.setdefault(len(t), []).append(t)
@@ -509,53 +448,6 @@ class TopKServer:
                 self._fuzzy_cache.popitem(last=False)
         return expansion
 
-    def _read_row_groups(
-        self, gen: int, stage: str, terms: list[str], columns: list[str]
-    ) -> pa.Table | None:
-        """Read only the row groups that CONTAIN one of `terms` (term-
-        dictionary membership), slicing exact matches; heavy column reads
-        fan out over a thread pool (pyarrow releases the GIL)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow.compute as pc
-
-        hits: dict[tuple, set] = {}
-        for mn, mx, pf, rg in self._term_directory(gen, stage):
-            in_range = [t for t in terms if mn <= t <= mx]
-            if not in_range:
-                continue
-            known = self._rg_terms(pf, rg)
-            idx = np.searchsorted(known, in_range)
-            present = {
-                t
-                for t, i in zip(in_range, idx)
-                if i < known.size and known[i] == t
-            }
-            if present:
-                hits.setdefault((id(pf), pf, rg), set()).update(present)
-
-        def _read(item):
-            (_, pf, rg), ts = item
-            tbl = pf.read_row_group(rg, columns=columns)
-            mask = pc.is_in(
-                tbl.column("term"),
-                options=pc.SetLookupOptions(value_set=pa.array(sorted(ts))),
-            )
-            sub = tbl.filter(mask)
-            return sub if sub.num_rows else None
-
-        if not hits:
-            return None
-        if len(hits) == 1:
-            frames = [_read(next(iter(hits.items())))]
-        else:
-            with ThreadPoolExecutor(max_workers=min(16, len(hits))) as pool:
-                frames = list(pool.map(_read, hits.items()))
-        frames = [f for f in frames if f is not None]
-        if not frames:
-            return None
-        return pa.concat_tables(frames)
-
     def _read_terms(self, terms: list[str]) -> None:
         """Fill the decoded-postings cache: per term, the gen-merged sorted
         (ids, tfs, dls, pos_flat, gens) numpy arrays of the codec's one
@@ -576,30 +468,14 @@ class TopKServer:
                 missing.append(t)
         if not missing:
             return
-        tables = []
-        for g in self._gens:
-            gen = g["generation"]
-            tbl = self._read_row_groups(
-                gen, "postings_term", missing, _BLOCK_COLS
-            )
-            if tbl is None:
-                continue
-            if self.shard is not None:
-                # chunk striping (numpy %, sign of divisor: negative-doc-id
-                # chunks land in a valid shard too)
-                si, ns = self.shard
-                tbl = tbl.filter(
-                    pa.array(tbl.column("chunk").to_numpy() % ns == si)
-                )
-                if not tbl.num_rows:
-                    continue
-            tables.append(
-                tbl.append_column(
-                    "gen", pa.array(np.full(tbl.num_rows, gen, dtype=np.int32))
-                )
-            )
+        tbl = self._slices.slice(missing, _BLOCK_COLS)
+        if tbl is not None and self.shard is not None:
+            # chunk striping (numpy %, sign of divisor: negative-doc-id
+            # chunks land in a valid shard too)
+            si, ns = self.shard
+            tbl = tbl.filter(pa.array(tbl.column("chunk").to_numpy() % ns == si))
         want = frozenset(missing)
-        lists = term_lists(pa.concat_tables(tables), want, want) if tables else {}
+        lists = term_lists(tbl, want, want) if tbl is not None else {}
         empty = (
             np.empty(0, dtype=np.int64),
             np.empty(0, dtype=np.int32),
@@ -682,19 +558,8 @@ class TopKServer:
     def _df_of(self, terms: list[str]) -> dict[str, int]:
         missing = [t for t in terms if t not in self._stats_cache]
         if missing:
-            got: dict[str, int] = {t: 0 for t in missing}
-            for g in self._gens:
-                gen = g["generation"]
-                tbl = self._read_row_groups(
-                    gen, "term_stats", missing, ["term", "df"]
-                )
-                if tbl is None:
-                    continue
-                for t, d in zip(
-                    tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
-                ):
-                    got[t] += int(d)
-            self._stats_cache.update(got)
+            got = self._slices.term_dfs(missing)
+            self._stats_cache.update({t: got.get(t, 0) for t in missing})
         return {t: self._stats_cache[t] for t in terms}
 
     # -- query -----------------------------------------------------------
@@ -724,8 +589,8 @@ class TopKServer:
             dict.fromkeys(t for br in branches for t in br.neg_terms)
         )
         with self._lock:
-            # expansion reads/warms the shared _dsets term-directory cache,
-            # so it must sit inside the same lock as the cache fill
+            # expansion reads/warms the vocabulary buckets and the fuzzy
+            # LRU, so it must sit inside the same lock as the cache fill
             # (multi-branch queries carry no prefixes — validate_branches)
             expansions = {
                 p: self._expand_prefix(p)

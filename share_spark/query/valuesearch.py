@@ -12,6 +12,7 @@ counts skew-safe; `collect_set` mirrors the nested label sub-aggs.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,6 +29,12 @@ LABEL_PATHS: tuple[str, ...] = (
 )
 
 _VKEY = ["doc_id", "value_iri"]
+
+# surfaced values a sub-agg page embeds as a literal isin predicate; a
+# deeper page (offset + page_size + 1 above this) semi-joins a broadcast
+# LocalRelation of its values instead, so the plan stays bounded under
+# deep paging
+ISIN_MAX_VALUES = 256
 
 
 def _text_matching_value_keys(
@@ -172,12 +179,20 @@ def value_counts(
         surfaced = [r["value_iri"] for r in agg_rows]
         # nested sub-aggs over the meta rows of the SURVIVING pairs only —
         # the per-bucket terms sub-aggs see the same filtered document set —
-        # and only for the ≤ offset+k+1 SURFACED buckets. The page is a
-        # literal isin predicate (pushable into the meta scan) instead of
-        # the former broadcast semi-join — one join fewer per request.
+        # and only for the ≤ offset+k+1 SURFACED buckets. Up to
+        # ISIN_MAX_VALUES the page is a literal isin predicate (pushable
+        # into the meta scan, one join fewer per request); past it, a
+        # broadcast semi-join.
+        if len(surfaced) <= ISIN_MAX_VALUES:
+            meta = value_meta.filter(F.col("value_iri").isin(surfaced))
+        else:
+            page_iris = spark.createDataFrame(
+                pa.table({"value_iri": pa.array(surfaced, pa.string())}),
+                schema="value_iri string",
+            )
+            meta = value_meta.join(F.broadcast(page_iris), "value_iri", "left_semi")
         subs = (
-            value_meta.filter(F.col("value_iri").isin(surfaced))
-            .join(pairs, _VKEY, "left_semi")
+            meta.join(pairs, _VKEY, "left_semi")
             .groupBy("value_iri")
             .agg(
                 _subagg("iri_value", type_paths).alias("type_iris"),

@@ -33,22 +33,25 @@ block-max WAND) maps onto Spark's execution model:
 - **Tombstones and structured filters ride with the blocks**: both are
   rows keyed by chunk = doc_id // chunk_docs (marked by a non-null `kind`),
   unioned into the posting-block slice, so they reach the chunk's kernel
-  task by the same route as its blocks, and are applied inside the kernel
+  by the same route as its blocks, and are applied inside the kernel
   BEFORE local top-n truncation. Tombstones arrive as the version's raw
-  rows and collapse per chunk in the kernel (no aggregate in the plan). No
-  driver collect (10^8 tombstones between compactions would be a driver
-  OOM), and no overfetch heuristics for filtered queries — the kernel sees
-  the exact allowed-doc set for its chunk.
-- Job economy: one scoring job per phase, plus one metadata job (chunk
-  bounds) on the two-phase plan. A scoring job is ONE task when the slice
-  the query reads (parquet footers: its terms' row groups plus the
-  tombstones) is no larger than spark.sql.files.openCostInBytes and no
-  filter frame rides along: the slice coalesces into one kernel task, no
-  exchange. Larger or filtered slices repartition by chunk so several
-  tasks share the decode (see _run_chunks). The driver only ever sees
-  <= B+1 chunk bounds and <= offset+k scored rows per phase; per-phase
-  top-n lists merge driver-side (any doc in the global top-n is in its own
-  phase's top-n).
+  rows and collapse per chunk in the kernel (no aggregate in the plan). The
+  driver reads them only as part of a slice no larger than one file open;
+  larger sets stay in Spark (10^8 tombstones between compactions would be
+  a driver OOM). No overfetch heuristics for filtered queries — the kernel
+  sees the exact allowed-doc set for its chunk.
+- Job economy: a narrow slice runs on the driver. When no filter frame
+  rides along and the bytes the query reads (its terms' row groups in the
+  term-sorted serve copy plus the tombstone version, from footers and
+  term dictionaries cached per reader) are no larger than
+  spark.sql.files.openCostInBytes, the one-pass plan reads the slice with
+  pyarrow and runs the chunk kernels in-process: no Spark job at all, and
+  the decision is taken before any Spark frame is built. Otherwise Spark
+  runs one shape, the chunk exchange (see _run_chunks): one scoring job
+  per phase, plus one metadata job (chunk bounds) on the two-phase plan.
+  The driver only ever collects <= B+1 chunk bounds and <= offset+k scored
+  rows per phase; per-phase top-n lists merge driver-side (any doc in the
+  global top-n is in its own phase's top-n).
 - Within a chunk, scoring is numpy-vectorized: sorted-array intersection for
   AND semantics, searchsorted gathers, BM25 per term in sorted-term order
   (deterministic float accumulation, matching tests/frozen_bm25.py).
@@ -389,9 +392,9 @@ def _make_chunk_scorer(
     branches' bounds.
 
     `idf_of` maps each positive term with a df to its idf, computed once
-    on the driver (term_idfs). Block rows carry `gen` (segment id) and
-    `bound_imp` (query-time impact bound). The chunk's aux rows,
-    split off the same shuffle, carry tombstones (kind='tomb': kill doc in
+    on the driver (term_idfs). Block rows carry `gen` (segment id), and
+    max_tf/min_dl give each block's impact bound at the query-time avgdl.
+    The chunk's aux rows carry tombstones (kind='tomb': kill doc in
     generations < before_gen) and the allowed-doc set when a structured
     filter is pushed down (kind='allow'); they arrive as _aux_arrays.
     Negative terms / neg-phrase-only terms have no idf and contribute
@@ -411,8 +414,14 @@ def _make_chunk_scorer(
         if filter_active and allow_ids is None:
             return None  # filter active, nothing allowed in this chunk
 
+        # block-max bound: impact(max_tf, min_dl) at the query-time avgdl
+        tf = blocks.column("max_tf").to_numpy().astype(np.float64)
+        dl = blocks.column("min_dl").to_numpy().astype(np.float64)
+        bound_imp = (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
+        per_term = pa.table(
+            {"term": blocks.column("term"), "bound_imp": bound_imp}
+        ).group_by("term").aggregate([("bound_imp", "max")])
         per_term_max: dict[str, float] = {}
-        per_term = blocks.group_by("term").aggregate([("bound_imp", "max")])
         seen_terms = set()
         for t, bi in zip(
             per_term.column("term").to_pylist(),
@@ -474,39 +483,48 @@ def _chunk_slices(tbl: pa.Table) -> dict:
     return {int(ck[s]): tbl.slice(s, e - s) for s, e in zip(starts, ends)}
 
 
-def _run_chunks(
-    rows: DataFrame, kernel, schema, read_bytes: int | None
-) -> DataFrame:
-    """The one kernel runner: bring all of a chunk's blocks and aux rows
-    into one mapInArrow task and run `kernel` once per chunk there. Two
-    plan shapes, picked by `read_bytes`, the bytes the query reads
-    (IndexReader.slice_bytes; None when unknown before the query runs,
-    i.e. when a filter frame rides along):
+def _chunk_pass(
+    blocks: pa.Table, aux: pa.Table | None, kernel, names: list
+) -> pa.RecordBatch | None:
+    """The one per-table kernel body, run by a _run_chunks task and by the
+    driver (_local_chunks): blocks and aux rows (chunk, doc_id, before_gen,
+    kind; see _with_aux) sort by chunk with an Arrow sort, and `kernel`
+    runs once per chunk on its zero-copy block slice plus _aux_arrays of
+    its aux rows — no pandas, no Sort in a plan. Kernels return a dict of
+    output columns (None for an empty chunk); the result is their
+    concatenation as columns `names`, None when empty. The input is the
+    query's term-pruned block slice, so its volume is bounded by the
+    query, not the corpus."""
+    if not blocks.num_rows:
+        return None
+    aux_of = _chunk_slices(aux) if aux is not None and aux.num_rows else {}
+    outs = [
+        kernel(chunk_blocks, _aux_arrays(aux_of.get(ck)))
+        for ck, chunk_blocks in _chunk_slices(blocks).items()
+    ]
+    outs = [o for o in outs if o is not None and len(o[names[0]])]
+    if not outs:
+        return None
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.concatenate([o[c] for o in outs])) for c in names],
+        names=names,
+    )
 
-    - narrow: read_bytes <= spark.sql.files.openCostInBytes (4 MB by
-      default, Spark's own estimate of the bytes one file open costs in
-      scan time). The whole slice coalesces into ONE task: one stage, no
-      exchange. Below that size the shuffle's task launches and its
-      map/reduce barrier cost more than splitting the kernel's work saves
-      (a 2k-doc top-k: 12 tasks, 0.19 s of job for a few ms of kernel).
-    - exchange: larger or unknown slices hash-repartition by chunk, so
-      several tasks decode and score in parallel (at 50k docs, 10.3 MB of
-      postings, one task raised the single-client p50 0.31 -> 0.43 s).
-      The reduce width and AQE come from the SQL conf the action runs
-      under, not from here: wand_topk collects inside the interactive
-      guard (AQE off, INTERACTIVE_SHUFFLE_PARTITIONS reduces), while
-      match_docs returns the lazy frame, so its exchange runs when the
-      caller acts on it, under the session's conf (AQE on, the session's
-      shuffle width).
 
-    Either way the task keeps its rows as one Arrow table: aux rows
-    (non-null `kind`, see _with_aux) split off with an Arrow filter, blocks
-    and aux sort by chunk with an Arrow sort, and each kernel call gets its
-    chunk's zero-copy block slice plus _aux_arrays of its aux rows — no
-    pandas, no Sort in the plan. Kernels return a dict of output columns
-    (None for an empty chunk). The task accumulates its batches first; the
-    input is the query's term-pruned block slice, so per-task volume is
-    bounded by the query, not the corpus."""
+def _run_chunks(rows: DataFrame, kernel, schema) -> DataFrame:
+    """The Spark kernel runner, for a slice the driver does not take
+    (_on_driver): a filtered query, a slice larger than one file open, or
+    a phase of the two-phase plan. The slice hash-repartitions by chunk,
+    so all of a chunk's blocks and aux rows meet in one mapInArrow task
+    and several tasks decode and score in parallel (at 50k docs, 10.3 MB
+    of postings, one task raised the single-client p50 0.31 -> 0.43 s).
+    The reduce width and AQE come from the SQL conf the action runs under,
+    not from here: wand_topk collects inside the interactive guard (AQE
+    off, INTERACTIVE_SHUFFLE_PARTITIONS reduces), while match_docs returns
+    the lazy frame, so its exchange runs when the caller acts on it, under
+    the session's conf (AQE on, the session's shuffle width). A task keeps
+    its batches as one Arrow table, splits the aux rows (non-null `kind`)
+    off with an Arrow filter and runs _chunk_pass."""
     aux_cols = ["chunk", "doc_id", "before_gen", "kind"]
     names = schema.fieldNames()
 
@@ -515,33 +533,56 @@ def _run_chunks(
         if not tabs:
             return
         tbl = pa.Table.from_batches(tabs)
-        aux_of: dict = {}
+        aux = None
         if "kind" in tbl.schema.names:
             is_aux = pc.is_valid(tbl.column("kind"))
             aux = tbl.filter(is_aux).select(aux_cols)
-            if aux.num_rows:
-                aux_of = _chunk_slices(aux)
             tbl = tbl.filter(pc.invert(is_aux)).drop_columns(aux_cols[1:])
-        if not tbl.num_rows:
-            return
-        outs = [
-            kernel(blocks, _aux_arrays(aux_of.get(ck)))
-            for ck, blocks in _chunk_slices(tbl).items()
-        ]
-        outs = [o for o in outs if o is not None and len(o[names[0]])]
-        if outs:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate([o[c] for o in outs])) for c in names],
-                names=names,
-            )
+        out = _chunk_pass(tbl, aux, kernel, names)
+        if out is not None:
+            yield out
 
+    return rows.repartition(F.col("chunk")).mapInArrow(fn, schema=schema)
+
+
+def _on_driver(index: IndexReader, terms: list, cols: list) -> bool:
+    """Whether an unfiltered query runs on the driver: the bytes the driver
+    reads (SliceReader.slice_bytes) are no larger than
+    spark.sql.files.openCostInBytes (4 MB by default, Spark's own estimate
+    of the bytes one file open costs in scan time). Below that size a
+    Spark job costs more than the kernel work (a warm 2k-doc top-k:
+    0.13-0.18 s as one task of one job, 0.02 s on the driver)."""
     # the JVM conf accessor parses the conf's unit suffix ("4MB", "0")
-    sql_conf = rows.sparkSession._jsparkSession.sessionState().conf()
-    if read_bytes is not None and read_bytes <= sql_conf.filesOpenCostInBytes():
-        rows = rows.coalesce(1)
-    else:
-        rows = rows.repartition(F.col("chunk"))
-    return rows.mapInArrow(fn, schema=schema)
+    conf = index.spark._jsparkSession.sessionState().conf()
+    return (
+        index.slices.slice_bytes(terms, cols, index.tombstone_dir)
+        <= conf.filesOpenCostInBytes()
+    )
+
+
+def _local_chunks(
+    index: IndexReader, terms: list, cols: list, kernel, names: list
+) -> pa.RecordBatch | None:
+    """_run_chunks on the driver, with no Spark job: `cols` of the query
+    terms' blocks from the serve copy and the tombstone version's rows,
+    both read by the reader's SliceReader, through the same per-table body
+    (_chunk_pass)."""
+    blocks = index.slices.slice(terms, cols)
+    if blocks is None:
+        return None
+    aux = None
+    tomb = index.slices.tombstones(index.tombstone_dir)
+    if tomb is not None and tomb[0].size:
+        ids, before = tomb
+        aux = pa.table(
+            {
+                "chunk": ids // index.chunk_docs,  # floor, as the encoder
+                "doc_id": ids,
+                "before_gen": before,
+                "kind": pa.repeat("tomb", ids.size),
+            }
+        )
+    return _chunk_pass(blocks, aux, kernel, names)
 
 
 def _chunk_of_doc(chunk_docs: int):
@@ -641,7 +682,6 @@ def wand_topk(
             + tuple(phrase_terms)
         )
     )
-    n = index.n_docs
     k1, b, avgdl = index.k1, index.b, index.avgdl
 
     cols = ["term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin",
@@ -651,58 +691,22 @@ def wand_topk(
 
     # per-query idf, driver-side: df per term resolves from the
     # term-sorted stats parquet (row-group pruned, no Spark job) and idf
-    # reaches the kernel in its closure. The projection below then holds
-    # only per-index literals, so a new query's plan generates the same
-    # Java source as the last one and Spark's codegen cache compiles
-    # nothing (idf as per-query double literals cost 2 Janino compiles of
-    # 10-16 ms each per distinct query).
-    #
-    # Plan-chatter note: the projection (bound_imp, the null pos_bin) is
-    # ONE selectExpr of SQL strings — a single parse round-trip — instead
-    # of a Column chain whose every F.lit/withColumn is its own
-    # driver<->JVM py4j call (profiled at ~675 round-trips and ~0.2-0.3 s
-    # per interactive query). Doubles embed as CAST('<repr>' AS DOUBLE):
-    # repr round-trips exactly and the string cast parses via
-    # Double.parseDouble.
-    idf_of = term_idfs(n, index.term_stats_local(pos_terms))
-
-    def _d(v: float) -> str:
-        return f"CAST('{v!r}' AS DOUBLE)"
-
-    bound_sql = (
-        f"(CAST(max_tf AS DOUBLE) * {_d(k1 + 1.0)}) / "
-        f"(CAST(max_tf AS DOUBLE) + {_d(k1)} * ({_d(1.0 - b)} + {_d(b)} * "
-        f"CAST(min_dl AS DOUBLE) / {_d(avgdl)}))"
-    )
-    blocks = index.postings(interactive=True).filter(
-        F.col("term").isin(all_terms)
-    ).selectExpr(
-        *cols,
-        *([] if has_phrases else ["CAST(NULL AS BINARY) AS pos_bin"]),
-        f"{bound_sql} AS bound_imp",
-    )
-    rows = _with_aux(blocks, index, filter_docs)
+    # reaches the kernel in its closure, so a new query's Spark plan holds
+    # only per-index literals: it generates the same Java source as the
+    # last one and Spark's codegen cache compiles nothing (idf as per-query
+    # double literals cost 2 Janino compiles of 10-16 ms each per distinct
+    # query).
+    idf_of = term_idfs(index.n_docs, index.term_stats_local(pos_terms))
     filter_active = filter_docs is not None
-    read_bytes = None if filter_active else index.slice_bytes(all_terms, cols)
 
-    def _score(chunk_ids_df: DataFrame | None, tau: float) -> list:
-        sel = rows
-        if chunk_ids_df is not None:
-            sel = rows.join(F.broadcast(chunk_ids_df), "chunk", "left_semi")
-        scorer = _make_chunk_scorer(
+    def scorer(tau: float):
+        return _make_chunk_scorer(
             branches, idf_of, k1, b, avgdl, n_keep, tau, filter_active
         )
-        scored = _run_chunks(sel, scorer, CHUNK_SCORES_SCHEMA, read_bytes)
-        with _interactive_conf(spark):
-            return (
-                scored.orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(n_keep)
-                .collect()
-            )
 
     # Adaptive plan: when the whole index has few chunks, the bounds pass
     # costs more (an extra Spark job) than it can save — score every chunk
-    # in ONE job; the scorer's conjunctive check prunes per chunk anyway.
+    # in ONE pass; the scorer's conjunctive check prunes per chunk anyway.
     # At 10^8+ chunks (10^12 docs) the two-phase bounds pruning is the only
     # viable plan. This is a metadata-only cost decision, no data scanned.
     # Cutover tuned empirically AT SCALE: each extra Spark job cost a
@@ -720,67 +724,45 @@ def wand_topk(
     # has not been re-measured since.
     # (single_phase_max_chunks=0 forces the two-phase plan — used by tests
     # to keep the at-scale path covered on small fixtures)
-    if index.n_chunks <= single_phase_max_chunks:
-        rows = _score(None, tau=0.0)
-        merged = [(int(r["doc_id"]), float(r["score"])) for r in rows]
-        page = [
-            (d, s + prefix_const, i + 1)
-            for i, (d, s) in enumerate(merged[:n_keep])
-            if i + 1 > offset
-        ]
-        return _local_result(spark, page)
+    single_phase = index.n_chunks <= single_phase_max_chunks
+    # decided before any Spark frame is built: building the unused frame
+    # costs py4j round trips on every driver query
+    if single_phase and not filter_active and _on_driver(index, all_terms, cols):
+        out = _local_chunks(index, all_terms, cols, scorer(0.0), ["doc_id", "score"])
+        merged = []
+        if out is not None:
+            ids, scores = out.column("doc_id").to_numpy(), out.column("score").to_numpy()
+            top = np.lexsort((ids, -scores))[:n_keep]
+            merged = list(zip(ids[top].tolist(), scores[top].tolist()))
+        return _page(spark, merged, offset, prefix_const)
 
-    # job 1 (metadata only): chunk upper bounds. Per BRANCH conjunctive:
-    # a chunk qualifies for a branch when every branch term appears; the
-    # chunk's bound is the sum of its qualifying branches' bounds (the
-    # BooleanQuery SHOULD-sum upper bound). Single branch degenerates to
-    # the plain conjunctive prune.
-    idf_frame = spark.createDataFrame(
-        list(idf_of.items()), "term string, idf double"
+    # ONE selectExpr, a single py4j parse round trip (a Column chain costs
+    # one per F.lit/withColumn: ~675 round trips, 0.2-0.3 s per query)
+    blocks = index.postings(interactive=True).filter(
+        F.col("term").isin(all_terms)
+    ).selectExpr(
+        *cols, *([] if has_phrases else ["CAST(NULL AS BINARY) AS pos_bin"])
     )
-    per_ct = (
-        blocks.groupBy("chunk", "term")
-        .agg(F.max("bound_imp").alias("mi"))
-        .join(F.broadcast(idf_frame), "term")
-    )
-    if len(branches) == 1:
-        chunk_bounds = (
-            per_ct.groupBy("chunk")
-            .agg(
-                F.count("*").alias("nt"),
-                F.sum(F.col("idf") * F.col("mi")).alias("bound"),
+    rows = _with_aux(blocks, index, filter_docs)
+
+    def _score(chunk_ids_df: DataFrame | None, tau: float) -> list:
+        sel = rows
+        if chunk_ids_df is not None:
+            sel = rows.join(F.broadcast(chunk_ids_df), "chunk", "left_semi")
+        scored = _run_chunks(sel, scorer(tau), CHUNK_SCORES_SCHEMA)
+        with _interactive_conf(spark):
+            top = (
+                scored.orderBy(F.desc("score"), F.asc("doc_id"))
+                .limit(n_keep)
+                .collect()
             )
-            .filter(F.col("nt") == len(branches[0].terms))
-            .select("chunk", "bound")
-        )
-    else:
-        bmap = spark.createDataFrame(
-            [
-                (t, i)
-                for i, br in enumerate(branches)
-                for t in sorted(set(br.terms))
-            ],
-            "term string, _branch int",
-        )
-        bsize = F.create_map(
-            *[
-                x
-                for i, br in enumerate(branches)
-                for x in (F.lit(i), F.lit(len(set(br.terms))))
-            ]
-        )
-        chunk_bounds = (
-            per_ct.join(F.broadcast(bmap), "term")
-            .groupBy("chunk", "_branch")
-            .agg(
-                F.count("*").alias("nt"),
-                F.sum(F.col("idf") * F.col("mi")).alias("bound_b"),
-            )
-            .filter(F.col("nt") == F.element_at(bsize, F.col("_branch")))
-            .groupBy("chunk")
-            .agg(F.sum("bound_b").alias("bound"))
-            .select("chunk", "bound")
-        )
+        return [(int(r["doc_id"]), float(r["score"])) for r in top]
+
+    if single_phase:
+        return _page(spark, _score(None, tau=0.0), offset, prefix_const)
+
+    # job 1 (metadata only): chunk upper bounds
+    chunk_bounds = _chunk_bounds(spark, blocks, branches, idf_of, k1, b, avgdl)
     with _interactive_conf(spark):
         top_bounds = (
             chunk_bounds.orderBy(F.desc("bound"), F.asc("chunk"))
@@ -788,15 +770,14 @@ def wand_topk(
             .collect()
         )
     if not top_bounds:
-        return _local_result(spark, [])
+        return _page(spark, [], offset, prefix_const)
     phase1_ids = [int(r["chunk"]) for r in top_bounds[:first_batch_chunks]]
     exhausted = len(top_bounds) <= first_batch_chunks
 
     # job 2: score best chunks
-    rows1 = _score(
+    merged = _score(
         spark.createDataFrame([(c,) for c in phase1_ids], "chunk long"), tau=0.0
     )
-    merged = [(int(r["doc_id"]), float(r["score"])) for r in rows1]
 
     if not exhausted:
         tau = merged[n_keep - 1][1] if len(merged) >= n_keep else 0.0
@@ -806,19 +787,91 @@ def wand_topk(
         rest = chunk_bounds.filter(
             (~F.col("chunk").isin(phase1_ids)) & (F.col("bound") >= tau)
         ).select("chunk")
-        rows2 = _score(rest, tau=tau)
-        merged += [(int(r["doc_id"]), float(r["score"])) for r in rows2]
+        merged += _score(rest, tau=tau)
 
     merged.sort(key=lambda x: (-x[1], x[0]))
-    # prefix_const is uniform, so adding it AFTER tau pruning and the
-    # sort cannot reorder or change membership
-    page = [
-        (d, s + prefix_const, i + 1)
-        for i, (d, s) in enumerate(merged[:n_keep])
-        if i + 1 > offset
-    ]
-    return _local_result(spark, page)
+    return _page(spark, merged[:n_keep], offset, prefix_const)
 
+
+def _page(spark, merged: list, offset: int, prefix_const: float) -> DataFrame:
+    """The result page of `merged`, the (doc_id, score) top-(offset+k) in
+    rank order: ranks past `offset`, as a _local_result. prefix_const is
+    uniform, so adding it after tau pruning and the sort cannot reorder or
+    change membership."""
+    return _local_result(
+        spark,
+        [
+            (d, s + prefix_const, i + 1)
+            for i, (d, s) in enumerate(merged)
+            if i + 1 > offset
+        ],
+    )
+
+
+def _chunk_bounds(spark, blocks, branches, idf_of, k1, b, avgdl) -> DataFrame:
+    """The two-phase plan's metadata-only frame of chunk upper bounds
+    (chunk, bound). Per BRANCH conjunctive: a chunk qualifies for a branch
+    when every branch term appears; the chunk's bound is the sum of its
+    qualifying branches' bounds (the BooleanQuery SHOULD-sum upper bound).
+    Single branch degenerates to the plain conjunctive prune. A block's
+    bound is the kernel's impact(max_tf, min_dl), as SQL; doubles embed as
+    CAST('<repr>' AS DOUBLE): repr round-trips exactly and the string cast
+    parses via Double.parseDouble."""
+
+    def _d(v: float) -> str:
+        return f"CAST('{v!r}' AS DOUBLE)"
+
+    bound_sql = (
+        f"(CAST(max_tf AS DOUBLE) * {_d(k1 + 1.0)}) / "
+        f"(CAST(max_tf AS DOUBLE) + {_d(k1)} * ({_d(1.0 - b)} + {_d(b)} * "
+        f"CAST(min_dl AS DOUBLE) / {_d(avgdl)}))"
+    )
+    idf_frame = spark.createDataFrame(
+        list(idf_of.items()), "term string, idf double"
+    )
+    per_ct = (
+        blocks.selectExpr("chunk", "term", f"{bound_sql} AS bound_imp")
+        .groupBy("chunk", "term")
+        .agg(F.max("bound_imp").alias("mi"))
+        .join(F.broadcast(idf_frame), "term")
+    )
+    if len(branches) == 1:
+        return (
+            per_ct.groupBy("chunk")
+            .agg(
+                F.count("*").alias("nt"),
+                F.sum(F.col("idf") * F.col("mi")).alias("bound"),
+            )
+            .filter(F.col("nt") == len(branches[0].terms))
+            .select("chunk", "bound")
+        )
+    bmap = spark.createDataFrame(
+        [
+            (t, i)
+            for i, br in enumerate(branches)
+            for t in sorted(set(br.terms))
+        ],
+        "term string, _branch int",
+    )
+    bsize = F.create_map(
+        *[
+            x
+            for i, br in enumerate(branches)
+            for x in (F.lit(i), F.lit(len(set(br.terms))))
+        ]
+    )
+    return (
+        per_ct.join(F.broadcast(bmap), "term")
+        .groupBy("chunk", "_branch")
+        .agg(
+            F.count("*").alias("nt"),
+            F.sum(F.col("idf") * F.col("mi")).alias("bound_b"),
+        )
+        .filter(F.col("nt") == F.element_at(bsize, F.col("_branch")))
+        .groupBy("chunk")
+        .agg(F.sum("bound_b").alias("bound"))
+        .select("chunk", "bound")
+    )
 
 MATCH_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
 
@@ -878,26 +931,28 @@ def match_docs(
     pq: ParsedQuery | None = None,
 ) -> DataFrame:
     """Boolean AND-of-terms match set over the index: every live doc
-    satisfying the query, as a lazy DataFrame of doc_id — no scoring, no
-    top-k, no limit, nothing collected to the driver.
+    satisfying the query, as a DataFrame of doc_id — no scoring, no top-k,
+    no limit.
 
     This is the operator behind an *unlimited* cardsearch context: the
     reference ANDs the card-scoped query into the value query as an
     unbounded bool filter (trovesearch_denorm.py:838-859), so valuesearch
-    counts must see EVERY matching card, not a top-k page. The result is a
-    semi-join plan — compose it with groupBy/aggregate stages downstream.
+    counts must see EVERY matching card, not a top-k page. Compose the
+    result with groupBy/aggregate stages downstream.
 
-    Scale shape: one metadata-free job; chunks prune conjunctively (all
-    positive terms must appear in the chunk) before any posting bytes
-    decode, term stats are never needed (no idf), and the match set stays
-    distributed end to end.
+    Chunks prune conjunctively (all positive terms must appear in the
+    chunk) before any posting bytes decode, and term stats are never
+    needed (no idf). Two routes, as wand_topk's one-pass plan:
 
-    The frame is lazy, and no interactive guard is held here: the plan
-    shape (one coalesced task or the chunk exchange, see _run_chunks) is
-    fixed now, but the exchange executes when the caller collects or
-    composes the frame, under the caller's session conf — AQE on and the
-    session's shuffle width, not the 4-partition interactive width a
-    wand_topk's exchange gets.
+    - driver: without a filter frame, a slice no larger than one file
+      open (_on_driver) is matched on the driver now, with no Spark job,
+      and the set returns as a LocalRelation;
+    - exchange: otherwise the set stays distributed, as a lazy frame over
+      the chunk exchange (_run_chunks). No interactive guard is held here,
+      so the exchange executes when the caller collects or composes the
+      frame, under the caller's session conf — AQE on and the session's
+      shuffle width, not the 4-partition interactive width a wand_topk's
+      exchange gets.
     """
     if pq is not None:
         branches = (pq,)
@@ -943,11 +998,12 @@ def match_docs(
     cols = ["term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin", "gen"]
     if has_phrases:
         cols += ["dls_bin", "pos_bin"]  # read only when a phrase needs them
-    blocks = index.postings(interactive=True).filter(F.col("term").isin(all_terms)).select(*cols)
     matcher = _make_chunk_matcher(branches, filter_docs is not None)
-    read_bytes = (
-        None if filter_docs is not None else index.slice_bytes(all_terms, cols)
-    )
-    return _run_chunks(
-        _with_aux(blocks, index, filter_docs), matcher, MATCH_SCHEMA, read_bytes
-    )
+    if filter_docs is None and _on_driver(index, all_terms, cols):
+        out = _local_chunks(index, all_terms, cols, matcher, ["doc_id"])
+        ids = pa.array([], pa.int64()) if out is None else out.column("doc_id")
+        return index.spark.createDataFrame(
+            pa.table({"doc_id": ids}), schema=MATCH_SCHEMA
+        )
+    blocks = index.postings(interactive=True).filter(F.col("term").isin(all_terms)).select(*cols)
+    return _run_chunks(_with_aux(blocks, index, filter_docs), matcher, MATCH_SCHEMA)

@@ -79,3 +79,19 @@ def past_one_open(spark):
             spark.conf.set(key, before)
 
     return forced
+
+
+@pytest.fixture
+def bounds_collects(monkeypatch):
+    """A list that grows by one each time wand_topk builds the two-phase
+    plan's chunk-bounds frame (query.wand._chunk_bounds), which its bounds
+    job then collects: a test that forces the two-phase plan asserts it
+    was reached, not assumed."""
+    from share_spark.query import wand
+
+    calls: list = []
+    real = wand._chunk_bounds
+    monkeypatch.setattr(
+        wand, "_chunk_bounds", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    return calls

@@ -1,27 +1,28 @@
-"""The query plane's one chunk-kernel path: tombstones and filter rows are
-unioned into the posting-block slice and reach one mapInArrow kernel with
-it — through one coalesced task when the slice is smaller than one file
-open (the narrow shape), through one chunk shuffle otherwise (the exchange
-shape).
+"""The query plane's chunk-kernel path: tombstones and filter rows are
+unioned into the posting-block slice and reach the chunk kernel with it —
+on the driver when the slice is no larger than one file open and no filter
+rides along (the narrow case), through one chunk shuffle otherwise (the
+exchange shape).
 
 Pinned here:
   1. on a two-generation index with replacement tombstones, wand_topk is
      rank- and score-identical to exact_topk, with and without a filter,
-     on the single-phase and the two-phase plan, in both plan shapes —
-     with chunks that hold both aux kinds (tombstones and allowed docs) at
-     once
+     on the single-phase and the two-phase plan, in both cases — with
+     chunks that hold both aux kinds (tombstones and allowed docs) at once
   2. match_docs equals the exact boolean set there, with a filter in both
-     shapes and without one in both shapes
+     cases and without one in both cases
   3. the executed match_docs plan has no cogroup and no Sort: with a
      filter, one hashpartitioning(chunk) exchange feeds MapInArrow;
-     without one, MapInArrow reads a one-partition Coalesce
+     without one, a narrow slice is a LocalTableScan of the driver's set
   4. idf resolves for terms holding quotes and backslashes (field paths)
-  5. a warm reader's top-k runs one Spark job of one task: the tombstone
-     frame is read once per reader, not once per query, and carries raw
-     rows that the kernel collapses, so no aggregate is planned
+  5. a warm reader's narrow top-k starts no Spark job, and a fresh
+     reader's shared caches give identical pages to concurrent clients
   6. a legacy tombstone dir with two rows for one doc collapses to the
      larger before_gen in the kernel as in the exact scorer
-  7. the serve tier's pages equal exact_topk's on the same index
+  7. the serve tier's pages equal exact_topk's on the same index, and so
+     do the driver top-k's, at offset 0 and past it
+  8. a serve-copy file missing from a generation raises: no silent
+     fallback to Spark
 """
 
 from __future__ import annotations
@@ -53,8 +54,9 @@ QUERIES = [
 ]
 
 
-# These slices are far below Spark's default openCostInBytes, so they take
-# the narrow shape; past_one_open (conftest) forces the exchange shape.
+# These slices are far below Spark's default openCostInBytes, so an
+# unfiltered query runs on the driver; past_one_open (conftest) forces the
+# exchange shape.
 SHAPES = ("narrow", "exchange")
 
 
@@ -105,10 +107,11 @@ def tombstoned(spark, tmp_path_factory):
 @pytest.mark.parametrize("filtered", [False, True], ids=["nofilter", "filter"])
 @pytest.mark.parametrize("plan", ["single_phase", "two_phase"])
 def test_wand_equals_exact_with_tombstones(
-    tombstoned, past_one_open, filtered, plan
+    tombstoned, past_one_open, bounds_collects, filtered, plan
 ):
-    """Each plan runs in both runner shapes (a filtered query takes the
-    exchange shape whatever the conf; the loop pins that too)."""
+    """Each plan runs in both cases (a filtered query and the two-phase
+    plan take the Spark exchange whatever the conf; the loop pins that
+    too)."""
     index, allow_df, _allow = tombstoned
     fdf = allow_df if filtered else None
     kw = (
@@ -119,14 +122,16 @@ def test_wand_equals_exact_with_tombstones(
     for q in QUERIES:
         want = _rows(exact_topk(index, q, k=20, filter_docs=fdf))
         for shape in SHAPES:
+            before = len(bounds_collects)
             with past_one_open(shape == "exchange"):
                 got = _rows(wand_topk(index, q, k=20, filter_docs=fdf, **kw))
             _assert_same(got, want, (q, shape))
+            assert len(bounds_collects) - before == (plan == "two_phase")
 
 
 def test_match_docs_filtered_equals_exact_set(tombstoned, past_one_open):
-    """The filtered set, and the unfiltered one (the input the narrow shape
-    is for), in both runner shapes."""
+    """The filtered set, and the unfiltered one (the input the driver
+    takes when it is narrow), in both cases."""
     index, allow_df, allow = tombstoned
     for q in QUERIES:
         for fdf in (allow_df, None):
@@ -167,21 +172,22 @@ def test_match_docs_plan_is_one_chunk_shuffle(tombstoned):
 
 @pytest.mark.parametrize("shape", SHAPES)
 def test_unfiltered_plan_shape(tombstoned, past_one_open, shape):
-    """Without a filter, a slice below openCostInBytes runs as one task:
-    MapInArrow reads a one-partition Coalesce, with no Exchange, no Sort
-    and no aggregate (the tombstones are raw rows). Forced past the
-    threshold, the same query takes the one chunk shuffle."""
+    """Without a filter, a slice no larger than openCostInBytes is matched
+    on the driver: the frame is a LocalTableScan, with no MapInArrow, no
+    Exchange and no aggregate. Forced past the threshold, the same query
+    takes the one chunk shuffle, with no Sort and no aggregate (the
+    tombstones are raw rows)."""
     index, _allow_df, _allow = tombstoned
     with past_one_open(shape == "exchange"):
         text = _executed_plan(match_docs(index, "the data"))
     assert not re.search(r"\bSort", text), text
     assert "Aggregate" not in text, text
-    lines = text.splitlines()
-    at = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
     if shape == "narrow":
-        assert "Exchange" not in text, text
-        assert re.search(r"\bCoalesce 1\b", lines[at + 1]), text
+        assert re.match(r"\s*LocalTableScan", text), text
+        assert "MapInArrow" not in text and "Exchange" not in text, text
     else:
+        lines = text.splitlines()
+        at = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
         assert text.count("hashpartitioning(chunk") == 1, text
         feed = next(ln for ln in lines[at + 1:] if "Exchange" in ln)
         assert "hashpartitioning(chunk" in feed, text
@@ -209,13 +215,15 @@ def test_field_path_with_quote_and_backslash(spark, pages_pdf, tmp_path):
         assert odd == plain, q
 
 
-def test_warm_tombstoned_topk_is_one_job(tombstoned, jobs_started):
+def test_warm_tombstoned_topk_starts_no_job(tombstoned, jobs_started):
+    """A narrow top-k on the tombstoned index runs on the driver: the page
+    and its collect start no Spark job and run no task."""
     index, _allow_df, _allow = tombstoned
     wand_topk(index, "danger", k=20).collect()  # warm the reader
     rows, jobs, tasks = jobs_started(
         lambda: _rows(wand_topk(index, "danger", k=20))
     )
-    assert (jobs, tasks) == (1, 1)
+    assert (jobs, tasks) == (0, 0)
     _assert_same(rows, _rows(exact_topk(index, "danger", k=20)), "danger")
 
 
@@ -282,3 +290,88 @@ def test_serve_equals_exact_across_generations(tombstoned):
         want = _rows(exact_topk(index, q, k=20))
         got = [(rk, d, s) for d, s, rk in srv.topk(q, k=20)]
         _assert_same(got, want, q)
+
+
+@pytest.mark.parametrize("offset", [0, 7])
+def test_driver_topk_equals_exact_and_serve(tombstoned, jobs_started, offset):
+    """The driver top-k against two independent scorers: exact_topk (the
+    Spark join scorer) and the serve tier. The serve tier shares the
+    driver's reader, so exact_topk is the independent check."""
+    from share_spark.query.serve import TopKServer
+
+    index, _allow_df, _allow = tombstoned
+    srv = TopKServer.open(index.index_dir)
+    for q in QUERIES:
+        got, jobs, _tasks = jobs_started(
+            lambda: _rows(wand_topk(index, q, k=20, offset=offset))
+        )
+        assert jobs == 0, q
+        want = _rows(exact_topk(index, q, k=20, offset=offset))
+        served = [(rk, d, s) for d, s, rk in srv.topk(q, k=20, offset=offset)]
+        if not want:  # fewer matches than the offset
+            assert offset and got == served == [], q
+            continue
+        _assert_same(got, want, (q, offset))
+        _assert_same(served, want, (q, offset))
+
+
+def test_driver_match_docs_equals_exact_set(tombstoned, jobs_started):
+    index, _allow_df, _allow = tombstoned
+    for q in QUERIES:
+        got, jobs, _tasks = jobs_started(
+            lambda: [r["doc_id"] for r in match_docs(index, q).collect()]
+        )
+        assert jobs == 0, q
+        want = {
+            r["doc_id"] for r in exact_topk(index, q, k=1_000_000).collect()
+        }
+        assert sorted(got) == sorted(want), q
+
+
+def test_driver_topk_concurrent_clients_share_one_reader(spark, tombstoned):
+    """Eight clients on one freshly opened reader, with thread switches
+    forced often, fill its footer, term dictionary and tombstone caches
+    concurrently and get the pages one client gets."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    index, _allow_df, _allow = tombstoned
+    want = {q: _rows(wand_topk(index, q, k=20)) for q in QUERIES}
+    fresh = IndexReader.open(spark, index.index_dir)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [
+                pool.submit(lambda q=q: (q, _rows(wand_topk(fresh, q, k=20))))
+                for q in QUERIES * 4
+            ]
+            pages = [f.result(timeout=120) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    for q, got in pages:
+        assert got == want[q], q
+
+
+def test_missing_serve_file_raises(spark, tombstoned, tmp_path, jobs_started):
+    """The index dir is local by contract, so a serve-copy file missing
+    from a generation is a broken index: the driver top-k raises (its row
+    count disagrees with the generation manifest) and starts no Spark job
+    in its place."""
+    import shutil
+
+    index, _allow_df, _allow = tombstoned
+    d = str(tmp_path / "idx")
+    shutil.copytree(index.index_dir, d)
+    serve = os.path.join(d, "gen0", "postings_term")
+    files = sorted(f for f in os.listdir(serve) if f.endswith(".parquet"))
+    assert len(files) > 1
+    os.remove(os.path.join(serve, files[-1]))
+    broken = IndexReader.open(spark, d)
+
+    def query():
+        with pytest.raises(ValueError, match="postings_term"):
+            wand_topk(broken, "the data", k=20)
+
+    _out, jobs, _tasks = jobs_started(query)
+    assert jobs == 0

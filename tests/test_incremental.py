@@ -133,7 +133,7 @@ def test_streaming_foreachbatch(spark, base_index, tmp_path):
     assert _hits(idx, "quokka") == {int(pages.iloc[0].doc_id)}
 
 
-def test_two_phase_bounds_survive_avgdl_drift(spark, tmp_path):
+def test_two_phase_bounds_survive_avgdl_drift(spark, tmp_path, bounds_collects):
     """ADVICE-high regression: block-max bounds must stay valid when later
     generations move the global avgdl. gen0 = short docs (small avgdl),
     gen1 = long docs (3x avgdl); with bounds baked at build time using
@@ -194,6 +194,7 @@ def test_two_phase_bounds_survive_avgdl_drift(spark, tmp_path):
             ).collect()
         ]
         assert pruned == exact, q
+    assert len(bounds_collects) == 4  # each query took the two-phase plan
 
 
 def test_auto_compact_generation_trigger(spark, base_index):

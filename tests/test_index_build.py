@@ -296,6 +296,37 @@ def test_term_stats_local_reads_its_directory_once(spark, built_index, monkeypat
     assert opened == []
 
 
+def test_row_group_without_term_statistics_admits_every_term(tmp_path):
+    """A row group written without statistics has no term min/max: the
+    reader's directory gives it (None, None), and lookups read its term
+    dictionary instead of skipping or failing on it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from share_spark.index.build import SliceReader
+
+    for stage, cols in (
+        ("postings_term", {"term": ["b", "d"], "n": [3, 5]}),
+        ("term_stats", {"term": ["b", "d"], "df": [3, 5]}),
+    ):
+        os.makedirs(tmp_path / "gen0" / stage)
+        pq.write_table(
+            pa.table(cols),
+            os.path.join(tmp_path, "gen0", stage, "part-00000.parquet"),
+            write_statistics=False,
+        )
+    man = {"generation": 0, "n_terms": 2, "partitions": {"0": {"n_blocks": 2}}}
+    reader = SliceReader(str(tmp_path), [man])
+    assert [e[:2] for e in reader.directory(0, "postings_term")] == [(None, None)]
+    assert reader.term_dfs(["a", "d", "z"]) == {"d": 5}
+    got = reader.slice(["b", "c"], ["term", "n", "gen"])
+    assert got.to_pydict() == {"term": ["b"], "n": [3], "gen": [0]}
+    assert reader.slice_bytes(["c"], ["term", "n"], None) == 0
+    assert reader.slice_bytes(["d"], ["term", "n"], None) > 0
+
+
 def test_termdoc_identity_across_tokenizer_inputs(spark, tmp_path):
     """One Arrow batch mixing ASCII rows, non-ASCII rows (accents, a U+2028
     line separator) and empty text takes the frozen tokenizer; under the

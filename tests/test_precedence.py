@@ -70,7 +70,7 @@ def test_exact_equals_flat(built_index, grouped, flat):
 
 
 @pytest.mark.parametrize("grouped,flat", PAIRS)
-def test_wand_equals_flat_and_exact(built_index, grouped, flat):
+def test_wand_equals_flat_and_exact(built_index, bounds_collects, grouped, flat):
     want = _rows(exact_topk(built_index, flat, k=13))
     assert _rows(wand_topk(built_index, grouped, k=13)) == want
     assert (
@@ -79,6 +79,7 @@ def test_wand_equals_flat_and_exact(built_index, grouped, flat):
         )
         == want
     )
+    assert bounds_collects == [1]  # the second query took the two-phase plan
 
 
 @pytest.fixture(scope="module")

@@ -157,8 +157,8 @@ def test_warmup_preloads_top_df_terms(built_index):
     assert top8 <= set(srv._term_cache)
     head = stats.iloc[0]["term"]
     calls = []
-    orig = srv._read_row_groups
-    srv._read_row_groups = lambda *a, **k: calls.append(a) or orig(*a, **k)
+    orig = srv._slices.read
+    srv._slices.read = lambda *a, **k: calls.append(a) or orig(*a, **k)
     got = _s(srv.topk(head, k=13))
     # df lookup may hit term_stats, but postings must come from cache
     assert not any("postings" in str(a) for a in calls), calls

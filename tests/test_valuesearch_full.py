@@ -67,6 +67,35 @@ def test_subaggs_shape_and_content(vplane):
     assert out["://v/2"]["title_texts"] == []
 
 
+def test_deep_page_semijoin_equals_isin_page(spark, monkeypatch):
+    """Past ISIN_MAX_VALUES surfaced values the sub-agg page semi-joins a
+    broadcast frame instead of embedding an isin literal; a deep-offset
+    page is the same either way."""
+    from share_spark.query import valuesearch
+
+    dv = spark.createDataFrame(
+        [(i, SUBJ, 1, "iri", f"://v/{i % 40:02d}", None, None, None)
+         for i in range(200)],
+        DV_SCHEMA,
+    )
+    vm = spark.createDataFrame(
+        [(i, f"://v/{i % 40:02d}", '["rdfs:label"]', 1, "text", None,
+          f"label {i % 40}", None, None) for i in range(200)],
+        VV_SCHEMA,
+    )
+
+    def page():
+        out = value_counts(dv, [SUBJ], value_meta=vm, page_size=5, offset=30)
+        return [tuple(r) for r in out.collect()]
+
+    assert valuesearch.ISIN_MAX_VALUES >= 36  # offset + page_size + 1
+    isin_page = page()
+    monkeypatch.setattr(valuesearch, "ISIN_MAX_VALUES", 35)
+    assert page() == isin_page
+    assert len(isin_page) == 36
+    assert all(r[5] == [f"label {int(r[0][-2:])}"] for r in isin_page)
+
+
 def test_value_filter_restricts_buckets(vplane):
     dv, vm = vplane
     f = SearchFilter(paths=('["rdf:type"]',), op=ANY_OF, values=("://t/Person",))

@@ -86,13 +86,14 @@ def test_wand_filter_docs_full_page(built_index, spark):
     assert [(r, d) for r, d, _ in page] == [(r, d) for r, d, _ in epage]
 
 
-def test_wand_two_phase_path_matches_exact(built_index):
+def test_wand_two_phase_path_matches_exact(built_index, bounds_collects):
     """Force the two-phase bounds-pruned plan (first_batch_chunks=1) —
     the plan used at real scale — and assert rank identity."""
     for qtext, k in [("danger", 13), ("the data", 13), ("w00001 w00002", 101)]:
         exact = _rows(exact_topk(built_index, qtext, k=k))
         got = _rows(wand_topk(built_index, qtext, k=k, first_batch_chunks=1, single_phase_max_chunks=0))
         assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in exact], qtext
+    assert len(bounds_collects) == 3
 
 
 def test_wand_offset(built_index):
@@ -105,39 +106,43 @@ def test_wand_offset(built_index):
     "qtext,empty", [('"nothing valued here"', True), ("danger", False)]
 )
 def test_page_collect_starts_no_job(built_index, spark, jobs_started, qtext, empty):
-    """The page is a LocalRelation for empty and non-empty pages alike: the
-    query's one job is its scoring job, and collecting the page starts
-    none (a pandas page takes the Arrow path only when it has rows)."""
+    """The page is a LocalRelation for empty and non-empty pages alike, and
+    a narrow query is scored on the driver: neither the query nor
+    collecting its page starts a Spark job (a pandas page takes the Arrow
+    path only when it has rows)."""
     page, jobs, _tasks = jobs_started(lambda: wand_topk(built_index, qtext))
-    assert jobs == 1
+    assert jobs == 0
     rows, jobs, _tasks = jobs_started(page.collect)
     assert jobs == 0
     assert (rows == []) == empty
     assert page.schema == spark.createDataFrame([], RESULT_SCHEMA).schema
 
 
-def test_warm_topk_is_one_job_one_task(built_index, jobs_started):
-    """A slice smaller than one file open (spark.sql.files.openCostInBytes)
-    is scored by one task: the query's one job has no chunk shuffle."""
+def test_warm_topk_starts_no_job(built_index, jobs_started):
+    """A slice no larger than one file open (spark.sql.files.openCostInBytes)
+    is scored on the driver: the query starts no Spark job and runs no
+    task, and ranks as exact_topk does."""
     wand_topk(built_index, "the data", k=13).collect()  # warm the reader
     rows, jobs, tasks = jobs_started(
         lambda: _rows(wand_topk(built_index, "the data", k=13))
     )
-    assert (jobs, tasks) == (1, 1)
+    assert (jobs, tasks) == (0, 0)
     exact = _rows(exact_topk(built_index, "the data", k=13))
     assert [(r, d) for r, d, _ in rows] == [(r, d) for r, d, _ in exact]
 
 
-def test_new_query_compiles_no_class(built_index, spark):
+def test_new_query_compiles_no_class(built_index, spark, past_one_open):
     """idf reaches the kernel in its closure, not as per-query literals in
     the projection, so a second two-term query generates the same Java
-    source as the first and Spark's codegen cache compiles nothing."""
+    source as the first and Spark's codegen cache compiles nothing. Run
+    past one file open, so the queries take the Spark projection."""
     metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiles = metric.METRIC_COMPILATION_TIME()
 
     def run(q):
         before = compiles.getCount()
-        rows = _rows(wand_topk(built_index, q, k=13))
+        with past_one_open():
+            rows = _rows(wand_topk(built_index, q, k=13))
         return rows, compiles.getCount() - before
 
     run("the data")  # the plan shape's first query may compile
