@@ -1044,7 +1044,7 @@ def _finish_on_driver(
         pc.binary_length(blocks["dls_bin"]),
     )
     per_part = (
-        blocks.select(["part_id", "n", "last_doc", "sum_tf"])
+        blocks.select(["part_id", "n", "sum_tf"])
         .append_column("encoded", encoded)
         .group_by("part_id")
         .aggregate(
@@ -1052,7 +1052,6 @@ def _finish_on_driver(
                 ([], "count_all"),
                 ("n", "sum"),
                 ("encoded", "sum"),
-                ("last_doc", "max"),
                 ("sum_tf", "sum"),
             ]
         )
@@ -1063,7 +1062,6 @@ def _finish_on_driver(
             "n_blocks": r["count_all"],
             "n_postings": r["n_sum"],
             "encoded_bytes": r["encoded_sum"],
-            "max_doc": r["last_doc_max"],
             "sum_tf": r["sum_tf_sum"],
         }
         for r in per_part.to_pylist()
@@ -1341,7 +1339,6 @@ def _build_index_impl(
                     + F.octet_length("tfs_bin")
                     + F.octet_length("dls_bin")
                 ).alias("encoded_bytes"),
-                F.max("last_doc").alias("max_doc"),
                 F.sum("sum_tf").alias("sum_tf"),
             )
             .collect()
@@ -1379,11 +1376,6 @@ def _build_index_impl(
         }
         for r in part_rows
     }
-    # n_chunks is the exact count for dense doc ids — (max_doc //
-    # chunk_docs) + 1 — and a safe upper bound for sparse ids, which pushes
-    # the query planner to the two-phase plan
-    max_doc = max((int(r["max_doc"]) for r in part_rows), default=0)
-    n_chunks = max_doc // cfg.chunk_docs + 1
     # avgdl == avg over doc rows of token count: every token contributes
     # exactly one tf unit (field-prefixing renames, never splits, tokens)
     total_tokens = sum(int(r["sum_tf"]) for r in part_rows)
@@ -1407,7 +1399,6 @@ def _build_index_impl(
         "n_docs": n_docs,
         "avgdl": avgdl,
         "n_terms": int(n_terms),
-        "n_chunks": int(n_chunks),
         # the non-checksum build knob, persisted so config_of round-trips
         # the FULL config: compaction keeps the original partitioning choice
         "n_partitions": cfg.n_partitions,
@@ -1664,12 +1655,6 @@ class IndexReader:
     @property
     def n_docs(self) -> int:
         return sum(g["n_docs"] for g in self.gen_manifests)
-
-    @property
-    def n_chunks(self) -> int:
-        """Upper bound on distinct chunks (gens may overlap) — used by the
-        query planner to choose single- vs two-phase WAND."""
-        return sum(g.get("n_chunks", 1 << 30) for g in self.gen_manifests)
 
     @property
     def avgdl(self) -> float:

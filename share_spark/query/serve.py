@@ -13,8 +13,9 @@ serves (SURVEY.md §1). This module is the "ES shard fetch" half:
 - decoded per-term postings and per-term stats live in a bounded LRU cache
   (hot query terms are served from memory, like ES's segment page cache);
 - scoring reuses the EXACT numpy kernel of the distributed WAND path
-  (query/wand._make_chunk_scorer), so served results are rank-identical to
-  both wand_topk and exact_topk by construction — one scorer, two transports;
+  (query/wand.score_branch_lists, which _ChunkScorer runs per chunk), so
+  served results are rank-identical to both wand_topk and exact_topk by
+  construction — one scorer, two transports;
 - tombstones are loaded once and re-checked by file mtime, so incremental
   generations / deletes are visible without restarting the server.
 

@@ -22,9 +22,11 @@ block-max WAND) maps onto Spark's execution model:
   upper-bounds every posting in the block regardless of how later
   generations move avgdl (a build-time max_impact would go stale and prune
   true top-k docs once global avgdl exceeds a generation's own).
-  Two phases: (1) score the top-B chunks by bound -> threshold tau = k-th
-  best score; (2) score only remaining chunks with bound >= tau — skipped
-  entirely when phase 1 already covered every eligible chunk.
+  Pruning runs inside the one chunk pass (_chunk_pass), as in Koios-style
+  candidate pruning within the scoring scan: the pass computes every
+  chunk's bound in one vectorized step, visits chunks in descending bound
+  order, and stops at the first whose bound is below tau, the n_keep-th
+  best score seen so far. No separate bounds job exists.
 - **Phrases are an index operation**: positional postings (pos_bin runs)
   are decoded only for phrase terms; in-order matching is a vectorized
   key-intersection (doc_rank * P + position), never a stored-text rescan
@@ -40,18 +42,16 @@ block-max WAND) maps onto Spark's execution model:
   larger sets stay in Spark (10^8 tombstones between compactions would be
   a driver OOM). No overfetch heuristics for filtered queries — the kernel
   sees the exact allowed-doc set for its chunk.
-- Job economy: a narrow slice runs on the driver. When no filter frame
-  rides along and the bytes the query reads (its terms' row groups in the
+- Job economy: one plan, two transports. When no filter frame rides
+  along and the bytes the query reads (its terms' row groups in the
   term-sorted serve copy plus the tombstone version, from footers and
   term dictionaries cached per reader) are no larger than
-  spark.sql.files.openCostInBytes, the one-pass plan reads the slice with
-  pyarrow and runs the chunk kernels in-process: no Spark job at all, and
+  spark.sql.files.openCostInBytes, the driver reads the slice with
+  pyarrow and runs the chunk pass in-process: no Spark job at all, and
   the decision is taken before any Spark frame is built. Otherwise Spark
-  runs one shape, the chunk exchange (see _run_chunks): one scoring job
-  per phase, plus one metadata job (chunk bounds) on the two-phase plan.
-  The driver only ever collects <= B+1 chunk bounds and <= offset+k scored
-  rows per phase; per-phase top-n lists merge driver-side (any doc in the
-  global top-n is in its own phase's top-n).
+  runs one shape, the chunk exchange (see _run_chunks): one scoring job,
+  each task pruning its own chunks with its own tau. The driver collects
+  <= offset+k scored rows, from the job's orderBy/limit.
 - Within a chunk, scoring is numpy-vectorized: sorted-array intersection for
   AND semantics, searchsorted gathers, BM25 per term in sorted-term order
   (deterministic float accumulation, matching tests/frozen_bm25.py).
@@ -93,7 +93,13 @@ CHUNK_SCORES_SCHEMA = T.StructType(
     ]
 )
 
-RESULT_SCHEMA = "doc_id long, score double, rank int"
+RESULT_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("score", T.DoubleType()),
+        T.StructField("rank", T.IntegerType()),
+    ]
+)
 
 
 def _local_result(spark, page) -> DataFrame:
@@ -374,22 +380,44 @@ def _aux_arrays(aux: pa.Table | None):
     return tomb_ids, tomb_gens, allow_ids
 
 
-def _make_chunk_scorer(
-    branches: tuple[ParsedQuery, ...],
-    idf_of: dict[str, float],
-    k1: float,
-    b: float,
-    avgdl: float,
-    n_keep: int,
-    tau: float,
-    filter_active: bool,
-):
-    """Per-chunk scoring kernel (run by _run_chunks): score one chunk's
-    blocks, emit local top-n as {"doc_id", "score"} arrays (None when the
-    chunk contributes nothing). `branches` is the query's `|` disjunction of
-    conjunctive branches (usually one) — a chunk prunes only when NO branch
-    has all its terms present, and the tau bound is the sum of the viable
-    branches' bounds.
+def _visit_order(
+    blocks: pa.Table, branches, idf_of: dict, imp: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(chunks, bounds) of every chunk of the slice where some branch has
+    all its terms, bound desc then chunk asc, from one vectorized step over
+    the slice's block metadata. `imp` is each block row's impact bound. A
+    chunk's bound sums, over its viable branches, idf * each term's best
+    block bound in the kernel's sorted-term order (score_branch_lists), so
+    a doc at its terms' best blocks' (max_tf, min_dl) scores exactly the
+    bound."""
+    chunks, inv = np.unique(blocks.column("chunk").to_numpy(), return_inverse=True)
+    term = blocks.column("term")
+    best = {}
+    for t in {t for br in branches for t in br.terms}:
+        rows = pc.equal(term, t).to_numpy(zero_copy_only=False)
+        best[t] = np.full(chunks.size, -np.inf)
+        np.maximum.at(best[t], inv[rows], imp[rows])
+    bound = np.zeros(chunks.size)
+    viable = np.zeros(chunks.size, dtype=bool)
+    for br in branches:
+        has = np.ones(chunks.size, dtype=bool)
+        part = np.zeros(chunks.size)
+        for t in sorted(br.terms):
+            has &= best[t] > -np.inf
+            part += idf_of.get(t, 0.0) * np.where(has, best[t], 0.0)
+        bound += np.where(has, part, 0.0)
+        viable |= has
+    order = np.lexsort((chunks, -bound))
+    order = order[viable[order]]
+    return chunks[order], bound[order]
+
+
+class _ChunkScorer:
+    """The top-k kernel _chunk_pass runs: `visit` orders the slice's chunks
+    by bound, and a call scores one chunk's blocks, emitting its local
+    top-n_keep as {"doc_id", "score"} arrays (None when the chunk
+    contributes nothing). `branches` is the query's `|` disjunction of
+    conjunctive branches (usually one).
 
     `idf_of` maps each positive term with a df to its idf, computed once
     on the driver (term_idfs). Block rows carry `gen` (segment id), and
@@ -398,65 +426,44 @@ def _make_chunk_scorer(
     generations < before_gen) and the allowed-doc set when a structured
     filter is pushed down (kind='allow'); they arrive as _aux_arrays.
     Negative terms / neg-phrase-only terms have no idf and contribute
-    only ids (+ positions for phrase checks).
-    """
-    branch_terms = [tuple(sorted(set(br.terms))) for br in branches]
-    pos_set = frozenset(t for bt in branch_terms for t in bt)
-    phrase_terms = frozenset(
-        t
-        for br in branches
-        for ph in (br.phrases + br.neg_phrases)
-        for t in ph
-    )
+    only ids (+ positions for phrase checks). The instance holds only the
+    query; the pass's threshold lives in the pass."""
 
-    def score_chunk(blocks: pa.Table, aux: tuple):
-        allow_ids = aux[2]
-        if filter_active and allow_ids is None:
-            return None  # filter active, nothing allowed in this chunk
+    schema = CHUNK_SCORES_SCHEMA
 
-        # block-max bound: impact(max_tf, min_dl) at the query-time avgdl
+    def __init__(self, branches, idf_of, k1, b, avgdl, n_keep, filter_active):
+        self.branches = branches
+        self.idf_of = idf_of
+        self.k1, self.b, self.avgdl = k1, b, avgdl
+        self.n_keep = n_keep
+        self.filter_active = filter_active
+        self.pos_set = frozenset(t for br in branches for t in br.terms)
+        self.phrase_terms = frozenset(
+            t for br in branches for ph in (br.phrases + br.neg_phrases) for t in ph
+        )
+
+    def visit(self, blocks: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+        """_visit_order with each block's bound: the kernel's impact
+        expression at (max_tf, min_dl). Impact rises with tf and falls with
+        dl, so it bounds every posting of the block at the query-time
+        avgdl, however later generations move it (a build-time bound
+        would go stale and prune true top-k docs)."""
+        k1, b, avgdl = self.k1, self.b, self.avgdl
         tf = blocks.column("max_tf").to_numpy().astype(np.float64)
         dl = blocks.column("min_dl").to_numpy().astype(np.float64)
-        bound_imp = (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
-        per_term = pa.table(
-            {"term": blocks.column("term"), "bound_imp": bound_imp}
-        ).group_by("term").aggregate([("bound_imp", "max")])
-        per_term_max: dict[str, float] = {}
-        seen_terms = set()
-        for t, bi in zip(
-            per_term.column("term").to_pylist(),
-            per_term.column("bound_imp_max").to_pylist(),
-        ):
-            seen_terms.add(t)
-            if t in pos_set and bi > 0.0:
-                per_term_max[t] = bi
+        imp = (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        return _visit_order(blocks, self.branches, self.idf_of, imp)
 
-        # branch viability: all the branch's terms (and its positive
-        # phrases' terms) present in this chunk; the chunk's score bound
-        # is the sum of viable branch bounds
-        viable: list[ParsedQuery] = []
-        bound = 0.0
-        for br, bt in zip(branches, branch_terms):
-            if any(t not in per_term_max for t in bt):
-                continue
-            if any(
-                t not in seen_terms for ph in br.phrases for t in ph
-            ):
-                continue
-            viable.append(br)
-            bound += sum(idf_of[t] * per_term_max[t] for t in bt)
-        if not viable:
-            return None
-        if bound < tau:  # ties kept: equal-score docs can win on doc_id
-            return None
-
-        lists = _chunk_lists(blocks, aux, pos_set, phrase_terms)
+    def __call__(self, blocks: pa.Table, aux: tuple):
+        allow_ids = aux[2]
+        if self.filter_active and allow_ids is None:
+            return None  # filter active, nothing allowed in this chunk
+        lists = _chunk_lists(blocks, aux, self.pos_set, self.phrase_terms)
         doc_ids, scores = score_branch_lists(
-            tuple(viable), lists, idf_of, k1, b, avgdl, n_keep, allow_ids
+            self.branches, lists, self.idf_of, self.k1, self.b, self.avgdl,
+            self.n_keep, allow_ids,
         )
         return {"doc_id": doc_ids, "score": scores}
-
-    return score_chunk
 
 
 # Interactive-query SQL conf (AQE off + narrow reduces), scoped to a
@@ -484,25 +491,42 @@ def _chunk_slices(tbl: pa.Table) -> dict:
 
 
 def _chunk_pass(
-    blocks: pa.Table, aux: pa.Table | None, kernel, names: list
+    blocks: pa.Table, aux: pa.Table | None, kernel
 ) -> pa.RecordBatch | None:
     """The one per-table kernel body, run by a _run_chunks task and by the
     driver (_local_chunks): blocks and aux rows (chunk, doc_id, before_gen,
     kind; see _with_aux) sort by chunk with an Arrow sort, and `kernel`
-    runs once per chunk on its zero-copy block slice plus _aux_arrays of
-    its aux rows — no pandas, no Sort in a plan. Kernels return a dict of
-    output columns (None for an empty chunk); the result is their
-    concatenation as columns `names`, None when empty. The input is the
-    query's term-pruned block slice, so its volume is bounded by the
-    query, not the corpus."""
+    runs on each chunk `kernel.visit` returns, in its order, on the
+    chunk's zero-copy block slice plus _aux_arrays of its aux rows — no
+    pandas, no Sort in a plan. Kernels return a dict of output columns
+    (None for an empty chunk); the result is their concatenation as the
+    columns of `kernel.schema`, None when empty. The input is the query's
+    term-pruned block slice, so its volume is bounded by the query, not
+    the corpus.
+
+    Block-max pruning: a kernel with n_keep > 0 scores, and visits its
+    chunks in descending bound order. The pass keeps tau, the n_keep-th
+    best score it has seen, and stops at the first chunk whose bound is
+    below tau: no later chunk can place. A bound equal to tau is still
+    scored, since a tied doc can win on doc_id. tau is local to the call,
+    so each Spark task and each driver query prunes on its own."""
     if not blocks.num_rows:
         return None
+    names = kernel.schema.fieldNames()
     aux_of = _chunk_slices(aux) if aux is not None and aux.num_rows else {}
-    outs = [
-        kernel(chunk_blocks, _aux_arrays(aux_of.get(ck)))
-        for ck, chunk_blocks in _chunk_slices(blocks).items()
-    ]
-    outs = [o for o in outs if o is not None and len(o[names[0]])]
+    by_chunk = _chunk_slices(blocks)
+    outs, best, tau = [], np.empty(0), -np.inf
+    for ck, bound in zip(*(a.tolist() for a in kernel.visit(blocks))):
+        if bound < tau:
+            break
+        out = kernel(by_chunk[ck], _aux_arrays(aux_of.get(ck)))
+        if out is None or not len(out[names[0]]):
+            continue
+        outs.append(out)
+        if kernel.n_keep:
+            best = np.sort(np.concatenate([best, out["score"]]))[::-1][: kernel.n_keep]
+            if best.size == kernel.n_keep:
+                tau = best[-1]
     if not outs:
         return None
     return pa.RecordBatch.from_arrays(
@@ -511,22 +535,22 @@ def _chunk_pass(
     )
 
 
-def _run_chunks(rows: DataFrame, kernel, schema) -> DataFrame:
+def _run_chunks(rows: DataFrame, kernel) -> DataFrame:
     """The Spark kernel runner, for a slice the driver does not take
-    (_on_driver): a filtered query, a slice larger than one file open, or
-    a phase of the two-phase plan. The slice hash-repartitions by chunk,
-    so all of a chunk's blocks and aux rows meet in one mapInArrow task
-    and several tasks decode and score in parallel (at 50k docs, 10.3 MB
-    of postings, one task raised the single-client p50 0.31 -> 0.43 s).
-    The reduce width and AQE come from the SQL conf the action runs under,
-    not from here: wand_topk collects inside the interactive guard (AQE
-    off, INTERACTIVE_SHUFFLE_PARTITIONS reduces), while match_docs returns
-    the lazy frame, so its exchange runs when the caller acts on it, under
-    the session's conf (AQE on, the session's shuffle width). A task keeps
-    its batches as one Arrow table, splits the aux rows (non-null `kind`)
-    off with an Arrow filter and runs _chunk_pass."""
+    (_on_driver): a filtered query or a slice larger than one file open.
+    The slice hash-repartitions by chunk, so all of a chunk's blocks and
+    aux rows meet in one mapInArrow task and several tasks decode and
+    score in parallel (at 50k docs, 10.3 MB of postings, one task raised
+    the single-client p50 0.31 -> 0.43 s); each task prunes its own chunks
+    by bound (_chunk_pass). The reduce width and AQE come from the SQL
+    conf the action runs under, not from here: wand_topk collects inside
+    the interactive guard (AQE off, INTERACTIVE_SHUFFLE_PARTITIONS
+    reduces), while match_docs returns the lazy frame, so its exchange
+    runs when the caller acts on it, under the session's conf (AQE on,
+    the session's shuffle width). A task keeps its batches as one Arrow
+    table, splits the aux rows (non-null `kind`) off with an Arrow filter
+    and runs _chunk_pass."""
     aux_cols = ["chunk", "doc_id", "before_gen", "kind"]
-    names = schema.fieldNames()
 
     def fn(batches):
         tabs = [b for b in batches if b.num_rows]
@@ -538,11 +562,11 @@ def _run_chunks(rows: DataFrame, kernel, schema) -> DataFrame:
             is_aux = pc.is_valid(tbl.column("kind"))
             aux = tbl.filter(is_aux).select(aux_cols)
             tbl = tbl.filter(pc.invert(is_aux)).drop_columns(aux_cols[1:])
-        out = _chunk_pass(tbl, aux, kernel, names)
+        out = _chunk_pass(tbl, aux, kernel)
         if out is not None:
             yield out
 
-    return rows.repartition(F.col("chunk")).mapInArrow(fn, schema=schema)
+    return rows.repartition(F.col("chunk")).mapInArrow(fn, schema=kernel.schema)
 
 
 def _on_driver(index: IndexReader, terms: list, cols: list) -> bool:
@@ -561,7 +585,7 @@ def _on_driver(index: IndexReader, terms: list, cols: list) -> bool:
 
 
 def _local_chunks(
-    index: IndexReader, terms: list, cols: list, kernel, names: list
+    index: IndexReader, terms: list, cols: list, kernel
 ) -> pa.RecordBatch | None:
     """_run_chunks on the driver, with no Spark job: `cols` of the query
     terms' blocks from the serve copy and the tombstone version's rows,
@@ -582,7 +606,7 @@ def _local_chunks(
                 "kind": pa.repeat("tomb", ids.size),
             }
         )
-    return _chunk_pass(blocks, aux, kernel, names)
+    return _chunk_pass(blocks, aux, kernel)
 
 
 def _chunk_of_doc(chunk_docs: int):
@@ -632,10 +656,8 @@ def wand_topk(
     query_text: str,
     k: int = 13,
     offset: int = 0,
-    first_batch_chunks: int = 16,
     filter_docs: DataFrame | None = None,
     pq: ParsedQuery | None = None,
-    single_phase_max_chunks: int = 4096,
 ) -> DataFrame:
     """Block-max top-k; rank-identical to exact_topk. Returns doc_id, score,
     rank. `filter_docs` (doc_id) restricts results to that set, applied
@@ -645,7 +667,20 @@ def wand_topk(
     Prefix clauses (`dang*`) fold into the filter channel and add
     PREFIX_SCORE each (constant-score rewrite, see ParsedQuery) — uniform
     over every result, so the kernel's bounds and tau pruning are
-    unaffected."""
+    unaffected.
+
+    One plan, two transports: the driver for an unfiltered slice no larger
+    than one file open (_on_driver), the chunk exchange otherwise; both
+    run _chunk_pass, which prunes chunks by bound as it scores. A separate
+    bounds job (a two-phase plan that scored the best chunks first and
+    semi-joined the rest) never won where it was measured: at 12.5k chunks
+    (50k docs, chunk_docs=4, 10 fixed queries on the exchange, 4 cores) it
+    took 8.2-8.4 s and 7 jobs a query against 2.4 s and 1 job for this
+    pass. It tied (0.19 s against 0.20 s median) only on the query no
+    chunk could match, where its metadata-only job found no chunk to
+    score; every other query was 2.4-5.3x faster on the one pass. The
+    in-task pass saves decode, not shuffle bytes; no crossover was
+    found."""
     if pq is not None:
         branches = (pq,)
     else:
@@ -697,38 +732,13 @@ def wand_topk(
     # double literals cost 2 Janino compiles of 10-16 ms each per distinct
     # query).
     idf_of = term_idfs(index.n_docs, index.term_stats_local(pos_terms))
-    filter_active = filter_docs is not None
-
-    def scorer(tau: float):
-        return _make_chunk_scorer(
-            branches, idf_of, k1, b, avgdl, n_keep, tau, filter_active
-        )
-
-    # Adaptive plan: when the whole index has few chunks, the bounds pass
-    # costs more (an extra Spark job) than it can save — score every chunk
-    # in ONE pass; the scorer's conjunctive check prunes per chunk anyway.
-    # At 10^8+ chunks (10^12 docs) the two-phase bounds pruning is the only
-    # viable plan. This is a metadata-only cost decision, no data scanned.
-    # Cutover tuned empirically AT SCALE: each extra Spark job cost a
-    # fixed ~0.5-1 s (shuffle setup, AQE re-plan, per-task Python worker
-    # setup), while decoding+scoring a pruned chunk costs ~1-3 ms of
-    # per-chunk kernel work — so two-phase only pays once it can prune
-    # O(10^3-10^4) chunks. Measured at 2M docs / 245 chunks, the two-phase
-    # plan was 2-3x SLOWER than one job scoring every chunk (3.4 s vs
-    # 1.3 s p50); at 128 chunks and below both plans tie. 4096 chunks
-    # (~33M docs at the default chunk_docs) keeps the one-job plan until
-    # the decode volume genuinely rivals a job's fixed overhead. Those
-    # figures predate share_spark.daemon, which removed most of the
-    # per-task Python part (0.1-0.3 s of zip-directory re-reads per
-    # task); the shuffle and scheduling part remains, and the cutover
-    # has not been re-measured since.
-    # (single_phase_max_chunks=0 forces the two-phase plan — used by tests
-    # to keep the at-scale path covered on small fixtures)
-    single_phase = index.n_chunks <= single_phase_max_chunks
+    kernel = _ChunkScorer(
+        branches, idf_of, k1, b, avgdl, n_keep, filter_docs is not None
+    )
     # decided before any Spark frame is built: building the unused frame
     # costs py4j round trips on every driver query
-    if single_phase and not filter_active and _on_driver(index, all_terms, cols):
-        out = _local_chunks(index, all_terms, cols, scorer(0.0), ["doc_id", "score"])
+    if filter_docs is None and _on_driver(index, all_terms, cols):
+        out = _local_chunks(index, all_terms, cols, kernel)
         merged = []
         if out is not None:
             ids, scores = out.column("doc_id").to_numpy(), out.column("score").to_numpy()
@@ -743,54 +753,15 @@ def wand_topk(
     ).selectExpr(
         *cols, *([] if has_phrases else ["CAST(NULL AS BINARY) AS pos_bin"])
     )
-    rows = _with_aux(blocks, index, filter_docs)
-
-    def _score(chunk_ids_df: DataFrame | None, tau: float) -> list:
-        sel = rows
-        if chunk_ids_df is not None:
-            sel = rows.join(F.broadcast(chunk_ids_df), "chunk", "left_semi")
-        scored = _run_chunks(sel, scorer(tau), CHUNK_SCORES_SCHEMA)
-        with _interactive_conf(spark):
-            top = (
-                scored.orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(n_keep)
-                .collect()
-            )
-        return [(int(r["doc_id"]), float(r["score"])) for r in top]
-
-    if single_phase:
-        return _page(spark, _score(None, tau=0.0), offset, prefix_const)
-
-    # job 1 (metadata only): chunk upper bounds
-    chunk_bounds = _chunk_bounds(spark, blocks, branches, idf_of, k1, b, avgdl)
+    scored = _run_chunks(_with_aux(blocks, index, filter_docs), kernel)
     with _interactive_conf(spark):
-        top_bounds = (
-            chunk_bounds.orderBy(F.desc("bound"), F.asc("chunk"))
-            .limit(first_batch_chunks + 1)
+        top = (
+            scored.orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(n_keep)
             .collect()
         )
-    if not top_bounds:
-        return _page(spark, [], offset, prefix_const)
-    phase1_ids = [int(r["chunk"]) for r in top_bounds[:first_batch_chunks]]
-    exhausted = len(top_bounds) <= first_batch_chunks
-
-    # job 2: score best chunks
-    merged = _score(
-        spark.createDataFrame([(c,) for c in phase1_ids], "chunk long"), tau=0.0
-    )
-
-    if not exhausted:
-        tau = merged[n_keep - 1][1] if len(merged) >= n_keep else 0.0
-        # job 3: only chunks that can still beat tau. >= (not >): a chunk
-        # whose bound equals tau can still contain an exact score tie that
-        # wins on the doc_id tie-break.
-        rest = chunk_bounds.filter(
-            (~F.col("chunk").isin(phase1_ids)) & (F.col("bound") >= tau)
-        ).select("chunk")
-        merged += _score(rest, tau=tau)
-
-    merged.sort(key=lambda x: (-x[1], x[0]))
-    return _page(spark, merged[:n_keep], offset, prefix_const)
+    merged = [(int(r["doc_id"]), float(r["score"])) for r in top]
+    return _page(spark, merged, offset, prefix_const)
 
 
 def _page(spark, merged: list, offset: int, prefix_const: float) -> DataFrame:
@@ -808,120 +779,48 @@ def _page(spark, merged: list, offset: int, prefix_const: float) -> DataFrame:
     )
 
 
-def _chunk_bounds(spark, blocks, branches, idf_of, k1, b, avgdl) -> DataFrame:
-    """The two-phase plan's metadata-only frame of chunk upper bounds
-    (chunk, bound). Per BRANCH conjunctive: a chunk qualifies for a branch
-    when every branch term appears; the chunk's bound is the sum of its
-    qualifying branches' bounds (the BooleanQuery SHOULD-sum upper bound).
-    Single branch degenerates to the plain conjunctive prune. A block's
-    bound is the kernel's impact(max_tf, min_dl), as SQL; doubles embed as
-    CAST('<repr>' AS DOUBLE): repr round-trips exactly and the string cast
-    parses via Double.parseDouble."""
-
-    def _d(v: float) -> str:
-        return f"CAST('{v!r}' AS DOUBLE)"
-
-    bound_sql = (
-        f"(CAST(max_tf AS DOUBLE) * {_d(k1 + 1.0)}) / "
-        f"(CAST(max_tf AS DOUBLE) + {_d(k1)} * ({_d(1.0 - b)} + {_d(b)} * "
-        f"CAST(min_dl AS DOUBLE) / {_d(avgdl)}))"
-    )
-    idf_frame = spark.createDataFrame(
-        list(idf_of.items()), "term string, idf double"
-    )
-    per_ct = (
-        blocks.selectExpr("chunk", "term", f"{bound_sql} AS bound_imp")
-        .groupBy("chunk", "term")
-        .agg(F.max("bound_imp").alias("mi"))
-        .join(F.broadcast(idf_frame), "term")
-    )
-    if len(branches) == 1:
-        return (
-            per_ct.groupBy("chunk")
-            .agg(
-                F.count("*").alias("nt"),
-                F.sum(F.col("idf") * F.col("mi")).alias("bound"),
-            )
-            .filter(F.col("nt") == len(branches[0].terms))
-            .select("chunk", "bound")
-        )
-    bmap = spark.createDataFrame(
-        [
-            (t, i)
-            for i, br in enumerate(branches)
-            for t in sorted(set(br.terms))
-        ],
-        "term string, _branch int",
-    )
-    bsize = F.create_map(
-        *[
-            x
-            for i, br in enumerate(branches)
-            for x in (F.lit(i), F.lit(len(set(br.terms))))
-        ]
-    )
-    return (
-        per_ct.join(F.broadcast(bmap), "term")
-        .groupBy("chunk", "_branch")
-        .agg(
-            F.count("*").alias("nt"),
-            F.sum(F.col("idf") * F.col("mi")).alias("bound_b"),
-        )
-        .filter(F.col("nt") == F.element_at(bsize, F.col("_branch")))
-        .groupBy("chunk")
-        .agg(F.sum("bound_b").alias("bound"))
-        .select("chunk", "bound")
-    )
-
 MATCH_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
 
 
-def _make_chunk_matcher(
-    branches: tuple[ParsedQuery, ...],
-    filter_active: bool,
-):
-    """Per-chunk kernel for the boolean match set (run by _run_chunks):
-    emit EVERY doc in the chunk satisfying the query (any `|` branch) — no
-    scoring, no truncation. Decode + candidate logic shared with the
-    scoring kernel (_chunk_lists / candidate_ids), so match semantics are
-    identical by construction."""
-    pos_set = frozenset(t for br in branches for t in br.terms)
-    has_phrases = any(br.phrases or br.neg_phrases for br in branches)
-    phrase_terms = frozenset(
-        t
-        for br in branches
-        for ph in (br.phrases + br.neg_phrases)
-        for t in ph
-    )
-    # dls decode only to bound the phrase-key stride P; term-only queries
-    # never touch dls_bin
-    score_terms = pos_set if has_phrases else frozenset()
+class _ChunkMatcher:
+    """The boolean match-set kernel _chunk_pass runs: a call emits EVERY
+    doc in one chunk satisfying the query (any `|` branch) — no scoring,
+    no truncation, so no bound: `visit` returns every viable chunk, in
+    chunk order. Decode + candidate logic shared with the scoring kernel
+    (_chunk_lists / candidate_ids), so match semantics are identical by
+    construction."""
 
-    def match_chunk(blocks: pa.Table, aux: tuple):
+    schema = MATCH_SCHEMA
+    n_keep = 0
+
+    def __init__(self, branches: tuple[ParsedQuery, ...], filter_active: bool):
+        self.branches = branches
+        self.filter_active = filter_active
+        phrases = [ph for br in branches for ph in (br.phrases + br.neg_phrases)]
+        # dls decode only to bound the phrase-key stride P; term-only
+        # queries never touch dls_bin
+        self.score_terms = (
+            frozenset(t for br in branches for t in br.terms)
+            if phrases
+            else frozenset()
+        )
+        self.phrase_terms = frozenset(t for ph in phrases for t in ph)
+
+    def visit(self, blocks: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+        return _visit_order(blocks, self.branches, {}, np.zeros(blocks.num_rows))
+
+    def __call__(self, blocks: pa.Table, aux: tuple):
         allow_ids = aux[2]
-        if filter_active and allow_ids is None:
+        if self.filter_active and allow_ids is None:
             return None  # filter active, nothing allowed in this chunk
-        seen = set(pc.unique(blocks.column("term")).to_pylist())
-        viable = [
-            br
-            for br in branches
-            if all(t in seen for t in br.terms)
-            and all(t in seen for ph in br.phrases for t in ph)
-        ]
-        if not viable:
-            return None
-        lists = _chunk_lists(blocks, aux, score_terms, phrase_terms)
-        if len(viable) == 1:
-            ids = candidate_ids(viable[0], lists, allow_ids)
-        else:
-            ids = np.unique(
+        lists = _chunk_lists(blocks, aux, self.score_terms, self.phrase_terms)
+        return {
+            "doc_id": np.unique(
                 np.concatenate(
-                    [candidate_ids(br, lists, allow_ids) for br in viable]
+                    [candidate_ids(br, lists, allow_ids) for br in self.branches]
                 )
             )
-        return {"doc_id": ids}
-
-    return match_chunk
+        }
 
 
 def match_docs(
@@ -942,7 +841,8 @@ def match_docs(
 
     Chunks prune conjunctively (all positive terms must appear in the
     chunk) before any posting bytes decode, and term stats are never
-    needed (no idf). Two routes, as wand_topk's one-pass plan:
+    needed (no idf). A match set has no bound, so every such chunk is
+    visited. Two transports, as wand_topk's:
 
     - driver: without a filter frame, a slice no larger than one file
       open (_on_driver) is matched on the driver now, with no Spark job,
@@ -998,12 +898,12 @@ def match_docs(
     cols = ["term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin", "gen"]
     if has_phrases:
         cols += ["dls_bin", "pos_bin"]  # read only when a phrase needs them
-    matcher = _make_chunk_matcher(branches, filter_docs is not None)
+    matcher = _ChunkMatcher(branches, filter_docs is not None)
     if filter_docs is None and _on_driver(index, all_terms, cols):
-        out = _local_chunks(index, all_terms, cols, matcher, ["doc_id"])
+        out = _local_chunks(index, all_terms, cols, matcher)
         ids = pa.array([], pa.int64()) if out is None else out.column("doc_id")
         return index.spark.createDataFrame(
             pa.table({"doc_id": ids}), schema=MATCH_SCHEMA
         )
     blocks = index.postings(interactive=True).filter(F.col("term").isin(all_terms)).select(*cols)
-    return _run_chunks(_with_aux(blocks, index, filter_docs), matcher, MATCH_SCHEMA)
+    return _run_chunks(_with_aux(blocks, index, filter_docs), matcher)

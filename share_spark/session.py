@@ -13,9 +13,9 @@ import threading
 from pyspark.sql import SparkSession
 
 # reduce width of an interactive top-k's chunk exchange — Spark's one
-# kernel shape (query/wand.py _run_chunks), taken by a filtered query, a
-# slice larger than one file open and the two-phase plan; a narrow
-# unfiltered slice runs on the driver and starts no job. Each chunk
+# kernel shape (query/wand.py _run_chunks), taken by a filtered query and
+# a slice larger than one file open; a narrow unfiltered slice runs on
+# the driver and starts no job. Each chunk
 # emits at most n_keep rows, so a handful of reduce tasks carries the whole
 # result, while a 32-partition reduce costs 32 task launches PER QUERY that
 # fight each other under concurrency. Measured (local[32]): sp=4 vs session

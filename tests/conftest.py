@@ -82,16 +82,16 @@ def past_one_open(spark):
 
 
 @pytest.fixture
-def bounds_collects(monkeypatch):
-    """A list that grows by one each time wand_topk builds the two-phase
-    plan's chunk-bounds frame (query.wand._chunk_bounds), which its bounds
-    job then collects: a test that forces the two-phase plan asserts it
-    was reached, not assumed."""
+def chunks_decoded(monkeypatch):
+    """A list that grows by one each time a chunk kernel decodes a chunk's
+    blocks (query.wand._chunk_lists) on the driver: a test that expects
+    block-max pruning asserts that chunks were skipped, not assumed. Spark
+    tasks import the module afresh, so the exchange path is not counted."""
     from share_spark.query import wand
 
     calls: list = []
-    real = wand._chunk_bounds
+    real = wand._chunk_lists
     monkeypatch.setattr(
-        wand, "_chunk_bounds", lambda *a, **k: calls.append(1) or real(*a, **k)
+        wand, "_chunk_lists", lambda *a, **k: calls.append(1) or real(*a, **k)
     )
     return calls

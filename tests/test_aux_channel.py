@@ -7,8 +7,8 @@ exchange shape).
 Pinned here:
   1. on a two-generation index with replacement tombstones, wand_topk is
      rank- and score-identical to exact_topk, with and without a filter,
-     on the single-phase and the two-phase plan, in both cases — with
-     chunks that hold both aux kinds (tombstones and allowed docs) at once
+     in both cases — with chunks that hold both aux kinds (tombstones and
+     allowed docs) at once
   2. match_docs equals the exact boolean set there, with a filter in both
      cases and without one in both cases
   3. the executed match_docs plan has no cogroup and no Sort: with a
@@ -105,28 +105,21 @@ def tombstoned(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("filtered", [False, True], ids=["nofilter", "filter"])
-@pytest.mark.parametrize("plan", ["single_phase", "two_phase"])
-def test_wand_equals_exact_with_tombstones(
-    tombstoned, past_one_open, bounds_collects, filtered, plan
-):
-    """Each plan runs in both cases (a filtered query and the two-phase
-    plan take the Spark exchange whatever the conf; the loop pins that
-    too)."""
+@pytest.mark.parametrize("k", [20, 1], ids=["single_phase", "two_phase"])
+def test_wand_equals_exact_with_tombstones(tombstoned, past_one_open, filtered, k):
+    """The one plan in both cases (a filtered query takes the Spark
+    exchange whatever the conf; the loop pins that too). The ids keep the
+    names of the two plans this test once covered: `single_phase` runs a
+    20-doc page, `two_phase` a one-doc page, whose threshold prunes
+    hardest, as the two-phase plan's first batch did."""
     index, allow_df, _allow = tombstoned
     fdf = allow_df if filtered else None
-    kw = (
-        {"single_phase_max_chunks": 0, "first_batch_chunks": 1}
-        if plan == "two_phase"
-        else {}
-    )
     for q in QUERIES:
-        want = _rows(exact_topk(index, q, k=20, filter_docs=fdf))
+        want = _rows(exact_topk(index, q, k=k, filter_docs=fdf))
         for shape in SHAPES:
-            before = len(bounds_collects)
             with past_one_open(shape == "exchange"):
-                got = _rows(wand_topk(index, q, k=20, filter_docs=fdf, **kw))
-            _assert_same(got, want, (q, shape))
-            assert len(bounds_collects) - before == (plan == "two_phase")
+                got = _rows(wand_topk(index, q, k=k, filter_docs=fdf))
+            _assert_same(got, want, (q, k, shape))
 
 
 def test_match_docs_filtered_equals_exact_set(tombstoned, past_one_open):

@@ -77,7 +77,7 @@ def test_offset_paging_is_consistent(built_index):
     ]
 
 
-def test_exact_tie_clusters_fold_deterministically(spark, tmp_path):
+def test_exact_tie_clusters_fold_deterministically(spark, tmp_path, past_one_open):
     """Exact-duplicate docs MUST get bit-identical scores so the doc_id
     tie-break orders them, regardless of shuffle arrival order.
 
@@ -140,9 +140,16 @@ def test_exact_tie_clusters_fold_deterministically(spark, tmp_path):
         ids = [r["doc_id"] for r in ranks_sorted]
         assert ids == sorted(ids), f"variant {v}: tie-break not doc_id asc"
 
-    wand = wand_topk(index, q, k=200).collect()
-    assert [(r["rank"], r["doc_id"]) for r in wand] == [
-        (r["rank"], r["doc_id"]) for r in exact
-    ]
-    for w, e in zip(wand, exact):
-        assert abs(w["score"] - e["score"]) < 1e-9
+    # k=200 holds every cluster whole; k=13 and k=25 end the page inside
+    # a 12-doc cluster spread over many chunks, so the pruning threshold
+    # sits on a tied score and a chunk whose bound equals it must still
+    # be scored
+    for k in (200, 13, 25):
+        for exchange in (False, True):
+            with past_one_open(exchange):
+                wand = wand_topk(index, q, k=k).collect()
+            assert [(r["rank"], r["doc_id"]) for r in wand] == [
+                (r["rank"], r["doc_id"]) for r in exact[:k]
+            ], (k, exchange)
+            for w, e in zip(wand, exact):
+                assert abs(w["score"] - e["score"]) < 1e-9

@@ -101,14 +101,11 @@ def test_exact_or_matches_oracle(built_index, frozen, qtext):
 
 
 @pytest.mark.parametrize("qtext", QUERIES)
-def test_wand_or_matches_oracle(built_index, frozen, bounds_collects, qtext):
+def test_wand_or_matches_oracle(built_index, frozen, past_one_open, qtext):
     want = oracle_or_topk(frozen, qtext)
-    assert _rows(wand_topk(built_index, qtext, k=13)) == want
-    assert (
-        _rows(wand_topk(built_index, qtext, k=13, single_phase_max_chunks=0))
-        == want
-    )
-    assert bounds_collects == [1]  # the second query took the two-phase plan
+    for exchange in (False, True):  # the driver and the Spark exchange
+        with past_one_open(exchange):
+            assert _rows(wand_topk(built_index, qtext, k=13)) == want, exchange
 
 
 @pytest.fixture(scope="module")

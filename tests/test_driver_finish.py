@@ -102,7 +102,7 @@ def test_driver_finish_equals_spark_finish(finishes):
     keys = ["term", "chunk", "first_doc"]
     assert _table(drv, "postings_term", keys) == _table(spk, "postings_term", keys)
     md, ms = _gen_manifest(drv), _gen_manifest(spk)
-    for key in ("n_docs", "n_terms", "n_chunks", "avgdl", "partitions"):
+    for key in ("n_docs", "n_terms", "avgdl", "partitions"):
         assert md[key] == ms[key], key
     # the Spark finish's file layout: one file per range partition
     for stage in ("term_stats", "postings_term"):

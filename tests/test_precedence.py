@@ -70,16 +70,11 @@ def test_exact_equals_flat(built_index, grouped, flat):
 
 
 @pytest.mark.parametrize("grouped,flat", PAIRS)
-def test_wand_equals_flat_and_exact(built_index, bounds_collects, grouped, flat):
+def test_wand_equals_flat_and_exact(built_index, past_one_open, grouped, flat):
     want = _rows(exact_topk(built_index, flat, k=13))
-    assert _rows(wand_topk(built_index, grouped, k=13)) == want
-    assert (
-        _rows(
-            wand_topk(built_index, grouped, k=13, single_phase_max_chunks=0)
-        )
-        == want
-    )
-    assert bounds_collects == [1]  # the second query took the two-phase plan
+    for exchange in (False, True):  # the driver and the Spark exchange
+        with past_one_open(exchange):
+            assert _rows(wand_topk(built_index, grouped, k=13)) == want, exchange
 
 
 @pytest.fixture(scope="module")

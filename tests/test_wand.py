@@ -86,14 +86,88 @@ def test_wand_filter_docs_full_page(built_index, spark):
     assert [(r, d) for r, d, _ in page] == [(r, d) for r, d, _ in epage]
 
 
-def test_wand_two_phase_path_matches_exact(built_index, bounds_collects):
-    """Force the two-phase bounds-pruned plan (first_batch_chunks=1) —
-    the plan used at real scale — and assert rank identity."""
-    for qtext, k in [("danger", 13), ("the data", 13), ("w00001 w00002", 101)]:
+@pytest.mark.parametrize("exchange", [False, True], ids=["driver", "exchange"])
+def test_wand_pruned_pass_matches_exact(built_index, past_one_open, exchange):
+    """The bound-pruned chunk pass is rank-identical to the exact scorer
+    on both transports, from a one-doc page (the tightest threshold) to a
+    page past the match count."""
+    for qtext, k in [
+        ("danger", 1), ("danger", 13), ("the data", 13), ("the", 2),
+        ("w00001 w00002", 101),
+    ]:
         exact = _rows(exact_topk(built_index, qtext, k=k))
-        got = _rows(wand_topk(built_index, qtext, k=k, first_batch_chunks=1, single_phase_max_chunks=0))
+        with past_one_open(exchange):
+            got = _rows(wand_topk(built_index, qtext, k=k))
         assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in exact], qtext
-    assert len(bounds_collects) == 3
+        for (_, _, gs), (_, _, es) in zip(got, exact):
+            assert abs(gs - es) < 1e-9
+
+
+@pytest.mark.parametrize("exchange", [False, True], ids=["driver", "exchange"])
+def test_chunk_bound_equal_to_threshold_is_scored(
+    spark, tmp_path, past_one_open, chunks_decoded, exchange
+):
+    """Chunk 1 (docs 4-7) has the higher bound, so the pass scores it
+    first, and its page of two sets tau to doc 5's score. Chunk 0's bound
+    is exactly that score: its one doc, doc 0, ties doc 5 and wins on
+    doc_id, so a chunk whose bound equals tau must be scored."""
+    import pandas as pd
+
+    from share_spark.index.build import IndexConfig, IndexReader, build_index
+
+    text = {0: "alpha pad", 4: "alpha alpha", 5: "alpha pad"}
+    pages = pd.DataFrame(
+        {
+            "doc_id": range(8),
+            "url": [f"u{i}" for i in range(8)],
+            "lang": "en",
+            "text": [text.get(i, "pad pad") for i in range(8)],
+            "html": None,
+        }
+    )
+    d = str(tmp_path / "tie")
+    build_index(spark, spark.createDataFrame(pages), d, IndexConfig(block_size=4, chunk_docs=4))
+    index = IndexReader.open(spark, d)
+    exact = _rows(exact_topk(index, "alpha", k=2))
+    assert [d for _, d, _ in exact] == [4, 0]
+    with past_one_open(exchange):
+        got = _rows(wand_topk(index, "alpha", k=2))
+    assert got == exact
+    if not exchange:
+        assert len(chunks_decoded) == 2
+
+
+def test_url_derived_ids_start_no_job(spark, pages_pdf, tmp_path, jobs_started):
+    """Pages without a doc_id column get ids from xxhash64(url): sparse,
+    full-range int64, so about one chunk per doc. A narrow top-k and match
+    set over such an index still run on the driver, with no Spark job, and
+    agree with the exact scorer."""
+    from share_spark.index.build import IndexConfig, IndexReader, build_index
+    from share_spark.query.wand import match_docs
+
+    pages = spark.createDataFrame(pages_pdf.drop(columns=["doc_id"]))
+    d = str(tmp_path / "urlidx")
+    build_index(spark, pages, d, IndexConfig(block_size=32, chunk_docs=64))
+    index = IndexReader.open(spark, d)
+    ids = {r["doc_id"] for r in index.docs().select("doc_id").collect()}
+    assert min(ids) < 0 < max(ids)  # full-range hashed ids
+    for qtext in ("danger", "the data", "danger -warning"):
+        wand_topk(index, qtext, k=13).collect()  # warm the reader
+        got, jobs, _tasks = jobs_started(
+            lambda: _rows(wand_topk(index, qtext, k=13))
+        )
+        assert jobs == 0, qtext
+        exact = _rows(exact_topk(index, qtext, k=13))
+        assert exact, qtext
+        assert [(r, d) for r, d, _ in got] == [(r, d) for r, d, _ in exact]
+        for (_, _, gs), (_, _, es) in zip(got, exact):
+            assert abs(gs - es) < 1e-9
+        matched, jobs, _tasks = jobs_started(
+            lambda: [r["doc_id"] for r in match_docs(index, qtext).collect()]
+        )
+        assert jobs == 0, qtext
+        want = exact_topk(index, qtext, k=1_000_000).collect()
+        assert sorted(matched) == sorted(r["doc_id"] for r in want), qtext
 
 
 def test_wand_offset(built_index):
