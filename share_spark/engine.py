@@ -31,7 +31,7 @@ from .query.params import (
     parse_cardsearch,
     parse_valuesearch,
 )
-from .query.serve import ShardedTopKServer, TopKServer
+from .query.serve import TopKServer
 from .query.wand import wand_topk
 from .render import (
     df_triples,
@@ -57,12 +57,7 @@ class SearchEngine:
     field_index: FieldIndex | None = None
     synonyms: DataFrame | None = None
     oai_cards: DataFrame | None = None
-    # >1: the serve tier fans out over chunk-striped shards (the 10^12-doc
-    # deployment shape); results are bit-identical to the single server
-    n_serve_shards: int = 1
-    _server: "TopKServer | ShardedTopKServer | None" = field(
-        default=None, repr=False
-    )
+    _server: TopKServer | None = field(default=None, repr=False)
     # path_key -> 'date' | 'iri', computed from doc_values on first
     # valuesearch (one job over the distinct-path set — property-path
     # vocabulary, not corpus-sized) and reused for every query after;
@@ -166,11 +161,7 @@ class SearchEngine:
         (doc_id, score, rank)); otherwise the distributed WAND DataFrame."""
         if serve:
             if self._server is None:
-                self._server = (
-                    ShardedTopKServer.open(self.index_dir, self.n_serve_shards)
-                    if self.n_serve_shards > 1
-                    else TopKServer.open(self.index_dir)
-                )
+                self._server = TopKServer.open(self.index_dir)
             return self._server.topk(query_text, k=k, offset=offset)
         return wand_topk(self.reader, query_text, k=k, offset=offset)
 

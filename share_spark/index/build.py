@@ -1539,9 +1539,11 @@ def register_generation(
 
 @dataclass
 class IndexReader:
-    """Handle over a built index (all generations)."""
+    """Handle over a built index (all generations). The metadata, `slices`
+    and the tombstone pointer need no Spark session: the serve tier opens
+    a reader with `spark=None` and reads only through those."""
 
-    spark: SparkSession
+    spark: SparkSession | None
     index_dir: str
     manifest: dict = field(default_factory=dict)
     gen_manifests: list[dict] = field(default_factory=list)
@@ -1551,7 +1553,7 @@ class IndexReader:
     # consistent snapshot even while writers commit new versions
     tombstone_dir: str | None = None
     # the driver's reader of this view's files (term stats, the driver
-    # top-k); the serve tier reads through the same class
+    # top-k, the serve tier)
     slices: SliceReader = field(init=False, repr=False)
 
     def __post_init__(self):
@@ -1560,7 +1562,7 @@ class IndexReader:
     @classmethod
     def open(
         cls,
-        spark: SparkSession,
+        spark: SparkSession | None,
         index_dir: str,
         snapshot_id: int | None = None,
     ) -> "IndexReader":

@@ -386,14 +386,17 @@ def parse_disjunction(
 
 
 def validate_branches(branches: tuple[ParsedQuery, ...]) -> None:
-    """Shared guards for multi-branch disjunctions: every branch needs a
-    positive clause (a negation-only branch would mean "everything except",
-    corpus-sized — same refusal as a negation-only query), and prefix
-    clauses are single-branch only (a per-branch prefix would need one
-    pushed-down filter channel per branch; narrow the query instead)."""
+    """The query front end's guards, shared by every path: a query needs a
+    positive clause (a term, or a prefix or fuzzy clause in a one-branch
+    query; negation alone would mean "everything except", corpus-sized),
+    every `|` branch needs a positive term, and prefix and fuzzy clauses
+    are single-branch only (a per-branch prefix would need one pushed-down
+    filter channel per branch; narrow the query instead)."""
     if not branches:
         raise ValueError("query has no positive terms")
     if len(branches) == 1:
+        if not branches[0].terms and not branches[0].const_clauses:
+            raise ValueError("query has no positive terms")
         return
     for pq in branches:
         if pq.prefixes or pq.neg_prefixes:
@@ -408,6 +411,18 @@ def validate_branches(branches: tuple[ParsedQuery, ...]) -> None:
             raise ValueError(
                 "query has no positive terms in one of its | branches"
             )
+
+
+def query_terms(
+    branches: tuple[ParsedQuery, ...],
+) -> tuple[tuple[str, ...], list[str]]:
+    """(positive terms, every term the query reads) of `branches`: the
+    second is the positive, negated and phrase terms, in first-seen order.
+    Prefix and fuzzy expansions are not included."""
+    pos = tuple(dict.fromkeys(t for br in branches for t in br.terms))
+    neg = (t for br in branches for t in br.neg_terms)
+    phrase = (t for br in branches for ph in br.phrases + br.neg_phrases for t in ph)
+    return pos, list(dict.fromkeys((*pos, *neg, *phrase)))
 
 
 def idf(n_docs: int, df: int) -> float:
@@ -738,8 +753,6 @@ def exact_topk(
         return _rank_page(agg, k, offset)
 
     pq = branches[0]
-    if not pq.terms and not pq.const_clauses:
-        raise ValueError("query has no positive terms")
     filter_docs = prefix_doc_filter(index, pq, filter_docs)
     prefix_const = PREFIX_SCORE * pq.const_clauses
 

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..index.build import FIELD_SEP, IndexConfig, IndexReader, build_index
-from .bm25 import ParsedQuery, parse_disjunction, parse_query
+from .bm25 import ParsedQuery, parse_disjunction, validate_branches
 
 FIELDMAP = "fieldmap"
 
@@ -50,10 +50,8 @@ def _parse_scoped(query_text: str, analyzer: str) -> ParsedQuery:
             "path-scoped queries support a single conjunctive branch; "
             "'|' disjunctions are not available with cardSearchText[path]"
         )
-    pq = branches[0] if branches else parse_query(query_text, analyzer)
-    if not pq.terms and not pq.const_clauses:
-        raise ValueError("query has no positive terms")
-    return pq
+    validate_branches(branches)
+    return branches[0]
 
 
 def _prefixed(pq: ParsedQuery, path: str) -> ParsedQuery:

@@ -6,39 +6,55 @@ O(KB..MB) of IO — while a Spark job costs ~0.3-0.5 s of scheduling no matter
 how little it reads. The reference has the same split: Django builds / ES
 serves (SURVEY.md §1). This module is the "ES shard fetch" half:
 
+- the server serves one snapshot of the index: an IndexReader opened
+  without a Spark session, with its tombstone version's collapsed arrays.
+  refresh() opens the current committed state and swaps it in whole, so a
+  new generation and the tombstones committed with it become visible
+  together, at refresh(), as Elasticsearch makes new segments and their
+  deletes visible at one refresh;
 - per query it reads ONLY the row groups of the term-sorted serve copy
-  whose term dictionary holds a query term, through the reader the
-  driver top-k uses too (index/build.py SliceReader) — never a full scan,
+  whose term dictionary holds a query term, through the snapshot's
+  SliceReader, the reader the driver top-k uses too — never a full scan,
   never a Spark job;
 - decoded per-term postings and per-term stats live in a bounded LRU cache
   (hot query terms are served from memory, like ES's segment page cache);
+  refresh() drops it only when the (generation, build_id) list changes;
 - scoring reuses the EXACT numpy kernel of the distributed WAND path
   (query/wand.score_branch_lists, which _ChunkScorer runs per chunk), so
   served results are rank-identical to both wand_topk and exact_topk by
-  construction — one scorer, two transports;
-- tombstones are loaded once and re-checked by file mtime, so incremental
-  generations / deletes are visible without restarting the server.
+  construction — one scorer, two transports.
 
 Scale shape: one server process serves one index; the per-query cost is
-O(query terms' postings), independent of corpus size. At 10^12 docs a head
-term's posting list is itself large — a production deployment shards the
-serving tier by doc-id chunk (the same chunk alignment the distributed path
-uses) and fans a query out to shard servers, each running this module over
-its chunk slice. ShardedTopKServer below IS that wiring: N chunk-striped
-TopKServers + a top-k merge, rank-identical to the single server because
-BM25 stats stay global and scores are per-doc.
+O(query terms' postings), independent of corpus size.
 """
 
 from __future__ import annotations
 
-import json
-import os
+import heapq
 import threading
 from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
-import pyarrow as pa
+
+from ..analysis import tokenize
+from ..index.build import FIELD_SEP, IndexReader
+from ..index.codec import live_list, term_lists
+from .bm25 import (
+    MAX_FUZZY_EXPANSIONS,
+    PREFIX_SCORE,
+    parse_disjunction,
+    query_terms,
+    validate_branches,
+)
+from .wand import _phrase_mask, score_branch_lists, term_idfs
+
+_BLOCK_COLS = [
+    "term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin", "dls_bin",
+    "pos_bin", "max_tf", "min_dl",
+]
 
 
 def _entry_nbytes(entry: tuple) -> int:
@@ -97,59 +113,35 @@ def _lev_one(a: str, b: str) -> int:
     return prev[-1]
 
 
-def _lev_mask(cands: list, stem: str, d: int) -> np.ndarray:
-    """Boolean mask over `cands` (a Python list of strings): standard
-    Levenshtein(cand, stem) <= d, via _lev_dp on a padded codepoint matrix
-    (utf-32 decode — no per-char Python loop)."""
-    n = len(cands)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    lens = np.fromiter((len(c) for c in cands), dtype=np.int64, count=n)
-    L = max(1, int(lens.max()))
-    padded = "".join(c.ljust(L, "\0") for c in cands)
-    mat = np.frombuffer(padded.encode("utf-32-le"), dtype=np.uint32).reshape(
-        n, L
-    )
-    final = _lev_dp(mat, stem)
-    return final[np.arange(n), lens] <= d
+class _View(NamedTuple):
+    """One committed state of the index as the server serves it."""
 
-from ..index.build import IndexReader, SliceReader, check_layout
-from ..index.codec import live_list, term_lists
-from .bm25 import (
-    PREFIX_SCORE,
-    ParsedQuery,
-    parse_disjunction,
-    validate_branches,
-)
-from .wand import score_branch_lists, term_idfs
+    reader: IndexReader
+    # the reader's tombstone version, collapsed (doc ids sorted unique,
+    # max before_gen), or None when the snapshot has no tombstones
+    tomb: tuple | None
 
-_BLOCK_COLS = [
-    "term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin", "dls_bin",
-    "pos_bin", "max_tf", "min_dl",
-]
+
+def _builds(reader: IndexReader) -> list[tuple]:
+    """(generation, build_id) of every generation: compact() of gens [0, N]
+    lands on [0] again with entirely new files, so the generation numbers
+    alone cannot tell two snapshots' files apart. Indexes built before the
+    build_id nonce compare by generation number."""
+    return [(g["generation"], g.get("build_id")) for g in reader.gen_manifests]
 
 
 @dataclass
 class TopKServer:
     index_dir: str
-    k1: float = 1.2
-    b: float = 0.75
-    analyzer: str = "standard"
     max_cached_terms: int = 4096
     # hard bound on terms one prefix clause (`dang*`) may expand to before
     # the server refuses the query (protects the in-process tier from a
     # single-letter prefix decoding half the vocabulary; the distributed
     # paths expand unbounded — they stream, this tier holds arrays)
     max_prefix_expansions: int = 1024
-    # same refusal bound for fuzzy clauses (`dnag~1`) — must match the
-    # distributed MAX_FUZZY_EXPANSIONS default so both tiers refuse the
-    # same queries instead of one silently diverging
-    max_fuzzy_expansions: int = 1024
-    # (shard_idx, n_shards) chunk striping: this server decodes only blocks
-    # whose chunk % n_shards == shard_idx. Stats (n_docs, avgdl, df) stay
-    # GLOBAL — BM25 scores are identical to the unsharded server, so a
-    # fan-out merge of per-shard top-k is exact, not approximate.
-    shard: tuple[int, int] | None = None
+    # the distributed paths' refusal bound for fuzzy clauses (`dnag~1`), so
+    # both tiers refuse the same queries
+    max_fuzzy_expansions: int = MAX_FUZZY_EXPANSIONS
     # decoded-postings budget in BYTES: one head term's arrays can be GBs at
     # 10^9 postings, so a count bound alone cannot cap residency.  Sized so
     # a realistic hot term set stays resident — at 2M docs the 40-query
@@ -157,85 +149,59 @@ class TopKServer:
     # thrash (47 terms resident, head terms re-decoded per query, warm p95
     # 0.58 s vs 0.07 s at 200k docs)
     max_cache_bytes: int = 1 << 30
-    _gens: list[dict] = field(default_factory=list)
+    # the snapshot every query reads, replaced whole by refresh()
+    _view: _View | None = None
     # term -> decoded (ids, tfs, dls, pos, gens); true LRU: moved to end on
     # every hit, evicted from the front by accumulated nbytes
     _term_cache: "OrderedDict[str, tuple]" = field(default_factory=OrderedDict)
     _term_cache_nbytes: int = 0
     _stats_cache: dict = field(default_factory=dict)  # term -> df (int, tiny)
-    _tomb: tuple | None = None
-    _n_docs: int = 0
-    _avgdl: float = 0.0
-    # the open generations' footers, row-group term dictionaries and
-    # tombstone version (the reader IndexReader uses too): residency is
-    # O(row groups), the term dictionary itself; replaced whenever the
-    # generation list changes
-    _slices: SliceReader | None = None
-    # the vocabulary buckets of _vocab_buckets, dropped with _slices
+    # the vocabulary buckets of _vocab_buckets
     _dsets: dict = field(default_factory=dict)
     # (stem, dist) -> expanded term list; the vocabulary DP is the
     # expensive part of a fuzzy query, and typo distributions are heavy-
     # tailed (the same misspellings recur), so a small LRU pays for
     # itself. Bounded by count (entries are <= max_fuzzy_expansions short
-    # strings); cleared whenever the generation list changes, same as the
-    # other caches.
+    # strings).
     _fuzzy_cache: "OrderedDict[tuple, list]" = field(
         default_factory=OrderedDict
     )
     max_cached_fuzzy_expansions: int = 512
-    # coarse lock over cache fill/eviction — a serving tier answers many
-    # queries concurrently; scoring itself is lock-free numpy
+    # coarse lock over the view swap and cache fill/eviction — a serving
+    # tier answers many queries concurrently; scoring itself is lock-free
+    # numpy
     _lock: threading.RLock = field(default_factory=threading.RLock)
 
     @classmethod
-    def open(
-        cls, index_dir: str, shard: tuple[int, int] | None = None
-    ) -> "TopKServer":
-        srv = cls(index_dir, shard=shard)
+    def open(cls, index_dir: str) -> "TopKServer":
+        srv = cls(index_dir)
         srv.refresh()
         return srv
 
     # -- index state ---------------------------------------------------
 
     def refresh(self) -> None:
-        """Re-read the manifest (new generations become visible); drops
-        caches only when the generation list changed."""
-        with open(os.path.join(self.index_dir, "manifest.json")) as f:
-            manifest = json.load(f)
-        gens = []
-        for g in manifest["generations"]:
-            with open(
-                os.path.join(self.index_dir, f"gen{g}", "manifest.json")
-            ) as f:
-                gens.append(json.load(f))
-        # compare (generation, build_id) — NOT the generation list alone:
-        # compact() of gens [0,N] lands on [0] again with entirely new
-        # files, and open parquet handles would silently keep serving the
-        # DELETED old build's bytes (posix unlink semantics).  build_id is
-        # the per-build nonce written by build_index; absent (pre-nonce
-        # indexes) it degrades to the generation-number comparison.
-        if [(g["generation"], g.get("build_id")) for g in gens] != [
-            (g["generation"], g.get("build_id")) for g in self._gens
-        ]:
-            self._term_cache.clear()
-            self._term_cache_nbytes = 0
-            self._stats_cache.clear()
-            self._dsets.clear()
-            self._fuzzy_cache.clear()
-            self._slices = SliceReader(self.index_dir, gens)
-        self._gens = gens
-        self.k1 = gens[0]["k1"]
-        self.b = gens[0]["b"]
-        self.analyzer = gens[0]["analyzer"]
-        for g in gens:
-            check_layout(g)
-        self._n_docs = sum(g["n_docs"] for g in gens)
-        self._avgdl = (
-            sum(g["avgdl"] * g["n_docs"] for g in gens) / self._n_docs
-            if self._n_docs
-            else 0.0
-        )
-        self._load_tombstones()
+        """Serve the index's current committed state from now on: its
+        generations and its tombstone version, which one manifest commit
+        swings together, replace the old snapshot together. The caches
+        (decoded terms, stats, fuzzy expansions, footers and term
+        dictionaries) are dropped only when the (generation, build_id)
+        list changed; otherwise the new snapshot keeps the old one's
+        footers, since its files are the same."""
+        reader = IndexReader.open(None, self.index_dir)
+        old = self._view
+        same = old is not None and _builds(old.reader) == _builds(reader)
+        if same:
+            reader.slices = old.reader.slices
+        view = _View(reader, reader.slices.tombstones(reader.tombstone_dir))
+        with self._lock:
+            if not same:
+                self._term_cache.clear()
+                self._term_cache_nbytes = 0
+                self._stats_cache.clear()
+                self._dsets.clear()
+                self._fuzzy_cache.clear()
+            self._view = view
 
     def warmup(self, preload_top_terms: int = 0) -> None:
         """Server-startup preload: parquet footers + per-row-group term
@@ -253,17 +219,17 @@ class TopKServer:
         worst one batch of already-preloaded terms is ever evicted; the
         long tail stays cold but tail terms are small (fast) by
         definition."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        reader = self._view.reader
+        slices = reader.slices
         jobs = []
-        for g in self._gens:
+        for g in reader.gen_manifests:
             gen = g["generation"]
             for stage in ("postings_term", "term_stats"):
-                jobs.extend(self._slices.directory(gen, stage))
+                jobs.extend(slices.directory(gen, stage))
         with ThreadPoolExecutor(max_workers=16) as pool:
-            list(pool.map(lambda e: self._slices.row_group_terms(e[2], e[3]), jobs))
+            list(pool.map(lambda e: slices.row_group_terms(e[2], e[3]), jobs))
         if preload_top_terms > 0:
-            for batch in self._top_df_terms(preload_top_terms):
+            for batch in self._top_df_terms(reader, preload_top_terms):
                 with self._lock:
                     # budget check BEFORE the batch: _read_terms' own
                     # eviction protects only the in-flight batch, so
@@ -274,7 +240,8 @@ class TopKServer:
                         break
                     self._read_terms(batch)
 
-    def _top_df_terms(self, n: int, batch: int = 8):
+    @staticmethod
+    def _top_df_terms(reader: IndexReader, n: int, batch: int = 8):
         """Yield the n highest-df terms in df-descending batches.
 
         Streams term_stats row group by row group keeping a running
@@ -284,14 +251,12 @@ class TopKServer:
         term has one stats row per generation it appears in, and ranking
         raw rows would both waste heap slots on duplicates and misrank
         terms whose df is split across generations."""
-        import heapq
-
-        n_gens = max(1, len(self._gens))
+        gens = reader.gen_manifests
         best: list[tuple[int, str]] = []  # (df, term), ascending heap
-        cap = n * n_gens
-        for g in self._gens:
+        cap = n * max(1, len(gens))
+        for g in gens:
             gen = g["generation"]
-            for _lo, _hi, pf, rg, _sizes in self._slices.directory(gen, "term_stats"):
+            for _lo, _hi, pf, rg, _sizes in reader.slices.directory(gen, "term_stats"):
                 tbl = pf.read_row_group(rg, columns=["term", "df"])
                 for t, d in zip(
                     tbl.column("term").to_pylist(),
@@ -312,14 +277,6 @@ class TopKServer:
         for i in range(0, len(ordered), batch):
             yield ordered[i : i + batch]
 
-    def _load_tombstones(self) -> None:
-        """The CURRENT tombstone version, resolved through the manifest
-        pointer (merges write new immutable dirs and swing it), collapsed
-        by the shared reader, which re-reads only a changed version."""
-        from ..index.snapshots import resolve_tombstone_dir
-
-        self._tomb = self._slices.tombstones(resolve_tombstone_dir(self.index_dir))
-
     # -- term dictionary ------------------------------------------------
 
     def _expand_prefix(self, prefix: str) -> list[str]:
@@ -333,12 +290,13 @@ class TopKServer:
         distributed paths)."""
         hi = prefix + "\U0010ffff"
         out: set[str] = set()
-        for g in self._gens:
-            entries = self._slices.directory(g["generation"], "postings_term")
+        reader = self._view.reader
+        for g in reader.gen_manifests:
+            entries = reader.slices.directory(g["generation"], "postings_term")
             for lo, top, pf, rg, _sizes in entries:
                 if lo is not None and (top < prefix or lo >= hi):
                     continue
-                terms = self._slices.row_group_terms(pf, rg)
+                terms = reader.slices.row_group_terms(pf, rg)
                 lo_i = np.searchsorted(terms, prefix, side="left")
                 hi_i = np.searchsorted(terms, hi, side="left")
                 out.update(terms[lo_i:hi_i].tolist())
@@ -367,10 +325,11 @@ class TopKServer:
         if key in self._dsets:
             return self._dsets[key]
         terms: set[str] = set()
-        for g in self._gens:
-            entries = self._slices.directory(g["generation"], "postings_term")
+        reader = self._view.reader
+        for g in reader.gen_manifests:
+            entries = reader.slices.directory(g["generation"], "postings_term")
             for _lo, _hi, pf, rg, _sizes in entries:
-                terms.update(self._slices.row_group_terms(pf, rg).tolist())
+                terms.update(reader.slices.row_group_terms(pf, rg).tolist())
         by_len: dict[int, list] = {}
         for t in terms:
             by_len.setdefault(len(t), []).append(t)
@@ -400,8 +359,6 @@ class TopKServer:
         candidate set to rank top-k from, and its output is k rows either
         way (uncapped results bypass the LRU: they can be vocabulary-band
         sized)."""
-        from ..index.build import FIELD_SEP
-
         limit = self.max_fuzzy_expansions if cap == 0 else cap
         ckey = (stem, dist)
         # cache READ is always valid — a stored entry is the COMPLETE
@@ -469,12 +426,7 @@ class TopKServer:
                 missing.append(t)
         if not missing:
             return
-        tbl = self._slices.slice(missing, _BLOCK_COLS)
-        if tbl is not None and self.shard is not None:
-            # chunk striping (numpy %, sign of divisor: negative-doc-id
-            # chunks land in a valid shard too)
-            si, ns = self.shard
-            tbl = tbl.filter(pa.array(tbl.column("chunk").to_numpy() % ns == si))
+        tbl = self._view.reader.slices.slice(missing, _BLOCK_COLS)
         want = frozenset(missing)
         lists = term_lists(tbl, want, want) if tbl is not None else {}
         empty = (
@@ -539,15 +491,13 @@ class TopKServer:
         over the dictionary, has no cap either). df is summed across
         generations. The exact word, if indexed, ranks first at distance 0
         (callers typically skip suggesting when that happens)."""
-        from ..analysis import tokenize
-
-        toks = tokenize(word, self.analyzer)
-        if len(toks) != 1:
-            raise ValueError(
-                f"suggest takes one analyzable word, got {word!r}"
-            )
-        stem = toks[0]
         with self._lock:
+            toks = tokenize(word, self._view.reader.analyzer)
+            if len(toks) != 1:
+                raise ValueError(
+                    f"suggest takes one analyzable word, got {word!r}"
+                )
+            stem = toks[0]
             cands = self._expand_fuzzy(stem, max_dist, cap=None)
             dfs = self._df_of(cands)
         ranked = sorted(
@@ -559,7 +509,7 @@ class TopKServer:
     def _df_of(self, terms: list[str]) -> dict[str, int]:
         missing = [t for t in terms if t not in self._stats_cache]
         if missing:
-            got = self._slices.term_dfs(missing)
+            got = self._view.reader.term_stats_local(missing)
             self._stats_cache.update({t: got.get(t, 0) for t in missing})
         return {t: self._stats_cache[t] for t in terms}
 
@@ -569,50 +519,37 @@ class TopKServer:
         self, query_text: str, k: int = 13, offset: int = 0
     ) -> list[tuple[int, float, int]]:
         """[(doc_id, score, rank)] — rank-identical to wand_topk/exact_topk
-        (same parse, same idf, same scoring kernel)."""
-        self._load_tombstones()
-        branches = parse_disjunction(query_text, self.analyzer)
-        validate_branches(branches)
-        multi = len(branches) > 1
-        pq: ParsedQuery = branches[0]
-        if not multi and not pq.terms and not pq.const_clauses:
-            raise ValueError("query has no positive terms")
-        pos_terms = tuple(
-            dict.fromkeys(t for br in branches for t in br.terms)
-        )
-        phrase_terms = [
-            t
-            for br in branches
-            for ph in (br.phrases + br.neg_phrases)
-            for t in ph
-        ]
-        neg_terms = tuple(
-            dict.fromkeys(t for br in branches for t in br.neg_terms)
-        )
+        (same parse, same idf, same scoring kernel) on the snapshot the
+        last refresh() opened."""
         with self._lock:
+            # one view per query, read under the lock refresh() swaps it
+            # under, so every cache fill below reads the view's own files
+            view = self._view
+            idx = view.reader
+            branches = parse_disjunction(query_text, idx.analyzer)
+            validate_branches(branches)
+            multi = len(branches) > 1
+            pq = branches[0]
+            pos_terms, all_terms = query_terms(branches)
             # expansion reads/warms the vocabulary buckets and the fuzzy
             # LRU, so it must sit inside the same lock as the cache fill
             # (multi-branch queries carry no prefixes — validate_branches)
             expansions = {
                 p: self._expand_prefix(p)
                 for p in dict.fromkeys(pq.prefixes + pq.neg_prefixes)
-            } if not multi else {}
+            }
             fexpansions = {
                 f: self._expand_fuzzy(*f)
                 for f in dict.fromkeys(pq.fuzzies + pq.neg_fuzzies)
-            } if not multi else {}
-            exp_terms = [
-                t
-                for ts in list(expansions.values())
-                + list(fexpansions.values())
-                for t in ts
-            ]
+            }
             all_terms = list(
                 dict.fromkeys(
-                    pos_terms
-                    + neg_terms
-                    + tuple(phrase_terms)
-                    + tuple(exp_terms)
+                    all_terms
+                    + [
+                        t
+                        for ts in (*expansions.values(), *fexpansions.values())
+                        for t in ts
+                    ]
                 )
             )
             self._read_terms(all_terms)
@@ -624,9 +561,9 @@ class TopKServer:
             any(dfs[t] == 0 for t in br.terms) for br in branches
         ):
             return []  # every branch has a dead term
-        idf = term_idfs(self._n_docs, dfs)
+        idf = term_idfs(idx.n_docs, dfs)
 
-        t_ids, t_gens = self._tomb or (None, None)
+        t_ids, t_gens = view.tomb or (None, None)
         lists: dict[str, tuple] = {}
         for t in all_terms:
             if cached[t][0].size == 0:
@@ -685,8 +622,6 @@ class TopKServer:
                 if t in lists:
                     allow = allow[~np.isin(allow, lists[t][0])]
             if pq.neg_phrases and allow.size:
-                from .wand import _phrase_mask
-
                 pos_max = max(
                     (
                         int(lists[t][3].max())
@@ -710,72 +645,11 @@ class TopKServer:
                 for i, d in enumerate(page)
             ]
         doc_ids, scores = score_branch_lists(
-            branches, lists, idf, self.k1, self.b, self._avgdl, n_keep,
+            branches, lists, idf, idx.k1, idx.b, idx.avgdl, n_keep,
             allow_ids=allow,
         )
         return [
             (int(d), float(s) + prefix_const, i + 1)
             for i, (d, s) in enumerate(zip(doc_ids, scores))
-            if i + 1 > offset
-        ]
-
-
-@dataclass
-class ShardedTopKServer:
-    """Chunk-striped serving fan-out — the 10^12-doc shape of the tier.
-
-    N TopKServers each own the blocks whose chunk % n_shards == shard_idx
-    (disjoint, complete). A query fans out to every shard (threads here;
-    shard RPCs in a real deployment — the per-shard code is identical) and
-    the per-shard top-(offset+k) lists merge by (score desc, doc_id asc).
-
-    Exactness: BM25 stats are GLOBAL per shard (same manifests, same
-    term_stats), scores are per-document, and every doc lives in exactly one
-    shard — so the merged top-k is bit-identical to the unsharded server's.
-    Per-shard work and cache residency shrink by ~n_shards; head-term decode
-    parallelizes across shards instead of serializing in one process."""
-
-    index_dir: str
-    n_shards: int = 4
-    _shards: list[TopKServer] = field(default_factory=list)
-
-    @classmethod
-    def open(cls, index_dir: str, n_shards: int = 4) -> "ShardedTopKServer":
-        srv = cls(index_dir, n_shards)
-        srv._shards = [
-            TopKServer.open(index_dir, shard=(i, n_shards))
-            for i in range(n_shards)
-        ]
-        return srv
-
-    def refresh(self) -> None:
-        for s in self._shards:
-            s.refresh()
-
-    def warmup(self, preload_top_terms: int = 0) -> None:
-        """Startup preload on every shard (TopKServer.warmup parity);
-        `preload_top_terms` forwards — each shard decodes only its own
-        chunk stripe of the head terms, so the warmer parallelizes
-        exactly like the queries it protects."""
-        for s in self._shards:
-            s.warmup(preload_top_terms=preload_top_terms)
-
-    def topk(
-        self, query_text: str, k: int = 13, offset: int = 0
-    ) -> list[tuple[int, float, int]]:
-        from concurrent.futures import ThreadPoolExecutor
-
-        n_keep = offset + k
-        with ThreadPoolExecutor(max_workers=self.n_shards) as pool:
-            parts = list(
-                pool.map(lambda s: s.topk(query_text, k=n_keep), self._shards)
-            )
-        merged = sorted(
-            ((d, s) for part in parts for d, s, _ in part),
-            key=lambda x: (-x[1], x[0]),
-        )[:n_keep]
-        return [
-            (d, s, i + 1)
-            for i, (d, s) in enumerate(merged)
             if i + 1 > offset
         ]

@@ -80,9 +80,9 @@ from .bm25 import (
     PREFIX_SCORE,
     ParsedQuery,
     parse_disjunction,
-    parse_query,
     prefix_doc_filter,
     prefix_only_topk,
+    query_terms,
     validate_branches,
 )
 
@@ -688,8 +688,6 @@ def wand_topk(
     validate_branches(branches)
     if len(branches) == 1:
         pq = branches[0]
-        if not pq.terms and not pq.const_clauses:
-            raise ValueError("query has no positive terms")
         if pq.prefixes or pq.neg_prefixes or pq.fuzzies or pq.neg_fuzzies:
             filter_docs = prefix_doc_filter(index, pq, filter_docs)
         if not pq.terms:
@@ -700,23 +698,8 @@ def wand_topk(
 
     spark = index.spark
     n_keep = offset + k
-    pos_terms = tuple(
-        dict.fromkeys(t for br in branches for t in br.terms)
-    )
+    pos_terms, all_terms = query_terms(branches)
     has_phrases = any(br.phrases or br.neg_phrases for br in branches)
-    phrase_terms = [
-        t
-        for br in branches
-        for ph in (br.phrases + br.neg_phrases)
-        for t in ph
-    ]
-    all_terms = list(
-        dict.fromkeys(
-            pos_terms
-            + tuple(t for br in branches for t in br.neg_terms)
-            + tuple(phrase_terms)
-        )
-    )
     k1, b, avgdl = index.k1, index.b, index.avgdl
 
     cols = ["term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin",
@@ -861,8 +844,6 @@ def match_docs(
     validate_branches(branches)
     if len(branches) == 1:
         pq = branches[0]
-        if not pq.terms and not pq.const_clauses:
-            raise ValueError("query has no positive terms")
         if pq.prefixes or pq.neg_prefixes or pq.fuzzies or pq.neg_fuzzies:
             filter_docs = prefix_doc_filter(index, pq, filter_docs)
         if not pq.terms:
@@ -881,19 +862,7 @@ def match_docs(
                 base = base.join(neg, "doc_id", "left_anti")
             return _phrase_filter(index, base, pq)
     has_phrases = any(br.phrases or br.neg_phrases for br in branches)
-    phrase_terms = [
-        t
-        for br in branches
-        for ph in (br.phrases + br.neg_phrases)
-        for t in ph
-    ]
-    all_terms = list(
-        dict.fromkeys(
-            tuple(t for br in branches for t in br.terms)
-            + tuple(t for br in branches for t in br.neg_terms)
-            + tuple(phrase_terms)
-        )
-    )
+    _pos_terms, all_terms = query_terms(branches)
 
     cols = ["term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin", "gen"]
     if has_phrases:

@@ -16,7 +16,7 @@ from share_spark.query.bm25 import (
     parse_query,
     split_disjunction,
 )
-from share_spark.query.serve import ShardedTopKServer, TopKServer
+from share_spark.query.serve import TopKServer
 from share_spark.query.wand import match_docs, wand_topk
 
 from .frozen_bm25 import FrozenIndex
@@ -113,18 +113,11 @@ def server(built_index):
     return TopKServer.open(built_index.index_dir)
 
 
-@pytest.fixture(scope="module")
-def sharded(built_index):
-    return ShardedTopKServer.open(built_index.index_dir, n_shards=3)
-
-
 @pytest.mark.parametrize("qtext", QUERIES)
-def test_serve_or_matches_oracle(server, sharded, frozen, qtext):
+def test_serve_or_matches_oracle(server, frozen, qtext):
     want = [(d, s) for _, d, s in oracle_or_topk(frozen, qtext)]
     got = [(d, round(s, 9)) for d, s, _ in server.topk(qtext, k=13)]
     assert got == want
-    got_sh = [(d, round(s, 9)) for d, s, _ in sharded.topk(qtext, k=13)]
-    assert got_sh == want
 
 
 def test_match_docs_or(built_index, frozen):

@@ -7,7 +7,7 @@ clause is a required membership constraint (doc contains >=1 index term
 within Levenshtein distance N of the stem) scored as a CONSTANT +1.0 — the
 constant-score analog of Lucene's multi-term rewrite, shared with prefix
 clauses; a negative clause excludes. All execution paths — exact, WAND
-(both plans), serve, sharded serve — must be rank- AND score-identical,
+(both transports), serve — must be rank- AND score-identical,
 which requires the distributed (JVM levenshtein) and serve (numpy DP)
 expansions to produce the same term set.
 """
@@ -21,12 +21,7 @@ from share_spark.query.bm25 import (
     expand_fuzzy,
     parse_query,
 )
-from share_spark.query.serve import (
-    ShardedTopKServer,
-    TopKServer,
-    _lev_mask,
-    _lev_one as lev,
-)
+from share_spark.query.serve import TopKServer, _lev_one as lev
 from share_spark.query.wand import match_docs, wand_topk
 
 from .frozen_bm25 import FrozenIndex
@@ -110,18 +105,11 @@ def server(built_index):
     return TopKServer.open(built_index.index_dir)
 
 
-@pytest.fixture(scope="module")
-def sharded(built_index):
-    return ShardedTopKServer.open(built_index.index_dir, n_shards=3)
-
-
 @pytest.mark.parametrize("qtext", QUERIES)
-def test_serve_fuzzy_matches_oracle(server, sharded, frozen, qtext):
+def test_serve_fuzzy_matches_oracle(server, frozen, qtext):
     want = [(d, s) for _, d, s in oracle_topk(frozen, qtext)]
     got = [(d, round(s, 9)) for d, s, _ in server.topk(qtext, k=13)]
     assert got == want
-    got_sh = [(d, round(s, 9)) for d, s, _ in sharded.topk(qtext, k=13)]
-    assert got_sh == want
 
 
 def test_expansions_agree_across_tiers(built_index, server, frozen):
@@ -175,18 +163,6 @@ def test_parse_fuzzy_shapes():
     assert pq.phrase_slops == (1,)
     # a bare '~' is not a clause
     assert parse_query("~ plain").fuzzies == ()
-
-
-def test_lev_mask_kernel():
-    cands = ["danger", "dangers", "dagger", "dnger", "x", "", "dang"]
-    import numpy as np
-
-    got = _lev_mask(cands, "danger", 1)
-    want = np.array([lev(c, "danger") <= 1 for c in cands])
-    assert (got == want).all()
-    got2 = _lev_mask(cands, "danger", 2)
-    want2 = np.array([lev(c, "danger") <= 2 for c in cands])
-    assert (got2 == want2).all()
 
 
 # --------------------------------------------------------- generative fuzz

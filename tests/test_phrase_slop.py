@@ -11,7 +11,7 @@ agree exactly.
 import pytest
 
 from share_spark.query.bm25 import exact_topk, parse_query
-from share_spark.query.serve import ShardedTopKServer, TopKServer
+from share_spark.query.serve import TopKServer
 from share_spark.query.wand import wand_topk
 
 from .frozen_bm25 import FrozenIndex
@@ -102,18 +102,11 @@ def server(built_index):
     return TopKServer.open(built_index.index_dir)
 
 
-@pytest.fixture(scope="module")
-def sharded(built_index):
-    return ShardedTopKServer.open(built_index.index_dir, n_shards=3)
-
-
 @pytest.mark.parametrize("qtext", QUERIES)
-def test_serve_slop_matches_oracle(server, sharded, frozen, qtext):
+def test_serve_slop_matches_oracle(server, frozen, qtext):
     want = [(d, s) for _, d, s in oracle_topk(frozen, qtext)]
     got = [(d, round(s, 9)) for d, s, _ in server.topk(qtext, k=13)]
     assert got == want
-    got_sh = [(d, round(s, 9)) for d, s, _ in sharded.topk(qtext, k=13)]
-    assert got_sh == want
 
 
 def test_slop_strictly_widens(built_index):

@@ -4,8 +4,8 @@ by default in ES; elastic8.py:242-257 passes the query through unchanged).
 Semantics under test, pinned against the frozen oracle: a positive prefix
 clause is a required membership constraint (doc contains >=1 term with the
 prefix) scored as a CONSTANT +1.0 (Lucene constant-score multi-term
-rewrite); a negative clause excludes. All four execution paths — exact,
-WAND (both plans), serve, sharded serve — must be rank- AND score-identical.
+rewrite); a negative clause excludes. All three execution paths — exact,
+WAND (both transports), serve — must be rank- AND score-identical.
 """
 
 import pytest
@@ -15,7 +15,7 @@ from share_spark.query.bm25 import (
     exact_topk,
     parse_query,
 )
-from share_spark.query.serve import ShardedTopKServer, TopKServer
+from share_spark.query.serve import TopKServer
 from share_spark.query.wand import match_docs, wand_topk
 
 from .frozen_bm25 import FrozenIndex
@@ -86,18 +86,11 @@ def server(built_index):
     return TopKServer.open(built_index.index_dir)
 
 
-@pytest.fixture(scope="module")
-def sharded(built_index):
-    return ShardedTopKServer.open(built_index.index_dir, n_shards=3)
-
-
 @pytest.mark.parametrize("qtext", QUERIES)
-def test_serve_prefix_matches_oracle(server, sharded, frozen, qtext):
+def test_serve_prefix_matches_oracle(server, frozen, qtext):
     want = [(d, s) for _, d, s in oracle_topk(frozen, qtext)]
     got = [(d, round(s, 9)) for d, s, _ in server.topk(qtext, k=13)]
     assert got == want
-    got_sh = [(d, round(s, 9)) for d, s, _ in sharded.topk(qtext, k=13)]
-    assert got_sh == want
 
 
 def test_match_docs_prefix(built_index, frozen):

@@ -1,4 +1,4 @@
-"""Serving tier: rank identity vs the exact scorer, tombstone visibility."""
+"""Serving tier: rank identity vs the exact scorer, snapshot visibility."""
 
 import pytest
 
@@ -48,8 +48,8 @@ def test_serve_offset(built_index):
 
 
 def test_serve_sees_incremental_updates(spark, pages_pdf, tmp_path):
-    """A new generation + tombstones written AFTER the server opened must be
-    visible (manifest refresh + tombstone mtime check)."""
+    """A new generation + tombstones written AFTER the server opened are
+    visible after refresh()."""
     from share_spark.index.build import IndexConfig, IndexReader, build_index
     from share_spark.streaming.incremental import apply_incremental
 
@@ -72,6 +72,57 @@ def test_serve_sees_incremental_updates(spark, pages_pdf, tmp_path):
     assert top_doc not in [d for _, d, _ in after]
     want = _x(exact_topk(IndexReader.open(spark, idx_dir), "danger", k=13))
     assert after == want
+
+
+def test_server_serves_its_snapshot_until_refresh(spark, pages_pdf, tmp_path):
+    """A re-crawl commits a new generation and the tombstone of the doc's
+    old copy in one manifest swap. A server opened before it keeps serving
+    its snapshot, the re-crawled doc on its old page included, until
+    refresh(); it never sees the tombstone without the generation that
+    replaces the doc. A refresh() taken while clients query swaps the
+    snapshot whole: every page is the old snapshot's or the new one's, and
+    afterwards every page equals exact_topk on a freshly opened reader (no
+    cache fill from the old snapshot outlives the swap)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from share_spark.index.build import IndexConfig, IndexReader, build_index
+    from share_spark.streaming.incremental import apply_incremental
+
+    idx_dir = str(tmp_path / "idx")
+    cfg = IndexConfig(block_size=32, chunk_docs=64)
+    build_index(spark, spark.createDataFrame(pages_pdf), idx_dir, cfg)
+    srv = TopKServer.open(idx_dir)
+    queries = ["danger", "warning danger", "the"]
+    old = {q: _s(srv.topk(q, k=300)) for q in queries}
+    top_doc = old["danger"][0][1]
+
+    # re-crawl the top hit with text that still holds the query term
+    changed = pages_pdf[pages_pdf.doc_id == top_doc].copy()
+    changed["text"] = "a changed page that still warns of danger"
+    changed["html"] = None
+    apply_incremental(spark, idx_dir, spark.createDataFrame(changed), cfg)
+    fresh = IndexReader.open(spark, idx_dir)
+    want = {q: _x(exact_topk(fresh, q, k=300)) for q in queries}
+    assert top_doc in [d for _, d, _ in want["danger"]]
+    assert want["danger"] != old["danger"]
+
+    assert {q: _s(srv.topk(q, k=300)) for q in queries} == old
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [
+                pool.submit(lambda q=q: (q, _s(srv.topk(q, k=300))))
+                for q in queries * 16
+            ]
+            srv.refresh()
+            pages = [f.result(timeout=120) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    for q, page in pages:
+        assert page in (old[q], want[q]), q
+    assert {q: _s(srv.topk(q, k=300)) for q in queries} == want
 
 
 def test_serve_cache_lru_byte_bounded(built_index):
@@ -107,32 +158,6 @@ def test_serve_cache_lru_byte_bounded(built_index):
     assert _s(srv.topk("the data", k=13)) == want
 
 
-def test_sharded_server_bit_identical_to_single(built_index):
-    """The chunk-striped fan-out (ShardedTopKServer) merges per-shard top-k
-    into EXACTLY the single server's result — scores, order, offsets —
-    because stats stay global and every doc lives in one shard."""
-    from share_spark.query.serve import ShardedTopKServer
-
-    srv = TopKServer.open(built_index.index_dir)
-    sh = ShardedTopKServer.open(built_index.index_dir, n_shards=4)
-    for q in ["danger", "the data", "danger -warning",
-              '"nothing valued is here"', "the data science"]:
-        assert _s(sh.topk(q, k=13)) == _s(srv.topk(q, k=13)), q
-    assert _s(sh.topk("the data", k=10, offset=10)) == _s(
-        srv.topk("the data", k=10, offset=10)
-    )
-    # striping is disjoint and complete: per-shard postings partition the
-    # unsharded term's postings
-    srv._read_terms(["danger"])
-    whole = set(srv._term_cache["danger"][0].tolist())
-    parts = []
-    for s in sh._shards:
-        s._read_terms(["danger"])
-        parts.append(set(s._term_cache["danger"][0].tolist()))
-    assert set.union(*parts) == whole
-    assert sum(len(p) for p in parts) == len(whole)
-
-
 def test_warmup_preloads_top_df_terms(built_index):
     """warmup(preload_top_terms=N) decodes the N highest-df terms into
     the cache at startup; a subsequent head-term query touches no row
@@ -157,8 +182,9 @@ def test_warmup_preloads_top_df_terms(built_index):
     assert top8 <= set(srv._term_cache)
     head = stats.iloc[0]["term"]
     calls = []
-    orig = srv._slices.read
-    srv._slices.read = lambda *a, **k: calls.append(a) or orig(*a, **k)
+    slices = srv._view.reader.slices
+    orig = slices.read
+    slices.read = lambda *a, **k: calls.append(a) or orig(*a, **k)
     got = _s(srv.topk(head, k=13))
     # df lookup may hit term_stats, but postings must come from cache
     assert not any("postings" in str(a) for a in calls), calls
@@ -217,9 +243,9 @@ def test_serve_tombstones_collapse_like_the_codec(spark, pages_pdf, tmp_path):
     commit_manifest(idx_dir, tombstones="tombstones_v9", operation="delete",
                     summary={})
     srv = TopKServer.open(idx_dir)
-    srv._load_tombstones()
+    tomb = srv._view.tomb
     want = local_tombstone_arrays(idx_dir, resolve_tombstone_dir(idx_dir))
-    assert [a.tolist() for a in srv._tomb] == [a.tolist() for a in want]
-    assert srv._tomb[0].tolist() == [3, 7, 12, 40]
-    assert srv._tomb[1].tolist() == [9, 3, 1, 5]
-    assert all(a.dtype == np.int64 for a in srv._tomb)
+    assert [a.tolist() for a in tomb] == [a.tolist() for a in want]
+    assert tomb[0].tolist() == [3, 7, 12, 40]
+    assert tomb[1].tolist() == [9, 3, 1, 5]
+    assert all(a.dtype == np.int64 for a in tomb)

@@ -2,7 +2,7 @@
 the frozen pure-Python BM25 oracle (SURVEY.md §5 item iii), via the serving
 tier (millisecond per query — no Spark job per example, so hypothesis can
 afford real breadth: term combos, phrases lifted from real documents,
-negations, unknown terms, offset paging, single vs sharded server).
+negations, unknown terms, offset paging).
 
 The Spark paths (exact/WAND) are pinned to the same oracle by
 test_bm25_rank_identity.py and to the serve tier by the shared-kernel
@@ -12,7 +12,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from share_spark.query.serve import ShardedTopKServer, TopKServer
+from share_spark.query.serve import TopKServer
 from tests.frozen_bm25 import FrozenIndex
 
 SCORE_TOL = 1e-9
@@ -26,11 +26,6 @@ def frozen(pages_pdf):
 @pytest.fixture(scope="module")
 def server(built_index):
     return TopKServer.open(built_index.index_dir)
-
-
-@pytest.fixture(scope="module")
-def sharded(built_index):
-    return ShardedTopKServer.open(built_index.index_dir, n_shards=3)
 
 
 def _vocab(frozen):
@@ -75,21 +70,3 @@ def _check(srv, frozen, q, k, offset):
 def test_serve_rank_identity_fuzz(server, frozen, data):
     q, k, offset = data.draw(queries(frozen))
     _check(server, frozen, q, k, offset)
-
-
-@settings(max_examples=100, deadline=None)
-@given(data=st.data())
-def test_sharded_serve_rank_identity_fuzz(sharded, frozen, data):
-    q, k, offset = data.draw(queries(frozen))
-    _check(sharded, frozen, q, k, offset)
-
-
-@settings(max_examples=100, deadline=None)
-@given(data=st.data())
-def test_sharded_bit_identical_to_single(server, sharded, frozen, data):
-    """The chunk-striped fan-out must be BIT-identical to the single
-    server — same merge contract as a distributed deployment."""
-    q, k, offset = data.draw(queries(frozen))
-    assert sharded.topk(q, k=k, offset=offset) == server.topk(
-        q, k=k, offset=offset
-    )

@@ -156,8 +156,9 @@ def test_default_compact_expires_history(spark, lineage_index):
 
 
 def test_serve_tier_follows_tombstone_versions(spark, lineage_index):
-    """The serving tier must pick up a NEW tombstone version committed
-    after it opened (pointer swing, not in-place mtime change)."""
+    """The serving tier serves the snapshot it opened until refresh(),
+    which picks up a NEW tombstone version committed after it opened
+    (pointer swing, not in-place mtime change)."""
     from share_spark.query.serve import TopKServer
 
     d, target, victim = lineage_index
@@ -166,6 +167,8 @@ def test_serve_tier_follows_tombstone_versions(spark, lineage_index):
     assert victim not in before
     next_victim = sorted(before)[0]
     expel(spark, d, [next_victim])
+    assert {doc for doc, _s, _r in srv.topk("danger", k=300)} == before
+    srv.refresh()
     after = {doc for doc, _s, _r in srv.topk("danger", k=300)}
     assert after == before - {next_victim}
 
