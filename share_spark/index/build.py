@@ -219,20 +219,18 @@ def _parquet_rows(path: str) -> int:
 
 
 class SliceReader:
-    """The driver's one reader of an index's term-sorted files and of its
-    tombstone versions, shared by IndexReader (term stats, the driver top-k
-    and its slice size) and the serve tier (query/serve.py); it needs no
-    Spark session. Per generation and stage (postings_term, the
-    term-sorted serve copy, or term_stats) the parquet footers are read
-    once into a directory of row groups, and a row group's sorted term
-    column, its exact term dictionary, once when a lookup first reaches
-    it. A read then touches only the row groups that hold a wanted term:
-    the build shuffles by hash(term, window), so footer min/max alone spans
-    most of the vocabulary. The current tombstone version is read once per
-    (name, newest file mtime). The index dir is local by contract (its
-    manifests are read with open()): a missing file, or a stage whose row
-    count disagrees with its generation manifest, is a broken index and
-    raises."""
+    """The driver's one reader of an index's term-sorted files, shared by
+    IndexReader (term stats, the driver top-k and its slice size) and the
+    serve tier (query/serve.py); it needs no Spark session. Per generation
+    and stage (postings_term, the term-sorted serve copy, or term_stats)
+    the parquet footers are read once into a directory of row groups, and
+    a row group's sorted term column, its exact term dictionary, once when
+    a lookup first reaches it. A read then touches only the row groups that
+    hold a wanted term: the build shuffles by hash(term, window), so footer
+    min/max alone spans most of the vocabulary. The index dir is local by
+    contract (its manifests are read with open()): a missing file, or a
+    stage whose row count disagrees with its generation manifest, is a
+    broken index and raises."""
 
     def __init__(self, index_dir: str, gen_manifests: list[dict]):
         self.index_dir = index_dir
@@ -351,16 +349,15 @@ class SliceReader:
                 )
         return pa.concat_tables(tables) if tables else None
 
-    def slice_bytes(self, terms, columns, tombstones: str | None) -> int:
-        """Bytes the driver reads for a query: the compressed size of
-        `columns` in the serve-copy row groups that hold one of `terms`,
-        over every generation, plus the files of tombstone version
-        `tombstones`."""
-        total = self._tomb_files(tombstones)[2]
-        for gen in self._gens:
-            for _pf, _rg, sizes, _held in self._hits(gen, "postings_term", terms):
-                total += sum(sizes.get(c, 0) for c in columns)
-        return total
+    def slice_bytes(self, terms, columns) -> int:
+        """Compressed bytes of `columns` in the serve-copy row groups that
+        hold one of `terms`, over every generation."""
+        return sum(
+            sizes.get(c, 0)
+            for gen in self._gens
+            for _pf, _rg, sizes, _held in self._hits(gen, "postings_term", terms)
+            for c in columns
+        )
 
     def term_dfs(self, terms) -> dict[str, int]:
         """df per term of `terms` that the index holds, summed over the
@@ -374,43 +371,6 @@ class SliceReader:
                 ):
                     out[t] = out.get(t, 0) + int(d)
         return out
-
-    def tombstones(self, name: str | None):
-        """(doc ids sorted unique, aligned max before_gen) of tombstone
-        version `name` (a dir of the index), collapsed as the codec does;
-        None when there is no such dir. One slot, kept while the version's
-        name and newest file mtime hold (versions are immutable, the legacy
-        in-place dir is rewritten)."""
-        import pyarrow.parquet as pq
-
-        files, key, _nbytes = self._tomb_files(name)
-        if key is None:
-            return None
-        with self._lock:
-            slot = self._cache.get("tomb")
-            if slot is None or slot[0] != key:
-                parts = [
-                    pq.read_table(f, columns=["doc_id", "before_gen"]) for f in files
-                ]
-                ids, before = (
-                    np.concatenate(
-                        [np.empty(0, np.int64)] + [p.column(c).to_numpy() for p in parts]
-                    )
-                    for c in ("doc_id", "before_gen")
-                )
-                slot = self._cache["tomb"] = (key, collapse_tombstones(ids, before))
-            return slot[1]
-
-    def _tomb_files(self, name: str | None) -> tuple:
-        """(parquet files, (name, newest mtime), total bytes) of tombstone
-        version `name`; ([], None, 0) when there is no such dir."""
-        path = None if name is None else os.path.join(self.index_dir, name)
-        if path is None or not os.path.isdir(path):
-            return [], None, 0
-        files = _parquet_files(path)
-        st = [os.stat(f) for f in files]
-        key = (name, max((x.st_mtime for x in st), default=0.0))
-        return files, key, sum(x.st_size for x in st)
 
 
 def check_layout(gen_manifest: dict) -> None:
@@ -856,21 +816,18 @@ def merge_generations_blocks(
     )
 
 
-def local_tombstone_arrays(
-    index_dir: str, tombstone_dir: str | None, cap: int = 2_000_000
-):
-    """Driver-side (sorted doc_ids, aligned max before_gen) of a tombstone
-    version, read by SliceReader — parquet footers bound the size first, so
-    an over-cap set costs one listing and no reads. Returns None only when
-    the set is larger than cap, where compaction declines the block merge
-    and rebuilds (merge_declined="tombstones"). Empty arrays when there are
-    no tombstones at all. A missing or unreadable tombstone version raises
-    — it is a broken index, not a reason to change merge paths."""
-    if tombstone_dir is None:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    if _parquet_rows(os.path.join(index_dir, tombstone_dir)) > cap:
+def local_tombstone_arrays(reader: "IndexReader", cap: int = 2_000_000):
+    """`reader`.tombstone_arrays() when the version holds at most `cap`
+    rows, counted from parquet footers first; None over the cap, where
+    compaction declines the block merge and rebuilds
+    (merge_declined="tombstones"). A missing or unreadable version raises
+    — a broken index, not a reason to change merge paths."""
+    import pyarrow.parquet as pq
+
+    files, _nbytes = reader.tombstone_files()
+    if sum(pq.ParquetFile(f).metadata.num_rows for f in files) > cap:
         return None
-    return SliceReader(index_dir, []).tombstones(tombstone_dir)
+    return reader.tombstone_arrays()
 
 
 def dedup_pages(pages: DataFrame) -> DataFrame:
@@ -1555,6 +1512,11 @@ class IndexReader:
     # the driver's reader of this view's files (term stats, the driver
     # top-k, the serve tier)
     slices: SliceReader = field(init=False, repr=False)
+    # the tombstone version, resolved once: "files", "arrays"
+    _tomb: dict = field(init=False, repr=False, default_factory=dict)
+    _tomb_lock: threading.Lock = field(
+        init=False, repr=False, default_factory=threading.Lock
+    )
 
     def __post_init__(self):
         self.slices = SliceReader(self.index_dir, self.gen_manifests)
@@ -1712,6 +1674,37 @@ class IndexReader:
                 )
             self._df_cache[key] = tomb
         return self._df_cache[key]
+
+    def tombstone_files(self) -> tuple[list[str], int]:
+        """(parquet files, total bytes) of this reader's tombstone version,
+        ([], 0) when it has none, listed once: no writer rewrites a version
+        (merges write a new tombstones_v{n}), so a warm query touches no
+        directory. A pointer to a missing dir raises: a broken index."""
+        with self._tomb_lock:
+            if "files" not in self._tomb:
+                name = self.tombstone_dir
+                path = name and os.path.join(self.index_dir, name)
+                files = _parquet_files(path) if path else []
+                self._tomb["files"] = (files, sum(map(os.path.getsize, files)))
+            return self._tomb["files"]
+
+    def tombstone_arrays(self) -> tuple[np.ndarray, np.ndarray]:
+        """(doc ids sorted unique, aligned max before_gen) of this reader's
+        tombstone version (collapse_tombstones; empty when it has none),
+        read once, when the driver first needs them: the driver top-k, the
+        serve tier, compaction's block merge. The exchange reads the
+        version in Spark instead."""
+        import pyarrow.parquet as pq
+
+        files, _nbytes = self.tombstone_files()
+        with self._tomb_lock:
+            if "arrays" not in self._tomb:
+                rows = [np.empty(0, np.int64)] * 2
+                if files:
+                    tbl = pq.read_table(files, columns=["doc_id", "before_gen"])
+                    rows = [c.to_numpy() for c in tbl.columns]
+                self._tomb["arrays"] = collapse_tombstones(*rows)
+            return self._tomb["arrays"]
 
     def live_docs(self) -> DataFrame:
         """docs() minus generation-superseded and expelled rows."""

@@ -7,11 +7,10 @@ how little it reads. The reference has the same split: Django builds / ES
 serves (SURVEY.md §1). This module is the "ES shard fetch" half:
 
 - the server serves one snapshot of the index: an IndexReader opened
-  without a Spark session, with its tombstone version's collapsed arrays.
-  refresh() opens the current committed state and swaps it in whole, so a
-  new generation and the tombstones committed with it become visible
-  together, at refresh(), as Elasticsearch makes new segments and their
-  deletes visible at one refresh;
+  without a Spark session. refresh() opens the current committed state
+  and swaps it in whole, so a new generation and the tombstones committed
+  with it become visible together, at refresh(), as Elasticsearch makes
+  new segments and their deletes visible at one refresh;
 - per query it reads ONLY the row groups of the term-sorted serve copy
   whose term dictionary holds a query term, through the snapshot's
   SliceReader, the reader the driver top-k uses too — never a full scan,
@@ -19,10 +18,10 @@ serves (SURVEY.md §1). This module is the "ES shard fetch" half:
 - decoded per-term postings and per-term stats live in a bounded LRU cache
   (hot query terms are served from memory, like ES's segment page cache);
   refresh() drops it only when the (generation, build_id) list changes;
-- scoring reuses the EXACT numpy kernel of the distributed WAND path
-  (query/wand.score_branch_lists, which _ChunkScorer runs per chunk), so
-  served results are rank-identical to both wand_topk and exact_topk by
-  construction — one scorer, two transports.
+- evaluation is the driver top-k's own (query/wand.evaluate_lists over
+  whole term lists, scoring with the numpy kernel the exchange's tasks
+  run per chunk), so served results are rank-identical to both wand_topk
+  and exact_topk by construction.
 
 Scale shape: one server process serves one index; the per-query cost is
 O(query terms' postings), independent of corpus size.
@@ -35,26 +34,26 @@ import threading
 from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import NamedTuple
 
 import numpy as np
 
 from ..analysis import tokenize
 from ..index.build import FIELD_SEP, IndexReader
 from ..index.codec import live_list, term_lists
-from .bm25 import (
-    MAX_FUZZY_EXPANSIONS,
-    PREFIX_SCORE,
-    parse_disjunction,
-    query_terms,
-    validate_branches,
-)
-from .wand import _phrase_mask, score_branch_lists, term_idfs
+from . import bm25
+from .bm25 import PREFIX_SCORE, parse_disjunction, query_terms, validate_branches
+from .wand import _phrase_mask, evaluate_lists
 
-_BLOCK_COLS = [
-    "term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin", "dls_bin",
-    "pos_bin", "max_tf", "min_dl",
-]
+_BLOCK_COLS = ["term", "first_doc", "n", "docs_bin", "tfs_bin", "dls_bin", "pos_bin"]
+_NO_IDS = np.empty(0, dtype=np.int64)
+
+MAX_CACHED_TERMS = 4096  # with max_cache_bytes, the decoded-term LRU bound
+# terms one prefix clause (`dang*`) may expand to before the server refuses
+# the query: a single-letter prefix must not decode half the vocabulary
+# (the distributed paths stream, unbounded). Fuzzy clauses (`dnag~1`) are
+# refused past bm25.MAX_FUZZY_EXPANSIONS, as on the distributed paths.
+MAX_PREFIX_EXPANSIONS = 1024
+MAX_CACHED_FUZZY_EXPANSIONS = 512  # (stem, dist) expansions the LRU keeps
 
 
 def _entry_nbytes(entry: tuple) -> int:
@@ -101,7 +100,7 @@ def _lev_dp(mat: np.ndarray, stem: str) -> np.ndarray:
 
 def _lev_one(a: str, b: str) -> int:
     """Scalar Levenshtein for ranking an already-expanded candidate list
-    (bounded by max_fuzzy_expansions — never vocabulary-sized)."""
+    (bounded by bm25.MAX_FUZZY_EXPANSIONS — never vocabulary-sized)."""
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):
         cur = [i]
@@ -111,15 +110,6 @@ def _lev_one(a: str, b: str) -> int:
             )
         prev = cur
     return prev[-1]
-
-
-class _View(NamedTuple):
-    """One committed state of the index as the server serves it."""
-
-    reader: IndexReader
-    # the reader's tombstone version, collapsed (doc ids sorted unique,
-    # max before_gen), or None when the snapshot has no tombstones
-    tomb: tuple | None
 
 
 def _builds(reader: IndexReader) -> list[tuple]:
@@ -133,15 +123,6 @@ def _builds(reader: IndexReader) -> list[tuple]:
 @dataclass
 class TopKServer:
     index_dir: str
-    max_cached_terms: int = 4096
-    # hard bound on terms one prefix clause (`dang*`) may expand to before
-    # the server refuses the query (protects the in-process tier from a
-    # single-letter prefix decoding half the vocabulary; the distributed
-    # paths expand unbounded — they stream, this tier holds arrays)
-    max_prefix_expansions: int = 1024
-    # the distributed paths' refusal bound for fuzzy clauses (`dnag~1`), so
-    # both tiers refuse the same queries
-    max_fuzzy_expansions: int = MAX_FUZZY_EXPANSIONS
     # decoded-postings budget in BYTES: one head term's arrays can be GBs at
     # 10^9 postings, so a count bound alone cannot cap residency.  Sized so
     # a realistic hot term set stays resident — at 2M docs the 40-query
@@ -150,7 +131,7 @@ class TopKServer:
     # 0.58 s vs 0.07 s at 200k docs)
     max_cache_bytes: int = 1 << 30
     # the snapshot every query reads, replaced whole by refresh()
-    _view: _View | None = None
+    _reader: IndexReader | None = None
     # term -> decoded (ids, tfs, dls, pos, gens); true LRU: moved to end on
     # every hit, evicted from the front by accumulated nbytes
     _term_cache: "OrderedDict[str, tuple]" = field(default_factory=OrderedDict)
@@ -161,12 +142,10 @@ class TopKServer:
     # (stem, dist) -> expanded term list; the vocabulary DP is the
     # expensive part of a fuzzy query, and typo distributions are heavy-
     # tailed (the same misspellings recur), so a small LRU pays for
-    # itself. Bounded by count (entries are <= max_fuzzy_expansions short
-    # strings).
+    # itself, bounded by MAX_CACHED_FUZZY_EXPANSIONS.
     _fuzzy_cache: "OrderedDict[tuple, list]" = field(
         default_factory=OrderedDict
     )
-    max_cached_fuzzy_expansions: int = 512
     # coarse lock over the view swap and cache fill/eviction — a serving
     # tier answers many queries concurrently; scoring itself is lock-free
     # numpy
@@ -189,11 +168,10 @@ class TopKServer:
         list changed; otherwise the new snapshot keeps the old one's
         footers, since its files are the same."""
         reader = IndexReader.open(None, self.index_dir)
-        old = self._view
-        same = old is not None and _builds(old.reader) == _builds(reader)
+        old = self._reader
+        same = old is not None and _builds(old) == _builds(reader)
         if same:
-            reader.slices = old.reader.slices
-        view = _View(reader, reader.slices.tombstones(reader.tombstone_dir))
+            reader.slices = old.slices
         with self._lock:
             if not same:
                 self._term_cache.clear()
@@ -201,7 +179,7 @@ class TopKServer:
                 self._stats_cache.clear()
                 self._dsets.clear()
                 self._fuzzy_cache.clear()
-            self._view = view
+            self._reader = reader
 
     def warmup(self, preload_top_terms: int = 0) -> None:
         """Server-startup preload: parquet footers + per-row-group term
@@ -219,7 +197,7 @@ class TopKServer:
         worst one batch of already-preloaded terms is ever evicted; the
         long tail stays cold but tail terms are small (fast) by
         definition."""
-        reader = self._view.reader
+        reader = self._reader
         slices = reader.slices
         jobs = []
         for g in reader.gen_manifests:
@@ -285,12 +263,12 @@ class TopKServer:
         intersects [prefix, prefix+U+10FFFF), then a binary-search slice of
         each group's sorted term array — the serving analog of Lucene's
         term-dictionary prefix seek. Raises when the expansion exceeds
-        max_prefix_expansions (consistent refusal, never silent
+        MAX_PREFIX_EXPANSIONS (consistent refusal, never silent
         truncation — truncating would break rank identity with the
         distributed paths)."""
         hi = prefix + "\U0010ffff"
         out: set[str] = set()
-        reader = self._view.reader
+        reader = self._reader
         for g in reader.gen_manifests:
             entries = reader.slices.directory(g["generation"], "postings_term")
             for lo, top, pf, rg, _sizes in entries:
@@ -300,10 +278,10 @@ class TopKServer:
                 lo_i = np.searchsorted(terms, prefix, side="left")
                 hi_i = np.searchsorted(terms, hi, side="left")
                 out.update(terms[lo_i:hi_i].tolist())
-                if len(out) > self.max_prefix_expansions:
+                if len(out) > MAX_PREFIX_EXPANSIONS:
                     raise ValueError(
                         f"prefix {prefix!r}* expands to more than "
-                        f"{self.max_prefix_expansions} terms on the serve "
+                        f"{MAX_PREFIX_EXPANSIONS} terms on the serve "
                         "tier; narrow the prefix or use the distributed path"
                     )
         return sorted(out)
@@ -325,7 +303,7 @@ class TopKServer:
         if key in self._dsets:
             return self._dsets[key]
         terms: set[str] = set()
-        reader = self._view.reader
+        reader = self._reader
         for g in reader.gen_manifests:
             entries = reader.slices.directory(g["generation"], "postings_term")
             for _lo, _hi, pf, rg, _sizes in entries:
@@ -354,12 +332,12 @@ class TopKServer:
         set must equal bm25.expand_fuzzy's for rank identity. Results are
         LRU-cached per (stem, dist) — callers already hold self._lock.
 
-        `cap`: 0 (default) applies max_fuzzy_expansions (the QUERY-path
-        refusal); None expands unbounded — the suggest path wants the full
-        candidate set to rank top-k from, and its output is k rows either
-        way (uncapped results bypass the LRU: they can be vocabulary-band
-        sized)."""
-        limit = self.max_fuzzy_expansions if cap == 0 else cap
+        `cap`: 0 (default) applies bm25.MAX_FUZZY_EXPANSIONS (the
+        QUERY-path refusal, the distributed paths' own); None expands
+        unbounded — the suggest path wants the full candidate set to rank
+        top-k from, and its output is k rows either way (uncapped results
+        bypass the LRU: they can be vocabulary-band sized)."""
+        limit = bm25.MAX_FUZZY_EXPANSIONS if cap == 0 else cap
         ckey = (stem, dist)
         # cache READ is always valid — a stored entry is the COMPLETE
         # expansion (the limit refuses, never truncates); only the store
@@ -402,7 +380,7 @@ class TopKServer:
         expansion = sorted(out)
         if limit is not None:
             self._fuzzy_cache[ckey] = expansion
-            if len(self._fuzzy_cache) > self.max_cached_fuzzy_expansions:
+            if len(self._fuzzy_cache) > MAX_CACHED_FUZZY_EXPANSIONS:
                 self._fuzzy_cache.popitem(last=False)
         return expansion
 
@@ -426,7 +404,7 @@ class TopKServer:
                 missing.append(t)
         if not missing:
             return
-        tbl = self._view.reader.slices.slice(missing, _BLOCK_COLS)
+        tbl = self._reader.slices.slice(missing, _BLOCK_COLS)
         want = frozenset(missing)
         lists = term_lists(tbl, want, want) if tbl is not None else {}
         empty = (
@@ -462,11 +440,11 @@ class TopKServer:
 
     def _evict(self, protect: set) -> None:
         """Evict least-recently-used terms until BOTH bounds hold: entry
-        count <= max_cached_terms and resident bytes <= max_cache_bytes.
+        count <= MAX_CACHED_TERMS and resident bytes <= max_cache_bytes.
         Terms of the in-flight query are never evicted (they're about to be
         scored), so a single query wider than the budget still completes."""
         while (
-            len(self._term_cache) > self.max_cached_terms
+            len(self._term_cache) > MAX_CACHED_TERMS
             or self._term_cache_nbytes > self.max_cache_bytes
         ):
             victim = next(
@@ -487,12 +465,12 @@ class TopKServer:
         ordering. Built from the same bucketed-vocabulary expansion the
         fuzzy query path uses — but UNCAPPED: suggest wants the best k of
         the full candidate set, so it must not inherit the query path's
-        max_fuzzy_expansions refusal (the distributed twin, TakeOrdered
+        bm25.MAX_FUZZY_EXPANSIONS refusal (the distributed twin, TakeOrdered
         over the dictionary, has no cap either). df is summed across
         generations. The exact word, if indexed, ranks first at distance 0
         (callers typically skip suggesting when that happens)."""
         with self._lock:
-            toks = tokenize(word, self._view.reader.analyzer)
+            toks = tokenize(word, self._reader.analyzer)
             if len(toks) != 1:
                 raise ValueError(
                     f"suggest takes one analyzable word, got {word!r}"
@@ -509,7 +487,7 @@ class TopKServer:
     def _df_of(self, terms: list[str]) -> dict[str, int]:
         missing = [t for t in terms if t not in self._stats_cache]
         if missing:
-            got = self._view.reader.term_stats_local(missing)
+            got = self._reader.term_stats_local(missing)
             self._stats_cache.update({t: got.get(t, 0) for t in missing})
         return {t: self._stats_cache[t] for t in terms}
 
@@ -522,13 +500,11 @@ class TopKServer:
         (same parse, same idf, same scoring kernel) on the snapshot the
         last refresh() opened."""
         with self._lock:
-            # one view per query, read under the lock refresh() swaps it
-            # under, so every cache fill below reads the view's own files
-            view = self._view
-            idx = view.reader
+            # one snapshot per query, read under the lock refresh() swaps
+            # it under, so every cache fill below reads its own files
+            idx = self._reader
             branches = parse_disjunction(query_text, idx.analyzer)
             validate_branches(branches)
-            multi = len(branches) > 1
             pq = branches[0]
             pos_terms, all_terms = query_terms(branches)
             # expansion reads/warms the vocabulary buckets and the fuzzy
@@ -555,22 +531,12 @@ class TopKServer:
             self._read_terms(all_terms)
             cached = {t: self._term_cache[t] for t in all_terms}
             dfs = self._df_of(list(pos_terms))
-        if not multi and any(dfs[t] == 0 for t in pq.terms):
-            return []
-        if multi and all(
-            any(dfs[t] == 0 for t in br.terms) for br in branches
-        ):
-            return []  # every branch has a dead term
-        idf = term_idfs(idx.n_docs, dfs)
-
-        t_ids, t_gens = view.tomb or (None, None)
-        lists: dict[str, tuple] = {}
-        for t in all_terms:
-            if cached[t][0].size == 0:
-                if not multi and t in pq.terms:
-                    return []  # conjunctive
-                continue  # multi: a missing term only kills its branch
-            lists[t] = live_list(cached[t], t_ids, t_gens)
+        t_ids, t_gens = idx.tombstone_arrays()
+        lists = {
+            t: live_list(cached[t], t_ids, t_gens)
+            for t in all_terms
+            if cached[t][0].size
+        }
 
         # prefix clauses -> one sorted allow/deny id set each (union of the
         # clause's live expansion lists), composed exactly like the
@@ -586,11 +552,7 @@ class TopKServer:
         allow = None
         for ts in pos_sets:
             parts = [lists[t][0] for t in ts if t in lists]
-            s = (
-                np.unique(np.concatenate(parts))
-                if parts
-                else np.empty(0, dtype=np.int64)
-            )
+            s = np.unique(np.concatenate(parts)) if parts else _NO_IDS
             allow = (
                 s
                 if allow is None
@@ -607,9 +569,12 @@ class TopKServer:
         if deny is not None:
             if allow is None:
                 # exclusion needs a base: any positive term's posting list
-                # is a candidate superset (AND semantics) — use the smallest
-                base_t = min(pq.terms, key=lambda t: lists[t][0].size)
-                allow = lists[base_t][0]
+                # is a candidate superset (AND semantics) — use the
+                # smallest; a term the index lacks leaves no candidate
+                allow = min(
+                    (lists[t][0] if t in lists else _NO_IDS for t in pq.terms),
+                    key=len,
+                )
             allow = allow[~np.isin(allow, deny)]
             if allow.size == 0:
                 return []
@@ -644,10 +609,7 @@ class TopKServer:
                 (int(d), float(prefix_const), offset + i + 1)
                 for i, d in enumerate(page)
             ]
-        doc_ids, scores = score_branch_lists(
-            branches, lists, idf, idx.k1, idx.b, idx.avgdl, n_keep,
-            allow_ids=allow,
-        )
+        doc_ids, scores = evaluate_lists(idx, branches, lists, n_keep, dfs, allow)
         return [
             (int(d), float(s) + prefix_const, i + 1)
             for i, (d, s) in enumerate(zip(doc_ids, scores))

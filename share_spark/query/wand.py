@@ -38,20 +38,22 @@ block-max WAND) maps onto Spark's execution model:
   by the same route as its blocks, and are applied inside the kernel
   BEFORE local top-n truncation. Tombstones arrive as the version's raw
   rows and collapse per chunk in the kernel (no aggregate in the plan). The
-  driver reads them only as part of a slice no larger than one file open;
-  larger sets stay in Spark (10^8 tombstones between compactions would be
-  a driver OOM). No overfetch heuristics for filtered queries — the kernel
-  sees the exact allowed-doc set for its chunk.
-- Job economy: one plan, two transports. When no filter frame rides
-  along and the bytes the query reads (its terms' row groups in the
-  term-sorted serve copy plus the tombstone version, from footers and
-  term dictionaries cached per reader) are no larger than
-  spark.sql.files.openCostInBytes, the driver reads the slice with
-  pyarrow and runs the chunk pass in-process: no Spark job at all, and
-  the decision is taken before any Spark frame is built. Otherwise Spark
-  runs one shape, the chunk exchange (see _run_chunks): one scoring job,
-  each task pruning its own chunks with its own tau. The driver collects
-  <= offset+k scored rows, from the job's orderBy/limit.
+  driver loads them, collapsed once per IndexReader, only when they fit in
+  a slice no larger than one file open; larger sets stay in Spark (10^8
+  tombstones between compactions would be a driver OOM). No overfetch
+  heuristics for filtered queries — the kernel sees the exact allowed-doc
+  set for its chunk.
+- Job economy: two transports. When no filter frame rides along and the
+  bytes the driver reads (the whole-list columns of its terms' row groups
+  in the term-sorted serve copy plus the tombstone version, sized from
+  footers, term dictionaries and a listing cached per reader) are no
+  larger than spark.sql.files.openCostInBytes, the driver decodes each
+  term's whole list and scores them in-process (evaluate_lists, the serve
+  tier's evaluator too): no Spark job at all, decided before any Spark
+  frame is built. Otherwise Spark runs one shape, the chunk exchange (see
+  _run_chunks): one scoring job, each task running the chunk pass with
+  its own tau. The driver collects <= offset+k scored rows, from the
+  job's orderBy/limit.
 - Within a chunk, scoring is numpy-vectorized: sorted-array intersection for
   AND semantics, searchsorted gathers, BM25 per term in sorted-term order
   (deterministic float accumulation, matching tests/frozen_bm25.py).
@@ -276,9 +278,11 @@ def score_term_lists(
     n_keep: int,
     allow_ids: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """The document-at-a-time scoring core, shared VERBATIM by the
-    distributed chunk kernel and the serving tier (query/serve.py) — one
-    scorer, two transports, so rank identity holds by construction.
+    """The document-at-a-time scoring core, shared VERBATIM by the chunk
+    kernel (one chunk's lists, in the exchange's tasks) and the driver
+    evaluator (whole term lists: evaluate_lists, for the driver top-k and
+    the serve tier), so rank identity holds by construction; the two
+    inputs gave bit-identical pages on 200 queries (see _chunk_pass).
 
     lists: term -> (ids sorted unique, tfs, dls or None, pos_flat or None);
     returns (doc_ids, scores) of the local top-n_keep (score desc, id asc).
@@ -326,8 +330,8 @@ def score_branch_lists(
     simple_query_string OR operator): a doc matches when ANY branch's
     constraints hold, and scores the SUM of its matching branches' BM25
     term sums (Lucene BooleanQuery SHOULD-clause summing). Single branch
-    degenerates to score_term_lists exactly. Shared by the distributed
-    chunk kernel and the serve tier, like score_term_lists."""
+    degenerates to score_term_lists exactly. Shared by the chunk kernel
+    and the driver evaluator, like score_term_lists."""
     if len(branches) == 1:
         return score_term_lists(
             branches[0], lists, idf_of, k1, b, avgdl, n_keep, allow_ids
@@ -348,13 +352,46 @@ def score_branch_lists(
     return uniq[order], tot[order]
 
 
-def _chunk_lists(
-    blocks: pa.Table, aux, score_terms: frozenset, phrase_terms: frozenset
-) -> dict:
-    """One chunk's block rows -> term -> (ids sorted, tfs, dls or None,
-    pos_flat or None) of its live postings: the codec's one decoder
-    (term_lists) less the chunk's generation-scoped tombstones."""
-    tomb_ids, tomb_gens, _allow = aux
+def match_ids(branches, lists: dict, allow_ids=None) -> np.ndarray:
+    """The match set of a `|` disjunction over `lists`: the sorted unique
+    union of each branch's candidate_ids."""
+    return np.unique(
+        np.concatenate([candidate_ids(br, lists, allow_ids) for br in branches])
+    )
+
+
+def evaluate_lists(
+    index: IndexReader,
+    branches: tuple[ParsedQuery, ...],
+    lists: dict,
+    n_keep: int,
+    dfs: dict | None = None,
+    allow_ids: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """The driver evaluator, run by the driver top-k and match set and by
+    the serve tier: a query over its terms' WHOLE decoded live lists
+    (term -> (ids sorted unique, tfs, dls or None, pos_flat or None),
+    absent when the index lacks the term), in one pass with no chunks or
+    bounds (why: _chunk_pass). n_keep > 0 gives the top n_keep (doc_ids,
+    scores) by `dfs` (positive term -> df); when every branch has a term
+    of df 0 that is empty, unscored. n_keep == 0 gives (match set, None)."""
+    if not n_keep:
+        return match_ids(branches, lists, allow_ids), None
+    if all(any(dfs.get(t, 0) == 0 for t in br.terms) for br in branches):
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    return score_branch_lists(
+        branches, lists, term_idfs(index.n_docs, dfs), index.k1, index.b,
+        index.avgdl, n_keep, allow_ids,
+    )
+
+
+def _live_lists(blocks: pa.Table, tomb: tuple, score_terms, phrase_terms) -> dict:
+    """Block rows -> term -> (ids sorted, tfs, dls or None, pos_flat or
+    None) of their live postings: the codec's one decoder (term_lists)
+    less the tombstones `tomb`, (doc ids sorted unique, max before_gen) or
+    (None, None). The chunk kernels run it on one chunk's blocks, the
+    driver on a whole slice."""
+    tomb_ids, tomb_gens = tomb
     return {
         t: live_list(e, tomb_ids, tomb_gens)
         for t, e in term_lists(blocks, score_terms, phrase_terms).items()
@@ -437,7 +474,7 @@ class _ChunkScorer:
         self.k1, self.b, self.avgdl = k1, b, avgdl
         self.n_keep = n_keep
         self.filter_active = filter_active
-        self.pos_set = frozenset(t for br in branches for t in br.terms)
+        self.score_terms = frozenset(t for br in branches for t in br.terms)
         self.phrase_terms = frozenset(
             t for br in branches for ph in (br.phrases + br.neg_phrases) for t in ph
         )
@@ -458,7 +495,7 @@ class _ChunkScorer:
         allow_ids = aux[2]
         if self.filter_active and allow_ids is None:
             return None  # filter active, nothing allowed in this chunk
-        lists = _chunk_lists(blocks, aux, self.pos_set, self.phrase_terms)
+        lists = _live_lists(blocks, aux[:2], self.score_terms, self.phrase_terms)
         doc_ids, scores = score_branch_lists(
             self.branches, lists, self.idf_of, self.k1, self.b, self.avgdl,
             self.n_keep, allow_ids,
@@ -493,23 +530,30 @@ def _chunk_slices(tbl: pa.Table) -> dict:
 def _chunk_pass(
     blocks: pa.Table, aux: pa.Table | None, kernel
 ) -> pa.RecordBatch | None:
-    """The one per-table kernel body, run by a _run_chunks task and by the
-    driver (_local_chunks): blocks and aux rows (chunk, doc_id, before_gen,
-    kind; see _with_aux) sort by chunk with an Arrow sort, and `kernel`
-    runs on each chunk `kernel.visit` returns, in its order, on the
-    chunk's zero-copy block slice plus _aux_arrays of its aux rows — no
-    pandas, no Sort in a plan. Kernels return a dict of output columns
-    (None for an empty chunk); the result is their concatenation as the
-    columns of `kernel.schema`, None when empty. The input is the query's
-    term-pruned block slice, so its volume is bounded by the query, not
-    the corpus.
+    """The per-table kernel body a _run_chunks task runs: blocks and aux
+    rows (chunk, doc_id, before_gen, kind; see _with_aux) sort by chunk
+    with an Arrow sort, and `kernel` runs on each chunk `kernel.visit`
+    returns, in its order, on the chunk's zero-copy block slice plus
+    _aux_arrays of its aux rows — no pandas, no Sort in a plan. Kernels
+    return a dict of output columns (None for an empty chunk); the result
+    is their concatenation as the columns of `kernel.schema`, None when
+    empty. The input is the query's term-pruned block slice, so its
+    volume is bounded by the query, not the corpus.
 
     Block-max pruning: a kernel with n_keep > 0 scores, and visits its
     chunks in descending bound order. The pass keeps tau, the n_keep-th
     best score it has seen, and stops at the first chunk whose bound is
     below tau: no later chunk can place. A bound equal to tau is still
     scored, since a tied doc can win on doc_id. tau is local to the call,
-    so each Spark task and each driver query prunes on its own."""
+    so each Spark task prunes on its own.
+
+    The driver does not run this pass: under its one-file-open cap whole
+    term lists (evaluate_lists) score faster. Over the same slices and
+    tombstones, 200 queries (make_queries seed 43, chunk_docs=512, 3
+    interleaved passes, in-process) took median 4.2 ms against 6.3 ms for
+    this pass on a 2k-page index, and 22 ms against 54 ms on 50k pages
+    (slices up to 4.6 MB), with pages identical, ids and scores bit for
+    bit. Pruning pays in the tasks, where the candidate set is large."""
     if not blocks.num_rows:
         return None
     names = kernel.schema.fieldNames()
@@ -571,42 +615,34 @@ def _run_chunks(rows: DataFrame, kernel) -> DataFrame:
 
 def _on_driver(index: IndexReader, terms: list, cols: list) -> bool:
     """Whether an unfiltered query runs on the driver: the bytes the driver
-    reads (SliceReader.slice_bytes) are no larger than
+    reads, `cols` of the serve-copy row groups that hold one of `terms`
+    (SliceReader.slice_bytes) plus the reader's tombstone version
+    (IndexReader.tombstone_files), are no larger than
     spark.sql.files.openCostInBytes (4 MB by default, Spark's own estimate
     of the bytes one file open costs in scan time). Below that size a
     Spark job costs more than the kernel work (a warm 2k-doc top-k:
-    0.13-0.18 s as one task of one job, 0.02 s on the driver)."""
+    0.13-0.18 s as one task of one job, 0.02 s on the driver, where whole
+    lists score in a median 4.2 ms, see _chunk_pass). `cols` are the
+    whole-list read's: the bound columns (max_tf, min_dl) and the chunk
+    key are read only by the exchange."""
     # the JVM conf accessor parses the conf's unit suffix ("4MB", "0")
     conf = index.spark._jsparkSession.sessionState().conf()
     return (
-        index.slices.slice_bytes(terms, cols, index.tombstone_dir)
+        index.slices.slice_bytes(terms, cols) + index.tombstone_files()[1]
         <= conf.filesOpenCostInBytes()
     )
 
 
-def _local_chunks(
-    index: IndexReader, terms: list, cols: list, kernel
-) -> pa.RecordBatch | None:
-    """_run_chunks on the driver, with no Spark job: `cols` of the query
-    terms' blocks from the serve copy and the tombstone version's rows,
-    both read by the reader's SliceReader, through the same per-table body
-    (_chunk_pass)."""
+def _driver_lists(index: IndexReader, terms: list, cols: list, kernel) -> dict:
+    """The whole live lists of `terms`, decoded as `kernel` decodes a
+    chunk's, from `cols` of the reader's serve-copy slice, with no Spark
+    job."""
     blocks = index.slices.slice(terms, cols)
     if blocks is None:
-        return None
-    aux = None
-    tomb = index.slices.tombstones(index.tombstone_dir)
-    if tomb is not None and tomb[0].size:
-        ids, before = tomb
-        aux = pa.table(
-            {
-                "chunk": ids // index.chunk_docs,  # floor, as the encoder
-                "doc_id": ids,
-                "before_gen": before,
-                "kind": pa.repeat("tomb", ids.size),
-            }
-        )
-    return _chunk_pass(blocks, aux, kernel)
+        return {}
+    return _live_lists(
+        blocks, index.tombstone_arrays(), kernel.score_terms, kernel.phrase_terms
+    )
 
 
 def _chunk_of_doc(chunk_docs: int):
@@ -669,11 +705,12 @@ def wand_topk(
     over every result, so the kernel's bounds and tau pruning are
     unaffected.
 
-    One plan, two transports: the driver for an unfiltered slice no larger
-    than one file open (_on_driver), the chunk exchange otherwise; both
-    run _chunk_pass, which prunes chunks by bound as it scores. A separate
-    bounds job (a two-phase plan that scored the best chunks first and
-    semi-joined the rest) never won where it was measured: at 12.5k chunks
+    Two transports: the driver for an unfiltered slice no larger than one
+    file open (_on_driver), scoring whole term lists (evaluate_lists); the
+    chunk exchange otherwise, whose tasks run _chunk_pass, which prunes
+    chunks by bound as it scores. A separate bounds job (a two-phase plan
+    that scored the best chunks first and semi-joined the rest) never won
+    where it was measured: at 12.5k chunks
     (50k docs, chunk_docs=4, 10 fixed queries on the exchange, 4 cores) it
     took 8.2-8.4 s and 7 jobs a query against 2.4 s and 1 job for this
     pass. It tied (0.19 s against 0.20 s median) only on the query no
@@ -700,10 +737,7 @@ def wand_topk(
     n_keep = offset + k
     pos_terms, all_terms = query_terms(branches)
     has_phrases = any(br.phrases or br.neg_phrases for br in branches)
-    k1, b, avgdl = index.k1, index.b, index.avgdl
-
-    cols = ["term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin",
-            "dls_bin", "max_tf", "min_dl", "gen"]
+    cols = ["term", "first_doc", "n", "docs_bin", "tfs_bin", "dls_bin"]
     if has_phrases:
         cols.append("pos_bin")  # positions read only when a phrase needs them
 
@@ -714,27 +748,28 @@ def wand_topk(
     # last one and Spark's codegen cache compiles nothing (idf as per-query
     # double literals cost 2 Janino compiles of 10-16 ms each per distinct
     # query).
-    idf_of = term_idfs(index.n_docs, index.term_stats_local(pos_terms))
+    dfs = index.term_stats_local(pos_terms)
     kernel = _ChunkScorer(
-        branches, idf_of, k1, b, avgdl, n_keep, filter_docs is not None
+        branches, term_idfs(index.n_docs, dfs), index.k1, index.b,
+        index.avgdl, n_keep, filter_docs is not None,
     )
     # decided before any Spark frame is built: building the unused frame
     # costs py4j round trips on every driver query
     if filter_docs is None and _on_driver(index, all_terms, cols):
-        out = _local_chunks(index, all_terms, cols, kernel)
-        merged = []
-        if out is not None:
-            ids, scores = out.column("doc_id").to_numpy(), out.column("score").to_numpy()
-            top = np.lexsort((ids, -scores))[:n_keep]
-            merged = list(zip(ids[top].tolist(), scores[top].tolist()))
-        return _page(spark, merged, offset, prefix_const)
+        lists = _driver_lists(index, all_terms, cols, kernel)
+        ids, scores = evaluate_lists(index, branches, lists, n_keep, dfs)
+        return _page(
+            spark, list(zip(ids.tolist(), scores.tolist())), offset, prefix_const
+        )
 
     # ONE selectExpr, a single py4j parse round trip (a Column chain costs
-    # one per F.lit/withColumn: ~675 round trips, 0.2-0.3 s per query)
+    # one per F.lit/withColumn: ~675 round trips, 0.2-0.3 s per query);
+    # the exchange also reads the chunk key and the bound columns
     blocks = index.postings(interactive=True).filter(
         F.col("term").isin(all_terms)
     ).selectExpr(
-        *cols, *([] if has_phrases else ["CAST(NULL AS BINARY) AS pos_bin"])
+        *cols, "chunk", "max_tf", "min_dl", "gen",
+        *([] if has_phrases else ["CAST(NULL AS BINARY) AS pos_bin"]),
     )
     scored = _run_chunks(_with_aux(blocks, index, filter_docs), kernel)
     with _interactive_conf(spark):
@@ -770,7 +805,7 @@ class _ChunkMatcher:
     doc in one chunk satisfying the query (any `|` branch) — no scoring,
     no truncation, so no bound: `visit` returns every viable chunk, in
     chunk order. Decode + candidate logic shared with the scoring kernel
-    (_chunk_lists / candidate_ids), so match semantics are identical by
+    (_live_lists / candidate_ids), so match semantics are identical by
     construction."""
 
     schema = MATCH_SCHEMA
@@ -796,14 +831,8 @@ class _ChunkMatcher:
         allow_ids = aux[2]
         if self.filter_active and allow_ids is None:
             return None  # filter active, nothing allowed in this chunk
-        lists = _chunk_lists(blocks, aux, self.score_terms, self.phrase_terms)
-        return {
-            "doc_id": np.unique(
-                np.concatenate(
-                    [candidate_ids(br, lists, allow_ids) for br in self.branches]
-                )
-            )
-        }
+        lists = _live_lists(blocks, aux[:2], self.score_terms, self.phrase_terms)
+        return {"doc_id": match_ids(self.branches, lists, allow_ids)}
 
 
 def match_docs(
@@ -828,8 +857,9 @@ def match_docs(
     visited. Two transports, as wand_topk's:
 
     - driver: without a filter frame, a slice no larger than one file
-      open (_on_driver) is matched on the driver now, with no Spark job,
-      and the set returns as a LocalRelation;
+      open (_on_driver) is matched on the driver now over whole term
+      lists (evaluate_lists), with no Spark job, and the set returns as a
+      LocalRelation;
     - exchange: otherwise the set stays distributed, as a lazy frame over
       the chunk exchange (_run_chunks). No interactive guard is held here,
       so the exchange executes when the caller collects or composes the
@@ -864,15 +894,19 @@ def match_docs(
     has_phrases = any(br.phrases or br.neg_phrases for br in branches)
     _pos_terms, all_terms = query_terms(branches)
 
-    cols = ["term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin", "gen"]
+    cols = ["term", "first_doc", "n", "docs_bin", "tfs_bin"]
     if has_phrases:
         cols += ["dls_bin", "pos_bin"]  # read only when a phrase needs them
     matcher = _ChunkMatcher(branches, filter_docs is not None)
     if filter_docs is None and _on_driver(index, all_terms, cols):
-        out = _local_chunks(index, all_terms, cols, matcher)
-        ids = pa.array([], pa.int64()) if out is None else out.column("doc_id")
+        lists = _driver_lists(index, all_terms, cols, matcher)
+        ids, _ = evaluate_lists(index, branches, lists, 0)
         return index.spark.createDataFrame(
             pa.table({"doc_id": ids}), schema=MATCH_SCHEMA
         )
-    blocks = index.postings(interactive=True).filter(F.col("term").isin(all_terms)).select(*cols)
+    blocks = (
+        index.postings(interactive=True)
+        .filter(F.col("term").isin(all_terms))
+        .select(*cols, "chunk", "gen")
+    )
     return _run_chunks(_with_aux(blocks, index, filter_docs), matcher)

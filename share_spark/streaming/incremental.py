@@ -225,7 +225,8 @@ def _merge_tombstones(
     name WITHOUT committing — the caller's manifest/snapshot commit makes
     it visible.  Old versions are never mutated, so readers opened against
     earlier snapshots keep a consistent view (Iceberg-style versioned
-    delete files); expire_snapshots() reclaims them."""
+    delete files), and a reader lists its version once
+    (IndexReader.tombstone_files); expire_snapshots() reclaims them."""
     from ..index.snapshots import next_snapshot_id, resolve_tombstone_dir
 
     cur = resolve_tombstone_dir(index_dir)
@@ -324,7 +325,7 @@ def compact(
         ):
             merge_declined = "geometry"  # the block shuffle key changes
         else:
-            tomb_local = local_tombstone_arrays(index_dir, reader.tombstone_dir)
+            tomb_local = local_tombstone_arrays(reader)
             if tomb_local is None:
                 merge_declined = "tombstones"  # over the driver-side cap
         if merge_declined is not None:

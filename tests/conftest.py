@@ -83,15 +83,50 @@ def past_one_open(spark):
 
 @pytest.fixture
 def chunks_decoded(monkeypatch):
-    """A list that grows by one each time a chunk kernel decodes a chunk's
-    blocks (query.wand._chunk_lists) on the driver: a test that expects
-    block-max pruning asserts that chunks were skipped, not assumed. Spark
-    tasks import the module afresh, so the exchange path is not counted."""
-    from share_spark.query import wand
+    """run(index, query, k) -> (the pass's top-k [(doc_id, score)], chunks
+    it decoded): _chunk_pass, the per-task body of the chunk exchange, run
+    in-process with the top-k kernel over the reader's whole slice of the
+    query's terms and its tombstones, as one task would see them. A test
+    that expects block-max pruning asserts that chunks were skipped, not
+    assumed, on the pass itself."""
+    import numpy as np
+    import pyarrow as pa
 
-    calls: list = []
-    real = wand._chunk_lists
-    monkeypatch.setattr(
-        wand, "_chunk_lists", lambda *a, **k: calls.append(1) or real(*a, **k)
-    )
-    return calls
+    from share_spark.query import wand
+    from share_spark.query.bm25 import parse_disjunction, query_terms
+
+    def run(index, query, k):
+        branches = parse_disjunction(query, index.analyzer)
+        pos, terms = query_terms(branches)
+        kernel = wand._ChunkScorer(
+            branches, wand.term_idfs(index.n_docs, index.term_stats_local(pos)),
+            index.k1, index.b, index.avgdl, k, False,
+        )
+        blocks = index.slices.slice(
+            terms,
+            ["term", "chunk", "first_doc", "n", "docs_bin", "tfs_bin",
+             "dls_bin", "max_tf", "min_dl"],
+        )
+        ids, before = index.tombstone_arrays()
+        aux = pa.table(
+            {
+                "chunk": ids // index.chunk_docs,
+                "doc_id": ids,
+                "before_gen": before,
+                "kind": pa.repeat("tomb", ids.size),
+            }
+        )
+        calls: list = []
+        real = wand._live_lists
+        with monkeypatch.context() as m:
+            m.setattr(
+                wand, "_live_lists", lambda *a: calls.append(1) or real(*a)
+            )
+            out = wand._chunk_pass(blocks, aux, kernel)
+        if out is None:
+            return [], len(calls)
+        ids, scores = out.column("doc_id").to_numpy(), out.column("score").to_numpy()
+        top = np.lexsort((ids, -scores))[:k]
+        return list(zip(ids[top].tolist(), scores[top].tolist())), len(calls)
+
+    return run

@@ -14,6 +14,7 @@ expansions to produce the same term set.
 
 import pytest
 
+from share_spark.query import bm25, serve
 from share_spark.query.bm25 import (
     MAX_FUZZY_DISTANCE,
     PREFIX_SCORE,
@@ -138,7 +139,7 @@ def test_fuzzy_paging(built_index, frozen):
     assert page2w == full[5:10]
 
 
-def test_degenerate_and_refusals(built_index, server):
+def test_degenerate_and_refusals(built_index, server, monkeypatch):
     with pytest.raises(ValueError, match="no positive terms"):
         exact_topk(built_index, "-dnger~1")
     with pytest.raises(ValueError, match="fuzzy distance"):
@@ -147,7 +148,7 @@ def test_degenerate_and_refusals(built_index, server):
     with pytest.raises(ValueError, match="expands to more than 5"):
         expand_fuzzy(built_index, "w00031", 2, max_expansions=5)
     srv = TopKServer.open(built_index.index_dir)
-    srv.max_fuzzy_expansions = 5
+    monkeypatch.setattr(bm25, "MAX_FUZZY_EXPANSIONS", 5)
     with pytest.raises(ValueError, match="expands to more than 5"):
         srv.topk("w00031~2", k=5)
     with pytest.raises(NotImplementedError, match="fuzzy"):
@@ -216,7 +217,7 @@ def test_serve_fuzzy_oracle_fuzz(server, frozen, data):
     assert got == want, q
 
 
-def test_serve_fuzzy_expansion_cache(built_index):
+def test_serve_fuzzy_expansion_cache(built_index, monkeypatch):
     srv = TopKServer.open(built_index.index_dir)
     r1 = srv.topk("dnger~1 the", k=5)
     assert ("dnger", 1) in srv._fuzzy_cache
@@ -227,7 +228,7 @@ def test_serve_fuzzy_expansion_cache(built_index):
     srv.refresh()
     assert ("dnger", 1) in srv._fuzzy_cache  # same build -> kept
     # LRU bound holds
-    srv.max_cached_fuzzy_expansions = 2
+    monkeypatch.setattr(serve, "MAX_CACHED_FUZZY_EXPANSIONS", 2)
     srv._expand_fuzzy("wrning", 1)
     srv._expand_fuzzy("plce", 1)
     assert len(srv._fuzzy_cache) <= 2
@@ -263,13 +264,13 @@ def test_suggest_exact_word_ranks_first(server, frozen):
         server.suggest("two words")
 
 
-def test_suggest_uncapped_on_wide_band(built_index, server):
+def test_suggest_uncapped_on_wide_band(built_index, server, monkeypatch):
     """Review regression: suggest must NOT inherit the query path's
     expansion refusal — a dense vocabulary band (w00031~2 expands to
     thousands of wNNNNN terms) still yields the k best suggestions, while
     the query path keeps refusing."""
     srv = TopKServer.open(built_index.index_dir)
-    srv.max_fuzzy_expansions = 50
+    monkeypatch.setattr(bm25, "MAX_FUZZY_EXPANSIONS", 50)
     out = srv.suggest("w00031", k=5, max_dist=2)
     assert len(out) == 5 and out[0] == ("w00031", 0, out[0][2])
     assert all(d <= 2 for _, d, _ in out)

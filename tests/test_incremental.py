@@ -141,8 +141,9 @@ def test_bound_pruning_survives_avgdl_drift(
     gen1 = long docs (3x avgdl); with bounds baked at build time using
     gen0's own avgdl, chunk pruning could drop true top-k docs. Bounds are
     computed at query time from (max_tf, min_dl), so wand stays
-    rank-identical to exact on both transports, while the driver's pass
-    is seen to skip chunks by bound."""
+    rank-identical to exact on both transports, while the chunk pass (the
+    exchange's per-task body, run in-process) gives the exact page and is
+    seen to skip chunks by bound."""
     import pandas as pd
 
     from share_spark.index.build import IndexConfig, IndexReader, build_index
@@ -190,15 +191,14 @@ def test_bound_pruning_survives_avgdl_drift(
             (r["rank"], r["doc_id"]) for r in exact_topk(idx, q, k=15).collect()
         ]
         for exchange in (False, True):
-            before = len(chunks_decoded)
             with past_one_open(exchange):
                 pruned = [
                     (r["rank"], r["doc_id"])
                     for r in wand_topk(idx, q, k=15).collect()
                 ]
             assert pruned == exact, (q, exchange)
-            if not exchange:
-                decoded[q] = len(chunks_decoded) - before
+        top, decoded[q] = chunks_decoded(idx, q, 15)
+        assert [d for d, _ in top] == [d for _, d in exact], q
     # "alpha" is in every doc, so every chunk is a candidate; the bound
     # skips some of them
     assert 0 < decoded["alpha"] < n_chunks, decoded

@@ -323,8 +323,8 @@ def test_row_group_without_term_statistics_admits_every_term(tmp_path):
     assert reader.term_dfs(["a", "d", "z"]) == {"d": 5}
     got = reader.slice(["b", "c"], ["term", "n", "gen"])
     assert got.to_pydict() == {"term": ["b"], "n": [3], "gen": [0]}
-    assert reader.slice_bytes(["c"], ["term", "n"], None) == 0
-    assert reader.slice_bytes(["d"], ["term", "n"], None) > 0
+    assert reader.slice_bytes(["c"], ["term", "n"]) == 0
+    assert reader.slice_bytes(["d"], ["term", "n"]) > 0
 
 
 def test_termdoc_identity_across_tokenizer_inputs(spark, tmp_path):

@@ -10,6 +10,7 @@ WAND (both transports), serve — must be rank- AND score-identical.
 
 import pytest
 
+from share_spark.query import serve
 from share_spark.query.bm25 import (
     PREFIX_SCORE,
     exact_topk,
@@ -128,9 +129,9 @@ def test_degenerate_queries_raise(built_index, server, qtext):
         server.topk(qtext)
 
 
-def test_serve_expansion_cap(built_index):
+def test_serve_expansion_cap(built_index, monkeypatch):
     srv = TopKServer.open(built_index.index_dir)
-    srv.max_prefix_expansions = 5
+    monkeypatch.setattr(serve, "MAX_PREFIX_EXPANSIONS", 5)
     with pytest.raises(ValueError, match="expands to more than 5"):
         srv.topk("w0*", k=5)
 

@@ -182,7 +182,7 @@ def test_warmup_preloads_top_df_terms(built_index):
     assert top8 <= set(srv._term_cache)
     head = stats.iloc[0]["term"]
     calls = []
-    slices = srv._view.reader.slices
+    slices = srv._reader.slices
     orig = slices.read
     slices.read = lambda *a, **k: calls.append(a) or orig(*a, **k)
     got = _s(srv.topk(head, k=13))
@@ -219,19 +219,20 @@ def test_refresh_detects_same_numbered_rebuild(spark, pages_pdf, tmp_path):
 
 
 def test_serve_tombstones_collapse_like_the_codec(spark, pages_pdf, tmp_path):
-    """A tombstone version holding several rows for one doc collapses in
-    the serve tier exactly as local_tombstone_arrays collapses it (sorted
-    doc ids, max before_gen), so both planes drop the same docs."""
+    """A tombstone version holding several rows for one doc collapses
+    once in the reader (sorted doc ids, max before_gen): the serve tier's
+    snapshot and compaction's block merge (local_tombstone_arrays) see the
+    same arrays, and the server drops those docs."""
     import numpy as np
 
     from share_spark.index.build import (
         TOMBSTONE_SCHEMA,
         IndexConfig,
+        IndexReader,
         build_index,
         commit_manifest,
         local_tombstone_arrays,
     )
-    from share_spark.index.snapshots import resolve_tombstone_dir
 
     idx_dir = str(tmp_path / "idx")
     build_index(spark, spark.createDataFrame(pages_pdf), idx_dir,
@@ -243,9 +244,12 @@ def test_serve_tombstones_collapse_like_the_codec(spark, pages_pdf, tmp_path):
     commit_manifest(idx_dir, tombstones="tombstones_v9", operation="delete",
                     summary={})
     srv = TopKServer.open(idx_dir)
-    tomb = srv._view.tomb
-    want = local_tombstone_arrays(idx_dir, resolve_tombstone_dir(idx_dir))
+    tomb = srv._reader.tombstone_arrays()
+    want = local_tombstone_arrays(IndexReader.open(None, idx_dir))
     assert [a.tolist() for a in tomb] == [a.tolist() for a in want]
     assert tomb[0].tolist() == [3, 7, 12, 40]
     assert tomb[1].tolist() == [9, 3, 1, 5]
     assert all(a.dtype == np.int64 for a in tomb)
+    got = _s(srv.topk("the", k=300))
+    assert not {3, 7, 12, 40} & {d for _, d, _ in got}
+    assert got == _x(exact_topk(IndexReader.open(spark, idx_dir), "the", k=300))

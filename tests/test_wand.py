@@ -107,10 +107,12 @@ def test_wand_pruned_pass_matches_exact(built_index, past_one_open, exchange):
 def test_chunk_bound_equal_to_threshold_is_scored(
     spark, tmp_path, past_one_open, chunks_decoded, exchange
 ):
-    """Chunk 1 (docs 4-7) has the higher bound, so the pass scores it
-    first, and its page of two sets tau to doc 5's score. Chunk 0's bound
-    is exactly that score: its one doc, doc 0, ties doc 5 and wins on
-    doc_id, so a chunk whose bound equals tau must be scored."""
+    """Chunk 1 (docs 4-7) has the higher bound, so the chunk pass scores
+    it first, and its page of two sets tau to doc 5's score. Chunk 0's
+    bound is exactly that score: its one doc, doc 0, ties doc 5 and wins
+    on doc_id, so a chunk whose bound equals tau must be scored. Both
+    transports agree with the exact scorer; the pass itself is run
+    in-process to see that it decoded both chunks."""
     import pandas as pd
 
     from share_spark.index.build import IndexConfig, IndexReader, build_index
@@ -133,8 +135,9 @@ def test_chunk_bound_equal_to_threshold_is_scored(
     with past_one_open(exchange):
         got = _rows(wand_topk(index, "alpha", k=2))
     assert got == exact
-    if not exchange:
-        assert len(chunks_decoded) == 2
+    top, decoded = chunks_decoded(index, "alpha", 2)
+    assert [d for d, _ in top] == [4, 0]
+    assert decoded == 2
 
 
 def test_url_derived_ids_start_no_job(spark, pages_pdf, tmp_path, jobs_started):
@@ -227,3 +230,100 @@ def test_new_query_compiles_no_class(built_index, spark, past_one_open):
         exact = _rows(exact_topk(built_index, q, k=13))
         assert [(r, d) for r, d, _ in rows] == [(r, d) for r, d, _ in exact]
         assert all(abs(a[2] - b[2]) <= 1e-9 for a, b in zip(rows, exact))
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark, pages_pdf, tmp_path_factory):
+    """(index dir, expelled doc): the shared 300-page corpus with its top
+    `danger` hit expelled, so the index has one tombstone version."""
+    from share_spark.index.build import IndexConfig, IndexReader, build_index
+    from share_spark.streaming.incremental import expel
+
+    d = str(tmp_path_factory.mktemp("tombstoned") / "idx")
+    build_index(spark, spark.createDataFrame(pages_pdf), d,
+                IndexConfig(block_size=32, chunk_docs=64))
+    victim = _rows(exact_topk(IndexReader.open(spark, d), "danger", k=1))[0][1]
+    expel(spark, d, [victim])
+    return d, victim
+
+
+def test_warm_driver_query_touches_no_directory(
+    spark, tombstoned, jobs_started, monkeypatch
+):
+    """An IndexReader lists and sizes its tombstone version once: warm
+    driver top-ks on a tombstoned index call os.listdir and os.stat not at
+    all, and still drop the expelled doc."""
+    import os
+
+    from share_spark.index.build import IndexReader
+
+    d, victim = tombstoned
+    index = IndexReader.open(spark, d)
+    assert index.tombstone_dir is not None
+    for _ in range(2):
+        wand_topk(index, "danger", k=5).collect()  # warm the reader
+    calls = {"listdir": 0, "stat": 0}
+    for name in calls:
+        real = getattr(os, name)
+        monkeypatch.setattr(
+            os, name,
+            lambda *a, _n=name, _f=real, **k: calls.__setitem__(_n, calls[_n] + 1)
+            or _f(*a, **k),
+        )
+    pages, jobs, _tasks = jobs_started(
+        lambda: [wand_topk(index, "danger", k=5) for _ in range(10)]
+    )
+    monkeypatch.undo()
+    assert calls == {"listdir": 0, "stat": 0}
+    assert jobs == 0
+    got = _rows(pages[-1])
+    assert victim not in {doc for _, doc, _ in got}
+    assert got == _rows(exact_topk(index, "danger", k=5))
+
+
+def test_driver_decision_counts_the_columns_it_reads(
+    spark, tombstoned, jobs_started
+):
+    """_on_driver sizes a query by what the driver reads: the whole-list
+    columns of its terms' serve-copy row groups (not the exchange's bound
+    columns max_tf/min_dl or the chunk key) plus the tombstone version's
+    files. With openCostInBytes at exactly that sum the query runs on the
+    driver with no Spark job; one byte less and it takes the exchange.
+    Both give the exact page."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from share_spark.index.build import IndexReader
+
+    d, _victim = tombstoned
+    read = ["term", "first_doc", "n", "docs_bin", "tfs_bin", "dls_bin"]
+    size = sum(
+        os.path.getsize(f)
+        for f in glob.glob(os.path.join(d, IndexReader.open(spark, d).tombstone_dir, "*.parquet"))
+    )
+    for f in glob.glob(os.path.join(d, "gen*", "postings_term", "*.parquet")):
+        pf = pq.ParquetFile(f)
+        for i in range(pf.metadata.num_row_groups):
+            if "danger" in pf.read_row_group(i, columns=["term"]).column("term").to_pylist():
+                rg = pf.metadata.row_group(i)
+                size += sum(
+                    rg.column(j).total_compressed_size
+                    for j in range(rg.num_columns)
+                    if rg.column(j).path_in_schema in read
+                )
+    exact = _rows(exact_topk(IndexReader.open(spark, d), "danger", k=5))
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key)
+    try:
+        for limit in (size, size - 1):
+            spark.conf.set(key, str(limit))
+            index = IndexReader.open(spark, d)
+            got, jobs, _tasks = jobs_started(
+                lambda: _rows(wand_topk(index, "danger", k=5))
+            )
+            assert got == exact, limit
+            assert (jobs == 0) == (limit == size), (limit, jobs)
+    finally:
+        spark.conf.set(key, before)
